@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
   /** One-line JSON fragment describing the machine at measurement time —
@@ -55,12 +55,19 @@ object Bench {
     require(SparkEntry.benchQueries.distinct.size == SparkEntry.benchQueries.size,
       "benchQueries contains duplicates: " +
         SparkEntry.benchQueries.diff(SparkEntry.benchQueries.distinct).mkString(", "))
+    // A failing entry still gets a time (the elapsed time until it threw);
+    // its name goes to stderr once and into the line's "failed" list, so
+    // that time cannot pass for a success.
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def countOrRecord(name: String, fn: (SparkSession, String) => DataFrame): Unit =
+      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+        if (failed.add(name)) System.err.println(s"[bench] $name failed: $e")
+      }
     // Warmup pass: JIT + whole-stage-codegen compilation + page cache are
     // one-time costs that would otherwise all land on the first timed query;
     // the timed pass below measures steady-state throughput.
     SparkEntry.benchQueries.foreach { name =>
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => () }
+      countOrRecord(name, SparkEntry.queries(name))
     }
     // Best of THREE timed passes: single-pass numbers on this box swing up
     // to 4× on the nested-loop-heavy similarity queries from machine noise
@@ -70,7 +77,7 @@ object Bench {
     def timedPass(): Map[String, Double] = SparkEntry.benchQueries.map { name =>
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      countOrRecord(name, fn)
       name -> (System.nanoTime() - t0) / 1e9
     }.toMap
     // calibration pass: best of two reps per pinned query (they are all
@@ -79,7 +86,7 @@ object Bench {
       val fn = SparkEntry.queries(name)
       val t = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        countOrRecord(name, fn)
         (System.nanoTime() - t0) / 1e9
       }.min
       name -> t
@@ -93,10 +100,11 @@ object Bench {
     val total = if (results.nonEmpty) results.values.sum else 0.0
     def calJson(m: Map[String, Double]): String = calibrationQueries
       .map(k => s"\"" + k + "\":" + m(k)).mkString("{", ",", "}")
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     // calibration rides LAST on the line: the driver keeps only a
     // 2000-char stdout TAIL, so trailing keys are the ones that survive
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","env":${envJson()},"calibration":{"first":${calJson(calFirst)},"last":${calJson(calLast)}}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","env":${envJson()},"failed":$failedJson,"calibration":{"first":${calJson(calFirst)},"last":${calJson(calLast)}}}"""
     println(json)
     // The driver captures only a 2000-char stdout tail, which truncates a
     // third of the headline set — persist the SAME line to a repo file so

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev harness: time a LIST of SparkEntry queries in one session —
-  * `runMain graft.BenchMany <query_id>[,...] [sfDir] [reps]`. Same
-  * session config and warm+timed methodology as [[BenchOne]], without
-  * paying a JVM+session spinup per query. Prints one `[benchmany]` line
-  * per query (best of reps) plus a trailing env line.
+  * `runMain graft.BenchMany <query_id>[,...] [sfDir] [reps]` — one id
+  * times a single query. One `local[SPARK_GRAFT_CPUS]` session (default
+  * 32) for the whole list; per query a warm pass, then `reps` timed
+  * passes. Prints one `[benchmany]` line per query (best of reps, or
+  * FAILED) plus a trailing env line.
   */
 object BenchMany {
   def main(args: Array[String]): Unit = {

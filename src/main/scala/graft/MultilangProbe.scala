@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Dev harness: per-stage noop-sink timings of the curateMultilang
   * chain (guide §1.4/§1.5) — `runMain graft.MultilangProbe [sfDir]`.
   * Mirrors the operator's internal frames to localize cost; NOT a
-  * bench (the entry's end-to-end number comes from Bench/BenchOne).
+  * bench (the entry's end-to-end number comes from Bench/BenchMany).
   */
 object MultilangProbe {
   def main(args: Array[String]): Unit = {

@@ -26,6 +26,7 @@ object Verify {
     // scheduler interleaves tasks) and hides the per-query planning +
     // small-job latency that dominates a sequential run of 80+ queries.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
+    val nFailed = new java.util.concurrent.atomic.AtomicInteger()
     val futures = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
@@ -34,12 +35,14 @@ object Verify {
           try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
+            nFailed.incrementAndGet()
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
           }
       })
     }
     futures.foreach(_.get())
     pool.shutdown()
+    System.err.println(s"[verify] failed ${nFailed.get} of ${futures.size}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import BoundedCollect.{LocalMaxEdges, collectAtMost}
 
 /** Deduplication for LLM training-data pipelines, over the `documents`
   * corpus (the crawl-collection analog; the reference's only write semantics
@@ -103,12 +104,9 @@ object DedupOps {
     * that already materialize the token sets probe them instead of
     * re-tokenizing the raw text.
     */
-  private[graft] def probeVocabTokens(toks: DataFrame): Option[Seq[String]] = {
-    val probe = toks.select(explode(col("s")).as("t"))
-      .distinct().limit(65)
-      .collect().map(_.getString(0))
-    if (probe.length > 64) None else Some(probe.toSeq.sorted)
-  }
+  private[graft] def probeVocabTokens(toks: DataFrame): Option[Seq[String]] =
+    collectAtMost(toks.select(explode(col("s")).as("t")).distinct(), 64)
+      .map(_.map(_.getString(0)).toSeq.sorted)
 
   private def exactBitsets(docs: DataFrame): Option[DataFrame] = {
     probeVocab(docs).map { vocab =>
@@ -2954,27 +2952,13 @@ object DedupOps {
       .orderBy(col("doc_id").asc)
   }
 
-  /** Bounded-edge local-resolution ceiling for [[connectedComponentsOn]]
-    * — the broadcast-hash-join size discipline applied to the closure
-    * (r19 optimization round): a DISTINCT edge set at or under this count
-    * (16 B/edge → ~16 MB) is collected like any broadcast side and
-    * resolved with a driver union-find in one pass, where the alternating
-    * star rounds pay ~6 exchanges + 2 actions PER ROUND in pure job
-    * latency. Above the ceiling the distributed rounds run unchanged —
-    * the asymptotic path. Both paths produce the identical min-label map
-    * (the star fixed point is each node → component minimum, which is
-    * exactly what union-by-min-root computes); CcDispatchSpec pins the
-    * equality on random graphs.
-    */
-  private[graft] val CcLocalMaxEdges: Long = 1000000L
-
   /** Driver union-find over a collected bounded edge list — min-label
     * (union always attaches the larger root under the smaller, so every
     * component's root is its minimum id). Output rows (node, component)
     * for node ≠ component, the star rounds' exact output set.
     */
-  private def localComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
+  private def localComponents(spark: SparkSession,
+      edges: Array[Row]): DataFrame = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -2983,7 +2967,7 @@ object DedupOps {
       while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    edges.collect().foreach { row =>
+    edges.foreach { row =>
       val a = row.getLong(0)
       val b = row.getLong(1)
       parent.putIfAbsent(a, a)
@@ -3003,7 +2987,7 @@ object DedupOps {
   }
 
   private[graft] def connectedComponentsOn(pairs: DataFrame,
-      localMaxEdges: Long = CcLocalMaxEdges): DataFrame = {
+      localMaxEdges: Int = LocalMaxEdges): DataFrame = {
     // downhill edges (hi → lo), self-loops dropped
     var edges = pairs
       .select(greatest(col("a"), col("b")).as("hi"), least(col("a"), col("b")).as("lo"))
@@ -3021,15 +3005,18 @@ object DedupOps {
         coalesce(bit_xor(xxhash64(col("hi"), col("lo"))), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    var sig = signature(edges)
-    // statistics dispatch (the simJoinAuto shape): the edge count is
-    // already paid for by the signature; a bounded long-keyed edge set
-    // resolves driver-side in one collect instead of star ROUNDS of
-    // exchanges
+    // a bounded long-keyed edge set resolves driver-side in one union-find
+    // pass ([[BoundedCollect]]) instead of star ROUNDS of exchanges; both
+    // paths produce the identical min-label map (the star fixed point is
+    // each node → component minimum, which is exactly what union-by-min-
+    // root computes). An empty probe skips the signature job: zero edges
+    // is the distributed path's zero-round exit.
     val longKeyed = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (sig._1 > 0L && sig._1 <= localMaxEdges && longKeyed)
-      return localComponents(edges)
+    val probe = if (longKeyed) collectAtMost(edges, localMaxEdges) else None
+    if (probe.exists(_.nonEmpty))
+      return localComponents(edges.sparkSession, probe.get)
+    var sig = if (probe.nonEmpty) (0L, 0L) else signature(edges)
     var converged = sig._1 == 0L
     var rounds = 0
     while (!converged && rounds < 40) {

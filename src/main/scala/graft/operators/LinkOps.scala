@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import BoundedCollect.{LocalMaxEdges, collectAtMost}
 
 /** Link-graph centrality — the crawl-side quality signal the reference's
   * ingest pipeline implies but never computes (it crawls a nav tree,
@@ -173,7 +174,7 @@ object LinkOps {
     */
   def hits(spark: SparkSession, dir: String, iters: Int = 3,
       fanout: Int = 4,
-      localMaxEdges: Long = LinkLocalMaxEdges): DataFrame = {
+      localMaxEdges: Int = LocalMaxEdges): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
     val n = docs.count()
     // [[linkEdges]]'s affine hash is a PERFECT 4-regular graph (the
@@ -192,24 +193,24 @@ object LinkOps {
       .select(col("src"), col("dst"))
       .localCheckpoint(false)
 
-    // statistics dispatch (r19 optimization round, the LPA/CC rule): a
-    // bounded edge set iterates driver-side. INVARIANT the equivalence
-    // leans on (r20, ADVICE): every edge dst is a doc present in `docs`
-    // (the `% n` construction above guarantees it for ids 0..n-1, and
-    // Tables.documents ids are contiguous by fixture contract) — the
-    // distributed half-step drops a non-doc dst's mass at its docs join
-    // while the local map would keep feeding it back via getOrDefault.
-    // The arithmetic replicates
-    // the distributed half-step exactly: long in-sums (order-free exact
-    // integers), the L1 total a long sum over all docs (absent endpoint
-    // contributes 0), normalization floor(raw·1e9/tot + 0.5) on the same
+    // a bounded edge set iterates driver-side ([[BoundedCollect]]).
+    // INVARIANT the equivalence leans on (r20, ADVICE): every edge dst is
+    // a doc present in `docs` (the `% n` construction above guarantees it
+    // for ids 0..n-1, and Tables.documents ids are contiguous by fixture
+    // contract) — the distributed half-step drops a non-doc dst's mass at
+    // its docs join while the local map would keep feeding it back via
+    // getOrDefault. The arithmetic replicates the distributed half-step
+    // exactly: long in-sums (order-free exact integers), the L1 total a
+    // long sum over all docs (absent endpoint contributes 0),
+    // normalization floor(raw·1e9/tot + 0.5) on the same
     // exactly-representable doubles. Only edge-endpoint nodes can carry
     // nonzero mass after round one, so the local state is edge-bounded;
     // the final assembly joins the local result back over `docs`
     // distributed (absent docs normalize to floor(0.5) = 0, as in the
     // distributed left join).
-    if (edges.count() <= localMaxEdges) {
-      val es = edges.collect().map(row => (row.getLong(0), row.getLong(1)))
+    val probe = collectAtMost(edges, localMaxEdges)
+    if (probe.nonEmpty) {
+      val es = probe.get.map(row => (row.getLong(0), row.getLong(1)))
       var hubM = new java.util.HashMap[Long, Long]()
       var authM: java.util.HashMap[Long, Long] = null
       def halfStep(by: ((Long, Long)) => Long, of: ((Long, Long)) => Long,
@@ -580,31 +581,6 @@ object LinkOps {
   private[graft] def labelPropagationOn(und0: DataFrame, iters: Int): DataFrame =
     labelPropagationRounds(und0, iters)._1
 
-  /** The iteration with its round count exposed (for the convergence
-    * tests). Synchronous LPA is IDEMPOTENT at a fixed point — a round
-    * that changes no label makes every later round identical — so the
-    * loop stops at the first zero-change round: the result is
-    * bit-identical to running all `iters` rounds (oscillating graphs —
-    * bipartite 2-cycles — never hit the stop and run the full budget,
-    * the published bound for synchronous LPA). The change probe rides
-    * the round's OWN job: the prev-label join folds into the plan that
-    * the round checkpoints anyway (r15 — the r14 form ran it as a
-    * second node-sized shuffle join per round, measured +24% on the
-    * driver tail), so convergence is a short-circuit `isEmpty` scan of
-    * the already-materialized checkpoint — no extra exchange.
-    */
-  /** Bounded-edge local-resolution ceiling for the iterative link
-    * operators (LPA / BFS / HITS) — the
-    * [[graft.operators.DedupOps.connectedComponentsOn]] dispatch applied
-    * to the family: an edge set at or under this count (~16 MB, the
-    * broadcast size class) collects once and iterates driver-side with
-    * the identical integer arithmetic, where the distributed rounds pay
-    * several exchanges + actions of job latency EACH. Above it the
-    * distributed iterations run unchanged (the asymptotic path).
-    * LinkDispatchSpec pins the per-operator equality on random graphs.
-    */
-  private[graft] val LinkLocalMaxEdges: Long = 1000000L
-
   /** Driver-side synchronous LPA over a collected bounded edge list —
     * the same vote counting ((count DESC, label ASC) argmax), the same
     * synchronous update, the same zero-change early stop as the
@@ -649,15 +625,27 @@ object LinkOps {
     (out.toSeq, rounds)
   }
 
+  /** The iteration with its round count exposed (for the convergence
+    * tests). Synchronous LPA is IDEMPOTENT at a fixed point — a round
+    * that changes no label makes every later round identical — so the
+    * loop stops at the first zero-change round: the result is
+    * bit-identical to running all `iters` rounds (oscillating graphs —
+    * bipartite 2-cycles — never hit the stop and run the full budget,
+    * the published bound for synchronous LPA). The change probe rides
+    * the round's OWN job: the prev-label join folds into the plan that
+    * the round checkpoints anyway (r15 — the r14 form ran it as a
+    * second node-sized shuffle join per round, measured +24% on the
+    * driver tail), so convergence is a short-circuit `isEmpty` scan of
+    * the already-materialized checkpoint — no extra exchange.
+    */
   private[graft] def labelPropagationRounds(und0: DataFrame,
-      iters: Int, localMaxEdges: Long = LinkLocalMaxEdges): (DataFrame, Int) = {
+      iters: Int, localMaxEdges: Int = LocalMaxEdges): (DataFrame, Int) = {
     val und = und0.localCheckpoint(false)
-    // statistics dispatch (r19 optimization round): bounded edge sets
-    // resolve driver-side — the count rides the checkpoint the
-    // distributed path materializes anyway
-    if (und.count() <= localMaxEdges) {
+    // a bounded edge set resolves driver-side ([[BoundedCollect]])
+    val probe = collectAtMost(und, localMaxEdges)
+    if (probe.nonEmpty) {
       val spark = und.sparkSession
-      val es = und.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val es = probe.get.map(r => (r.getLong(0), r.getLong(1)))
       val (labels, rounds) = localLpa(es, iters)
       return (spark.createDataFrame(labels).toDF("doc_id", "community")
         .orderBy(col("doc_id").asc), rounds)
@@ -743,47 +731,45 @@ object LinkOps {
     */
   private[graft] def bfsDepthOn(seeds: DataFrame, edges: DataFrame,
       maxDepth: Int, dedupBroadcastMax: Long = 2000000L,
-      localMaxEdges: Long = LinkLocalMaxEdges): DataFrame = {
-    // statistics dispatch (r19 optimization round, the LPA/CC rule):
-    // bounded edges + bounded seeds resolve driver-side — min-hop depth
-    // is a pure integer function of graph + seeds, nothing to drift
+      localMaxEdges: Int = LocalMaxEdges): DataFrame = {
+    // bounded edges + bounded seeds resolve driver-side
+    // ([[BoundedCollect]]) — min-hop depth is a pure integer function of
+    // graph + seeds, nothing to drift
     val e = edges.localCheckpoint(false)
-    locally {
-      if (e.count() <= localMaxEdges) {
-        val seedIds = seeds.select(col("doc_id")).localCheckpoint(false)
-        if (seedIds.count() <= localMaxEdges) {
-          val spark = e.sparkSession
-          val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-          e.collect().foreach { row =>
-            val s = row.getLong(0)
-            var l = adj.get(s)
-            if (l == null) { l = scala.collection.mutable.ArrayBuffer[Long](); adj.put(s, l) }
-            l += row.getLong(1)
-          }
-          val depth = new java.util.HashMap[Long, Int]()
-          var frontier = scala.collection.mutable.ArrayBuffer[Long]()
-          seedIds.collect().foreach { row =>
-            val v = row.getLong(0)
-            if (!depth.containsKey(v)) { depth.put(v, 0); frontier += v }
-          }
-          var r = 1
-          while (r <= maxDepth && frontier.nonEmpty) {
-            val next = scala.collection.mutable.ArrayBuffer[Long]()
-            frontier.foreach { v =>
-              val ns = adj.get(v)
-              if (ns != null) ns.foreach { d =>
-                if (!depth.containsKey(d)) { depth.put(d, r); next += d }
-              }
-            }
-            frontier = next
-            r += 1
-          }
-          val out = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
-          depth.forEach { (v, d) => out += ((v, d)) }
-          return spark.createDataFrame(out.toSeq).toDF("doc_id", "depth")
-            .orderBy(col("doc_id").asc)
-        }
+    val probe = collectAtMost(e, localMaxEdges).flatMap(es =>
+      collectAtMost(seeds.select(col("doc_id")), localMaxEdges).map((es, _)))
+    if (probe.nonEmpty) {
+      val (es, seedRows) = probe.get
+      val spark = e.sparkSession
+      val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
+      es.foreach { row =>
+        val s = row.getLong(0)
+        var l = adj.get(s)
+        if (l == null) { l = scala.collection.mutable.ArrayBuffer[Long](); adj.put(s, l) }
+        l += row.getLong(1)
       }
+      val depth = new java.util.HashMap[Long, Int]()
+      var frontier = scala.collection.mutable.ArrayBuffer[Long]()
+      seedRows.foreach { row =>
+        val v = row.getLong(0)
+        if (!depth.containsKey(v)) { depth.put(v, 0); frontier += v }
+      }
+      var r = 1
+      while (r <= maxDepth && frontier.nonEmpty) {
+        val next = scala.collection.mutable.ArrayBuffer[Long]()
+        frontier.foreach { v =>
+          val ns = adj.get(v)
+          if (ns != null) ns.foreach { d =>
+            if (!depth.containsKey(d)) { depth.put(d, r); next += d }
+          }
+        }
+        frontier = next
+        r += 1
+      }
+      val out = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
+      depth.forEach { (v, d) => out += ((v, d)) }
+      return spark.createDataFrame(out.toSeq).toDF("doc_id", "depth")
+        .orderBy(col("doc_id").asc)
     }
     // Edges checkpoint ONCE (`e` above) and are only ever STREAMED: in
     // the small-frontier regime the probe broadcasts the frontier and

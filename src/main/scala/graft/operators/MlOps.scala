@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import BoundedCollect.collectAtMost
 
 /** Learned quality filtering — the fastText-lineage classifier stage of a
   * training-data pipeline (Joulin et al. 2016; CCNet and its descendants
@@ -62,23 +63,18 @@ object MlOps {
     * 0.840 @ 25) while each round costs a full ~150 ms corpus pass —
     * the default stops at round ~12, halving the contract entry.
     */
-  /** Bounded-sample local-iteration ceiling for [[trainQualityLr]] — the
-    * same 64k-row grain that already coalesces the sample to ONE task: a
-    * sample at or under it (≤ ~35 MB of features at dim 64) is collected
-    * once — the broadcast-side size class — and the GD rounds iterate
-    * driver-side with the IDENTICAL accumulation order (the distributed
-    * round folds one partition sequentially, which is exactly the
-    * collected row order), so the trajectory is bit-equal. Above the
-    * ceiling the broadcast-weights distributed rounds run unchanged —
-    * the production-sample path. LrDispatchSpec pins the (w, b)
-    * bit-equality of the two paths on the fixture.
+  /** Feature-row ceiling for the [[BoundedCollect]] dispatch of
+    * [[trainQualityLr]] and [[kcenterOn]] — the same 64k-row grain that
+    * already coalesces the LR sample to ONE task: a sample at or under it
+    * (≤ ~35 MB of features at dim 64) is collected once, the
+    * broadcast-side size class.
     */
-  private[graft] val LrLocalMaxRows: Long = 65536L
+  private[graft] val LrLocalMaxRows: Int = 65536
 
   def trainQualityLr(labeled: DataFrame, dim: Int = 64, iters: Int = 30,
       step: Double = 4.0, l2: Double = 1e-4,
       relTol: Double = 0.25,
-      localMaxRows: Long = LrLocalMaxRows): (Array[Double], Double) = {
+      localMaxRows: Int = LrLocalMaxRows): (Array[Double], Double) = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
     import graft.functions.VectorFunctions.dotFast
     val nFeat = dim + 2
@@ -88,7 +84,11 @@ object MlOps {
     try {
       var w = new Array[Double](nFeat)
       var b = 0.0
-      val n = featsRaw.count().toDouble
+      // the probe reads the same one-partition projection the local GD
+      // loop folds, so its row order IS the distributed accumulation order
+      val probe = collectAtMost(featsRaw.coalesce(1).select(col("x"), col("y")),
+        localMaxRows)
+      val n = probe.map(_.length.toLong).getOrElse(featsRaw.count()).toDouble
       require(n > 0, "cannot train on an empty set")
       var firstDelta = -1.0
       var stopped = false
@@ -106,23 +106,22 @@ object MlOps {
         if (firstDelta < 0.0) firstDelta = maxDelta
         else if (relTol > 0.0 && maxDelta < relTol * firstDelta) stopped = true
       }
-      if (n <= localMaxRows) {
-        // statistics dispatch (r19 optimization round, the CC/broadcast
-        // discipline): a one-task sample pays a full job launch +
-        // broadcast build PER GD ROUND for microseconds of gradient
-        // arithmetic — collect the featurized rows once and run the
-        // SAME float program driver-side. Arithmetic replication, term
+      if (probe.nonEmpty) {
+        // a bounded sample runs the SAME float program driver-side
+        // ([[BoundedCollect]]): the trajectory is bit-equal because the
+        // distributed round folds one partition sequentially, which is
+        // exactly the collected row order. Arithmetic replication, term
         // by term: margin = Σᵢ x(i)·w(i) then + b (DotProduct's
         // sequential fold), σ = 1.0/(1.0+StrictMath.exp(−m)) — Spark's
         // math-expression codegen emits StrictMath, and Math.exp differs
-        // at the last ulp (found by the LrDispatchSpec bit-equality pin)
+        // at the last ulp (found by the DispatchSpec LR bit-equality pin)
         // —, residual = σ − y,
         // per-row gradient g(i) = x(i)·residual, gradient sum = clone
         // of the first row's g then element-wise adds in row order
         // (VecSumCount.addInto over the single coalesced partition),
         // Σresidual sequential in the same order. Null rows skip, as
         // the null-safe expressions skip them.
-        val data = featsRaw.coalesce(1).select(col("x"), col("y")).collect()
+        val data = probe.get
         for (_ <- 1 to iters if !stopped) {
           var grad: Array[Double] = null
           var rb = 0.0
@@ -545,20 +544,15 @@ object MlOps {
     * min(k, #distinct-positions) greedy centers out.
     */
   private[graft] def kcenterOn(emb: DataFrame, k: Int,
-      localMaxRows: Long = LrLocalMaxRows): DataFrame = {
+      localMaxRows: Int = LrLocalMaxRows): DataFrame = {
     import graft.functions.VectorFunctions.cosineFast
     val spark = emb.sparkSession
     require(k >= 1, s"k must be >= 1, got $k")
     val base = emb.select(col("vec_id"), col("embedding"))
       .localCheckpoint(false)
-    // statistics dispatch (r20 — the trainQualityLr/probeVocab
-    // discipline): pull at most localMaxRows+1 rows; when fewer come
-    // back the probe IS the whole set (≤ dim·8 B × localMaxRows, the
-    // broadcast size class) and the greedy loop runs driver-side — the
-    // distributed form paid an argmax job (plus a periodic checkpoint
-    // job) PER ROUND for microseconds of per-row arithmetic. Above the
-    // bound the probe costs one bounded job and the distributed rounds
-    // below run unchanged. ARITHMETIC REPLICATION, term by term:
+    // a bounded set runs the greedy loop driver-side ([[BoundedCollect]])
+    // — the distributed form pays an argmax job (plus a periodic
+    // checkpoint job) PER ROUND. ARITHMETIC REPLICATION, term by term:
     // cosine is CosineSimilarity's sequential index-order fold
     // (ab/aa/bb, Math.sqrt(aa)*Math.sqrt(bb) — correctly rounded per
     // IEEE, so bit-equal across JVMs — zero denominator → 0.0, length
@@ -566,16 +560,14 @@ object MlOps {
     // floor((1−cos)·1e6 + 0.5)/1e6 folded into dmin via min; the argmax
     // is the (dmin, −vec_id) lexicographic max — vec_id is unique so
     // the struct's embedding tie-break field is never reached; the stop
-    // rule is floor(dmin·1e6 + 0.5) ≤ 0. KcDispatchSpec pins local ≡
-    // forced-distributed row-for-row.
-    val probe = if (localMaxRows > 0L)
-      base.limit(localMaxRows.toInt + 1).collect()
-    else Array.empty[org.apache.spark.sql.Row]
-    if (localMaxRows > 0L && probe.length <= localMaxRows) {
-      require(probe.nonEmpty, "cannot select from an empty embedding set")
-      val ids = probe.map(_.getLong(0))
-      val vecs = probe.map(_.getSeq[Double](1).toArray)
-      val nr = probe.length
+    // rule is floor(dmin·1e6 + 0.5) ≤ 0.
+    val probe = collectAtMost(base, localMaxRows)
+    if (probe.nonEmpty) {
+      val rows = probe.get
+      require(rows.nonEmpty, "cannot select from an empty embedding set")
+      val ids = rows.map(_.getLong(0))
+      val vecs = rows.map(_.getSeq[Double](1).toArray)
+      val nr = rows.length
       def cosOf(a: Array[Double], b: Array[Double]): Double = {
         if (a.length != b.length) return Double.NaN // mirrors the null: no update
         var ab = 0.0; var aa = 0.0; var bb = 0.0
