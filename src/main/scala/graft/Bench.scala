@@ -50,11 +50,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // a duplicate entry would run twice in every pass yet be silently
-    // dropped by timedPass().toMap — fail loudly instead (ADVICE r14)
-    require(SparkEntry.benchQueries.distinct.size == SparkEntry.benchQueries.size,
-      "benchQueries contains duplicates: " +
-        SparkEntry.benchQueries.diff(SparkEntry.benchQueries.distinct).mkString(", "))
     // A failing entry still gets a time (the elapsed time until it threw);
     // its name goes to stderr once and into the line's "failed" list, so
     // that time cannot pass for a success.

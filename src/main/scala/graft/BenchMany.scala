@@ -12,6 +12,7 @@ import org.apache.spark.sql.SparkSession
 object BenchMany {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
+    SparkEntry.requireKnown(names.toSeq)
     val sfDir = if (args.length > 1) args(1)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = if (args.length > 2) args(2).toInt else 3

@@ -15,7 +15,7 @@ import graft.plans.{CosineSimilarity, DotProduct, HyperplaneBandKeys, L2Distance
   * }}}
   * This mirrors how the reference exposes its query surface as a declared
   * API (the SDK call signatures, ref `TencentVDB.py:45-49`): the DataFrame
-  * builders in [[SparkEntry.queries]] and the SQL names here are the same
+  * builders in [[SparkEntry.entries]] and the SQL names here are the same
   * expressions, so `spark.sql` users get identical plans and codegen.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -12,6 +12,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+    SparkEntry.requireKnown(names.toSeq)
     val sfDir = if (args.length > 2) args(2)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val suffix = if (args.length > 3) args(3) else "plan"

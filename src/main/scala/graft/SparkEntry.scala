@@ -3,12 +3,20 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.sources.Tables
+import graft.sources.{CatalogOps, CdxOps, Tables, WarcOps}
 
-/** Driver contract — one entry per implemented operator from SURVEY.md §2,
-  * each paired with a DuckDB-runnable oracle SQL over the same parquet
-  * tables (driver registers them by file stem: region, nation, customer,
-  * supplier, part, orders, lineitem, events, documents, embeddings).
+/** Driver contract: the engine's query surface as one table, `entries`,
+  * with one [[SparkEntry.Entry]] per implemented operator from SURVEY.md
+  * §2. A record holds the entry's builder, whether [[graft.Bench]] times
+  * it, and its check, one of two:
+  *  - `Oracle(sql)`: DuckDB-runnable SQL over the same parquet tables
+  *    (driver registers them by file stem: region, nation, customer,
+  *    supplier, part, orders, lineitem, events, documents, embeddings)
+  *    whose result the entry's must equal;
+  *  - `RowsOnly(reason)`: no SQL can replay the answer (approximate
+  *    indexes, engine-native decoders and training), so the gate checks
+  *    only the entry's rows.
+  * `queries`, `benchQueries` and `oracleSql` are views of the table.
   *
   * Determinism rules (FIXTURES.md): double vector math on both sides,
   * `round(score, 6)`, total ORDER BY with integer tie-breaks, exact integral
@@ -28,783 +36,43 @@ object SparkEntry {
   def entry(spark: SparkSession, dir: String): DataFrame =
     TextOps.ragEndToEndText(spark, dir, KnnTextQuery)
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- §2.D vector / knn core ----
-    "q_knn_topk"      -> ((s, d) => KnnOps.topK(s, d)),
-    "q_knn_text"      -> ((s, d) => KnnOps.topKByText(s, d, KnnTextQuery)),
-    "q_knn_batch"     -> ((s, d) => KnnOps.topKBatchAgg(s, d)),
-    "q_knn_filtered"  -> ((s, d) => KnnOps.topKFiltered(s, d)),
-    // q_knn_ivf (label-cell IVF) retired from the contract: superseded by
-    // the trained-cell kmeans variant (3/3 vs 1/3 fixture recall); the
-    // method and its recall test remain (KnnOps.topKIvf).
-    "q_knn_ivf_kmeans" -> ((s, d) => KnnOps.topKIvfKmeans(s, d)),
-    // ingest-cost entries: build the index per call, by design
-    "q_knn_ivf_part"   -> ((s, d) => KnnOps.topKIvfPartitionedE2E(s, d)),
-    "q_knn_hnsw"       -> ((s, d) => GraphAnnOps.topKNsw(s, d)),
-    // probe-only twins: index built once per session (warmup), calls pay
-    // only the query path — the 100×-relevant number
-    "q_knn_ivf_probe"  -> ((s, d) => KnnOps.topKIvfProbe(s, d)),
-    "q_knn_hnsw_probe" -> ((s, d) => GraphAnnOps.topKNswProbe(s, d)),
-    // routed graph probe: coarse quantizer picks nprobe cell graphs, the
-    // beam search never touches the rest (partition-pruned, plan-pinned)
-    "q_knn_hnsw_routed" -> ((s, d) => GraphAnnOps.topKNswRouted(s, d)),
-    "q_knn_quantized"  -> ((s, d) => KnnOps.topKQuantizedProbe(s, d)),
-    "q_knn_pq"         -> ((s, d) => KnnOps.topKPqProbe(s, d)),
-    "q_knn_ivfpq"      -> ((s, d) => KnnOps.topKIvfPqProbe(s, d)),
-    // filtered ANN on the INDEX path (predicate composed with the probe,
-    // not with an exact scan — the FILTER-index production shape)
-    "q_knn_ivf_filtered"  -> ((s, d) => KnnOps.topKIvfFiltered(s, d)),
-    "q_knn_hnsw_filtered" -> ((s, d) => GraphAnnOps.topKNswFiltered(s, d)),
-    // retrieval-evaluation / pair-mining layer over the knn core
-    "q_mine_hardneg"  -> ((s, d) => EvalOps.hardNegatives(s, d)),
-    // ANN-served mining: nprobe-pruned IVF cells. Rows-only with a
-    // DIRECT pin, not one inherited from the index entries (r19): the
-    // default nprobe < kCells makes the mining pool recall<1 by
-    // construction — which cells a query probes depends on the
-    // engine-trained k-means centroids, so no closed-form SQL can
-    // replay the pruned candidate set. What EvalSpec pins DIRECTLY on
-    // THIS entry: at nprobe = kCells the result equals q_mine_hardneg's
-    // exact mining bit-for-bit (the approximation is exactly the cell
-    // pruning, nothing else), and at pruned probes every mined hit is
-    // label-mismatched with dense consistent ranks (a valid, possibly
-    // shallower pool — never a wrong pair)
-    "q_mine_hardneg_indexed" -> ((s, d) => EvalOps.hardNegativesIndexed(s, d)),
-    // assembled DPR-style training records: positive + hard negatives
-    "q_mine_pairs" -> ((s, d) => EvalOps.trainingPairs(s, d)),
-    "q_eval_rank"     -> ((s, d) => EvalOps.rankEval(s, d)),
-    "q_eval_rank_macro" -> ((s, d) => EvalOps.rankEvalMacro(s, d)),
-    // metrics of the ranking the IVF index actually SERVES. Rows-only
-    // with a DIRECT pin (r19): the evaluated run is the nprobe-pruned
-    // probe's — recall<1 against the exact run by construction, and
-    // the pruned candidate set depends on engine-trained centroids no
-    // oracle can replay. EvalSpec pins DIRECTLY on THIS entry: at
-    // nprobe = kCells the whole metric frame (n_rel, hits, recall,
-    // MRR, nDCG) equals q_eval_rank's exact-scan eval bit-for-bit,
-    // and at pruned probes every metric is a valid fraction per query
-    // — the entry measures the index's true serving quality, which is
-    // exactly why its numbers must NOT equal the exact ones
-    "q_eval_rank_indexed" -> ((s, d) => EvalOps.rankEvalIndexed(s, d)),
-    // crawl-side link centrality (deterministic synthetic edge graph)
-    "q_link_pagerank" -> ((s, d) => LinkOps.pageRank(s, d)),
-    // the MAINTAINED vector: create(2 rounds) + warm-start refresh(1),
-    // served from the store — exact trajectory ⇒ SAME oracle as cold(3)
-    "q_link_pagerank_stored" -> ((s, d) => LinkOps.pageRankStoredFixture(s, d)),
-    // anchor-text aggregation over the same edge graph (document expansion)
-    "q_link_anchors" -> ((s, d) => LinkOps.linkAnchors(s, d)),
-    // HITS hubs/authorities: the second classic centrality, nano-int exact
-    "q_link_hits" -> ((s, d) => LinkOps.hits(s, d)),
-    // degree-ordered triangle count + global clustering coefficient
-    "q_link_triangles" -> ((s, d) => LinkOps.triangleCount(s, d)),
-    // fraction of directed edges whose reverse exists (link-farm tell)
-    "q_link_reciprocity" -> ((s, d) => LinkOps.reciprocity(s, d)),
-    // pages cited together (A^T A off-diagonal): related-pages signal
-    "q_link_cocitation"  -> ((s, d) => LinkOps.coCitation(s, d)),
-    "q_link_coupling"    -> ((s, d) => LinkOps.coupling(s, d)),
-    // depth-limited multi-source BFS: min-hop crawl depth from the seeds
-    "q_link_depth"       -> ((s, d) => LinkOps.bfsDepth(s, d)),
-    // incremental re-crawl diff by content hash (added/changed/removed)
-    "q_crawl_delta"    -> ((s, d) => FrontierOps.crawlDelta(s, d)),
-    // next-cycle fetch schedule: staleness priority, per-host politeness cap
-    "q_crawl_frontier" -> ((s, d) => FrontierOps.crawlFrontier(s, d)),
-    // one crawl-cycle plan: delta's added/changed → capped fetch schedule
-    "q_crawl_e2e"      -> ((s, d) => FrontierOps.crawlCycle(s, d)),
-    // the POLITE frontier: RFC 9309 admission gates the schedule (a
-    // disallowed URL never consumes a slot) and crawl-delay shrinks the
-    // per-host cap — RobotsOps (built r13) wired into the crawl cycle
-    "q_crawl_robots"   -> ((s, d) => FrontierOps.crawlFrontierRobots(s, d)),
-    // the maintained loop end to end: IVF collection built from the OLD
-    // snapshot, the delta's added/changed re-embedded + upserted and its
-    // removals retired — rows-only (k-means cells + hash embedder are
-    // engine-native); streaming twin ≡ batch apply pinned in tests
-    "q_crawl_maintain" -> ((s, d) => FrontierOps.crawlMaintainFixture(s, d)),
-    // sitemap ingestion: per-host XML bodies parsed (from_xml) into
-    // (url, lastmod), classified new/stale/fresh vs the corpus — the
-    // discovery half next to robots' admission half; the oracle computes
-    // the expected answer in closed form, so a mangled parse diverges
-    "q_crawl_sitemap"  -> ((s, d) => FrontierOps.crawlSitemap(s, d)),
-    // the two-level <sitemapindex> -> <urlset> protocol (how a 50k+-URL
-    // host publishes): parse index, walk child locs through the fetch
-    // boundary, parse each urlset; closed-form oracle
-    "q_crawl_sitemap_index" -> ((s, d) => FrontierOps.crawlSitemapIndex(s, d)),
-    // the WHOLE next-cycle plan composed: sitemap-INDEX candidates (new
-    // ahead of stale) → robots admission → delay-capped politeness schedule
-    "q_crawl_plan"     -> ((s, d) => FrontierOps.crawlPlan(s, d)),
-    // WARC member round-trip (ISO 28500, the Common Crawl delivery
-    // format): planted per-host members re-split, headers parsed,
-    // Content-Length validated — the archive-ingestion stage a 100 TB
-    // pipeline runs where the reference fetches one URL at a time
-    "q_warc_parse"     -> ((s, d) => graft.sources.WarcOps.warcParse(s, d)),
-    // WET-style text conversion of the length-valid 200 responses —
-    // envelope dropped, markup stripped, whitespace collapsed
-    "q_warc_wet"       -> ((s, d) => graft.sources.WarcOps.warcWet(s, d)),
-    // CDX capture-index planning (CDXJ lines, real SURT + from_json
-    // round-trip): latest good capture per urlkey — what to fetch
-    "q_cdx_latest"     -> ((s, d) => graft.sources.CdxOps.cdxLatest(s, d)),
-    // revisit collapse: captures vs distinct digests per urlkey — the
-    // storage-dedup ratio an archive reader plans against
-    "q_cdx_revisit"    -> ((s, d) => graft.sources.CdxOps.cdxRevisit(s, d)),
-    // the INDEXER: CDXJ capture records built FROM the parsed WARC
-    // members (fetch -> archive -> index -> plan; q_cdx_latest consumes
-    // what this step produces); only length-valid records index
-    "q_cdx_index"      -> ((s, d) => graft.sources.CdxOps.cdxIndexFromWarc(s, d)),
-    // WAT-style anchor extraction from the planted full pages — the
-    // parse stage between archive and the link-graph family
-    "q_wat_links"      -> ((s, d) => graft.sources.WarcOps.watLinks(s, d)),
-    // the COMPLETE archive->training spine (r17): WARC members -> parse
-    // + length gate -> envelope strip -> main-content extraction (keys
-    // recovered from the record URL) -> six-gate funnel -> export shard
-    // plan of the survivors — CC dump in, training shards out
-    "q_archive_e2e"    -> ((s, d) => graft.sources.WarcOps.archiveE2e(s, d)),
-    // the spine as a STREAM (r17): per-batch extract + bloom
-    // first-arrival + gate battery appending shard partials, served by
-    // folding the log — ordered halves + require()'d zero-FP make it
-    // face the SAME oracle as the batch spine
-    "q_archive_e2e_stream" -> ((s, d) => graft.sources.WarcOps.archiveStreamFixture(s, d)),
-    // revisit-aware spine (r18): members planted with % 4 byte-identical
-    // re-crawl captures; extraction runs ONCE per distinct payload
-    // digest (min-struct winner, combinable) and fans out to captures —
-    // same shard plan, measurably fewer extraction rows (WarcSpec pins
-    // both), same closed-form oracle
-    "q_archive_e2e_revisit" -> ((s, d) => graft.sources.WarcOps.archiveE2eRevisit(s, d)),
-    // the revisit spine as a STREAM (r18): extraction is STORE-BACKED
-    // across micro-batches — digest the batch, anti-join the maintained
-    // xtexts store, extract only never-seen digests, fold the capture
-    // corpus from store + new; an unchanged page re-fetched in every
-    // crawl extracts exactly once, ever. Same oracle as the batch spine
-    "q_archive_e2e_revisit_stream" -> ((s, d) =>
-      graft.sources.WarcOps.archiveRevisitStreamFixture(s, d)),
-    // the FULL loop (r18): discover -> admit -> schedule -> fetch ->
-    // archive -> extract -> curate -> shard in ONE composed plan — the
-    // crawl plan's politeness-capped schedule crosses the injected
-    // fetch surface into WARC members and feeds the unchanged spine;
-    // the schedule side broadcasts (hosts x cap), the corpus never
-    // shuffles for the fetch join
-    "q_crawl_archive_e2e" -> ((s, d) => graft.sources.WarcOps.crawlArchiveE2e(s, d)),
-    // the full loop LIVE (r19): repeated crawl cycles — half schedule,
-    // then the steady-state full re-crawl — through store-backed
-    // revisit extraction, the incremental gate battery, and the
-    // verified export; revisits extract once ACROSS cycles and
-    // re-fetched texts never re-export
-    "q_crawl_archive_e2e_stream" -> ((s, d) => graft.sources.WarcOps
-      .crawlArchiveStreamFixture(s, d)),
-    // the extraction store's RETENTION story live (r19): generational
-    // eviction between crawl cycles — evicted digests re-extract
-    // exactly once (self-healing miss), retained ones never, and the
-    // served manifest is byte-identical to the un-evicted loop's
-    "q_crawl_archive_evict" -> ((s, d) => graft.sources.WarcOps
-      .crawlArchiveEvictFixture(s, d)),
-    "q_sim_join"      -> ((s, d) => KnnOps.simJoin(s, d)),
-    "q_sim_join_lsh"  -> ((s, d) => KnnOps.simJoinLsh(s, d)),
-    "q_sim_join_auto" -> ((s, d) => KnnOps.simJoinAuto(s, d)),
-    "q_vec_centroids" -> ((s, d) => KnnOps.centroids(s, d)),
-    // least-central-to-own-label vectors: the pre-training outlier sweep
-    "q_vec_outliers"  -> ((s, d) => KnnOps.outliers(s, d)),
-    "q_vec_quantize"  -> ((s, d) => KnnOps.quantize(s, d)),
-    "q_cosine_pair"   -> ((s, d) => cosinePair(s, d)),
-    // ---- dedup family (LLM-pipeline north star) ----
-    "q_dedup_exact"   -> ((s, d) => DedupOps.dedupExact(s, d)),
-    "q_dedup_jaccard" -> ((s, d) => DedupOps.jaccardPairs(s, d)),
-    "q_dedup_minhash" -> ((s, d) => DedupOps.minHashLsh(s, d)),
-    // NFC-first shingles faced against planted byte-different/
-    // NFC-identical twins: the fuzzy path now collapses what the exact
-    // digest (q_dedup_unicode) collapses
-    "q_dedup_minhash_unicode" -> ((s, d) => DedupOps.minHashLshUnicode(s, d)),
-    "q_dedup_minhash_pairs" -> ((s, d) => DedupOps.minHashLshPairs(s, d)),
-    "q_dedup_simhash" -> ((s, d) => DedupOps.simHash(s, d)),
-    "q_dedup_embed"   -> ((s, d) => DedupOps.embedNearDup(s, d)),
-    "q_dedup_ngram"   -> ((s, d) => DedupOps.ngramJaccardPairs(s, d)),
-    // asymmetric containment: A quoted/cropped inside B (Broder 1997)
-    "q_dedup_containment" -> ((s, d) => DedupOps.containmentPairs(s, d)),
-    "q_dedup_cc"      -> ((s, d) => DedupOps.dedupConnected(s, d)),
-    // the closure served from the maintained component store (one
-    // bucketed read; same recursive-CTE oracle — the fold is exact)
-    "q_dedup_cc_stored" -> ((s, d) => DedupOps.connectedStoredFixture(s, d)),
-    // keep the BEST copy per near-dup cluster, not the first: one
-    // component-keyed order-free argmax on top of the CC resolution
-    "q_dedup_keepbest" -> ((s, d) => DedupOps.dedupKeepBest(s, d)),
-    // the MAINTAINED closure: component store built create(evens) +
-    // incremental refresh(odds), keep-best served as one store read +
-    // argmax — same oracle as the live twin (the fold is exact)
-    "q_dedup_keepbest_stored" -> ((s, d) => DedupOps.keepBestStoredFixture(s, d)),
-    // SoftDeDup-style reweighting: 1/|cluster| sampling weight (ppm,
-    // integer division) over the CC clusters instead of hard removal
-    "q_dedup_soft"    -> ((s, d) => DedupOps.dedupSoft(s, d)),
-    // the weights served from the maintained component store — the
-    // reweighting a pipeline actually runs (live closure = backfill)
-    "q_dedup_soft_stored" -> ((s, d) => DedupOps.dedupSoftStoredFixture(s, d)),
-    // one identity across url-dup AND exact-text-dup edges (closure of
-    // the union — a mirror of a re-crawl needs both signals)
-    "q_dedup_multi"   -> ((s, d) => DedupOps.dedupMulti(s, d)),
-    // Dolma-style paragraph dedup: corpus-wide duplicated paragraphs
-    // (boilerplate) flagged per doc with char accounting + 20% keep gate
-    "q_dedup_paragraph" -> ((s, d) => DedupOps.dedupParagraph(s, d)),
-    // C4's three-sentence-span dedup: first arrival stays, later
-    // occurrences removed, retained text reassembled per doc
-    "q_dedup_span3"     -> ((s, d) => DedupOps.dedupSpan3(s, d)),
-    // the Dolma-style STREAMING form over the maintained bloom store
-    // (r16): first-arrival flags, capacity-planned membership — fully
-    // oracled as of r17: the even-then-odd half order makes first
-    // arrival the deterministic (doc_id % 2, doc_id, pos) rank, and the
-    // fixture build require()s zero measured bloom false positives
-    "q_dedup_paragraph_stream" -> ((s, d) => DedupOps.paragraphStreamFixture(s, d)),
-    "q_dedup_substring" -> ((s, d) => DedupOps.dedupSubstring(s, d)),
-    "q_dedup_substring_trim" -> ((s, d) => DedupOps.dedupSubstringTrim(s, d)),
-    // image-modality near-dup: rendered-mosaic corpus with planted resized
-    // copies → dHash → pigeonhole-blocked hamming join; rows-only (image
-    // decode is engine-native), planted-copy recovery pinned in tests
-    "q_image_neardup" -> ((s, d) => DedupOps.imageNearDup(s, d)),
-    // audio-modality near-dup: spectral fingerprint over real PCM decode,
-    // volume-scaled planted copies; rows-only (audio decode engine-native)
-    "q_audio_neardup" -> ((s, d) => DedupOps.audioNearDup(s, d)),
-    // SemDeDup-shape semantic dedup: k-means cell blocking + exact cosine
-    // verify; rows-only (k-means is engine-native), planted-cluster
-    // recovery and the kCells=1 exact ceiling pinned in tests
-    "q_dedup_semantic" -> ((s, d) => DedupOps.semanticDedupCells(s, d)),
-    // the SERVING form: blocked by the persisted mini-batch-maintained
-    // quantizer (create-half + upsert-half each run); rows-only like its
-    // live twin (k-means is engine-native), behavior pinned in tests
-    "q_dedup_semantic_stored" -> ((s, d) => DedupOps.semanticDedupStoredFixture(s, d)),
-    // ---- text analysis / embedding (LLM-pipeline north star) ----
-    "q_embed_batch"     -> ((s, d) => TextAnalysisOps.embedBatch(s, d)),
-    "q_text_lang"       -> ((s, d) => TextAnalysisOps.langId(s, d)),
-    "q_text_quality"    -> ((s, d) => TextAnalysisOps.qualityScore(s, d)),
-    "q_token_count"     -> ((s, d) => TextAnalysisOps.tokenCount(s, d)),
-    // sketch-aggregated vocabulary head: one pass, m-entry partials —
-    // exact (and therefore oracled) whenever the vocabulary fits in m
-    "q_term_heavyhitters" -> ((s, d) => TextAnalysisOps.heavyHitterTerms(s, d)),
-    // TRAINED quality classifier (fastText-lineage): distributed GD on
-    // heuristic-gate labels, broadcast-weights scoring; rows-only (fp
-    // training is engine-native), learnability + determinism test-pinned.
-    // An oracle flip via fixed-point weight updates was EVALUATED and
-    // rejected (r18, VERDICT task 6): the features come from the
-    // xxhash64 embed kernel (not SQL-expressible — the q_embed_batch
-    // class), and the sigmoid trajectory is transcendental, so an
-    // integer-scaled mirror would have to replace exp() with a rational
-    // approximation on BOTH engines — changing the operator to fit the
-    // oracle rather than oracling the operator
-    "q_quality_lr" -> ((s, d) => MlOps.qualityLrFixture(s, d)),
-    // XLM-R-style temperature mixing: per-source keep rates learned from
-    // measured domain sizes (α = 0.5), applied map-side
-    "q_domain_mix_temp" -> ((s, d) => TextAnalysisOps.domainMixTemperature(s, d)),
-    // DSIR importance-weighted selection (Xie et al. 2023): target-vs-raw
-    // n-gram LM log-ratio per doc, nano-unit exact → fully oracled.
-    // The DEFAULT chain targets the DERIVED language label as of r17 —
-    // no default consumes the fixture lang column (ground truth a crawl
-    // never has); the fixture-label originals live on as _goldlang
-    // continuity twins below
-    "q_select_dsir"     -> ((s, d) => MlOps.dsirSelectLangId(s, d)),
-    // the MAINTAINED model, trained AND asked on the derived label:
-    // integer count folds keep it bit-identical to the live selection
-    "q_select_dsir_stored" -> ((s, d) => MlOps.dsirSelectStoredLangId(s, d)),
-    // continuity twins: the fixture-label forms (accuracy-pin surface —
-    // the derived default is judged against these)
-    "q_select_dsir_goldlang" -> ((s, d) => MlOps.dsirSelect(s, d)),
-    "q_select_dsir_stored_goldlang" -> ((s, d) => MlOps.dsirSelectStored(s, d)),
-    // farthest-first k-center coreset (Gonzalez 1985 / Sener & Savarese
-    // 2018): the DIVERSITY selection pass — FULLY oracled as of r16
-    // (micro-rounded distances replay as chained pick/fold CTE rounds,
-    // kcenterOracleSql); driver-reference + planted-cluster pins stay
-    "q_select_kcenter"  -> ((s, d) => MlOps.kcenterSelect(s, d)),
-    // the MAINTAINED sketch (create-half + fold-half each run) — exact
-    // below saturation, so it faces the SAME oracle as the live aggregate
-    "q_term_heavyhitters_stored" -> ((s, d) => TextAnalysisOps.heavyHittersStoredFixture(s, d)),
-    // REAL trained-BPE token counts (train-then-count composite, the
-    // ingest-cost label); fully oracled as of r17 — the merge loop
-    // replays as unrolled chained-CTE rounds (bpeOracleSql), still
-    // pinned against a driver-side reference + the Sennrich toy example
-    "q_bpe_tokens"      -> ((s, d) => TextAnalysisOps.bpeTokens(s, d)),
-    // corpus-trained bigram-LM quality score (CCNet-lineage filter);
-    // exact integer-micros accumulation → fully DuckDB-oracled
-    "q_lm_bigram"       -> ((s, d) => TextAnalysisOps.lmBigramScore(s, d)),
-    // the BOUNDED maintained LM (CCNet's published shape): sample-trained
-    // count logs folded + top-V pruned at serve, OOV floored to p = 0 —
-    // broadcast-safe by construction at any corpus scale; fully oracled
-    "q_lm_bigram_stored" -> ((s, d) => TextAnalysisOps.lmBigramScoreStored(s, d)),
-    "q_doc_fingerprint" -> ((s, d) => TextAnalysisOps.fingerprint(s, d)),
-    "q_doc_winnow"      -> ((s, d) => TextAnalysisOps.winnowFingerprint(s, d)),
-    "q_sample_split"    -> ((s, d) => TextAnalysisOps.sampleSplit(s, d)),
-    // split keyed on the dup-cluster representative: no eval leakage
-    "q_split_leakage"   -> ((s, d) => TextAnalysisOps.splitLeakageSafe(s, d)),
-    "q_text_bigrams"    -> ((s, d) => TextAnalysisOps.bigrams(s, d)),
-    // document-level PMI over the df-pruned vocabulary (Church & Hanks)
-    "q_term_cooccur"    -> ((s, d) => TextAnalysisOps.termCooccurrence(s, d)),
-    // window-granularity PMI (w=3): the word2vec counting pass
-    "q_term_cooccur_win" -> ((s, d) => TextAnalysisOps.termCooccurrenceWindow(s, d)),
-    // pairwise source-distribution JSD: the mixture-shift alarm
-    "q_source_drift"     -> ((s, d) => TextAnalysisOps.sourceDrift(s, d)),
-    "q_text_redact"     -> ((s, d) => TextAnalysisOps.redactPii(s, d)),
-    "q_text_repetition" -> ((s, d) => TextAnalysisOps.repetitionSignals(s, d)),
-    "q_decontaminate"   -> ((s, d) => TextAnalysisOps.decontaminate(s, d)),
-    // SEMANTIC decontamination: max cosine vs a broadcast eval-suite row,
-    // folded map-side — catches paraphrase leakage n-grams can't
-    "q_decontaminate_sem" -> ((s, d) => KnnOps.semanticDecontaminate(s, d)),
-    // CCNet head/middle/tail: bigram-LM score split at EXACT tercile
-    // fences from the iterative histogram refinement
-    "q_ppl_buckets"     -> ((s, d) => TextAnalysisOps.pplBuckets(s, d)),
-    // the published Gopher rule battery — every ratio threshold an
-    // integer cross-multiplication, boundary-exact in both engines
-    "q_gopher_rules"    -> ((s, d) => TextAnalysisOps.gopherRules(s, d)),
-    // the CCNet composition: rule gate AND LM head+middle buckets
-    "q_curate_ccnet"    -> ((s, d) => TextAnalysisOps.curateCcnet(s, d)),
-    // the published serve shape (r17): the SAME chain scored against the
-    // sample-trained maintained LM — no corpus-derived count table, no
-    // dispatch decision job anywhere in the serve plan
-    "q_curate_ccnet_stored" -> ((s, d) => TextAnalysisOps.curateCcnetStored(s, d)),
-    // language identification (CCNet's first gate, derived not trusted):
-    // literal char-trigram log-odds profile over the rendered-surface
-    // fixture — one map-side codegen expression, zero corpus exchanges
-    "q_lang_id"         -> ((s, d) => LangIdOps.langIdFixture(s, d)),
-    // the per-language accuracy surface (lang x predicted counts)
-    "q_lang_confusion"  -> ((s, d) => LangIdOps.langConfusion(s, d)),
-    // the CONFIDENCE band (r16): integer score margin + unknown verdict
-    // below the fixed fence — CCNet's low-confidence routing
-    "q_lang_id_margin"  -> ((s, d) => LangIdOps.langIdMargin(s, d)),
-    // Unicode-script mix + purity gate — the check that runs before
-    // (or alongside) statistical lang-id; planted non-Latin runs
-    "q_script_detect"   -> ((s, d) => LangIdOps.scriptDetect(s, d)),
-    // Gopher's repetition GATES (Rae et al. A1.1): duplicated-line
-    // chars + char-weighted top-2-gram, 20% integer-ratio thresholds
-    // (q_text_repetition is the count-based top-bigram SIGNAL)
-    "q_gopher_repetition" -> ((s, d) => TextAnalysisOps.gopherRepetition(s, d)),
-    // the COMPLETE A1.1 battery: all 13 published gates — line/paragraph
-    // dup fractions + char fractions, top-2/3/4-gram shares, duplicated
-    // n-gram char coverage n=5..10 (no-double-count position rule)
-    "q_gopher_repetition_full" -> ((s, d) => TextAnalysisOps.gopherRepetitionFull(s, d)),
-    // the composed chain: derived lang gate -> per-language CCNet battery
-    "q_curate_e2e_lang" -> ((s, d) => LangIdOps.curateE2eLang(s, d)),
-    // the lang gate routed through the CONFIDENCE band (r16): en-verdict
-    // only — low-margin docs go to unknown and out, CCNet's §3.1 routing
-    "q_curate_e2e_verdict" -> ((s, d) => LangIdOps.curateE2eLangVerdict(s, d)),
-    // the FULL CCNet: every language through its own LM + fences, union'd
-    "q_curate_multilang" -> ((s, d) => LangIdOps.curateMultilang(s, d)),
-    // the per-language maintained-LM serve (r17): each shard scored
-    // against ITS stored sample-trained model, |langs|*512-row broadcast
-    "q_curate_multilang_stored" -> ((s, d) => LangIdOps.curateMultilangStored(s, d)),
-    // the composed en chain served from the stored en model (r17)
-    "q_curate_e2e_lang_stored" -> ((s, d) => LangIdOps.curateE2eLangStored(s, d)),
-    // the confidence-banded gate on the stored en model (r17): the model
-    // stays prediction-routed; gates/scoring/fences run over the verdict
-    "q_curate_e2e_verdict_stored" -> ((s, d) => LangIdOps.curateE2eVerdictStored(s, d)),
-    // JL Rademacher projection from a shared integer-lattice matrix —
-    // map-side, matrix never materialized, one rounding site
-    "q_vec_project"     -> ((s, d) => KnnOps.vecProject(s, d)),
-    // two-phase projected knn: coarse scan over the stored JL space,
-    // full-precision rescore; rows-only (approximate by construction)
-    "q_knn_projected"   -> ((s, d) => KnnOps.topKProjectedProbe(s, d)),
-    "q_pack_sequences"  -> ((s, d) => TextAnalysisOps.packSequences(s, d)),
-    // export shard planning: content-addressed hash sharding + balance
-    // report — the layout stage between curation and the trainer
-    "q_shard_assign"    -> ((s, d) => TextAnalysisOps.shardAssign(s, d)),
-    // padding-minimizing inference batching (pad < bucketWidth by construction)
-    "q_batch_by_length" -> ((s, d) => TextAnalysisOps.batchByLength(s, d)),
-    "q_domain_mix"      -> ((s, d) => TextAnalysisOps.domainMix(s, d)),
-    // DoReMi-class learned mixture: multiplicative weights on integer
-    // excess quality, uniform smoothing, trajectory-average output
-    "q_domain_doremi"   -> ((s, d) => TextAnalysisOps.domainDoremi(s, d)),
-    // T5 span corruption: content-addressed masking, maximal-run spans,
-    // sentinel input/target pairs — the denoising-objective data prep
-    "q_span_corrupt"    -> ((s, d) => TextAnalysisOps.spanCorrupt(s, d)),
-    // FIM infilling prep: content-addressed 50% gate + ordered cuts,
-    // PSM rendering — pure map-side projection
-    "q_fim_transform"   -> ((s, d) => TextAnalysisOps.fimTransform(s, d)),
-    // the published stage-wise removal table: docs/tokens surviving each
-    // curation stage + per-stage keep ppm — same gates as the entries
-    "q_curation_funnel" -> ((s, d) => TextAnalysisOps.curationFunnel(s, d)),
-    // annealing-phase plan: exact 90th-percentile quality fence routes
-    // the top slice to the final training stretch + a 10% replay slice
-    "q_anneal_mix"      -> ((s, d) => TextAnalysisOps.annealMix(s, d)),
-    // data-constrained scaling check: epochs per domain under the
-    // learned mixture and a 4-pass budget; ~4-epoch value-cliff flag
-    "q_epoch_plan"      -> ((s, d) => TextAnalysisOps.epochPlan(s, d)),
-    // SFT pair formatting with loss-mask accounting: planted
-    // prompt/response halves, chat template, masked-token counts
-    "q_sft_format"      -> ((s, d) => TextAnalysisOps.sftFormat(s, d)),
-    // write-then-verify sharded export (r17): documents land in a
-    // shard-partitioned collection, the manifest computes FROM THE
-    // WRITTEN table — per-shard totals + id range + bit_xor content
-    // checksum, so a lost/doubled/corrupted row fails the oracle
-    "q_export_verified" -> ((s, d) => graft.sources.CatalogOps
-      .exportShardedVerified(s, "graft_export", "docs",
-        graft.sources.Tables.documents(s, d))),
-    // the export as a STREAM (r18): per-micro-batch idempotent
-    // (shard, batch_id) partition writes + a manifest-partials log in
-    // docs-then-log commit order, served by recomputing the manifest
-    // FROM the written table and require()-reconciling it against the
-    // folded log — stream-in -> verified-shards-out, same closed-form
-    // oracle as the batch export
-    "q_export_verified_stream" -> ((s, d) => graft.sources.CatalogOps
-      .exportStreamFixture(s, d)),
-    // the spine's survivors land as verified bytes (r19): WARC members
-    // -> parse -> extract -> six-gate funnel -> the CURATED text
-    // written sharded + manifest recomputed from the written table —
-    // the curate -> verified-write seam a production pipeline ships
-    "q_spine_export_verified" -> ((s, d) => graft.sources.WarcOps
-      .spineExportVerified(s, d)),
-    // the spine-survivor export as a STREAM (r19): per-batch gate
-    // battery over the maintained bloom store, survivors landed via
-    // idempotent (shard, batch_id) writes in docs -> log -> bloom
-    // commit order, compacted to one file set per shard, served by the
-    // written-table-vs-folded-log reconciliation — same closed form
-    "q_spine_export_verified_stream" -> ((s, d) => graft.sources.WarcOps
-      .spineExportStreamFixture(s, d)),
-    // the funnel maintained as a STREAM over the bloom store: per-batch
-    // stage totals appended, served by summing the log — fully oracled
-    // as of r17 against the batch report SQL (ordered halves + the
-    // build's require()'d zero-FP measurement make the log fold
-    // algebraically the batch fold)
-    "q_curation_funnel_stream" -> ((s, d) => TextAnalysisOps.funnelStreamFixture(s, d)),
-    "q_curate_e2e"      -> ((s, d) => TextAnalysisOps.curateEndToEnd(s, d)),
-    // C4's published cleaning battery (Raffel et al. 2020 §2.2): line
-    // retention + page drops, planted both-sides like the Gopher gates
-    "q_c4_rules"        -> ((s, d) => TextAnalysisOps.c4Rules(s, d)),
-    // the curation chain with C4 line cleaning as its FIRST stage
-    "q_curate_e2e_c4"   -> ((s, d) => TextAnalysisOps.curateEndToEndC4(s, d)),
-    "q_multimodal_meta" -> ((s, d) => MultimodalOps.mediaMeta(s, d)),
-    // ---- lexical / hybrid retrieval (RAG serving stack) ----
-    "q_text_bm25"      -> ((s, d) => RetrievalOps.bm25TopK(s, d)),
-    // served from the persisted stats store, built create-half +
-    // upsert-half so the incremental path faces the oracle every run
-    "q_text_bm25_stored" -> ((s, d) => RetrievalOps.bm25TopKStored(s, d)),
-    // inverted-postings serving: zero corpus scans, bucket-pruned read;
-    // bit-identical to the stored path → faces the SAME oracle
-    "q_text_bm25_indexed" -> ((s, d) => RetrievalOps.bm25TopKIndexed(s, d)),
-    // conjunctive (AND) mode: all terms required, same scores/statistics
-    "q_text_bm25_conj" -> ((s, d) => {
-      val (db, name) = RetrievalOps.ensureLexicalIndex(s, d)
-      RetrievalOps.bm25TopKIndexedConj(s, db, name, KnnTextQuery, 20)
-    }),
-    // FILTER-index composition on the lexical path: metadata predicate
-    // restricts candidates, statistics stay corpus-wide (Lucene semantics)
-    "q_text_bm25_filtered" -> ((s, d) => {
-      val (db, name) = RetrievalOps.ensureLexicalIndex(s, d)
-      RetrievalOps.bm25TopKIndexedFiltered(s, db, name,
-        sources.Tables.documents(s, d), KnnTextQuery,
-        org.apache.spark.sql.functions.col("source") === "src7", 20)
-    }),
-    // exact phrase match, live corpus-scan form
-    "q_text_phrase" -> ((s, d) => RetrievalOps.phraseSearch(s, d)),
-    // same phrase served from the positional-postings index (create-half
-    // + upsert-half each run); bit-identical → SAME oracle
-    "q_text_phrase_indexed" -> ((s, d) => {
-      val (db, name) = RetrievalOps.ensurePositionalIndex(s, d)
-      RetrievalOps.phraseSearchIndexed(s, db, name)
-    }),
-    // FILTER-composed phrase: metadata predicate restricts candidates
-    // only, pushed below the adjacency chain (Lucene filter semantics)
-    "q_text_phrase_filtered" -> ((s, d) => {
-      val (db, name) = RetrievalOps.ensurePositionalIndex(s, d)
-      RetrievalOps.phraseSearchIndexedFiltered(s, db, name,
-        sources.Tables.documents(s, d), RetrievalOps.PhraseQuery,
-        org.apache.spark.sql.functions.col("doc_id") % 2 === 0)
-    }),
-    // ordered proximity (sloppy phrase): in-order terms with up to 2
-    // interleaved tokens per gap; live scan + positions-index twin
-    "q_text_near" -> ((s, d) => RetrievalOps.proximitySearch(s, d)),
-    "q_text_near_indexed" -> ((s, d) => {
-      val (db, name) = RetrievalOps.ensurePositionalIndex(s, d)
-      RetrievalOps.proximitySearchIndexed(s, db, name)
-    }),
-    // batched phrase serving: ONE index probe answers a phrase table
-    // (includes a repeated-term phrase — the offset-coverage edge case)
-    "q_text_phrase_batch" -> ((s, d) => {
-      val (db, name) = RetrievalOps.ensurePositionalIndex(s, d)
-      val qs = RetrievalOps.PhraseBatch.zipWithIndex
-        .map { case (p, i) => (i.toLong, p) }
-      RetrievalOps.phraseForQueriesIndexed(s, db, name,
-        s.createDataFrame(qs).toDF("query_id", "phrase"))
-    }),
-    "q_hybrid_rrf"     -> ((s, d) => RetrievalOps.hybridRrf(s, d)),
-    // RM3-lite pseudo-relevance feedback: seed pool -> expansion -> re-score
-    "q_text_prf"       -> ((s, d) => RetrievalOps.prfTopK(s, d)),
-    // both pools from persisted artifacts (BM25 store + routed NSW
-    // index). Rows-only with a DIRECT pin (r19): the vector pool is a
-    // beam-searched NSW walk — recall<1 by construction, and the walk
-    // order depends on the engine-built graph no SQL can replay. What
-    // RetrievalSpec pins DIRECTLY on THIS entry: at exhaustive
-    // settings (beam ≥ corpus, all cells) the ENTIRE fusion equals
-    // q_hybrid_rrf bit-for-bit; at production settings the output is
-    // still exactly k rows whose rrf scores recompute from the two
-    // rank columns by the 1/(60+r) arithmetic, and the LEXICAL side's
-    // ranks equal the exact run's (only the vector pool is
-    // approximate — the fusion and the BM25 half never are)
-    "q_hybrid_rrf_served" -> ((s, d) => RetrievalOps.hybridRrfServed(s, d)),
-    // batched lexical serving: one corpus scan for a whole query table;
-    // fully oracled (r15): the batch is 3 literal queries, so the oracle
-    // is a UNION ALL of three single-query chains — each per-query fp
-    // chain preserved exactly (also bit-pinned to the stored
-    // single-query path in RetrievalSpec)
-    "q_text_bm25_batch" -> ((s, d) => {
-      val (db, name) = RetrievalOps.ensureBm25Store(s, d)
-      RetrievalOps.bm25ForQueriesStored(s, sources.Tables.documents(s, d), db, name,
-        s.createDataFrame(Bm25Batch).toDF("query_id", "qtext"))
-    }),
-    // postings-index batched serving: zero corpus scans for a whole query
-    // table; bit-identical to the stored batched path -> SAME oracle
-    "q_text_bm25_batch_indexed" -> ((s, d) => {
-      val (db, name) = RetrievalOps.ensureLexicalIndex(s, d)
-      RetrievalOps.bm25ForQueriesIndexed(s, db, name,
-        s.createDataFrame(Bm25Batch).toDF("query_id", "qtext"))
-    }),
-    "q_tfidf_topterms" -> ((s, d) => RetrievalOps.tfidfTopTerms(s, d)),
-    // SymSpell deletion-neighborhood fuzzy vocabulary lookup
-    "q_text_fuzzy"     -> ((s, d) => RetrievalOps.fuzzyVocabMatch(s, d)),
-    // tf-idf from the postings artifact: one postings scan, no explode,
-    // no self-join; bit-identical to the live path → SAME oracle
-    "q_tfidf_indexed" -> ((s, d) => {
-      val (db, name) = RetrievalOps.ensureLexicalIndex(s, d)
-      RetrievalOps.tfidfTopTermsIndexed(s, db, name)
-    }),
-    // greedy MMR, FULLY oracled as of r16: micro-integer scores with
-    // pool-order ties replay exactly as k-1 chained CTE rounds
-    // (mmrOracleSql); RetrievalSpec still cross-checks the greedy core
-    "q_knn_mmr"        -> ((s, d) => RetrievalOps.mmrRerank(s, d)),
-    // ---- §2.I events (batch) ----
-    "q_events_tumbling"   -> ((s, d) => EventOps.tumbling(s, d)),
-    "q_events_distinct"   -> ((s, d) => EventOps.tumblingDistinct(s, d)),
-    "q_events_hopping"    -> ((s, d) => EventOps.hopping(s, d)),
-    "q_events_sessionize" -> ((s, d) => EventOps.sessionize(s, d)),
-    "q_events_retention"  -> ((s, d) => EventOps.retention(s, d)),
-    "q_events_funnel"     -> ((s, d) => EventOps.funnel(s, d)),
-    // MATCH_RECOGNIZE-lite: regex over each user's ordered event string
-    "q_events_pattern"    -> ((s, d) => EventOps.eventPattern(s, d)),
-    // first-order Markov transition matrix over user timelines
-    "q_events_transitions" -> ((s, d) => EventOps.transitions(s, d)),
-    // the maintained form: boundary-state store, no event scan at ask time
-    "q_events_transitions_stored" -> ((s, d) => EventOps.transitionsStored(s, d)),
-    // per-type daily z-scores from integer moments; |z| >= 2 flagged
-    "q_events_anomaly"    -> ((s, d) => EventOps.dailyAnomalies(s, d)),
-    // synchronous label propagation communities (rows-only: iterative)
-    "q_link_communities"  -> ((s, d) => LinkOps.labelPropagation(s, d)),
-    // incremental materialized view: the daily report served from the store
-    "q_report_maintained" -> ((s, d) => EventOps.reportMaintained(s, d)),
-    // ---- §2.A scans / sources / sinks ----
-    "q_scan_documents"  -> ((s, d) => TextOps.scanDocuments(s, d)),
-    "q_tree_flatten"    -> ((s, d) => TextOps.treeFlatten(s, d)),
-    "q_upsert_lastwins" -> ((s, d) => TextOps.upsertLastWins(s, d)),
-    // snapshot-isolated reads over the append-only version log
-    "q_timetravel_latest" -> ((s, d) => TextOps.timeTravelLatest(s, d)),
-    // CDC change feed: insert/update/delete rows between two snapshots
-    "q_timetravel_changes" -> ((s, d) => TextOps.timeTravelChanges(s, d)),
-    "q_timetravel_asof"   -> ((s, d) => TextOps.timeTravelAsOf(s, d)),
-    // ---- §2.B projections / filters ----
-    "q_project_fields"  -> ((s, d) => TextOps.projectFields(s, d)),
-    "q_filter_nonempty" -> ((s, d) => TextOps.filterNonempty(s, d)),
-    "q_filter_metadata" -> ((s, d) => TextOps.filterMetadata(s, d)),
-    // ---- §2.C string / JSON / scalar functions ----
-    "q_clean_text"      -> ((s, d) => TextOps.cleanText(s, d)),
-    "q_truncate"        -> ((s, d) => TextOps.truncate(s, d)),
-    "q_url_concat"      -> ((s, d) => TextOps.urlConcat(s, d)),
-    "q_url_canonical"   -> ((s, d) => TextOps.urlCanonical(s, d)),
-    "q_url_dedup"       -> ((s, d) => TextOps.urlDedup(s, d)),
-    // RefinedWeb-style URL admission: UT1-class domain blocklist +
-    // weighted strict/soft URL-word score, broadcast-dimension join
-    "q_url_blocklist"   -> ((s, d) => TextOps.urlBlocklist(s, d)),
-    "q_json_extract"    -> ((s, d) => TextOps.jsonExtract(s, d)),
-    // PII redaction: emails/IPv4/phones → typed placeholders + counts,
-    // deterministically PLANTED into the fixture corpus (no organic PII
-    // in word soup); one map-side projection, three codegen'd regexes
-    "q_pii_redact"     -> ((s, d) => TextOps.piiRedact(s, d)),
-    // + Luhn-gated credit-card stage: candidates by regex, redaction
-    // only on mod-10-valid numbers; planted valid AND Luhn-failing
-    "q_pii_redact_cc"  -> ((s, d) => TextOps.piiRedactCc(s, d)),
-    // Unicode NFC + accent folding via native codegen expressions; the
-    // oracle runs DuckDB's utf8proc twins (nfc_normalize/strip_accents) —
-    // two independent conformant implementations must agree byte-for-byte
-    "q_text_normalize" -> ((s, d) => TextOps.textNormalize(s, d)),
-    // normalize-then-dedup composition: byte-different/NFC-identical
-    // planted twins collapse to one digest (a raw-byte dedup keeps both)
-    "q_dedup_unicode"  -> ((s, d) => TextOps.dedupUnicode(s, d)),
-    "q_prompt_template" -> ((s, d) => TextOps.promptTemplate(s, d)),
-    "q_citation_format" -> ((s, d) => TextOps.citationFormat(s, d)),
-    "q_html_extract"    -> ((s, d) => TextOps.htmlExtract(s, d)),
-    // block-scored MAIN-CONTENT extraction (jusText/trafilatura class):
-    // word floor + link-density fence per block, boilerplate dropped
-    "q_html_main"       -> ((s, d) => TextOps.htmlMain(s, d)),
-    // the ingest chain with the block scorer where the ref pulls one
-    // container — extraction feeds collapse/truncate/upsert/fingerprint
-    "q_ingest_e2e_main" -> ((s, d) => TextOps.ingestEndToEndMain(s, d)),
-    "q_json_tree"       -> ((s, d) => TextOps.jsonTree(s, d)),
-    "q_json_tree_deep"  -> ((s, d) => TextOps.jsonTreeDeep(s, d)),
-    "q_rag_e2e"         -> ((s, d) => TextOps.ragEndToEndText(s, d, KnnTextQuery)),
-    "q_rag_e2e_vec"     -> ((s, d) => TextOps.ragEndToEnd(s, d)),
-    "q_ingest_e2e"      -> ((s, d) => TextOps.ingestEndToEnd(s, d)),
-    "q_chunk_split"     -> ((s, d) => TextOps.chunkSplit(s, d)),
-    "q_pipeline_e2e"    -> ((s, d) => TextOps.pipelineEndToEnd(s, d)),
-    "q_scalar_bundle"   -> ((s, d) => RelOps.scalarBundle(s, d)),
-    // ---- §2.E aggregations / result shaping ----
-    "q_flatten_results"  -> ((s, d) => TextOps.flattenResults(s, d)),
-    "q_agg_concat"       -> ((s, d) => TextOps.aggConcat(s, d)),
-    "q_limit"            -> ((s, d) => TextOps.limitK(s, d)),
-    "q_agg_hash"         -> ((s, d) => RelOps.aggHash(s, d)),
-    "q_agg_distinct"     -> ((s, d) => RelOps.aggDistinct(s, d)),
-    "q_approx_distinct"  -> ((s, d) => RelOps.approxDistinct(s, d)),
-    // the stored twin: HLL registers as a maintained max-fold artifact
-    "q_approx_distinct_stored" -> ((s, d) => RelOps.approxDistinctStored(s, d)),
-    "q_grouping_sets"    -> ((s, d) => RelOps.groupingSets(s, d)),
-    "q_percentile"       -> ((s, d) => RelOps.percentiles(s, d)),
-    // exact order statistics via iterative histogram refinement — the
-    // bounded-memory scale path (`percentile` buffers whole groups)
-    "q_quantile_exact"   -> ((s, d) => RelOps.quantileExact(s, d)),
-    // outlier clipping at exact percentile fences (reuses the refinement)
-    "q_winsorize"        -> ((s, d) => RelOps.winsorize(s, d)),
-    // per-status exact quantiles (report-grain group cardinality)
-    "q_quantile_grouped" -> ((s, d) => RelOps.quantileGrouped(s, d)),
-    // q-digest sketch quantiles: one pass, sketch-sized exchange; exact
-    // below capacity (raises if compression fired) -> faces the rank oracle
-    "q_quantile_sketch"  -> ((s, d) => RelOps.quantileSketch(s, d)),
-    // the same report served from the MAINTAINED digest store
-    "q_quantile_sketch_stored" -> ((s, d) => RelOps.quantileSketchStored(s, d)),
-    // rank-normalization via a broadcast CDF grid (no global sort)
-    "q_score_calibrate"  -> ((s, d) => RelOps.scoreCalibrate(s, d)),
-    "q_histogram"        -> ((s, d) => RelOps.histogram(s, d)),
-    // the pre-training validation suite: one row per constraint
-    "q_quality_checks"   -> ((s, d) => RelOps.qualityChecks(s, d)),
-    "q_tpch_q1"          -> ((s, d) => RelOps.pricingSummary(s, d)),
-    "q_tpch_q3"          -> ((s, d) => RelOps.shippingPriority(s, d)),
-    "q_tpch_q4"          -> ((s, d) => RelOps.orderPriorityCheck(s, d)),
-    "q_tpch_q5"          -> ((s, d) => RelOps.localSupplierVolume(s, d)),
-    "q_tpch_q7"          -> ((s, d) => RelOps.volumeShipping(s, d)),
-    "q_tpch_q8"          -> ((s, d) => RelOps.nationalMarketShare(s, d)),
-    "q_tpch_q10"         -> ((s, d) => RelOps.returnedItemReport(s, d)),
-    "q_tpch_q15"         -> ((s, d) => RelOps.topSupplier(s, d)),
-    "q_tpch_q17"         -> ((s, d) => RelOps.smallQuantityRevenue(s, d)),
-    "q_tpch_q14"         -> ((s, d) => RelOps.promotionEffect(s, d)),
-    "q_tpch_q18"         -> ((s, d) => RelOps.largeVolumeCustomers(s, d)),
-    "q_tpch_q6"          -> ((s, d) => RelOps.revenueChange(s, d)),
-    "q_tpch_q2"          -> ((s, d) => RelOps.minCostSupplier(s, d)),
-    "q_tpch_q9"          -> ((s, d) => RelOps.productTypeProfit(s, d)),
-    "q_tpch_q11"         -> ((s, d) => RelOps.importantPartValue(s, d)),
-    "q_tpch_q12"         -> ((s, d) => RelOps.latePriorityLines(s, d)),
-    "q_tpch_q13"         -> ((s, d) => RelOps.customerDistribution(s, d)),
-    "q_tpch_q16"         -> ((s, d) => RelOps.supplierPartCounts(s, d)),
-    "q_tpch_q19"         -> ((s, d) => RelOps.discountedRevenueDisjunct(s, d)),
-    "q_tpch_q20"         -> ((s, d) => RelOps.dominantSuppliers(s, d)),
-    "q_tpch_q21"         -> ((s, d) => RelOps.waitingSuppliers(s, d)),
-    "q_tpch_q22"         -> ((s, d) => RelOps.dormantCustomers(s, d)),
-    "q_part_brands"      -> ((s, d) => RelOps.partBrandRevenue(s, d)),
-    // ---- §2.F joins ----
-    "q_join_hash"      -> ((s, d) => RelOps.joinHash(s, d)),
-    "q_join_salted"    -> ((s, d) => RelOps.joinSalted(s, d)),
-    // salt only measured-hot keys (blanket salting replicates the whole
-    // build side); same semantics as the plain join ⇒ same-oracle class
-    "q_join_skew"      -> ((s, d) => RelOps.joinSkew(s, d)),
-    // the planning query you run before committing to a shuffle key
-    "q_key_skew"       -> ((s, d) => RelOps.keySkew(s, d)),
-    // the same report served from the maintained SpaceSaving key sketch
-    // (exact below saturation ⇒ same oracle, no ask-time corpus pass)
-    "q_key_skew_stored" -> ((s, d) => RelOps.keySkewStored(s, d)),
-    // z-order layout arithmetic (bucket ranks + Morton interleave)
-    "q_zorder_value"   -> ((s, d) => RelOps.zorderValue(s, d)),
-    // grouped top-k via the bounded heap (no per-group sort, k·tasks shuffle)
-    "q_group_topk"     -> ((s, d) => RelOps.groupTopK(s, d)),
-    // reproducible per-source sample by hash rank on the same heap
-    "q_sample_stratified" -> ((s, d) => RelOps.sampleStratified(s, d)),
-    // Efraimidis-Spirtes weighted reservoir: top-k by deterministic A-ES key
-    "q_sample_weighted"   -> ((s, d) => RelOps.sampleWeighted(s, d)),
-    // per-source weighted reservoirs through the bounded-heap group top-k
-    "q_sample_weighted_grouped" -> ((s, d) => RelOps.sampleWeightedGrouped(s, d)),
-    // probe side cut by a deterministic bloom of the selective build side
-    // BEFORE the exchange; no false negatives ⇒ same oracle as plain join
-    "q_join_bloom"     -> ((s, d) => RelOps.joinBloom(s, d)),
-    // id membership served bloom-first from the maintained store, exact
-    // confirm behind it ⇒ same output as the plain semi join
-    "q_join_semi_bloom" -> ((s, d) => RelOps.semiJoinBloomStored(s, d)),
-    "q_join_broadcast" -> ((s, d) => RelOps.joinBroadcast(s, d)),
-    "q_join_semi"      -> ((s, d) => RelOps.joinSemi(s, d)),
-    "q_join_anti"      -> ((s, d) => RelOps.joinAnti(s, d)),
-    "q_join_outer"     -> ((s, d) => RelOps.joinOuter(s, d)),
-    "q_join_range"     -> ((s, d) => RelOps.joinRange(s, d)),
-    "q_join_asof"      -> ((s, d) => RelOps.joinAsof(s, d)),
-    // keyless time-tolerance join via bucket decomposition (no cartesian)
-    "q_join_interval"  -> ((s, d) => RelOps.joinInterval(s, d)),
-    // ---- §2.G windows ----
-    "q_window_rank"    -> ((s, d) => RelOps.windowRank(s, d)),
-    "q_window_ntile"   -> ((s, d) => RelOps.windowNtile(s, d)),
-    "q_pivot"          -> ((s, d) => RelOps.pivotEvents(s, d)),
-    "q_unpivot"        -> ((s, d) => RelOps.unpivotLineitem(s, d)),
-    "q_agg_stats"      -> ((s, d) => RelOps.aggStats(s, d)),
-    // Pearson matrix from exact integer-cent moments: one pass, 15 numbers
-    "q_corr_matrix"    -> ((s, d) => RelOps.corrMatrix(s, d)),
-    "q_window_running" -> ((s, d) => RelOps.windowRunning(s, d)),
-    "q_window_lag"     -> ((s, d) => RelOps.windowLag(s, d)),
-    "q_window_percentrank" -> ((s, d) => RelOps.windowPercentRank(s, d)),
-    "q_window_range"   -> ((s, d) => RelOps.windowRange(s, d)),
-    "q_window_firstlast" -> ((s, d) => RelOps.windowFirstLast(s, d)),
-    // ---- §2.H sorts / limits / set ops ----
-    "q_sort_limit"    -> ((s, d) => RelOps.sortLimit(s, d)),
-    "q_set_union"     -> ((s, d) => RelOps.setUnion(s, d)),
-    "q_set_intersect" -> ((s, d) => RelOps.setIntersect(s, d)),
-    "q_set_except"    -> ((s, d) => RelOps.setExcept(s, d)),
-  )
+  /** How the correctness gate checks an entry. */
+  sealed trait Check
+  /** The entry's result must equal this DuckDB SQL's. */
+  final case class Oracle(sql: String) extends Check
+  /** No SQL can replay the answer; the gate checks only the rows. */
+  final case class RowsOnly(reason: String) extends Check
 
-  /** Headline bench set (run by [[graft.Bench]]): one representative query
-    * per operator family, each with its scale-shaped plan — vector/knn,
-    * similarity joins (exact + LSH), the dedup ladder, embedding, text
-    * analysis, RAG shaping, relational joins/aggs/windows, events. The
-    * full `queries` map stays covered by the correctness gate; the bench
+  /** One registered entry: its builder, its check, and whether
+    * [[graft.Bench]] times it.
+    */
+  final case class Entry(name: String, run: (SparkSession, String) => DataFrame,
+                         check: Check, bench: Boolean = true)
+
+  /** Every entry's builder, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    entries.map(e => e.name -> e.run).toMap
+
+  /** Headline bench set (run by [[graft.Bench]], in table order): one
+    * representative query per operator family, each with its scale-shaped
+    * plan — vector/knn, similarity joins (exact + LSH), the dedup ladder,
+    * embedding, text analysis, RAG shaping, relational joins/aggs/windows,
+    * events. Every entry stays covered by the correctness gate; the bench
     * reports the engine's per-family throughput profile.
     */
-  def benchQueries: Seq[String] = Seq(
-    "q_knn_topk", "q_knn_text", "q_knn_batch", "q_knn_filtered", "q_knn_ivf_kmeans",
-    "q_knn_ivf_part", "q_knn_hnsw", "q_knn_ivf_probe", "q_knn_hnsw_probe",
-    "q_knn_hnsw_routed",
-    "q_knn_quantized", "q_knn_pq", "q_knn_ivfpq", "q_knn_ivf_filtered", "q_knn_hnsw_filtered",
-    "q_cosine_pair", "q_sim_join", "q_sim_join_lsh", "q_sim_join_auto", "q_vec_centroids",
-    "q_vec_quantize", "q_embed_batch",
-    "q_dedup_exact", "q_dedup_jaccard", "q_dedup_minhash", "q_dedup_simhash",
-    "q_dedup_embed", "q_dedup_cc", "q_dedup_multi", "q_dedup_substring", "q_dedup_substring_trim",
-    "q_image_neardup", "q_audio_neardup", "q_dedup_semantic", "q_dedup_semantic_stored",
-    "q_text_quality", "q_quality_lr", "q_token_count", "q_term_heavyhitters", "q_term_heavyhitters_stored", "q_bpe_tokens", "q_lm_bigram", "q_multimodal_meta",
-    "q_agg_hash", "q_grouping_sets", "q_tpch_q3", "q_tpch_q10", "q_join_hash", "q_join_broadcast", "q_join_bloom",
-    "q_quantile_exact", "q_quantile_sketch", "q_quantile_sketch_stored", "q_group_topk", "q_key_skew", "q_key_skew_stored", "q_join_skew", "q_zorder_value",
-    "q_join_semi_bloom", "q_timetravel_latest", "q_timetravel_asof", "q_timetravel_changes", "q_split_leakage", "q_sample_stratified",
-    "q_approx_distinct_stored", "q_quality_checks", "q_events_distinct", "q_window_percentrank",
-    "q_tpch_q7", "q_tpch_q8", "q_tpch_q14", "q_tpch_q15", "q_tpch_q17", "q_tpch_q18",
-    "q_tpch_q2", "q_tpch_q9", "q_tpch_q11", "q_tpch_q12", "q_tpch_q13", "q_tpch_q16",
-    "q_tpch_q19", "q_tpch_q20", "q_tpch_q21", "q_tpch_q22",
-    "q_winsorize", "q_crawl_e2e", "q_quantile_grouped", "q_batch_by_length", "q_score_calibrate",
-    "q_join_asof", "q_join_interval", "q_window_rank", "q_window_range", "q_sort_limit", "q_agg_concat",
-    "q_upsert_lastwins", "q_tree_flatten", "q_rag_e2e", "q_pipeline_e2e",
-    "q_events_tumbling", "q_events_sessionize",
-    "q_text_bm25", "q_text_bm25_stored", "q_text_bm25_indexed", "q_text_bm25_filtered",
-    "q_text_bm25_batch", "q_text_bm25_batch_indexed",
-    "q_hybrid_rrf", "q_hybrid_rrf_served", "q_tfidf_topterms", "q_tfidf_indexed",
-    "q_knn_mmr", "q_text_phrase", "q_text_phrase_indexed", "q_text_phrase_batch", "q_text_phrase_filtered", "q_text_near", "q_text_near_indexed",
-    "q_mine_hardneg", "q_mine_hardneg_indexed", "q_mine_pairs", "q_eval_rank", "q_eval_rank_macro", "q_eval_rank_indexed", "q_link_pagerank", "q_link_pagerank_stored",
-    "q_decontaminate", "q_pack_sequences", "q_domain_mix", "q_domain_mix_temp", "q_curate_e2e",
-    "q_url_canonical", "q_url_dedup", "q_url_blocklist",
-    "q_crawl_delta", "q_crawl_frontier", "q_crawl_robots", "q_link_anchors", "q_link_hits", "q_link_triangles",
-    "q_events_pattern", "q_sample_weighted", "q_sample_weighted_grouped", "q_report_maintained",
-    "q_text_prf", "q_dedup_containment", "q_term_cooccur", "q_text_fuzzy",
-    "q_events_transitions", "q_events_anomaly", "q_link_communities",
-    "q_vec_outliers", "q_term_cooccur_win", "q_link_reciprocity",
-    "q_events_transitions_stored", "q_source_drift", "q_link_cocitation",
-    "q_select_dsir", "q_link_depth", "q_corr_matrix", "q_select_dsir_stored",
-    "q_link_coupling", "q_select_kcenter", "q_decontaminate_sem",
-    "q_ppl_buckets", "q_gopher_rules", "q_curate_ccnet", "q_vec_project",
-    "q_knn_projected", "q_dedup_keepbest", "q_dedup_keepbest_stored",
-    "q_dedup_cc_stored", "q_crawl_maintain", "q_pii_redact",
-    "q_crawl_sitemap", "q_crawl_plan", "q_text_normalize", "q_dedup_unicode",
-    "q_lang_id", "q_curate_e2e_lang", "q_pii_redact_cc",
-    "q_crawl_sitemap_index", "q_dedup_minhash_unicode",
-    "q_select_dsir_goldlang", "q_lang_confusion", "q_gopher_repetition",
-    "q_curate_multilang", "q_dedup_paragraph", "q_lm_bigram_stored",
-    "q_gopher_repetition_full", "q_select_dsir_stored_goldlang",
-    "q_html_main", "q_ingest_e2e_main", "q_dedup_paragraph_stream",
-    "q_lang_id_margin", "q_curate_e2e_verdict",
-    "q_c4_rules", "q_curate_e2e_c4", "q_script_detect", "q_dedup_span3",
-    "q_warc_parse", "q_warc_wet", "q_cdx_latest", "q_cdx_revisit",
-    "q_shard_assign", "q_dedup_soft", "q_dedup_soft_stored", "q_wat_links",
-    "q_domain_doremi", "q_span_corrupt", "q_fim_transform",
-    "q_curation_funnel", "q_anneal_mix", "q_epoch_plan",
-    "q_curation_funnel_stream", "q_sft_format", "q_cdx_index",
-    "q_curate_ccnet_stored", "q_curate_multilang_stored", "q_archive_e2e",
-    "q_archive_e2e_stream", "q_curate_e2e_lang_stored",
-    "q_curate_e2e_verdict_stored", "q_export_verified",
-    "q_export_verified_stream", "q_archive_e2e_revisit",
-    "q_crawl_archive_e2e", "q_archive_e2e_revisit_stream",
-    "q_spine_export_verified", "q_spine_export_verified_stream",
-    "q_crawl_archive_e2e_stream", "q_crawl_archive_evict")
+  lazy val benchQueries: Seq[String] = entries.filter(_.bench).map(_.name)
+
+  /** The oracle SQL of every `Oracle`-checked entry, by name. */
+  lazy val oracleSql: Map[String, String] =
+    entries.collect { case Entry(n, _, Oracle(sql), _) => n -> sql }.toMap
+
+  /** Throws an IllegalArgumentException naming each of `names` that is
+    * not an entry — for mains to call before they start a session.
+    */
+  def requireKnown(names: Seq[String]): Unit = {
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown entry names: ${unknown.mkString(", ")}")
+  }
 
   /** Adjacent-pair cosine — the bare metric surface (ref `TencentVDB.py:46`)
     * as a row-level function, vec_id i vs i+1.
@@ -2417,24 +1685,27 @@ object SparkEntry {
       |  GROUP BY 1, 2)
       |ORDER BY n_trans DESC, from_type ASC, to_type ASC""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    // ---- vector ----
-    "q_knn_text" ->
-      s"""SELECT e.vec_id, e.label,
-         |       round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |             CAST([${knnTextQueryVec().mkString(", ")}] AS DOUBLE[])), 6) AS score
-         |FROM embeddings e
-         |ORDER BY score DESC, e.vec_id ASC
-         |LIMIT 3""".stripMargin,
-    "q_knn_topk" ->
+  /** The registry. Benched entries run in this order in [[graft.Bench]];
+    * each unbenched one sits next to its family. Names are distinct
+    * (checked on first access).
+    */
+  lazy val entries: Seq[Entry] = distinctNames(Seq(
+    Entry("q_knn_topk", (s, d) => KnnOps.topK(s, d), Oracle(
       """SELECT e.vec_id,
         |       round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])), 6) AS score
         |FROM embeddings e
         |CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
         |WHERE e.vec_id <> 0
         |ORDER BY score DESC, e.vec_id ASC
-        |LIMIT 3""".stripMargin,
-    "q_knn_batch" ->
+        |LIMIT 3""".stripMargin)),
+    Entry("q_knn_text", (s, d) => KnnOps.topKByText(s, d, KnnTextQuery), Oracle(
+      s"""SELECT e.vec_id, e.label,
+         |       round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+         |             CAST([${knnTextQueryVec().mkString(", ")}] AS DOUBLE[])), 6) AS score
+         |FROM embeddings e
+         |ORDER BY score DESC, e.vec_id ASC
+         |LIMIT 3""".stripMargin)),
+    Entry("q_knn_batch", (s, d) => KnnOps.topKBatchAgg(s, d), Oracle(
       """WITH cand AS (
         |  SELECT q.vec_id AS query_id, e.vec_id,
         |         round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])), 6) AS score
@@ -2448,166 +1719,977 @@ object SparkEntry {
         |)
         |SELECT query_id, vec_id, score, rank FROM ranked
         |WHERE rank <= 3
-        |ORDER BY query_id ASC, rank ASC""".stripMargin,
-    "q_knn_filtered" ->
+        |ORDER BY query_id ASC, rank ASC""".stripMargin)),
+    Entry("q_knn_filtered", (s, d) => KnnOps.topKFiltered(s, d), Oracle(
       """SELECT e.vec_id, e.label,
         |       round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])), 6) AS score
         |FROM embeddings e
         |CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
         |WHERE e.vec_id <> 0 AND e.label = 3
         |ORDER BY score DESC, e.vec_id ASC
-        |LIMIT 5""".stripMargin,
-    "q_mine_hardneg" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb, label AS q_label
-        |           FROM embeddings WHERE vec_id < 5),
-        |c AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id >= 5),
-        |scored AS (
-        |  SELECT q.query_id, c.vec_id,
-        |         round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), CAST(q.q_emb AS DOUBLE[])), 6) AS score
-        |  FROM c CROSS JOIN q WHERE c.label <> q.q_label
-        |), ranked AS (
-        |  SELECT query_id, vec_id, score,
-        |         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-        |  FROM scored
-        |)
-        |SELECT query_id, vec_id, score, rank FROM ranked
-        |WHERE rank <= 5
-        |ORDER BY query_id ASC, rank ASC""".stripMargin,
-    "q_mine_pairs" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb, label AS q_label
-        |           FROM embeddings WHERE vec_id < 5),
-        |c AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id >= 5),
-        |scored AS (
-        |  SELECT q.query_id, c.vec_id, c.label, q.q_label,
-        |         round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), CAST(q.q_emb AS DOUBLE[])), 6) AS score
-        |  FROM c CROSS JOIN q
-        |), pos AS (
-        |  SELECT query_id, 'pos' AS role, rank, vec_id, score FROM (
-        |    SELECT query_id, vec_id, score,
-        |           row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-        |    FROM scored WHERE label = q_label) WHERE rank <= 1
-        |), neg AS (
-        |  SELECT query_id, 'neg' AS role, rank, vec_id, score FROM (
-        |    SELECT query_id, vec_id, score,
-        |           row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
-        |    FROM scored WHERE label <> q_label) WHERE rank <= 3
-        |)
-        |SELECT query_id, role, rank, vec_id, score
-        |FROM (SELECT * FROM pos UNION ALL SELECT * FROM neg)
-        |ORDER BY query_id ASC, role ASC, rank ASC""".stripMargin,
-    "q_eval_rank" -> rankEvalOracleSql,
-    // macro averages over the SAME per-query metric subquery — per-query
-    // values are already rounded to 6 dp, so the integer-microunit sum
-    // keeps the average order-independent on both engines
-    "q_eval_rank_macro" ->
-      s"""WITH per AS ($rankEvalOracleSql)
-         |SELECT CAST(count(*) AS BIGINT) AS n_queries,
-         |       round(CAST(sum(CAST(floor(recall_at_k * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0, 6) AS recall_at_k,
-         |       round(CAST(sum(CAST(floor(mrr * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0, 6) AS mrr,
-         |       round(CAST(sum(CAST(floor(ndcg * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0, 6) AS ndcg
-         |FROM per""".stripMargin,
-    "q_link_reciprocity" ->
-      s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
-         |e AS (
-         |  SELECT DISTINCT d.doc_id AS src,
-         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
-         |  FROM documents d CROSS JOIN n CROSS JOIN ks
-         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id)
-         |SELECT CAST(count(*) AS BIGINT) AS n_edges,
-         |       CAST(sum(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_reciprocal,
-         |       round(CAST(sum(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) /
-         |             CAST(count(*) AS DOUBLE), 6) AS reciprocity
-         |FROM e LEFT JOIN (SELECT dst AS src, src AS dst FROM e) r
-         |  ON e.src = r.src AND e.dst = r.dst""".stripMargin,
-    "q_link_cocitation" ->
-      s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
-         |e AS (
-         |  SELECT DISTINCT d.doc_id AS src,
-         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
-         |  FROM documents d CROSS JOIN n CROSS JOIN ks
-         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id)
-         |SELECT l.dst AS a, r.dst AS b, count(*) AS n_cocite
-         |FROM e l JOIN e r ON l.src = r.src AND l.dst < r.dst
-         |GROUP BY 1, 2
-         |ORDER BY n_cocite DESC, a ASC, b ASC
-         |LIMIT 20""".stripMargin,
-    "q_link_coupling" ->
-      s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
-         |e AS (
-         |  SELECT DISTINCT d.doc_id AS src,
-         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
-         |  FROM documents d CROSS JOIN n CROSS JOIN ks
-         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id),
-         |keep AS (SELECT dst FROM e GROUP BY dst HAVING count(*) <= 1000),
-         |p AS (SELECT e.src, e.dst FROM e JOIN keep ON e.dst = keep.dst)
-         |SELECT l.src AS a, r.src AS b, count(*) AS n_couple
-         |FROM p l JOIN p r ON l.dst = r.dst AND l.src < r.src
-         |GROUP BY 1, 2
-         |ORDER BY n_couple DESC, a ASC, b ASC
-         |LIMIT 20""".stripMargin,
-    "q_link_triangles" ->
-      s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
-         |e AS (
-         |  SELECT d.doc_id AS src,
-         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
-         |  FROM documents d CROSS JOIN n CROSS JOIN ks
-         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id),
-         |u AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e),
-         |deg AS (SELECT v, count(*) AS d FROM (
-         |          SELECT a AS v FROM u UNION ALL SELECT b FROM u) GROUP BY v),
-         |tri AS (SELECT count(*) AS t FROM u t1
-         |        JOIN u t2 ON t1.b = t2.a
-         |        JOIN u t3 ON t3.a = t1.a AND t3.b = t2.b),
-         |w AS (SELECT CAST(sum((d * (d - 1)) // 2) AS BIGINT) AS nw FROM deg)
-         |SELECT t AS n_triangles, nw AS n_wedges,
-         |       round(3.0 * t / nw, 6) AS clustering
-         |FROM tri CROSS JOIN w""".stripMargin,
-    // BFS depth: recursive-CTE min-hop reference over the same edge hash
-    "q_link_depth" ->
-      s"""WITH RECURSIVE n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
-         |e AS (
-         |  SELECT DISTINCT d.doc_id AS src,
-         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
-         |  FROM documents d CROSS JOIN n CROSS JOIN ks
-         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id),
-         |bfs(doc_id, depth) AS (
-         |  SELECT doc_id, 0 AS depth FROM documents WHERE doc_id % 100 = 0
+        |LIMIT 5""".stripMargin)),
+    // q_knn_ivf (label-cell IVF) retired from the contract: superseded by
+    // the trained-cell kmeans variant (3/3 vs 1/3 fixture recall); the
+    // method and its recall test remain (KnnOps.topKIvf).
+    Entry("q_knn_ivf_kmeans", (s, d) => KnnOps.topKIvfKmeans(s, d),
+      RowsOnly("approximate: IVF cells from engine-trained k-means")),
+    // ingest-cost entries: build the index per call, by design
+    Entry("q_knn_ivf_part", (s, d) => KnnOps.topKIvfPartitionedE2E(s, d),
+      RowsOnly("approximate: IVF cells from engine-trained k-means")),
+    Entry("q_knn_hnsw", (s, d) => GraphAnnOps.topKNsw(s, d),
+      RowsOnly("approximate: beam search over an engine-built NSW graph")),
+    // probe-only twins: index built once per session (warmup), calls pay
+    // only the query path — the 100×-relevant number
+    Entry("q_knn_ivf_probe", (s, d) => KnnOps.topKIvfProbe(s, d),
+      RowsOnly("approximate: nprobe-pruned IVF cells")),
+    Entry("q_knn_hnsw_probe", (s, d) => GraphAnnOps.topKNswProbe(s, d),
+      RowsOnly("approximate: beam search over an engine-built NSW graph")),
+    // routed graph probe: coarse quantizer picks nprobe cell graphs, the
+    // beam search never touches the rest (partition-pruned, plan-pinned)
+    Entry("q_knn_hnsw_routed", (s, d) => GraphAnnOps.topKNswRouted(s, d),
+      RowsOnly("approximate: beam search over routed NSW cell graphs")),
+    Entry("q_knn_quantized", (s, d) => KnnOps.topKQuantizedProbe(s, d),
+      RowsOnly("approximate: int8-quantized candidate scan")),
+    Entry("q_knn_pq", (s, d) => KnnOps.topKPqProbe(s, d),
+      RowsOnly("approximate: answers from product-quantized codes")),
+    Entry("q_knn_ivfpq", (s, d) => KnnOps.topKIvfPqProbe(s, d),
+      RowsOnly("approximate: IVF cells plus product-quantized codes")),
+    // filtered ANN on the INDEX path (predicate composed with the probe,
+    // not with an exact scan — the FILTER-index production shape)
+    Entry("q_knn_ivf_filtered", (s, d) => KnnOps.topKIvfFiltered(s, d),
+      RowsOnly("approximate: filtered probe of nprobe-pruned IVF cells")),
+    Entry("q_knn_hnsw_filtered", (s, d) => GraphAnnOps.topKNswFiltered(s, d),
+      RowsOnly("approximate: filtered beam search over an NSW graph")),
+    Entry("q_cosine_pair", (s, d) => cosinePair(s, d), Oracle(
+      """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+        |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS score
+        |FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
+        |ORDER BY a_id ASC""".stripMargin)),
+    Entry("q_sim_join", (s, d) => KnnOps.simJoin(s, d), Oracle(
+      """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+        |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS score
+        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) > 0.35
+        |ORDER BY a_id ASC, b_id ASC""".stripMargin)),
+    Entry("q_sim_join_lsh", (s, d) => KnnOps.simJoinLsh(s, d), Oracle(
+      """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+        |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS score
+        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) > 0.35
+        |ORDER BY a_id ASC, b_id ASC""".stripMargin)),
+    Entry("q_sim_join_auto", (s, d) => KnnOps.simJoinAuto(s, d), Oracle(
+      """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+        |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS score
+        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) > 0.35
+        |ORDER BY a_id ASC, b_id ASC""".stripMargin)),
+    Entry("q_vec_centroids", (s, d) => KnnOps.centroids(s, d), Oracle(
+      """SELECT label, pos, round(avg(v), 6) AS centroid_v
+        |FROM (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
+        |             unnest(range(len(embedding))) AS pos
+        |      FROM embeddings)
+        |GROUP BY label, pos
+        |ORDER BY label ASC, pos ASC""".stripMargin)),
+    Entry("q_vec_quantize", (s, d) => KnnOps.quantize(s, d), Oracle(
+      """WITH q AS (
+        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+        |         127.0 / greatest(list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x))), 1e-12) AS s
+        |  FROM embeddings)
+        |SELECT vec_id,
+        |       round(s, 6) AS scale_r,
+        |       CAST(list_min(list_transform(v, x -> round(x * s))) AS BIGINT) AS qmin,
+        |       CAST(list_max(list_transform(v, x -> round(x * s))) AS BIGINT) AS qmax,
+        |       round(sqrt(list_sum(list_transform(v,
+        |         x -> (x - round(x * s) / s) * (x - round(x * s) / s)))), 6) AS recon_err
+        |FROM q ORDER BY vec_id ASC""".stripMargin)),
+    Entry("q_embed_batch", (s, d) => TextAnalysisOps.embedBatch(s, d),
+      RowsOnly("xxhash64 embedding kernel is not SQL-expressible")),
+    Entry("q_dedup_exact", (s, d) => DedupOps.dedupExact(s, d), Oracle(
+      """WITH corpus AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 10000, text FROM documents WHERE doc_id % 5 = 0)
+        |SELECT doc_id, fp FROM (
+        |  SELECT doc_id, md5(text) AS fp,
+        |         row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id ASC) AS rn
+        |  FROM corpus)
+        |WHERE rn = 1
+        |ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_dedup_jaccard", (s, d) => DedupOps.jaccardPairs(s, d), Oracle(
+      """WITH ws AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS s FROM documents)
+        |SELECT a_id, b_id, round(j, 6) AS jac FROM (
+        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |         CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(list_cat(a.s, b.s))) AS j
+        |  FROM ws a JOIN ws b ON a.doc_id < b.doc_id)
+        |WHERE j >= 0.95
+        |ORDER BY a_id ASC, b_id ASC""".stripMargin)),
+    Entry("q_dedup_ngram", (s, d) => DedupOps.ngramJaccardPairs(s, d), Oracle(
+      """WITH bg AS (
+        |  SELECT doc_id,
+        |         list_distinct(list_transform(range(1, len(w)), i -> w[i] || chr(30) || w[i + 1])) AS s
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
+        |  WHERE len(w) >= 2)
+        |SELECT a_id, b_id, round(j, 6) AS jac FROM (
+        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |         CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(list_cat(a.s, b.s))) AS j
+        |  FROM bg a JOIN bg b ON a.doc_id < b.doc_id)
+        |WHERE j >= 0.8
+        |ORDER BY a_id ASC, b_id ASC""".stripMargin), bench = false),
+    Entry("q_dedup_minhash", (s, d) => DedupOps.minHashLsh(s, d), Oracle(
+      """WITH ws AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS s FROM documents),
+        |dup AS (
+        |  SELECT DISTINCT b.doc_id AS b_id
+        |  FROM ws a JOIN ws b ON a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(list_cat(a.s, b.s))) >= 0.95)
+        |SELECT doc_id FROM documents
+        |WHERE doc_id NOT IN (SELECT b_id FROM dup)
+        |ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_dedup_minhash_pairs", (s, d) => DedupOps.minHashLshPairs(s, d), Oracle(
+      """WITH ws AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS s FROM documents)
+        |SELECT a_id, b_id, round(j, 6) AS jac FROM (
+        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+        |         CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(list_cat(a.s, b.s))) AS j
+        |  FROM ws a JOIN ws b ON a.doc_id < b.doc_id)
+        |WHERE j >= 0.95
+        |ORDER BY a_id ASC, b_id ASC""".stripMargin), bench = false),
+    Entry("q_dedup_simhash", (s, d) => DedupOps.simHash(s, d), Oracle(
+      // the simhash signature is closed-form md5-nibble arithmetic (r17);
+      // the oracle brute-forces bit_count(xor) <= 3 over distinct fps —
+      // the engine must pigeonhole-block its way to the same pairs
+      simhashOracleSql())),
+    Entry("q_doc_fingerprint", (s, d) => TextAnalysisOps.fingerprint(s, d), Oracle(
+      """SELECT doc_id, md5(text) AS fp,
+        |       CAST(ascii(substr(md5(text), 1, 1)) % 16 AS BIGINT) AS shard
+        |FROM documents ORDER BY doc_id ASC""".stripMargin), bench = false),
+    Entry("q_doc_winnow", (s, d) => TextAnalysisOps.winnowFingerprint(s, d), Oracle(
+      """WITH h AS (
+        |  SELECT doc_id,
+        |         list_transform(range(1, length(text) - 4), i ->
+        |           ascii(substr(text, i,     1)) * CAST(1 AS BIGINT) +
+        |           ascii(substr(text, i + 1, 1)) * CAST(31 AS BIGINT) +
+        |           ascii(substr(text, i + 2, 1)) * CAST(961 AS BIGINT) +
+        |           ascii(substr(text, i + 3, 1)) * CAST(29791 AS BIGINT) +
+        |           ascii(substr(text, i + 4, 1)) * CAST(923521 AS BIGINT) +
+        |           ascii(substr(text, i + 5, 1)) * CAST(28629151 AS BIGINT)) AS hs
+        |  FROM documents WHERE length(text) >= 9),
+        |wn AS (
+        |  SELECT doc_id,
+        |         list_distinct(list_transform(range(1, len(hs) - 2), m ->
+        |           list_min(hs[m:m+3]))) AS fps
+        |  FROM h)
+        |SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fp,
+        |       list_min(fps) AS min_fp, list_max(fps) AS max_fp
+        |FROM wn ORDER BY doc_id ASC""".stripMargin), bench = false),
+    Entry("q_dedup_embed", (s, d) => DedupOps.embedNearDup(s, d), Oracle(
+      """SELECT b_id AS dup_id, min(a_id) AS canonical_id FROM (
+        |  SELECT a.vec_id AS a_id, b.vec_id AS b_id
+        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        |  WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) >= 0.45)
+        |GROUP BY b_id
+        |ORDER BY dup_id ASC""".stripMargin)),
+    Entry("q_dedup_cc", (s, d) => DedupOps.dedupConnected(s, d), Oracle(ConnectedOracle)),
+    // one identity across url-dup AND exact-text-dup edges (closure of
+    // the union — a mirror of a re-crawl needs both signals)
+    Entry("q_dedup_multi", (s, d) => DedupOps.dedupMulti(s, d), Oracle(
+      s"""WITH RECURSIVE $urlFixtureCte,
+         |$urlCanonCte,
+         |uedge AS (
+         |  SELECT c.doc_id AS a, k.canonical_id AS b
+         |  FROM canon c JOIN (SELECT canonical_url AS cu, min(doc_id) AS canonical_id
+         |                     FROM canon GROUP BY canonical_url) k
+         |    ON c.canonical_url = k.cu
+         |  WHERE c.doc_id <> k.canonical_id),
+         |tedge AS (
+         |  SELECT d.doc_id AS a, k.tid AS b
+         |  FROM documents d JOIN (SELECT md5(text) AS h, min(doc_id) AS tid
+         |                         FROM documents GROUP BY md5(text)) k
+         |    ON md5(d.text) = k.h
+         |  WHERE d.doc_id <> k.tid),
+         |p AS (SELECT a, b FROM uedge UNION SELECT a, b FROM tedge),
+         |edges AS (SELECT a, b FROM p UNION SELECT b, a FROM p),
+         |reach(n, m) AS (
+         |  SELECT a, b FROM edges
          |  UNION
-         |  SELECT e.dst, b.depth + 1 FROM bfs b JOIN e ON e.src = b.doc_id
-         |  WHERE b.depth < 3)
-         |SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         |       CAST(min(depth) AS INT) AS depth
-         |FROM bfs GROUP BY doc_id ORDER BY doc_id ASC""".stripMargin,
-    "q_link_pagerank" -> pageRankOracleSql,
-    // synchronous LPA unrolled 5 rounds — all-integer trajectory, exact;
-    // early-stop ≡ full budget by idempotence (law-pinned), so the
-    // engine's convergence stop faces the full-budget oracle
-    "q_link_communities" -> lpaOracleSql(),
-    // greedy serving/selection loops unrolled as chained CTE rounds —
-    // the same flip, applied to the two remaining deterministic greedies
-    "q_knn_mmr" -> mmrOracleSql(),
-    "q_select_kcenter" -> kcenterOracleSql(),
-    "q_link_hits" -> hitsOracleSql,
-    "q_link_pagerank_stored" -> pageRankOracleSql,
-    "q_link_anchors" ->
-      s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
-         |e AS (
-         |  SELECT d.doc_id AS src,
-         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
-         |  FROM documents d CROSS JOIN n CROSS JOIN ks
-         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id),
-         |a AS (SELECT e.dst, list(substr(d.text, 1, 24) ORDER BY e.src) AS l
-         |      FROM e JOIN documents d ON e.src = d.doc_id GROUP BY e.dst)
-         |SELECT dst AS doc_id, CAST(len(l) AS BIGINT) AS in_degree,
-         |       array_to_string(l[1:3], ' | ') AS top_anchors
-         |FROM a ORDER BY doc_id ASC""".stripMargin,
-    "q_crawl_e2e" ->
+         |  SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a WHERE e.b <> r.n),
+         |comp AS (SELECT n AS doc_id, least(n, min(m)) AS component FROM reach GROUP BY n)
+         |SELECT d.doc_id, coalesce(k2.component, d.doc_id) AS component
+         |FROM documents d LEFT JOIN comp k2 USING (doc_id)
+         |ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_dedup_substring", (s, d) => DedupOps.dedupSubstring(s, d), Oracle(
+      """WITH corpus AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 10000, text FROM documents WHERE doc_id % 5 = 0),
+        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM corpus),
+        |w AS (
+        |  SELECT doc_id,
+        |         unnest(list_transform(range(1, len(t) - 18),
+        |           i -> list_aggregate(t[i:i+19], 'string_agg', ' '))) AS win
+        |  FROM toks WHERE len(t) >= 20),
+        |dup AS (SELECT win FROM w GROUP BY win HAVING count(*) > 1),
+        |per AS (
+        |  SELECT w.doc_id, CAST(count(*) AS BIGINT) AS n_dup_windows
+        |  FROM w JOIN dup USING (win) GROUP BY w.doc_id)
+        |SELECT t.doc_id,
+        |       CAST(greatest(len(t.t) - 19, 0) AS BIGINT) AS n_windows,
+        |       CAST(coalesce(p.n_dup_windows, 0) AS BIGINT) AS n_dup_windows,
+        |       CASE WHEN len(t.t) >= 20
+        |            THEN CAST(coalesce(p.n_dup_windows, 0) AS DOUBLE) / (len(t.t) - 19)
+        |            ELSE 0.0 END AS dup_ratio
+        |FROM toks t LEFT JOIN per p ON t.doc_id = p.doc_id
+        |ORDER BY t.doc_id ASC""".stripMargin)),
+    Entry("q_dedup_substring_trim", (s, d) => DedupOps.dedupSubstringTrim(s, d), Oracle(
+      """WITH corpus AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 10000, text FROM documents WHERE doc_id % 5 = 0),
+        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM corpus),
+        |wpos AS (SELECT doc_id, t, unnest(range(1, len(t) - 18)) AS pos
+        |         FROM toks WHERE len(t) >= 20),
+        |w AS (SELECT doc_id, pos,
+        |             list_aggregate(t[pos:pos+19], 'string_agg', ' ') AS win
+        |      FROM wpos),
+        |own AS (SELECT win, doc_id, pos,
+        |               count(*) OVER (PARTITION BY win) AS n,
+        |               row_number() OVER (PARTITION BY win ORDER BY doc_id, pos) AS rn
+        |        FROM w),
+        |rem AS (SELECT doc_id, pos FROM own WHERE n > 1 AND rn > 1),
+        |tokpos AS (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS k FROM toks),
+        |dropk AS (SELECT DISTINCT tp.doc_id, tp.k
+        |          FROM tokpos tp JOIN rem ON tp.doc_id = rem.doc_id
+        |            AND tp.k BETWEEN rem.pos AND rem.pos + 19),
+        |kept AS (
+        |  SELECT tp.doc_id,
+        |         coalesce(string_agg(tp.t[tp.k], ' ' ORDER BY tp.k)
+        |           FILTER (WHERE d.k IS NULL), '') AS kept_text,
+        |         CAST(count(*) FILTER (WHERE d.k IS NOT NULL) AS BIGINT) AS n_removed
+        |  FROM tokpos tp LEFT JOIN dropk d ON tp.doc_id = d.doc_id AND tp.k = d.k
+        |  GROUP BY tp.doc_id)
+        |SELECT doc_id, kept_text, n_removed FROM kept ORDER BY doc_id ASC""".stripMargin)),
+    // image-modality near-dup: rendered-mosaic corpus with planted resized
+    // copies → dHash → pigeonhole-blocked hamming join; rows-only (image
+    // decode is engine-native), planted-copy recovery pinned in tests
+    Entry("q_image_neardup", (s, d) => DedupOps.imageNearDup(s, d),
+      RowsOnly("image decode is engine-native")),
+    // audio-modality near-dup: spectral fingerprint over real PCM decode,
+    // volume-scaled planted copies; rows-only (audio decode engine-native)
+    Entry("q_audio_neardup", (s, d) => DedupOps.audioNearDup(s, d),
+      RowsOnly("audio decode is engine-native")),
+    // SemDeDup-shape semantic dedup: k-means cell blocking + exact cosine
+    // verify; rows-only (k-means is engine-native), planted-cluster
+    // recovery and the kCells=1 exact ceiling pinned in tests
+    Entry("q_dedup_semantic", (s, d) => DedupOps.semanticDedupCells(s, d),
+      RowsOnly("k-means cell blocking is engine-native")),
+    // the SERVING form: blocked by the persisted mini-batch-maintained
+    // quantizer (create-half + upsert-half each run); rows-only like its
+    // live twin (k-means is engine-native), behavior pinned in tests
+    Entry("q_dedup_semantic_stored", (s, d) => DedupOps.semanticDedupStoredFixture(s, d),
+      RowsOnly("k-means quantizer is engine-native")),
+    Entry("q_text_quality", (s, d) => TextAnalysisOps.qualityScore(s, d), Oracle(
+      """WITH t AS (
+        |  SELECT doc_id,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct,
+        |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_alpha
+        |  FROM documents)
+        |SELECT doc_id, n_tokens, n_distinct, n_alpha,
+        |       round(CAST(n_distinct AS DOUBLE) / n_tokens, 6) AS distinct_ratio,
+        |       round(CAST(n_alpha AS DOUBLE) / n_tokens, 6) AS avg_word_len,
+        |       round(CAST(n_distinct AS DOUBLE) / n_tokens * 0.5 + least(1.0, CAST(n_tokens AS DOUBLE) / 100.0) * 0.5, 6) AS quality
+        |FROM t ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_text_lang", (s, d) => TextAnalysisOps.langId(s, d), Oracle(
+      """WITH s AS (
+        |  SELECT doc_id,
+        |    CAST(len(list_intersect(list_distinct(string_split(text, ' ')), ['table','scan','join','query','index'])) AS BIGINT) AS s_rel,
+        |    CAST(len(list_intersect(list_distinct(string_split(text, ' ')), ['stream','batch','window','watermark'])) AS BIGINT) AS s_stream,
+        |    CAST(len(list_intersect(list_distinct(string_split(text, ' ')), ['vector','embedding','column','row'])) AS BIGINT) AS s_vec
+        |  FROM documents)
+        |SELECT doc_id, s_rel, s_stream, s_vec,
+        |       CASE WHEN s_rel >= s_stream AND s_rel >= s_vec THEN 'relational'
+        |            WHEN s_stream >= s_vec THEN 'streaming'
+        |            ELSE 'vector' END AS predicted
+        |FROM s ORDER BY doc_id ASC""".stripMargin), bench = false),
+    // TRAINED quality classifier (fastText-lineage): distributed GD on
+    // heuristic-gate labels, broadcast-weights scoring; rows-only (fp
+    // training is engine-native), learnability + determinism test-pinned.
+    // An oracle flip via fixed-point weight updates was EVALUATED and
+    // rejected (r18, VERDICT task 6): the features come from the
+    // xxhash64 embed kernel (not SQL-expressible — the q_embed_batch
+    // class), and the sigmoid trajectory is transcendental, so an
+    // integer-scaled mirror would have to replace exp() with a rational
+    // approximation on BOTH engines — changing the operator to fit the
+    // oracle rather than oracling the operator
+    Entry("q_quality_lr", (s, d) => MlOps.qualityLrFixture(s, d),
+      RowsOnly("floating-point GD training is engine-native")),
+    Entry("q_token_count", (s, d) => TextAnalysisOps.tokenCount(s, d), Oracle(
+      """SELECT doc_id,
+        |       CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
+        |       CAST(len(regexp_extract_all(text, '[a-z]+')) AS BIGINT) AS alpha_runs,
+        |       n_chars
+        |FROM documents ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_text_bigrams", (s, d) => TextAnalysisOps.bigrams(s, d), Oracle(
+      """SELECT bigram, count(*) AS n FROM (
+        |  SELECT unnest(list_transform(range(1, len(w)),
+        |                               i -> w[i] || ' ' || w[i + 1])) AS bigram
+        |  FROM (SELECT string_split(text, ' ') AS w FROM documents)
+        |  WHERE len(w) >= 2)
+        |GROUP BY bigram
+        |ORDER BY n DESC, bigram ASC
+        |LIMIT 20""".stripMargin), bench = false),
+    // sketch-aggregated vocabulary head: one pass, m-entry partials —
+    // exact (and therefore oracled) whenever the vocabulary fits in m
+    Entry("q_term_heavyhitters", (s, d) => TextAnalysisOps.heavyHitterTerms(s, d),
+      Oracle(heavyHittersOracleSql)),
+    // the MAINTAINED sketch (create-half + fold-half each run) — exact
+    // below saturation, so it faces the SAME oracle as the live aggregate
+    Entry("q_term_heavyhitters_stored", (s, d) => TextAnalysisOps.heavyHittersStoredFixture(s, d),
+      Oracle(heavyHittersOracleSql)),
+    // REAL trained-BPE token counts (train-then-count composite, the
+    // ingest-cost label); fully oracled as of r17 — the merge loop
+    // replays as unrolled chained-CTE rounds (bpeOracleSql), still
+    // pinned against a driver-side reference + the Sennrich toy example
+    Entry("q_bpe_tokens", (s, d) => TextAnalysisOps.bpeTokens(s, d), Oracle(
+      // the full BPE chain replayed: unrolled training rounds to the
+      // vocabulary-derived merge bound, final forms = the encodes
+      bpeOracleSql())),
+    // corpus-trained bigram-LM quality score (CCNet-lineage filter);
+    // exact integer-micros accumulation → fully DuckDB-oracled
+    Entry("q_lm_bigram", (s, d) => TextAnalysisOps.lmBigramScore(s, d), Oracle(
+      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |big AS (
+        |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
+        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
+        |        FROM toks WHERE len(t) >= 2)),
+        |lc AS (SELECT w1, count(*) AS c1 FROM big GROUP BY w1),
+        |bc AS (SELECT w1, w2, count(*) AS c2 FROM big GROUP BY w1, w2),
+        |per AS (
+        |  SELECT b.doc_id, CAST(bc.c2 AS DOUBLE) / lc.c1 AS p
+        |  FROM big b JOIN bc USING (w1, w2) JOIN lc USING (w1)),
+        |agg AS (
+        |  SELECT doc_id, count(*) AS n_bigrams,
+        |         floor(CAST(sum(CAST(floor(p * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
+        |               / count(*) + 0.5) / 1000000.0 AS avg_cond_p,
+        |         floor(min(p) * 1000000.0 + 0.5) / 1000000.0 AS min_cond_p
+        |  FROM per GROUP BY doc_id)
+        |SELECT d.doc_id, CAST(coalesce(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
+        |       CAST(coalesce(a.avg_cond_p, 0.0) AS DOUBLE) AS avg_cond_p,
+        |       CAST(coalesce(a.min_cond_p, 0.0) AS DOUBLE) AS min_cond_p
+        |FROM documents d LEFT JOIN agg a USING (doc_id)
+        |ORDER BY d.doc_id ASC""".stripMargin)),
+    Entry("q_multimodal_meta", (s, d) => MultimodalOps.mediaMeta(s, d), Oracle(
+      """SELECT doc_id,
+        |       CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS byte_len,
+        |       sha256(text) AS content_sha,
+        |       substr(hex(CAST(text AS BLOB)), 1, 32) AS head_hex,
+        |       64 + CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) % 512 AS width,
+        |       64 + (CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) * 7) % 512 AS height,
+        |       1 + CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) % 16 AS n_frames
+        |FROM documents ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_agg_hash", (s, d) => RelOps.aggHash(s, d), Oracle(
+      """SELECT l_returnflag, l_linestatus,
+        |       CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE) AS sum_qty,
+        |       CAST(sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_base_price,
+        |       round(CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE) / count(*), 6) AS avg_qty,
+        |       count(*) AS count_order
+        |FROM lineitem
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag ASC, l_linestatus ASC""".stripMargin)),
+    Entry("q_agg_distinct", (s, d) => RelOps.aggDistinct(s, d), Oracle(
+      """SELECT o_orderstatus,
+        |       count(DISTINCT o_custkey) AS n_custs,
+        |       count(DISTINCT o_orderpriority) AS n_prios,
+        |       count(*) AS n_orders
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus ASC""".stripMargin), bench = false),
+    Entry("q_agg_stats", (s, d) => RelOps.aggStats(s, d), Oracle(
+      """SELECT o_orderstatus,
+        |       round(stddev_samp(o_totalprice), 2) AS sd_price,
+        |       round(corr(o_totalprice, o_custkey), 6) AS corr_price_cust,
+        |       count(*) AS n
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus ASC""".stripMargin), bench = false),
+    Entry("q_grouping_sets", (s, d) => RelOps.groupingSets(s, d), Oracle(
+      """SELECT CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL'
+        |            ELSE coalesce(l_returnflag, 'NULL') END AS returnflag,
+        |       CASE WHEN GROUPING(l_linestatus) = 1 THEN 'ALL'
+        |            ELSE coalesce(l_linestatus, 'NULL') END AS linestatus,
+        |       CAST(sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_price,
+        |       count(*) AS n
+        |FROM lineitem
+        |GROUP BY ROLLUP(l_returnflag, l_linestatus)
+        |ORDER BY returnflag ASC, linestatus ASC""".stripMargin)),
+    Entry("q_pivot", (s, d) => RelOps.pivotEvents(s, d), Oracle(
+      """SELECT date_trunc('day', ts) AS day,
+        |       count(*) FILTER (WHERE event_type = 'click') AS click,
+        |       count(*) FILTER (WHERE event_type = 'error') AS error,
+        |       count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
+        |       count(*) FILTER (WHERE event_type = 'signup') AS signup,
+        |       count(*) FILTER (WHERE event_type = 'view') AS view
+        |FROM events GROUP BY date_trunc('day', ts) ORDER BY day ASC""".stripMargin), bench = false),
+    Entry("q_unpivot", (s, d) => RelOps.unpivotLineitem(s, d), Oracle(
+      """SELECT l_orderkey, l_linenumber, metric, val FROM (
+        |  SELECT l_orderkey, l_linenumber, 'discount' AS metric, l_discount AS val FROM lineitem
+        |  UNION ALL
+        |  SELECT l_orderkey, l_linenumber, 'price', l_extendedprice FROM lineitem
+        |  UNION ALL
+        |  SELECT l_orderkey, l_linenumber, 'quantity', l_quantity FROM lineitem)
+        |ORDER BY l_orderkey ASC, l_linenumber ASC, metric ASC""".stripMargin), bench = false),
+    Entry("q_tpch_q1", (s, d) => RelOps.pricingSummary(s, d), Oracle(
+      """SELECT l_returnflag, l_linestatus,
+        |       sum(l_quantity) AS sum_qty,
+        |       CAST(sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_base_price,
+        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_disc_price,
+        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_charge,
+        |       round(sum(l_quantity) / count(*), 6) AS avg_qty,
+        |       round(CAST(sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 / count(*), 6) AS avg_price,
+        |       round(CAST(sum(CAST(round(l_discount * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 / count(*), 6) AS avg_disc,
+        |       count(*) AS count_order
+        |FROM lineitem
+        |WHERE l_shipdate <= TIMESTAMP '2001-09-01'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag ASC, l_linestatus ASC""".stripMargin), bench = false),
+    Entry("q_tpch_q3", (s, d) => RelOps.shippingPriority(s, d), Oracle(
+      """SELECT l_orderkey, o_orderdate,
+        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |  AND l_shipdate > TIMESTAMP '1998-01-01'
+        |GROUP BY l_orderkey, o_orderdate
+        |ORDER BY revenue DESC, l_orderkey ASC
+        |LIMIT 10""".stripMargin)),
+    Entry("q_tpch_q4", (s, d) => RelOps.orderPriorityCheck(s, d), Oracle(
+      """SELECT o_orderpriority, count(*) AS order_count
+        |FROM orders
+        |WHERE o_orderdate < TIMESTAMP '1998-06-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey
+        |                AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority ASC""".stripMargin), bench = false),
+    Entry("q_tpch_q5", (s, d) => RelOps.localSupplierVolume(s, d), Oracle(
+      """SELECT n_name,
+        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01'
+        |GROUP BY n_name
+        |ORDER BY revenue DESC, n_name ASC""".stripMargin), bench = false),
+    Entry("q_tpch_q6", (s, d) => RelOps.revenueChange(s, d), Oracle(
+      """SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  AND l_discount BETWEEN 0.05 AND 0.07
+        |  AND l_quantity < 24""".stripMargin), bench = false),
+    Entry("q_tpch_q10", (s, d) => RelOps.returnedItemReport(s, d), Oracle(
+      """SELECT c_custkey, c_name, c_acctbal, n_name,
+        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1996-04-01'
+        |GROUP BY c_custkey, c_name, c_acctbal, n_name
+        |ORDER BY revenue DESC, c_custkey ASC
+        |LIMIT 20""".stripMargin)),
+    Entry("q_join_hash", (s, d) => RelOps.joinHash(s, d), Oracle(
+      """SELECT o_orderkey, c_name, c_mktsegment, o_totalprice
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_orderkey ASC""".stripMargin)),
+    Entry("q_join_salted", (s, d) => RelOps.joinSalted(s, d), Oracle(
+      """SELECT o_orderkey, c_name, c_mktsegment, o_totalprice
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_orderkey ASC""".stripMargin), bench = false),
+    Entry("q_join_broadcast", (s, d) => RelOps.joinBroadcast(s, d), Oracle(
+      """SELECT n_nationkey, n_name, r_name
+        |FROM nation JOIN region ON n_regionkey = r_regionkey
+        |ORDER BY n_nationkey ASC""".stripMargin)),
+    Entry("q_join_semi", (s, d) => RelOps.joinSemi(s, d), Oracle(
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |ORDER BY c_custkey ASC""".stripMargin), bench = false),
+    Entry("q_join_anti", (s, d) => RelOps.joinAnti(s, d), Oracle(
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |ORDER BY c_custkey ASC""".stripMargin), bench = false),
+    Entry("q_join_outer", (s, d) => RelOps.joinOuter(s, d), Oracle(
+      """SELECT o_orderkey, count(l_orderkey) AS n_items,
+        |       coalesce(CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE), 0.0) AS sum_qty
+        |FROM orders LEFT JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY o_orderkey ORDER BY o_orderkey ASC""".stripMargin), bench = false),
+    Entry("q_join_range", (s, d) => RelOps.joinRange(s, d), Oracle(
+      """SELECT l_orderkey, l_linenumber, l_shipdate, o_orderdate
+        |FROM lineitem JOIN orders
+        |  ON l_orderkey = o_orderkey
+        | AND l_shipdate >= o_orderdate
+        | AND l_shipdate <= o_orderdate + INTERVAL 60 DAY
+        |ORDER BY l_orderkey ASC, l_linenumber ASC""".stripMargin), bench = false),
+    // probe side cut by a deterministic bloom of the selective build side
+    // BEFORE the exchange; no false negatives ⇒ same oracle as plain join
+    Entry("q_join_bloom", (s, d) => RelOps.joinBloom(s, d), Oracle(
+      """SELECT l.l_orderkey, CAST(l.l_linenumber AS BIGINT) AS l_linenumber,
+        |       round(l.l_extendedprice * (1 - l.l_discount), 4) AS rev, o.o_orderdate
+        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |WHERE o.o_orderpriority = '1-URGENT' AND o.o_orderstatus = 'F'
+        |ORDER BY l_orderkey ASC, l_linenumber ASC""".stripMargin)),
+    // exact order statistics via iterative histogram refinement — the
+    // bounded-memory scale path (`percentile` buffers whole groups)
+    Entry("q_quantile_exact", (s, d) => RelOps.quantileExact(s, d), Oracle(
+      // the oracle derives the lower order statistic from first principles
+      // (row_number against ⌊p·(n−1)⌋) rather than trusting quantile_disc's
+      // rank convention to coincide
+      """WITH n AS (SELECT count(*) AS c FROM orders),
+        |s AS (SELECT o_totalprice AS v,
+        |             row_number() OVER (ORDER BY o_totalprice) AS rn
+        |      FROM orders),
+        |q(p) AS (VALUES (0.25), (0.5), (0.75), (0.95))
+        |SELECT CAST(q.p AS DOUBLE) AS p, s.v
+        |FROM q CROSS JOIN n
+        |JOIN s ON s.rn = CAST(floor(q.p * (n.c - 1)) AS BIGINT) + 1
+        |ORDER BY p ASC""".stripMargin)),
+    Entry("q_percentile", (s, d) => RelOps.percentiles(s, d), Oracle(
+      """SELECT o_orderstatus,
+        |       round(quantile_cont(o_totalprice, 0.25), 4) AS p25,
+        |       round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
+        |       round(quantile_cont(o_totalprice, 0.75), 4) AS p75,
+        |       round(quantile_cont(o_totalprice, 0.95), 4) AS p95
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus ASC""".stripMargin), bench = false),
+    // q-digest sketch quantiles: one pass, sketch-sized exchange; exact
+    // below capacity (raises if compression fired) -> faces the rank oracle
+    Entry("q_quantile_sketch", (s, d) => RelOps.quantileSketch(s, d), Oracle(
+      """WITH g AS (SELECT source, n_chars, count(*) AS c
+        |           FROM documents GROUP BY source, n_chars),
+        |w AS (SELECT source, n_chars,
+        |             sum(c) OVER (PARTITION BY source ORDER BY n_chars) AS cum,
+        |             sum(c) OVER (PARTITION BY source) AS n
+        |      FROM g)
+        |SELECT source,
+        |       min(CASE WHEN cum >= ceiling(0.25 * n) THEN n_chars END) AS p25,
+        |       min(CASE WHEN cum >= ceiling(0.5 * n) THEN n_chars END) AS p50,
+        |       min(CASE WHEN cum >= ceiling(0.9 * n) THEN n_chars END) AS p90,
+        |       min(CASE WHEN cum >= ceiling(0.99 * n) THEN n_chars END) AS p99,
+        |       CAST(max(n) AS BIGINT) AS n_docs
+        |FROM w GROUP BY source
+        |ORDER BY source ASC""".stripMargin)),
+    // the same report served from the MAINTAINED digest store
+    Entry("q_quantile_sketch_stored", (s, d) => RelOps.quantileSketchStored(s, d), Oracle(
+      """WITH g AS (SELECT source, n_chars, count(*) AS c
+        |           FROM documents GROUP BY source, n_chars),
+        |w AS (SELECT source, n_chars,
+        |             sum(c) OVER (PARTITION BY source ORDER BY n_chars) AS cum,
+        |             sum(c) OVER (PARTITION BY source) AS n
+        |      FROM g)
+        |SELECT source,
+        |       min(CASE WHEN cum >= ceiling(0.25 * n) THEN n_chars END) AS p25,
+        |       min(CASE WHEN cum >= ceiling(0.5 * n) THEN n_chars END) AS p50,
+        |       min(CASE WHEN cum >= ceiling(0.9 * n) THEN n_chars END) AS p90,
+        |       min(CASE WHEN cum >= ceiling(0.99 * n) THEN n_chars END) AS p99,
+        |       CAST(max(n) AS BIGINT) AS n_docs
+        |FROM w GROUP BY source
+        |ORDER BY source ASC""".stripMargin)),
+    // grouped top-k via the bounded heap (no per-group sort, k·tasks shuffle)
+    Entry("q_group_topk", (s, d) => RelOps.groupTopK(s, d), Oracle(
+      """WITH r AS (
+        |  SELECT source, doc_id, n_chars,
+        |         row_number() OVER (PARTITION BY source
+        |                            ORDER BY n_chars DESC, doc_id ASC) AS rank
+        |  FROM documents)
+        |SELECT source, CAST(rank AS BIGINT) AS rank, doc_id, n_chars
+        |FROM r WHERE rank <= 5 ORDER BY source ASC, rank ASC""".stripMargin)),
+    // the planning query you run before committing to a shuffle key
+    Entry("q_key_skew", (s, d) => RelOps.keySkew(s, d), Oracle(
+      """WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY user_id),
+        |t AS (SELECT count(*) AS total FROM events)
+        |SELECT user_id, cnt, cnt * 1000000 // total AS share_ppm,
+        |       (cnt * 32 + total - 1) // total AS rec_salt
+        |FROM c CROSS JOIN t
+        |ORDER BY cnt DESC, user_id ASC LIMIT 10""".stripMargin)),
+    // the same report served from the maintained SpaceSaving key sketch
+    // (exact below saturation ⇒ same oracle, no ask-time corpus pass)
+    Entry("q_key_skew_stored", (s, d) => RelOps.keySkewStored(s, d), Oracle(
+      // the stored twin is exact below sketch saturation ⇒ identical SQL
+      """WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY user_id),
+        |t AS (SELECT count(*) AS total FROM events)
+        |SELECT user_id, cnt, cnt * 1000000 // total AS share_ppm,
+        |       (cnt * 32 + total - 1) // total AS rec_salt
+        |FROM c CROSS JOIN t
+        |ORDER BY cnt DESC, user_id ASC LIMIT 10""".stripMargin)),
+    // salt only measured-hot keys (blanket salting replicates the whole
+    // build side); same semantics as the plain join ⇒ same-oracle class
+    Entry("q_join_skew", (s, d) => RelOps.joinSkew(s, d), Oracle(
+      """WITH u AS (SELECT user_id AS u_id, count(*) AS u_events
+        |           FROM events GROUP BY user_id)
+        |SELECT e.event_id, e.user_id, e.value, u.u_events
+        |FROM events e JOIN u ON e.user_id = u.u_id
+        |ORDER BY event_id ASC""".stripMargin)),
+    // z-order layout arithmetic (bucket ranks + Morton interleave)
+    Entry("q_zorder_value", (s, d) => RelOps.zorderValue(s, d), Oracle(
+      // the spread LUT is generated from the same code the Spark plan uses;
+      // every arithmetic step mirrors ZorderFunctions.widthBucket exactly
+      // (same IEEE op order), so the comparison is bit-for-bit
+      {
+        val lut = (0 until graft.functions.ZorderFunctions.Buckets)
+          .map(graft.functions.ZorderFunctions.spread).mkString("[", ", ", "]")
+        s"""WITH mm AS (SELECT min(value) AS vlo, max(value) AS vhi,
+           |                   min(CAST(user_id AS DOUBLE)) AS ulo,
+           |                   max(CAST(user_id AS DOUBLE)) AS uhi FROM events),
+           |b AS (SELECT event_id,
+           |  CASE WHEN vhi <= vlo THEN 0 ELSE
+           |    CAST(least(greatest(floor((value - vlo) * 256.0 / (vhi - vlo)), 0.0), 255.0) AS BIGINT)
+           |  END AS vb,
+           |  CASE WHEN uhi <= ulo THEN 0 ELSE
+           |    CAST(least(greatest(floor((CAST(user_id AS DOUBLE) - ulo) * 256.0 / (uhi - ulo)), 0.0), 255.0) AS BIGINT)
+           |  END AS ub
+           |  FROM events CROSS JOIN mm)
+           |SELECT event_id, vb, ub,
+           |       list_extract($lut, CAST(vb AS INT) + 1) * 2 +
+           |       list_extract($lut, CAST(ub AS INT) + 1) AS z
+           |FROM b ORDER BY event_id ASC""".stripMargin
+      })),
+    // id membership served bloom-first from the maintained store, exact
+    // confirm behind it ⇒ same output as the plain semi join
+    Entry("q_join_semi_bloom", (s, d) => RelOps.semiJoinBloomStored(s, d), Oracle(
+      """SELECT r.range AS probe_id FROM range(1000) r
+        |WHERE r.range IN (SELECT doc_id FROM documents)
+        |ORDER BY probe_id ASC""".stripMargin)),
+    // snapshot-isolated reads over the append-only version log
+    Entry("q_timetravel_latest", (s, d) => TextOps.timeTravelLatest(s, d), Oracle(
+      "SELECT * FROM documents WHERE doc_id >= 50 ORDER BY doc_id ASC")),
+    Entry("q_timetravel_asof", (s, d) => TextOps.timeTravelAsOf(s, d), Oracle(
+      "SELECT * FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id ASC")),
+    // CDC change feed: insert/update/delete rows between two snapshots
+    Entry("q_timetravel_changes", (s, d) => TextOps.timeTravelChanges(s, d), Oracle(
+      // snapshot contents are pure predicates over the fixture (ensure
+      // builds: v0 = even ids, v1 += odd ids, v2 -= ids < 50), so the
+      // resolved reads have closed-form oracles
+      """WITH ch AS (
+        |  SELECT 'insert' AS change, CAST(1 AS BIGINT) AS v,
+        |         doc_id, text, lang, source, n_chars
+        |  FROM documents WHERE doc_id % 2 = 1 AND doc_id >= 50
+        |  UNION ALL
+        |  SELECT 'update', CAST(1 AS BIGINT), doc_id, text, 'xx', source, n_chars
+        |  FROM documents WHERE doc_id % 10 = 0 AND doc_id >= 50
+        |  UNION ALL
+        |  SELECT 'delete', CAST(2 AS BIGINT), doc_id, text, lang, source, n_chars
+        |  FROM documents WHERE doc_id % 2 = 0 AND doc_id < 50)
+        |SELECT change, v, doc_id, text, lang, source, n_chars
+        |FROM ch ORDER BY doc_id ASC""".stripMargin)),
+    // split keyed on the dup-cluster representative: no eval leakage
+    Entry("q_split_leakage", (s, d) => TextAnalysisOps.splitLeakageSafe(s, d), Oracle(
+      """WITH r AS (SELECT md5(text) AS h, min(doc_id) AS rep
+        |           FROM documents GROUP BY md5(text))
+        |SELECT d.doc_id, r.rep, (r.rep * 3266489917) % 1000 AS bucket,
+        |       CASE WHEN (r.rep * 3266489917) % 1000 < 800 THEN 'train'
+        |            WHEN (r.rep * 3266489917) % 1000 < 900 THEN 'valid'
+        |            ELSE 'test' END AS split
+        |FROM documents d JOIN r ON md5(d.text) = r.h
+        |ORDER BY d.doc_id ASC""".stripMargin)),
+    Entry("q_sample_split", (s, d) => TextAnalysisOps.sampleSplit(s, d), Oracle(
+      """SELECT doc_id, (doc_id * 3266489917) % 1000 AS bucket,
+        |       CASE WHEN (doc_id * 3266489917) % 1000 < 800 THEN 'train'
+        |            WHEN (doc_id * 3266489917) % 1000 < 900 THEN 'valid'
+        |            ELSE 'test' END AS split
+        |FROM documents ORDER BY doc_id ASC""".stripMargin), bench = false),
+    // reproducible per-source sample by hash rank on the same heap
+    Entry("q_sample_stratified", (s, d) => RelOps.sampleStratified(s, d), Oracle(
+      """WITH s AS (SELECT source, doc_id,
+        |                  (doc_id * 3266489917) % 1000003 AS h FROM documents),
+        |r AS (SELECT source, doc_id,
+        |             row_number() OVER (PARTITION BY source
+        |                                ORDER BY h ASC, doc_id ASC) AS rank
+        |      FROM s)
+        |SELECT source, CAST(rank AS BIGINT) AS rank, doc_id
+        |FROM r WHERE rank <= 10
+        |ORDER BY source ASC, rank ASC""".stripMargin)),
+    Entry("q_approx_distinct", (s, d) => RelOps.approxDistinct(s, d),
+      RowsOnly("HLL estimate, not an exact count"), bench = false),
+    // the stored twin: HLL registers as a maintained max-fold artifact
+    Entry("q_approx_distinct_stored", (s, d) => RelOps.approxDistinctStored(s, d),
+      RowsOnly("HLL estimate, not an exact count")),
+    // the pre-training validation suite: one row per constraint
+    Entry("q_quality_checks", (s, d) => RelOps.qualityChecks(s, d), Oracle(
+      """WITH checks AS (
+        |SELECT 'accepted_o_orderstatus' AS chk,
+        |       sum(CASE WHEN o_orderstatus NOT IN ('F','O','P') THEN 1 ELSE 0 END) AS v,
+        |       count(*) AS t
+        |FROM orders
+        |UNION ALL
+        |SELECT 'fk_orders_customer',
+        |       sum(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END), count(*)
+        |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+        |UNION ALL
+        |SELECT 'notnull_l_shipdate',
+        |       sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END), count(*)
+        |FROM lineitem
+        |UNION ALL
+        |SELECT 'range_l_discount',
+        |       sum(CASE WHEN l_discount < 0 OR l_discount > 1 THEN 1 ELSE 0 END), count(*)
+        |FROM lineitem
+        |UNION ALL
+        |SELECT 'unique_o_orderkey',
+        |       count(*) - count(DISTINCT o_orderkey), count(*)
+        |FROM orders)
+        |SELECT chk AS "check", CAST(v AS BIGINT) AS violations,
+        |       CAST(t AS BIGINT) AS total, CAST(v AS BIGINT) = 0 AS pass
+        |FROM checks ORDER BY chk ASC""".stripMargin)),
+    Entry("q_events_distinct", (s, d) => EventOps.tumblingDistinct(s, d), Oracle(
+      """SELECT date_trunc('day', ts) AS day, event_type,
+        |       count(DISTINCT user_id) AS n_users
+        |FROM events
+        |GROUP BY date_trunc('day', ts), event_type
+        |ORDER BY day ASC, event_type ASC""".stripMargin)),
+    Entry("q_window_percentrank", (s, d) => RelOps.windowPercentRank(s, d), Oracle(
+      """SELECT c_custkey, c_mktsegment, c_acctbal,
+        |       percent_rank() OVER (PARTITION BY c_mktsegment
+        |                            ORDER BY c_acctbal ASC, c_custkey ASC) AS pr,
+        |       cume_dist() OVER (PARTITION BY c_mktsegment
+        |                         ORDER BY c_acctbal ASC, c_custkey ASC) AS cd
+        |FROM customer ORDER BY c_custkey ASC""".stripMargin)),
+    Entry("q_tpch_q7", (s, d) => RelOps.volumeShipping(s, d), Oracle(
+      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |       CAST(year(l_shipdate) AS INT) AS l_year,
+        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
+        |    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
+        |  AND l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1998-01-01'
+        |GROUP BY supp_nation, cust_nation, l_year
+        |ORDER BY supp_nation ASC, cust_nation ASC, l_year ASC""".stripMargin)),
+    Entry("q_tpch_q8", (s, d) => RelOps.nationalMarketShare(s, d), Oracle(
+      """WITH t AS (
+        |  SELECT CAST(year(o_orderdate) AS INT) AS o_year,
+        |         CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT) AS volu,
+        |         n2.n_name AS supp_nation
+        |  FROM lineitem
+        |  JOIN part ON l_partkey = p_partkey
+        |  JOIN orders ON l_orderkey = o_orderkey
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
+        |  JOIN region ON n1.n_regionkey = r_regionkey
+        |  JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
+        |  WHERE p_type = 'STANDARD' AND r_name = 'AMERICA'
+        |    AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |    AND o_orderdate < TIMESTAMP '1998-01-01')
+        |SELECT o_year,
+        |       round((CAST(sum(CASE WHEN supp_nation = 'NATION_1' THEN volu ELSE 0 END) AS DOUBLE) / 1000000.0)
+        |             / (CAST(sum(volu) AS DOUBLE) / 1000000.0), 6) AS mkt_share,
+        |       CAST(sum(CASE WHEN supp_nation = 'NATION_1' THEN volu ELSE 0 END) AS DOUBLE) / 1000000.0 AS nation_vol,
+        |       CAST(sum(volu) AS DOUBLE) / 1000000.0 AS total_vol
+        |FROM t GROUP BY o_year ORDER BY o_year ASC""".stripMargin)),
+    Entry("q_tpch_q14", (s, d) => RelOps.promotionEffect(s, d), Oracle(
+      """WITH s AS (
+        |  SELECT
+        |    CAST(sum(CASE WHEN p_type = 'PROMO'
+        |      THEN CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)
+        |      ELSE 0 END) AS DOUBLE) / 1000000.0 AS promo,
+        |    CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS total
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1996-07-01')
+        |SELECT round(100.0 * promo / total, 6) AS promo_pct, promo, total FROM s""".stripMargin)),
+    Entry("q_tpch_q15", (s, d) => RelOps.topSupplier(s, d), Oracle(
+      """WITH rev AS (
+        |  SELECT l_suppkey,
+        |         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS total_revenue
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1996-04-01'
+        |  GROUP BY l_suppkey),
+        |m AS (SELECT max(total_revenue) AS max_rev FROM rev)
+        |SELECT s_suppkey, s_name, total_revenue
+        |FROM rev CROSS JOIN m
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE total_revenue = max_rev
+        |ORDER BY s_suppkey ASC""".stripMargin)),
+    Entry("q_tpch_q17", (s, d) => RelOps.smallQuantityRevenue(s, d), Oracle(
+      """WITH t AS (
+        |  SELECT l_partkey,
+        |         (sum(CAST(l_quantity AS BIGINT)) * 200000) // count(*) AS thresh_micros
+        |  FROM lineitem GROUP BY l_partkey)
+        |SELECT
+        |  CAST(sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS small_qty_revenue,
+        |  count(*) AS n_lines
+        |FROM lineitem JOIN t USING (l_partkey)
+        |WHERE CAST(l_quantity AS BIGINT) * 1000000 < thresh_micros""".stripMargin)),
+    Entry("q_tpch_q18", (s, d) => RelOps.largeVolumeCustomers(s, d), Oracle(
+      """WITH big AS (
+        |  SELECT l_orderkey, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
+        |  FROM lineitem GROUP BY l_orderkey HAVING total_qty > 300)
+        |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
+        |FROM big
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |ORDER BY total_qty DESC, o_orderkey ASC
+        |LIMIT 20""".stripMargin)),
+    Entry("q_tpch_q2", (s, d) => RelOps.minCostSupplier(s, d), Oracle(
+      """WITH eu AS (
+        |  SELECT s_suppkey, s_name, s_acctbal, n_name
+        |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey
+        |  WHERE r_name = 'EUROPE'),
+        |cand AS (
+        |  SELECT p_partkey, s_acctbal, s_name, n_name,
+        |         CAST(round(l_extendedprice * 1000000.0 / l_quantity) AS BIGINT) AS unit_micros
+        |  FROM lineitem
+        |  JOIN part ON l_partkey = p_partkey
+        |  JOIN eu ON l_suppkey = s_suppkey
+        |  WHERE p_type = 'LARGE' AND p_size BETWEEN 10 AND 20),
+        |mn AS (SELECT p_partkey, min(unit_micros) AS min_micros FROM cand GROUP BY p_partkey)
+        |SELECT DISTINCT s_acctbal, s_name, n_name, p_partkey,
+        |       CAST(unit_micros AS DOUBLE) / 1000000.0 AS unit_price
+        |FROM cand JOIN mn USING (p_partkey)
+        |WHERE unit_micros = min_micros
+        |ORDER BY s_acctbal DESC, n_name ASC, s_name ASC, p_partkey ASC
+        |LIMIT 100""".stripMargin)),
+    Entry("q_tpch_q9", (s, d) => RelOps.productTypeProfit(s, d), Oracle(
+      """SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
+        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)
+        |                - CAST(round(p_retailprice * 500000.0) AS BIGINT) * CAST(l_quantity AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_profit
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |WHERE p_name LIKE '%bolt%'
+        |GROUP BY n_name, year(o_orderdate)
+        |ORDER BY nation ASC, o_year DESC""".stripMargin)),
+    Entry("q_tpch_q11", (s, d) => RelOps.importantPartValue(s, d), Oracle(
+      """WITH v AS (
+        |  SELECT l_partkey, sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS val_micros
+        |  FROM lineitem
+        |  WHERE l_suppkey IN (
+        |    SELECT s_suppkey FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |    WHERE n_name = 'NATION_7')
+        |  GROUP BY l_partkey),
+        |t AS (SELECT sum(val_micros) AS tot_micros FROM v)
+        |SELECT l_partkey AS p_partkey, CAST(val_micros AS DOUBLE) / 1000000.0 AS value
+        |FROM v CROSS JOIN t
+        |WHERE val_micros * 1000 > tot_micros
+        |ORDER BY value DESC, p_partkey ASC""".stripMargin)),
+    Entry("q_tpch_q12", (s, d) => RelOps.latePriorityLines(s, d), Oracle(
+      """SELECT l_linestatus,
+        |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  AND l_shipdate > o_orderdate + INTERVAL 30 DAY
+        |GROUP BY l_linestatus
+        |ORDER BY l_linestatus ASC""".stripMargin)),
+    Entry("q_tpch_q13", (s, d) => RelOps.customerDistribution(s, d), Oracle(
+      """WITH c AS (
+        |  SELECT c_custkey, count(o_orderkey) AS c_count
+        |  FROM customer LEFT JOIN orders
+        |    ON c_custkey = o_custkey AND o_orderpriority <> '4-NOT SPECIFIED'
+        |  GROUP BY c_custkey)
+        |SELECT c_count, count(*) AS custdist FROM c
+        |GROUP BY c_count
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin)),
+    Entry("q_tpch_q16", (s, d) => RelOps.supplierPartCounts(s, d), Oracle(
+      """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE p_brand <> 'Brand#5' AND p_type <> 'PROMO'
+        |  AND p_size IN (1,5,10,15,20,25,30,35)
+        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |GROUP BY p_brand, p_type, p_size
+        |ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC""".stripMargin)),
+    Entry("q_tpch_q19", (s, d) => RelOps.discountedRevenueDisjunct(s, d), Oracle(
+      """SELECT CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue,
+        |       count(*) AS n_lines
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
+        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
+        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""".stripMargin)),
+    Entry("q_tpch_q20", (s, d) => RelOps.dominantSuppliers(s, d), Oracle(
+      """WITH shipped AS (
+        |  SELECT l_partkey, l_suppkey, sum(CAST(l_quantity AS BIGINT)) AS q
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE p_name LIKE 'small%'
+        |    AND l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  GROUP BY l_partkey, l_suppkey),
+        |tot AS (SELECT l_partkey, sum(q) AS total_q FROM shipped GROUP BY l_partkey),
+        |dom AS (SELECT DISTINCT l_suppkey FROM shipped JOIN tot USING (l_partkey)
+        |        WHERE q * 2 > total_q)
+        |SELECT s_suppkey, s_name FROM supplier
+        |WHERE s_suppkey IN (SELECT l_suppkey FROM dom)
+        |ORDER BY s_suppkey ASC""".stripMargin)),
+    Entry("q_tpch_q21", (s, d) => RelOps.waitingSuppliers(s, d), Oracle(
+      """WITH pos AS (
+        |  SELECT l_orderkey, l_suppkey,
+        |         max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 30 DAY THEN 1 ELSE 0 END) AS late
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |  WHERE o_orderstatus = 'F'
+        |  GROUP BY l_orderkey, l_suppkey),
+        |w AS (
+        |  SELECT p1.l_suppkey, count(*) AS numwait
+        |  FROM pos p1
+        |  WHERE p1.late = 1
+        |    AND EXISTS (SELECT 1 FROM pos p2
+        |                WHERE p2.l_orderkey = p1.l_orderkey AND p2.l_suppkey <> p1.l_suppkey)
+        |    AND NOT EXISTS (SELECT 1 FROM pos p3
+        |                    WHERE p3.l_orderkey = p1.l_orderkey AND p3.l_suppkey <> p1.l_suppkey
+        |                      AND p3.late = 1)
+        |  GROUP BY p1.l_suppkey)
+        |SELECT s_suppkey, s_name, numwait
+        |FROM w JOIN supplier ON l_suppkey = s_suppkey
+        |ORDER BY numwait DESC, s_suppkey ASC
+        |LIMIT 100""".stripMargin)),
+    Entry("q_tpch_q22", (s, d) => RelOps.dormantCustomers(s, d), Oracle(
+      """WITH sel AS (
+        |  SELECT c_custkey, c_nationkey, c_acctbal,
+        |         CAST(round(c_acctbal * 1000000.0) AS BIGINT) AS bal_micros
+        |  FROM customer
+        |  WHERE c_nationkey IN (1,3,5,7,9,11,13) AND c_acctbal > 0),
+        |st AS (SELECT sum(bal_micros) AS sum_micros, count(*) AS n_sel FROM sel)
+        |SELECT c_nationkey AS cntrycode, count(*) AS numcust,
+        |       CAST(sum(bal_micros) AS DOUBLE) / 1000000.0 AS totacctbal
+        |FROM sel CROSS JOIN st
+        |WHERE bal_micros * n_sel > sum_micros
+        |  AND c_custkey NOT IN (SELECT o_custkey FROM orders
+        |                        WHERE o_orderdate >= TIMESTAMP '2000-01-01')
+        |GROUP BY c_nationkey
+        |ORDER BY cntrycode ASC""".stripMargin)),
+    Entry("q_part_brands", (s, d) => RelOps.partBrandRevenue(s, d), Oracle(
+      """SELECT p_brand, count(*) AS n_items,
+        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue,
+        |       count(DISTINCT p_partkey) AS n_parts
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |GROUP BY p_brand
+        |ORDER BY p_brand ASC""".stripMargin), bench = false),
+    // outlier clipping at exact percentile fences (reuses the refinement)
+    Entry("q_winsorize", (s, d) => RelOps.winsorize(s, d), Oracle(
+      """WITH n AS (SELECT count(*) AS c FROM orders),
+        |s AS (SELECT o_totalprice AS v,
+        |             row_number() OVER (ORDER BY o_totalprice) AS rn
+        |      FROM orders),
+        |lo AS (SELECT v FROM s CROSS JOIN n
+        |       WHERE rn = CAST(floor(0.05 * (c - 1)) AS BIGINT) + 1),
+        |hi AS (SELECT v FROM s CROSS JOIN n
+        |       WHERE rn = CAST(floor(0.95 * (c - 1)) AS BIGINT) + 1)
+        |SELECT o_orderkey, o_totalprice,
+        |       least(greatest(o_totalprice, lo.v), hi.v) AS clipped,
+        |       (o_totalprice < lo.v OR o_totalprice > hi.v) AS was_outlier
+        |FROM orders CROSS JOIN lo CROSS JOIN hi
+        |ORDER BY o_orderkey ASC""".stripMargin)),
+    // one crawl-cycle plan: delta's added/changed → capped fetch schedule
+    Entry("q_crawl_e2e", (s, d) => FrontierOps.crawlCycle(s, d), Oracle(
       """WITH old AS (
         |  SELECT doc_id,
         |         md5(CASE WHEN doc_id % 13 = 0 THEN substr(text, 1, 10) ELSE text END) AS old_hash
@@ -2635,8 +2717,770 @@ object SparkEntry {
         |  WHERE change IN ('added', 'changed'))
         |SELECT host, CAST(slot AS BIGINT) AS slot, doc_id, change, priority
         |FROM j WHERE slot <= 5
-        |ORDER BY host ASC, slot ASC""".stripMargin,
-    "q_crawl_delta" ->
+        |ORDER BY host ASC, slot ASC""".stripMargin)),
+    // per-status exact quantiles (report-grain group cardinality)
+    Entry("q_quantile_grouped", (s, d) => RelOps.quantileGrouped(s, d), Oracle(
+      """WITH s AS (
+        |  SELECT o_orderstatus, o_totalprice AS v,
+        |         row_number() OVER (PARTITION BY o_orderstatus
+        |                            ORDER BY o_totalprice) AS rn,
+        |         count(*) OVER (PARTITION BY o_orderstatus) AS c
+        |  FROM orders),
+        |q(p) AS (VALUES (0.5), (0.95))
+        |SELECT o_orderstatus, CAST(q.p AS DOUBLE) AS p, s.v
+        |FROM q JOIN s ON s.rn = CAST(floor(q.p * (s.c - 1)) AS BIGINT) + 1
+        |ORDER BY o_orderstatus ASC, p ASC""".stripMargin)),
+    // padding-minimizing inference batching (pad < bucketWidth by construction)
+    Entry("q_batch_by_length", (s, d) => TextAnalysisOps.batchByLength(s, d), Oracle(
+      """WITH b AS (
+        |  SELECT doc_id, n_chars, n_chars // 200 AS lbucket,
+        |         (doc_id * 2654435761) % 4 AS sub,
+        |         CAST((row_number() OVER (PARTITION BY n_chars // 200,
+        |                                               (doc_id * 2654435761) % 4
+        |                                  ORDER BY n_chars ASC, doc_id ASC) - 1)
+        |              // 16 AS BIGINT) AS batch
+        |  FROM documents)
+        |SELECT doc_id, lbucket, sub, batch, n_chars,
+        |       max(n_chars) OVER (PARTITION BY lbucket, sub, batch) AS batch_max,
+        |       max(n_chars) OVER (PARTITION BY lbucket, sub, batch) - n_chars AS pad_chars
+        |FROM b ORDER BY doc_id ASC""".stripMargin)),
+    // rank-normalization via a broadcast CDF grid (no global sort)
+    Entry("q_score_calibrate", (s, d) => RelOps.scoreCalibrate(s, d), Oracle(
+      // the oracle mirrors the grid construction bin for bin (same IEEE
+      // bucket arithmetic as q_zorder_value's discipline)
+      """WITH mm AS (SELECT min(CAST(n_chars AS DOUBLE)) AS lo,
+        |                   max(CAST(n_chars AS DOUBLE)) AS hi,
+        |                   count(*) AS n FROM documents),
+        |b AS (
+        |  SELECT doc_id, n_chars, n,
+        |         CASE WHEN hi <= lo THEN 0 ELSE
+        |           CAST(least(greatest(floor((CAST(n_chars AS DOUBLE) - lo) * 1024.0 / (hi - lo)), 0.0), 1023.0) AS BIGINT)
+        |         END AS bin
+        |  FROM documents CROSS JOIN mm),
+        |g AS (
+        |  SELECT bin AS gbin,
+        |         sum(count(*)) OVER (ORDER BY bin
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - count(*) AS below
+        |  FROM b GROUP BY bin)
+        |SELECT doc_id, n_chars,
+        |       round(CAST(below AS DOUBLE) / n, 6) AS pct
+        |FROM b JOIN g ON b.bin = g.gbin
+        |ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_histogram", (s, d) => RelOps.histogram(s, d), Oracle(
+      """SELECT CAST(floor(o_totalprice / 50000.0) AS BIGINT) AS bucket, count(*) AS n
+        |FROM orders GROUP BY bucket ORDER BY bucket ASC""".stripMargin), bench = false),
+    Entry("q_join_asof", (s, d) => RelOps.joinAsof(s, d), Oracle(
+      """WITH p AS (SELECT event_id AS p_id, user_id, ts AS p_ts FROM events WHERE event_type = 'purchase'),
+        |     c AS (SELECT event_id AS c_id, user_id AS c_user, ts AS c_ts FROM events WHERE event_type = 'click'),
+        |     j AS (SELECT p.p_id, p.user_id, p.p_ts, c.c_id, c.c_ts,
+        |                  row_number() OVER (PARTITION BY p.p_id ORDER BY c.c_ts DESC NULLS LAST, c.c_id DESC NULLS LAST) AS rn
+        |           FROM p LEFT JOIN c ON p.user_id = c.c_user AND c.c_ts <= p.p_ts)
+        |SELECT p_id, user_id, p_ts, c_id, c_ts FROM j WHERE rn = 1
+        |ORDER BY p_id ASC""".stripMargin)),
+    // keyless time-tolerance join via bucket decomposition (no cartesian)
+    Entry("q_join_interval", (s, d) => RelOps.joinInterval(s, d), Oracle(
+      """WITH p AS (SELECT event_id AS p_id, ts AS pts FROM events
+        |           WHERE event_type = 'purchase'),
+        |     c AS (SELECT event_id AS c_id, ts AS cts FROM events
+        |           WHERE event_type = 'click')
+        |SELECT p_id, c_id, date_diff('second', cts, pts) AS gap_s
+        |FROM p JOIN c ON abs(date_diff('second', cts, pts)) <= 60
+        |ORDER BY p_id ASC, c_id ASC""".stripMargin)),
+    Entry("q_window_rank", (s, d) => RelOps.windowRank(s, d), Oracle(
+      """SELECT o_custkey, o_orderkey, o_totalprice, rn, rnk, drnk FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |         row_number() OVER w AS rn, rank() OVER w AS rnk, dense_rank() OVER w AS drnk
+        |  FROM orders
+        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC))
+        |WHERE rn <= 3
+        |ORDER BY o_custkey ASC, rn ASC""".stripMargin)),
+    Entry("q_window_ntile", (s, d) => RelOps.windowNtile(s, d), Oracle(
+      """SELECT o_orderkey, o_orderstatus, o_totalprice,
+        |       ntile(4) OVER (PARTITION BY o_orderstatus
+        |                      ORDER BY o_totalprice ASC, o_orderkey ASC) AS quartile
+        |FROM orders ORDER BY o_orderkey ASC""".stripMargin), bench = false),
+    Entry("q_window_running", (s, d) => RelOps.windowRunning(s, d), Oracle(
+      """SELECT o_custkey, o_orderkey, o_orderdate,
+        |       CAST(sum(CAST(round(o_totalprice * 1000000.0) AS BIGINT))
+        |              OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
+        |                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / 1000000.0 AS running_total
+        |FROM orders ORDER BY o_custkey ASC, o_orderkey ASC""".stripMargin), bench = false),
+    Entry("q_window_lag", (s, d) => RelOps.windowLag(s, d), Oracle(
+      """SELECT user_id, event_id, ts,
+        |       lag(event_id, 1) OVER w AS prev_event,
+        |       lead(event_id, 1) OVER w AS next_event,
+        |       CAST(floor(date_part('epoch', ts)) AS BIGINT)
+        |         - CAST(floor(date_part('epoch', lag(ts, 1) OVER w)) AS BIGINT) AS gap_sec
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
+        |ORDER BY user_id ASC, event_id ASC""".stripMargin), bench = false),
+    Entry("q_window_range", (s, d) => RelOps.windowRange(s, d), Oracle(
+      """SELECT user_id, event_id, ts,
+        |       count(*) OVER w AS n_last_hour,
+        |       CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) OVER w AS DOUBLE) / 1000000.0 AS sum_last_hour
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id
+        |             ORDER BY CAST(floor(date_part('epoch', ts)) AS BIGINT)
+        |             RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
+        |ORDER BY user_id ASC, event_id ASC""".stripMargin)),
+    Entry("q_window_firstlast", (s, d) => RelOps.windowFirstLast(s, d), Oracle(
+      """SELECT user_id, event_id, event_type,
+        |       first_value(event_type) OVER w AS first_type,
+        |       last_value(event_type) OVER w AS last_type
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+        |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+        |ORDER BY user_id ASC, event_id ASC""".stripMargin), bench = false),
+    Entry("q_sort_limit", (s, d) => RelOps.sortLimit(s, d), Oracle(
+      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10")),
+    Entry("q_set_union", (s, d) => RelOps.setUnion(s, d), Oracle(
+      """SELECT nationkey, kind, count(*) AS n FROM (
+        |  SELECT CAST(c_nationkey AS BIGINT) AS nationkey, 'customer' AS kind FROM customer
+        |  UNION ALL
+        |  SELECT CAST(s_nationkey AS BIGINT), 'supplier' FROM supplier)
+        |GROUP BY nationkey, kind
+        |ORDER BY nationkey ASC, kind ASC""".stripMargin), bench = false),
+    Entry("q_set_intersect", (s, d) => RelOps.setIntersect(s, d), Oracle(
+      """SELECT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer
+        |INTERSECT
+        |SELECT CAST(s_nationkey AS BIGINT) FROM supplier
+        |ORDER BY nationkey ASC""".stripMargin), bench = false),
+    Entry("q_set_except", (s, d) => RelOps.setExcept(s, d), Oracle(
+      """SELECT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer
+        |EXCEPT
+        |SELECT CAST(s_nationkey AS BIGINT) FROM supplier
+        |ORDER BY nationkey ASC""".stripMargin), bench = false),
+    Entry("q_agg_concat", (s, d) => TextOps.aggConcat(s, d), Oracle(
+      """SELECT lang, string_agg(substr(text, 1, 20), ' | ' ORDER BY doc_id ASC) AS context
+        |FROM documents GROUP BY lang ORDER BY lang ASC""".stripMargin)),
+    Entry("q_flatten_results", (s, d) => TextOps.flattenResults(s, d), Oracle(
+      """SELECT lang, doc_id FROM (
+        |  SELECT lang, doc_id,
+        |         row_number() OVER (PARTITION BY lang, source ORDER BY doc_id ASC) AS rn
+        |  FROM documents)
+        |WHERE rn <= 2
+        |ORDER BY lang ASC, doc_id ASC""".stripMargin), bench = false),
+    Entry("q_limit", (s, d) => TextOps.limitK(s, d), Oracle(
+      "SELECT doc_id, n_chars FROM documents ORDER BY n_chars DESC, doc_id ASC LIMIT 3"), bench = false),
+    Entry("q_upsert_lastwins", (s, d) => TextOps.upsertLastWins(s, d), Oracle(
+      """WITH v AS (
+        |  SELECT doc_id, lang, substr(text, 1, 40) AS body, CAST(1 AS BIGINT) AS version FROM documents
+        |  UNION ALL
+        |  SELECT doc_id, lang, 'UPDATED ' || source, 2 FROM documents WHERE doc_id % 7 = 0
+        |)
+        |SELECT doc_id, lang, body, version FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY version DESC) AS rn FROM v)
+        |WHERE rn = 1
+        |ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_tree_flatten", (s, d) => TextOps.treeFlatten(s, d), Oracle(
+      """SELECT 'root' AS title, '' AS url, CAST(0 AS BIGINT) AS depth
+        |UNION ALL
+        |SELECT r_name, '/r/' || r_regionkey, 1 FROM region
+        |UNION ALL
+        |SELECT n_name, '/r/' || n_regionkey || '/n/' || n_nationkey, 2 FROM nation
+        |ORDER BY depth ASC, url ASC""".stripMargin)),
+    Entry("q_scan_documents", (s, d) => TextOps.scanDocuments(s, d), Oracle(
+      "SELECT * FROM documents ORDER BY doc_id ASC"), bench = false),
+    Entry("q_project_fields", (s, d) => TextOps.projectFields(s, d), Oracle(
+      "SELECT doc_id, lang AS title, substr(text, 1, 60) AS body FROM documents ORDER BY doc_id ASC"), bench = false),
+    Entry("q_filter_nonempty", (s, d) => TextOps.filterNonempty(s, d), Oracle(
+      "SELECT doc_id, n_chars FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0 ORDER BY doc_id ASC"), bench = false),
+    Entry("q_filter_metadata", (s, d) => TextOps.filterMetadata(s, d), Oracle(
+      "SELECT doc_id, lang, source FROM documents WHERE lang = 'en' ORDER BY doc_id ASC"), bench = false),
+    Entry("q_clean_text", (s, d) => TextOps.cleanText(s, d), Oracle(
+      """SELECT doc_id, substr(cleaned, 1, 80) AS cleaned, CAST(length(cleaned) AS BIGINT) AS clean_len
+        |FROM (SELECT doc_id,
+        |             regexp_replace(replace(text, ' ', chr(10) || chr(10)), '\n+', chr(10), 'g') AS cleaned
+        |      FROM documents)
+        |ORDER BY doc_id ASC""".stripMargin), bench = false),
+    Entry("q_truncate", (s, d) => TextOps.truncate(s, d), Oracle(
+      "SELECT doc_id, substr(text, 1, 6000) AS body, least(n_chars, 6000) AS body_len FROM documents ORDER BY doc_id ASC"), bench = false),
+    Entry("q_scalar_bundle", (s, d) => RelOps.scalarBundle(s, d), Oracle(
+      """SELECT l_orderkey, l_linenumber,
+        |       CAST(year(l_shipdate) AS BIGINT) AS ship_year,
+        |       CAST(month(l_shipdate) AS BIGINT) AS ship_month,
+        |       date_trunc('month', l_shipdate) AS ship_month_start,
+        |       CAST(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0) AS BIGINT) AS DOUBLE) / 100.0 AS discounted,
+        |       lower(l_returnflag) AS flag_lower,
+        |       l_returnflag || '/' || l_linestatus AS flag_status,
+        |       CAST(length(l_returnflag) AS BIGINT) AS flag_len,
+        |       abs(l_quantity) AS abs_qty
+        |FROM lineitem ORDER BY l_orderkey ASC, l_linenumber ASC""".stripMargin), bench = false),
+    Entry("q_json_extract", (s, d) => TextOps.jsonExtract(s, d), Oracle(
+      "SELECT event_id, CAST(props->>'$.k' AS BIGINT) AS k, event_type FROM events ORDER BY event_id ASC"), bench = false),
+    Entry("q_json_tree", (s, d) => TextOps.jsonTree(s, d), Oracle(JsonTreeOracle), bench = false),
+    Entry("q_json_tree_deep", (s, d) => TextOps.jsonTreeDeep(s, d), Oracle(
+      // the recursive Generator flattens the SAME payload to the SAME rows —
+      // one oracle serves both formulations
+      JsonTreeOracle), bench = false),
+    Entry("q_rag_e2e", (s, d) => TextOps.ragEndToEndText(s, d, KnnTextQuery), Oracle(
+      s"""WITH scored AS (
+         |  SELECT e.vec_id,
+         |         round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+         |               CAST([${knnTextQueryVec().mkString(", ")}] AS DOUBLE[])), 6) AS score
+         |  FROM embeddings e),
+         |hits AS (
+         |  SELECT vec_id, score,
+         |         row_number() OVER (ORDER BY score DESC, vec_id ASC) AS rank
+         |  FROM scored ORDER BY score DESC, vec_id ASC LIMIT 3),
+         |payload AS (
+         |  SELECT h.rank, d.source, d.doc_id, substr(d.text, 1, 40) AS snip
+         |  FROM hits h JOIN documents d ON h.vec_id = d.doc_id)
+         |SELECT '$KnnTextQuery' AS query,
+         |       substr('请按照"总结要点"进行总结,内容是：' || string_agg(snip, '' ORDER BY rank ASC), 1, 200) AS llm_prompt,
+         |       '参考链接：' || string_agg(chr(10) || chr(10) || source || '     ' || doc_id, '' ORDER BY rank ASC) AS citations
+         |FROM payload""".stripMargin)),
+    Entry("q_rag_e2e_vec", (s, d) => TextOps.ragEndToEnd(s, d), Oracle(
+      """WITH scored AS (
+        |  SELECT e.vec_id,
+        |         round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])), 6) AS score
+        |  FROM embeddings e
+        |  CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
+        |  WHERE e.vec_id <> 0),
+        |hits AS (
+        |  SELECT vec_id, score,
+        |         row_number() OVER (ORDER BY score DESC, vec_id ASC) AS rank
+        |  FROM scored ORDER BY score DESC, vec_id ASC LIMIT 3),
+        |payload AS (
+        |  SELECT h.rank, d.source, d.doc_id, substr(d.text, 1, 40) AS snip
+        |  FROM hits h JOIN documents d ON h.vec_id = d.doc_id)
+        |SELECT CAST(0 AS BIGINT) AS query_id,
+        |       substr('请按照"总结要点"进行总结,内容是：' || string_agg(snip, '' ORDER BY rank ASC), 1, 200) AS llm_prompt,
+        |       '参考链接：' || string_agg(chr(10) || chr(10) || source || '     ' || doc_id, '' ORDER BY rank ASC) AS citations
+        |FROM payload""".stripMargin), bench = false),
+    Entry("q_chunk_split", (s, d) => TextOps.chunkSplit(s, d), Oracle(
+      """WITH c AS (
+        |  SELECT doc_id, text,
+        |         greatest(1, CAST(ceil((length(text) - 200) / 150.0) + 1 AS BIGINT)) AS n
+        |  FROM documents)
+        |SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
+        |       substr(text, CAST(i * 150 + 1 AS INT), 200) AS chunk,
+        |       CAST(length(substr(text, CAST(i * 150 + 1 AS INT), 200)) AS BIGINT) AS chunk_len
+        |FROM (SELECT doc_id, text, unnest(range(0, n)) AS i FROM c)
+        |ORDER BY doc_id ASC, chunk_idx ASC""".stripMargin), bench = false),
+    Entry("q_prompt_template", (s, d) => TextOps.promptTemplate(s, d), Oracle(
+      """SELECT doc_id, substr('请按照"总结要点"进行总结,内容是：' || text, 1, 120) AS llm_prompt
+        |FROM documents ORDER BY doc_id ASC""".stripMargin), bench = false),
+    Entry("q_citation_format", (s, d) => TextOps.citationFormat(s, d), Oracle(
+      """WITH ranked AS (
+        |  SELECT lang, source, doc_id,
+        |         row_number() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id ASC) AS rank
+        |  FROM documents)
+        |SELECT lang,
+        |       '参考链接：' || string_agg(chr(10) || chr(10) || source || '     ' || doc_id, '' ORDER BY rank ASC) AS citations
+        |FROM ranked WHERE rank <= 3
+        |GROUP BY lang ORDER BY lang ASC""".stripMargin), bench = false),
+    Entry("q_pipeline_e2e", (s, d) => TextOps.pipelineEndToEnd(s, d), Oracle(
+      """WITH q AS (
+        |  SELECT doc_id, text,
+        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+        |         CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct
+        |  FROM documents),
+        |filtered AS (
+        |  SELECT doc_id, text FROM q
+        |  WHERE n_tokens >= 30 AND CAST(n_distinct AS DOUBLE) / n_tokens >= 0.3),
+        |deduped AS (
+        |  SELECT doc_id, text FROM (
+        |    SELECT doc_id, text,
+        |           row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id ASC) AS rn
+        |    FROM filtered)
+        |  WHERE rn = 1),
+        |chunked AS (
+        |  SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
+        |         substr(text, CAST(i * 150 + 1 AS INT), 200) AS chunk
+        |  FROM (SELECT doc_id, text,
+        |               unnest(range(0, greatest(1, CAST(ceil((length(text) - 200) / 150.0) + 1 AS BIGINT)))) AS i
+        |        FROM deduped)),
+        |assigned AS (
+        |  SELECT doc_id, chunk,
+        |         CASE WHEN (doc_id * 2246822519 + chunk_idx * 40503) % 1000 < 800 THEN 'train'
+        |              WHEN (doc_id * 2246822519 + chunk_idx * 40503) % 1000 < 900 THEN 'valid'
+        |              ELSE 'test' END AS split
+        |  FROM chunked)
+        |SELECT split, count(*) AS n_chunks,
+        |       CAST(sum(len(string_split(chunk, ' '))) AS BIGINT) AS n_tokens,
+        |       count(DISTINCT doc_id) AS n_docs
+        |FROM assigned GROUP BY split ORDER BY split ASC""".stripMargin)),
+    Entry("q_events_tumbling", (s, d) => EventOps.tumbling(s, d), Oracle(
+      """SELECT date_trunc('day', ts) AS day, event_type, count(*) AS n,
+        |       CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_value
+        |FROM events
+        |GROUP BY date_trunc('day', ts), event_type
+        |ORDER BY day ASC, event_type ASC""".stripMargin)),
+    Entry("q_events_hopping", (s, d) => EventOps.hopping(s, d), Oracle(
+      """SELECT w_start, event_type, count(*) AS n FROM (
+        |  SELECT event_type,
+        |         unnest([epoch_ms(CAST(floor(date_part('epoch', ts) / 43200) * 43200000 AS BIGINT)),
+        |                 epoch_ms(CAST((floor(date_part('epoch', ts) / 43200) - 1) * 43200000 AS BIGINT))]) AS w_start
+        |  FROM events)
+        |GROUP BY w_start, event_type
+        |ORDER BY w_start ASC, event_type ASC""".stripMargin), bench = false),
+    Entry("q_events_sessionize", (s, d) => EventOps.sessionize(s, d), Oracle(
+      """WITH g AS (
+        |  SELECT user_id, event_id, ts,
+        |         lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_ts
+        |  FROM events),
+        |f AS (
+        |  SELECT user_id, event_id, ts,
+        |         CASE WHEN prev_ts IS NULL
+        |                OR CAST(floor(date_part('epoch', ts)) AS BIGINT)
+        |                   - CAST(floor(date_part('epoch', prev_ts)) AS BIGINT) > 1800
+        |              THEN 1 ELSE 0 END AS new_session
+        |  FROM g),
+        |s AS (
+        |  SELECT user_id, ts,
+        |         CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
+        |                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+        |  FROM f)
+        |SELECT user_id, session_id, count(*) AS n_events,
+        |       min(ts) AS session_start, max(ts) AS session_end
+        |FROM s GROUP BY user_id, session_id
+        |ORDER BY user_id ASC, session_id ASC""".stripMargin)),
+    Entry("q_events_retention", (s, d) => EventOps.retention(s, d), Oracle(
+      """WITH ev AS (SELECT user_id, date_trunc('day', ts) AS day FROM events),
+        |f AS (SELECT user_id, min(day) AS cohort_day FROM ev GROUP BY user_id)
+        |SELECT cohort_day,
+        |       CAST(date_diff('day', cohort_day, day) AS BIGINT) AS day_offset,
+        |       count(DISTINCT ev.user_id) AS n_users
+        |FROM ev JOIN f USING (user_id)
+        |GROUP BY cohort_day, day_offset
+        |ORDER BY cohort_day ASC, day_offset ASC""".stripMargin), bench = false),
+    Entry("q_events_funnel", (s, d) => EventOps.funnel(s, d), Oracle(
+      """WITH v AS (
+        |  SELECT user_id, min(ts) AS view_ts FROM events
+        |  WHERE event_type = 'view' GROUP BY user_id),
+        |c AS (
+        |  SELECT e.user_id, min(e.ts) AS click_ts
+        |  FROM events e JOIN v ON e.user_id = v.user_id
+        |  WHERE e.event_type = 'click' AND e.ts > v.view_ts
+        |  GROUP BY e.user_id),
+        |p AS (
+        |  SELECT e.user_id, min(e.ts) AS purchase_ts
+        |  FROM events e JOIN c ON e.user_id = c.user_id
+        |  WHERE e.event_type = 'purchase' AND e.ts > c.click_ts
+        |  GROUP BY e.user_id)
+        |SELECT v.user_id, v.view_ts, c.click_ts, p.purchase_ts,
+        |       CASE WHEN p.purchase_ts IS NOT NULL THEN 3
+        |            WHEN c.click_ts IS NOT NULL THEN 2
+        |            ELSE 1 END AS funnel_stage
+        |FROM v
+        |LEFT JOIN c ON v.user_id = c.user_id
+        |LEFT JOIN p ON v.user_id = p.user_id
+        |ORDER BY v.user_id ASC""".stripMargin), bench = false),
+    Entry("q_text_bm25", (s, d) => RetrievalOps.bm25TopK(s, d), Oracle(
+      s"""WITH $bm25BaseCtes
+         |SELECT doc_id,
+         |       round($bm25ScoreExpr, 6) AS bm25
+         |FROM f CROSS JOIN s
+         |WHERE $bm25AnyHit > 0
+         |ORDER BY bm25 DESC, doc_id ASC
+         |LIMIT 20""".stripMargin)),
+    // served from the persisted stats store, built create-half +
+    // upsert-half so the incremental path faces the oracle every run
+    Entry("q_text_bm25_stored", (s, d) => RetrievalOps.bm25TopKStored(s, d), Oracle(
+      // the stored-stats probe is bit-identical to the live two-scan path
+      // (exact-integer partials; see RetrievalOps.bm25TopKStored) — it
+      // faces the SAME oracle, which is the point: the persisted artifact
+      // must never drift from the definition
+      s"""WITH $bm25BaseCtes
+         |SELECT doc_id,
+         |       round($bm25ScoreExpr, 6) AS bm25
+         |FROM f CROSS JOIN s
+         |WHERE $bm25AnyHit > 0
+         |ORDER BY bm25 DESC, doc_id ASC
+         |LIMIT 20""".stripMargin)),
+    // inverted-postings serving: zero corpus scans, bucket-pruned read;
+    // bit-identical to the stored path → faces the SAME oracle
+    Entry("q_text_bm25_indexed", (s, d) => RetrievalOps.bm25TopKIndexed(s, d), Oracle(
+      // the postings-index probe (zero corpus scans) is bit-identical to
+      // both paths above — same oracle again, same no-drift point
+      s"""WITH $bm25BaseCtes
+         |SELECT doc_id,
+         |       round($bm25ScoreExpr, 6) AS bm25
+         |FROM f CROSS JOIN s
+         |WHERE $bm25AnyHit > 0
+         |ORDER BY bm25 DESC, doc_id ASC
+         |LIMIT 20""".stripMargin)),
+    // conjunctive (AND) mode: all terms required, same scores/statistics
+    Entry("q_text_bm25_conj", (s, d) => {
+      val (db, name) = RetrievalOps.ensureLexicalIndex(s, d)
+      RetrievalOps.bm25TopKIndexedConj(s, db, name, KnnTextQuery, 20)
+    }, Oracle(
+      // conjunctive mode: every term required, scores unchanged
+      s"""WITH $bm25BaseCtes
+         |SELECT doc_id,
+         |       round($bm25ScoreExpr, 6) AS bm25
+         |FROM f CROSS JOIN s
+         |WHERE $bm25AllHit
+         |ORDER BY bm25 DESC, doc_id ASC
+         |LIMIT 20""".stripMargin), bench = false),
+    // FILTER-index composition on the lexical path: metadata predicate
+    // restricts candidates, statistics stay corpus-wide (Lucene semantics)
+    Entry("q_text_bm25_filtered", (s, d) => {
+      val (db, name) = RetrievalOps.ensureLexicalIndex(s, d)
+      RetrievalOps.bm25TopKIndexedFiltered(s, db, name,
+        Tables.documents(s, d), KnnTextQuery,
+        org.apache.spark.sql.functions.col("source") === "src7", 20)
+    }, Oracle(
+      // filtered lexical search: predicate restricts candidates only —
+      // statistics stay corpus-wide, so the score CTEs are unchanged
+      s"""WITH $bm25BaseCtes
+         |SELECT doc_id,
+         |       round($bm25ScoreExpr, 6) AS bm25
+         |FROM f CROSS JOIN s
+         |WHERE $bm25AnyHit > 0
+         |  AND doc_id IN (SELECT doc_id FROM documents WHERE source = 'src7')
+         |ORDER BY bm25 DESC, doc_id ASC
+         |LIMIT 20""".stripMargin)),
+    // batched lexical serving: one corpus scan for a whole query table;
+    // fully oracled (r15): the batch is 3 literal queries, so the oracle
+    // is a UNION ALL of three single-query chains — each per-query fp
+    // chain preserved exactly (also bit-pinned to the stored
+    // single-query path in RetrievalSpec)
+    Entry("q_text_bm25_batch", (s, d) => {
+      val (db, name) = RetrievalOps.ensureBm25Store(s, d)
+      RetrievalOps.bm25ForQueriesStored(s, Tables.documents(s, d), db, name,
+        s.createDataFrame(Bm25Batch).toDF("query_id", "qtext"))
+    }, Oracle(
+      // three literal single-query chains UNION ALL'd — per-query fp
+      // arithmetic identical to q_text_bm25's proven oracle
+      bm25BatchOracleSql())),
+    // postings-index batched serving: zero corpus scans for a whole query
+    // table; bit-identical to the stored batched path -> SAME oracle
+    Entry("q_text_bm25_batch_indexed", (s, d) => {
+      val (db, name) = RetrievalOps.ensureLexicalIndex(s, d)
+      RetrievalOps.bm25ForQueriesIndexed(s, db, name,
+        s.createDataFrame(Bm25Batch).toDF("query_id", "qtext"))
+    }, Oracle(
+      // engine output bit-identical to the stored batched path -> same SQL
+      bm25BatchOracleSql())),
+    Entry("q_hybrid_rrf", (s, d) => RetrievalOps.hybridRrf(s, d), Oracle(
+      s"""WITH $bm25BaseCtes,
+         |b AS (
+         |  SELECT doc_id, round($bm25ScoreExpr, 6) AS bm25
+         |  FROM f CROSS JOIN s
+         |  WHERE $bm25AnyHit > 0
+         |  ORDER BY bm25 DESC, doc_id ASC LIMIT 20),
+         |lex AS (
+         |  SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS lrank FROM b),
+         |vp AS (
+         |  SELECT vec_id,
+         |         round(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
+         |               CAST([${knnTextQueryVec().mkString(", ")}] AS DOUBLE[])), 6) AS vscore
+         |  FROM embeddings
+         |  ORDER BY vscore DESC, vec_id ASC LIMIT 20),
+         |vec AS (
+         |  SELECT vec_id, row_number() OVER (ORDER BY vscore DESC, vec_id ASC) AS vrank FROM vp)
+         |SELECT COALESCE(l.doc_id, v.vec_id) AS doc_id,
+         |       CAST(COALESCE(l.lrank, 0) AS BIGINT) AS lex_rank,
+         |       CAST(COALESCE(v.vrank, 0) AS BIGINT) AS vec_rank,
+         |       round(COALESCE(1.0 / (60.0 + l.lrank), 0.0) + COALESCE(1.0 / (60.0 + v.vrank), 0.0), 6) AS rrf
+         |FROM lex l FULL OUTER JOIN vec v ON l.doc_id = v.vec_id
+         |ORDER BY rrf DESC, doc_id ASC
+         |LIMIT 10""".stripMargin)),
+    // both pools from persisted artifacts (BM25 store + routed NSW
+    // index). Rows-only with a DIRECT pin (r19): the vector pool is a
+    // beam-searched NSW walk — recall<1 by construction, and the walk
+    // order depends on the engine-built graph no SQL can replay. What
+    // RetrievalSpec pins DIRECTLY on THIS entry: at exhaustive
+    // settings (beam ≥ corpus, all cells) the ENTIRE fusion equals
+    // q_hybrid_rrf bit-for-bit; at production settings the output is
+    // still exactly k rows whose rrf scores recompute from the two
+    // rank columns by the 1/(60+r) arithmetic, and the LEXICAL side's
+    // ranks equal the exact run's (only the vector pool is
+    // approximate — the fusion and the BM25 half never are)
+    Entry("q_hybrid_rrf_served", (s, d) => RetrievalOps.hybridRrfServed(s, d),
+      RowsOnly("vector pool is an NSW beam search; RetrievalSpec pins it")),
+    Entry("q_tfidf_topterms", (s, d) => RetrievalOps.tfidfTopTerms(s, d), Oracle(
+      """WITH tf AS (
+        |  SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
+        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
+        |  GROUP BY doc_id, term),
+        |df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
+        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
+        |s AS (
+        |  SELECT doc_id, term, round(tf * ln(n / df), 6) AS tfidf
+        |  FROM tf JOIN df USING (term) CROSS JOIN n),
+        |r AS (
+        |  SELECT doc_id, term, tfidf,
+        |         row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rk
+        |  FROM s)
+        |SELECT doc_id, CAST(rk AS BIGINT) AS rk, term, tfidf
+        |FROM r WHERE rk <= 3
+        |ORDER BY doc_id ASC, rk ASC""".stripMargin)),
+    // tf-idf from the postings artifact: one postings scan, no explode,
+    // no self-join; bit-identical to the live path → SAME oracle
+    Entry("q_tfidf_indexed", (s, d) => {
+      val (db, name) = RetrievalOps.ensureLexicalIndex(s, d)
+      RetrievalOps.tfidfTopTermsIndexed(s, db, name)
+    }, Oracle(
+      // the postings-served tf-idf is bit-identical to the live path —
+      // same oracle, same no-drift point as the bm25 index family
+      """WITH tf AS (
+        |  SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
+        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
+        |  GROUP BY doc_id, term),
+        |df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
+        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
+        |s AS (
+        |  SELECT doc_id, term, round(tf * ln(n / df), 6) AS tfidf
+        |  FROM tf JOIN df USING (term) CROSS JOIN n),
+        |r AS (
+        |  SELECT doc_id, term, tfidf,
+        |         row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rk
+        |  FROM s)
+        |SELECT doc_id, CAST(rk AS BIGINT) AS rk, term, tfidf
+        |FROM r WHERE rk <= 3
+        |ORDER BY doc_id ASC, rk ASC""".stripMargin)),
+    // greedy MMR, FULLY oracled as of r16: micro-integer scores with
+    // pool-order ties replay exactly as k-1 chained CTE rounds
+    // (mmrOracleSql); RetrievalSpec still cross-checks the greedy core
+    Entry("q_knn_mmr", (s, d) => RetrievalOps.mmrRerank(s, d), Oracle(
+      // greedy serving/selection loops unrolled as chained CTE rounds —
+      // the same flip, applied to the two remaining deterministic greedies
+      mmrOracleSql())),
+    // exact phrase match, live corpus-scan form
+    Entry("q_text_phrase", (s, d) => RetrievalOps.phraseSearch(s, d), Oracle(phraseOracleSql)),
+    // same phrase served from the positional-postings index (create-half
+    // + upsert-half each run); bit-identical → SAME oracle
+    Entry("q_text_phrase_indexed", (s, d) => {
+      val (db, name) = RetrievalOps.ensurePositionalIndex(s, d)
+      RetrievalOps.phraseSearchIndexed(s, db, name)
+    }, Oracle(
+      // the positional-index probe is bit-identical to the live scan —
+      // same oracle, same no-drift point as the bm25 indexed twins
+      phraseOracleSql)),
+    // batched phrase serving: ONE index probe answers a phrase table
+    // (includes a repeated-term phrase — the offset-coverage edge case)
+    Entry("q_text_phrase_batch", (s, d) => {
+      val (db, name) = RetrievalOps.ensurePositionalIndex(s, d)
+      val qs = RetrievalOps.PhraseBatch.zipWithIndex
+        .map { case (p, i) => (i.toLong, p) }
+      RetrievalOps.phraseForQueriesIndexed(s, db, name,
+        s.createDataFrame(qs).toDF("query_id", "phrase"))
+    }, Oracle(phraseBatchOracleSql)),
+    // FILTER-composed phrase: metadata predicate restricts candidates
+    // only, pushed below the adjacency chain (Lucene filter semantics)
+    Entry("q_text_phrase_filtered", (s, d) => {
+      val (db, name) = RetrievalOps.ensurePositionalIndex(s, d)
+      RetrievalOps.phraseSearchIndexedFiltered(s, db, name,
+        Tables.documents(s, d), RetrievalOps.PhraseQuery,
+        org.apache.spark.sql.functions.col("doc_id") % 2 === 0)
+    }, Oracle(phraseFilteredOracleSql)),
+    // ordered proximity (sloppy phrase): in-order terms with up to 2
+    // interleaved tokens per gap; live scan + positions-index twin
+    Entry("q_text_near", (s, d) => RetrievalOps.proximitySearch(s, d),
+      Oracle(proximityOracleSql(2))),
+    Entry("q_text_near_indexed", (s, d) => {
+      val (db, name) = RetrievalOps.ensurePositionalIndex(s, d)
+      RetrievalOps.proximitySearchIndexed(s, db, name)
+    }, Oracle(proximityOracleSql(2))),
+    // retrieval-evaluation / pair-mining layer over the knn core
+    Entry("q_mine_hardneg", (s, d) => EvalOps.hardNegatives(s, d), Oracle(
+      """WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb, label AS q_label
+        |           FROM embeddings WHERE vec_id < 5),
+        |c AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id >= 5),
+        |scored AS (
+        |  SELECT q.query_id, c.vec_id,
+        |         round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), CAST(q.q_emb AS DOUBLE[])), 6) AS score
+        |  FROM c CROSS JOIN q WHERE c.label <> q.q_label
+        |), ranked AS (
+        |  SELECT query_id, vec_id, score,
+        |         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
+        |  FROM scored
+        |)
+        |SELECT query_id, vec_id, score, rank FROM ranked
+        |WHERE rank <= 5
+        |ORDER BY query_id ASC, rank ASC""".stripMargin)),
+    // ANN-served mining: nprobe-pruned IVF cells. Rows-only with a
+    // DIRECT pin, not one inherited from the index entries (r19): the
+    // default nprobe < kCells makes the mining pool recall<1 by
+    // construction — which cells a query probes depends on the
+    // engine-trained k-means centroids, so no closed-form SQL can
+    // replay the pruned candidate set. What EvalSpec pins DIRECTLY on
+    // THIS entry: at nprobe = kCells the result equals q_mine_hardneg's
+    // exact mining bit-for-bit (the approximation is exactly the cell
+    // pruning, nothing else), and at pruned probes every mined hit is
+    // label-mismatched with dense consistent ranks (a valid, possibly
+    // shallower pool — never a wrong pair)
+    Entry("q_mine_hardneg_indexed", (s, d) => EvalOps.hardNegativesIndexed(s, d),
+      RowsOnly("mines nprobe-pruned IVF cells; EvalSpec pins it")),
+    // assembled DPR-style training records: positive + hard negatives
+    Entry("q_mine_pairs", (s, d) => EvalOps.trainingPairs(s, d), Oracle(
+      """WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb, label AS q_label
+        |           FROM embeddings WHERE vec_id < 5),
+        |c AS (SELECT vec_id, embedding, label FROM embeddings WHERE vec_id >= 5),
+        |scored AS (
+        |  SELECT q.query_id, c.vec_id, c.label, q.q_label,
+        |         round(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]), CAST(q.q_emb AS DOUBLE[])), 6) AS score
+        |  FROM c CROSS JOIN q
+        |), pos AS (
+        |  SELECT query_id, 'pos' AS role, rank, vec_id, score FROM (
+        |    SELECT query_id, vec_id, score,
+        |           row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
+        |    FROM scored WHERE label = q_label) WHERE rank <= 1
+        |), neg AS (
+        |  SELECT query_id, 'neg' AS role, rank, vec_id, score FROM (
+        |    SELECT query_id, vec_id, score,
+        |           row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id ASC) AS rank
+        |    FROM scored WHERE label <> q_label) WHERE rank <= 3
+        |)
+        |SELECT query_id, role, rank, vec_id, score
+        |FROM (SELECT * FROM pos UNION ALL SELECT * FROM neg)
+        |ORDER BY query_id ASC, role ASC, rank ASC""".stripMargin)),
+    Entry("q_eval_rank", (s, d) => EvalOps.rankEval(s, d), Oracle(rankEvalOracleSql)),
+    Entry("q_eval_rank_macro", (s, d) => EvalOps.rankEvalMacro(s, d), Oracle(
+      // macro averages over the SAME per-query metric subquery — per-query
+      // values are already rounded to 6 dp, so the integer-microunit sum
+      // keeps the average order-independent on both engines
+      s"""WITH per AS ($rankEvalOracleSql)
+         |SELECT CAST(count(*) AS BIGINT) AS n_queries,
+         |       round(CAST(sum(CAST(floor(recall_at_k * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0, 6) AS recall_at_k,
+         |       round(CAST(sum(CAST(floor(mrr * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0, 6) AS mrr,
+         |       round(CAST(sum(CAST(floor(ndcg * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE) / count(*) / 1000000.0, 6) AS ndcg
+         |FROM per""".stripMargin)),
+    // metrics of the ranking the IVF index actually SERVES. Rows-only
+    // with a DIRECT pin (r19): the evaluated run is the nprobe-pruned
+    // probe's — recall<1 against the exact run by construction, and
+    // the pruned candidate set depends on engine-trained centroids no
+    // oracle can replay. EvalSpec pins DIRECTLY on THIS entry: at
+    // nprobe = kCells the whole metric frame (n_rel, hits, recall,
+    // MRR, nDCG) equals q_eval_rank's exact-scan eval bit-for-bit,
+    // and at pruned probes every metric is a valid fraction per query
+    // — the entry measures the index's true serving quality, which is
+    // exactly why its numbers must NOT equal the exact ones
+    Entry("q_eval_rank_indexed", (s, d) => EvalOps.rankEvalIndexed(s, d),
+      RowsOnly("scores the nprobe-pruned IVF run; EvalSpec pins it")),
+    // crawl-side link centrality (deterministic synthetic edge graph)
+    Entry("q_link_pagerank", (s, d) => LinkOps.pageRank(s, d), Oracle(pageRankOracleSql)),
+    // the MAINTAINED vector: create(2 rounds) + warm-start refresh(1),
+    // served from the store — exact trajectory ⇒ SAME oracle as cold(3)
+    Entry("q_link_pagerank_stored", (s, d) => LinkOps.pageRankStoredFixture(s, d),
+      Oracle(pageRankOracleSql)),
+    Entry("q_decontaminate", (s, d) => TextAnalysisOps.decontaminate(s, d), Oracle(
+      """WITH tok AS (
+        |  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
+        |ng AS (
+        |  SELECT doc_id, source,
+        |         unnest(list_distinct(list_transform(range(1, len(t) - 2),
+        |           i -> list_aggregate(t[i:i+3], 'string_agg', ' ')))) AS g
+        |  FROM tok),
+        |eval AS (SELECT DISTINCT g FROM ng WHERE source = 'src19'),
+        |hits AS (
+        |  SELECT ng.doc_id, CAST(count(*) AS BIGINT) AS shared_ngrams
+        |  FROM ng JOIN eval USING (g) WHERE ng.source <> 'src19'
+        |  GROUP BY ng.doc_id)
+        |SELECT d.doc_id, d.source,
+        |       coalesce(h.shared_ngrams, 0) AS shared_ngrams,
+        |       CAST(coalesce(h.shared_ngrams, 0) > 0 AS BIGINT) AS contaminated
+        |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
+        |WHERE d.source <> 'src19'
+        |ORDER BY d.doc_id ASC""".stripMargin)),
+    Entry("q_pack_sequences", (s, d) => TextAnalysisOps.packSequences(s, d), Oracle(
+      """WITH t AS (
+        |  SELECT doc_id, doc_id // 128 AS shard,
+        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, shard, n_tok,
+        |         CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
+        |  FROM t)
+        |SELECT doc_id, shard, n_tok, cum_before,
+        |       CAST(shard * 4294967296 + cum_before // 512 AS BIGINT) AS seq_id
+        |FROM c ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_domain_mix", (s, d) => TextAnalysisOps.domainMix(s, d), Oracle(
+      """WITH w AS (
+        |  SELECT doc_id, source, (doc_id * 2654435761) % 1000 AS bucket,
+        |         CAST((coalesce(TRY_CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT), length(source)) % 4 + 1) * 0.25 AS DOUBLE) AS weight
+        |  FROM documents)
+        |SELECT doc_id, source, bucket, weight FROM w
+        |WHERE bucket < weight * 1000
+        |ORDER BY doc_id ASC""".stripMargin)),
+    // XLM-R-style temperature mixing: per-source keep rates learned from
+    // measured domain sizes (α = 0.5), applied map-side
+    Entry("q_domain_mix_temp", (s, d) => TextAnalysisOps.domainMixTemperature(s, d), Oracle(
+      """WITH cnt AS (SELECT source, CAST(count(*) AS BIGINT) AS n_s FROM documents GROUP BY source),
+        |tot AS (SELECT sum(sqrt(CAST(n_s AS DOUBLE))) AS z, CAST(sum(n_s) AS BIGINT) AS n FROM cnt),
+        |rate AS (
+        |  SELECT source,
+        |         floor(least(1.0, sqrt(CAST(n_s AS DOUBLE)) / tot.z * 0.5 * tot.n / n_s) * 1000000.0 + 0.5) / 1000000.0 AS keep
+        |  FROM cnt CROSS JOIN tot)
+        |SELECT d.doc_id, d.source, rate.keep
+        |FROM documents d JOIN rate USING (source)
+        |WHERE (d.doc_id * 2246822519) % 1000 < rate.keep * 1000
+        |ORDER BY d.doc_id ASC""".stripMargin)),
+    Entry("q_curate_e2e", (s, d) => TextAnalysisOps.curateEndToEnd(s, d), Oracle(
+      """WITH gated AS (
+        |  SELECT doc_id, source, text,
+        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+        |  FROM documents
+        |  WHERE source <> 'src19'
+        |    AND len(string_split(text, ' ')) >= 20
+        |    AND (doc_id * 2654435761) % 1000 <
+        |        (coalesce(TRY_CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT), length(source)) % 4 + 1) * 0.25 * 1000),
+        |ng AS (
+        |  SELECT doc_id,
+        |         unnest(list_distinct(list_transform(range(1, len(string_split(text, ' ')) - 2),
+        |           i -> list_aggregate(string_split(text, ' ')[i:i+3], 'string_agg', ' ')))) AS g
+        |  FROM gated),
+        |eng AS (
+        |  SELECT DISTINCT unnest(list_distinct(list_transform(range(1, len(string_split(text, ' ')) - 2),
+        |           i -> list_aggregate(string_split(text, ' ')[i:i+3], 'string_agg', ' ')))) AS g
+        |  FROM documents WHERE source = 'src19'),
+        |dirty AS (SELECT DISTINCT ng.doc_id FROM ng JOIN eng USING (g)),
+        |clean AS (
+        |  SELECT g.doc_id, g.source, g.n_tok, g.doc_id // 128 AS shard
+        |  FROM gated g LEFT JOIN dirty d ON g.doc_id = d.doc_id
+        |  WHERE d.doc_id IS NULL),
+        |packed AS (
+        |  SELECT doc_id, source, n_tok, shard,
+        |         CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
+        |  FROM clean)
+        |SELECT doc_id, source, n_tok, CAST(shard * 4294967296 + cum_before // 512 AS BIGINT) AS seq_id
+        |FROM packed ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_url_canonical", (s, d) => TextOps.urlCanonical(s, d), Oracle(
+      s"""WITH $urlFixtureCte,
+         |$urlCanonCte
+         |SELECT doc_id, url, canonical_url FROM canon ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_url_dedup", (s, d) => TextOps.urlDedup(s, d), Oracle(
+      s"""WITH $urlFixtureCte,
+         |$urlCanonCte,
+         |keep AS (SELECT canonical_url AS cu, min(doc_id) AS canonical_id
+         |         FROM canon GROUP BY canonical_url)
+         |SELECT c.doc_id AS dup_id, k.canonical_id
+         |FROM canon c JOIN keep k ON c.canonical_url = k.cu
+         |WHERE c.doc_id <> k.canonical_id
+         |ORDER BY dup_id ASC""".stripMargin)),
+    // RefinedWeb-style URL admission: UT1-class domain blocklist +
+    // weighted strict/soft URL-word score, broadcast-dimension join
+    Entry("q_url_blocklist", (s, d) => TextOps.urlBlocklist(s, d), Oracle(
+      // UT1-class blocklist + weighted URL-word score, planted hosts
+      """WITH u AS (
+        |  SELECT doc_id,
+        |         'http://host' || CAST(doc_id % 20 AS VARCHAR) || '.example/page/' || CAST(doc_id AS VARCHAR) ||
+        |         CASE WHEN doc_id % 7 = 0 THEN '/casino/bonus' ELSE '' END ||
+        |         CASE WHEN doc_id % 8 = 0 THEN '/bet-and-win' ELSE '' END AS url
+        |  FROM documents),
+        |b(bhost) AS (VALUES ('host0.example'), ('host6.example'), ('host12.example'), ('host18.example')),
+        |m AS (
+        |  SELECT doc_id, url, regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1) AS host,
+        |         (CASE WHEN contains(url, 'casino') THEN 5 ELSE 0 END
+        |          + CASE WHEN contains(url, 'bet') THEN 1 ELSE 0 END
+        |          + CASE WHEN contains(url, 'win') THEN 1 ELSE 0 END) AS sc
+        |  FROM u)
+        |SELECT m.doc_id, m.url, m.host,
+        |       CAST(CASE WHEN b.bhost IS NULL THEN 1 ELSE 0 END AS BIGINT) AS r_domain,
+        |       CAST(sc AS BIGINT) AS url_score,
+        |       CAST(CASE WHEN sc < 5 THEN 1 ELSE 0 END AS BIGINT) AS r_score,
+        |       CAST(CASE WHEN b.bhost IS NULL AND sc < 5 THEN 1 ELSE 0 END AS BIGINT) AS keep
+        |FROM m LEFT JOIN b ON m.host = b.bhost
+        |ORDER BY m.doc_id ASC""".stripMargin)),
+    Entry("q_url_concat", (s, d) => TextOps.urlConcat(s, d), Oracle(
+      "SELECT doc_id, 'https://corpus.local/' || source || '/' || doc_id AS url FROM documents ORDER BY doc_id ASC"), bench = false),
+    // incremental re-crawl diff by content hash (added/changed/removed)
+    Entry("q_crawl_delta", (s, d) => FrontierOps.crawlDelta(s, d), Oracle(
       """WITH old AS (
         |  SELECT doc_id,
         |         md5(CASE WHEN doc_id % 13 = 0 THEN substr(text, 1, 10) ELSE text END) AS old_hash
@@ -2649,287 +3493,32 @@ object SparkEntry {
         |       old_hash, new_hash
         |FROM old FULL OUTER JOIN neu ON old.doc_id = neu.doc_id
         |WHERE old.doc_id IS NULL OR neu.doc_id IS NULL OR old_hash <> new_hash
-        |ORDER BY doc_id ASC""".stripMargin,
-    // closed-form expected answer (no XML on the oracle side): the
-    // engine must round-trip through real XML parsing and land exactly
-    // on this arithmetic
-    "q_crawl_sitemap" ->
-      """WITH base AS (SELECT source AS host, doc_id, lang FROM documents),
-        |known AS (
-        |  SELECT host,
-        |         'https://' || host || '/' || lang || '/p' || CAST(doc_id AS VARCHAR) AS url,
-        |         '2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') AS lastmod,
-        |         CASE WHEN CAST('2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') AS DATE)
-        |                   > (DATE '2026-02-01' - CAST(doc_id % 30 AS INT))
-        |              THEN 'stale' ELSE 'fresh' END AS status
-        |  FROM base),
-        |disc AS (
-        |  SELECT host, 'https://' || host || '/disc/p' || CAST(doc_id AS VARCHAR) AS url,
-        |         '2026-01-15' AS lastmod, 'new' AS status
-        |  FROM base WHERE doc_id % 5 = 0)
-        |SELECT host, url, lastmod, status FROM known
-        |UNION ALL
-        |SELECT host, url, lastmod, status FROM disc
-        |ORDER BY host ASC, url ASC""".stripMargin,
-    // closed-form mirror of the two-level protocol: rank -> 10-entry
-    // chunk -> child loc -> same classification; a parse that drops an
-    // entry or misroutes it to the wrong child diverges
-    "q_crawl_sitemap_index" ->
-      """WITH base AS (SELECT source AS host, doc_id, lang FROM documents),
-        |known AS (
-        |  SELECT host,
-        |         'https://' || host || '/' || lang || '/p' || CAST(doc_id AS VARCHAR) AS url,
-        |         '2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') AS lastmod,
-        |         CASE WHEN CAST('2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') AS DATE)
-        |                   > (DATE '2026-02-01' - CAST(doc_id % 30 AS INT))
-        |              THEN 'stale' ELSE 'fresh' END AS status
-        |  FROM base),
-        |disc AS (
-        |  SELECT host, 'https://' || host || '/disc/p' || CAST(doc_id AS VARCHAR) AS url,
-        |         '2026-01-15' AS lastmod, 'new' AS status
-        |  FROM base WHERE doc_id % 5 = 0),
-        |e AS (
-        |  SELECT host, url, lastmod, status FROM known
-        |  UNION ALL
-        |  SELECT host, url, lastmod, status FROM disc),
-        |ch AS (
-        |  SELECT host, url, lastmod, status,
-        |         (row_number() OVER (PARTITION BY host ORDER BY url ASC) - 1) // 10 AS child
-        |  FROM e)
-        |SELECT host,
-        |       'https://' || host || '/sitemap-' || CAST(child AS VARCHAR) || '.xml' AS sitemap,
-        |       url, lastmod, status
-        |FROM ch
-        |ORDER BY host ASC, url ASC""".stripMargin,
-    // closed-form mirror of the WARC round-trip: the oracle rebuilds the
-    // payload string directly and measures it; the engine must re-split
-    // the member, parse headers, and validate lengths to land on the
-    // same numbers (the q_crawl_sitemap convention — no WARC parsing on
-    // the oracle side)
-    "q_warc_parse" ->
-      """WITH p AS (
-        |  SELECT source AS host,
-        |         'https://' || source || '.example/' || lang || '/p' ||
-        |           CAST(doc_id AS VARCHAR) AS url,
-        |         doc_id,
-        |         'HTTP/1.1 200 OK' || chr(13) || chr(10) ||
-        |           'Content-Type: text/html' || chr(13) || chr(10) ||
-        |           chr(13) || chr(10) ||
-        |           '<html><head><title>' || source || '/p' ||
-        |           CAST(doc_id AS VARCHAR) || '</title></head><body><p>' ||
-        |           text || '</p></body></html>' AS payload
-        |  FROM documents)
-        |SELECT host, url,
-        |       '<urn:md5:' || md5(url) || '>' AS rec_id,
-        |       '2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') ||
-        |         'T' || lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0') ||
-        |         ':00:00Z' AS warc_date,
-        |       'response' AS warc_type,
-        |       CAST(length(payload) +
-        |            CASE WHEN doc_id % 13 = 7 THEN 1 ELSE 0 END AS BIGINT)
-        |         AS content_length,
-        |       CAST(length(payload) AS BIGINT) AS payload_len,
-        |       '200' AS http_status,
-        |       CAST(CASE WHEN doc_id % 13 = 7 THEN 0 ELSE 1 END AS BIGINT)
-        |         AS len_ok
-        |FROM p
-        |ORDER BY url ASC""".stripMargin,
-    // WET mirror: title + body text with markup gone — only the
-    // length-valid records survive, so the planted corrupt rows are out
-    "q_warc_wet" ->
-      """WITH w AS (
-        |  SELECT 'https://' || source || '.example/' || lang || '/p' ||
-        |           CAST(doc_id AS VARCHAR) AS url,
-        |         trim(regexp_replace(
-        |           source || '/p' || CAST(doc_id AS VARCHAR) || ' ' || text,
-        |           ' +', ' ', 'g')) AS wet_text
-        |  FROM documents WHERE doc_id % 13 <> 7)
-        |SELECT url, wet_text,
-        |       CAST(len(str_split(wet_text, ' ')) AS BIGINT) AS n_words
-        |FROM w
-        |ORDER BY url ASC""".stripMargin,
-    // the archive->training spine: valid records are closed-form
-    // (doc_id % 13 <> 7), main_text from the proven html-main CTEs,
-    // lang-id + six-gate funnel over the EXTRACTED corpus, shard plan
-    // of the k6 survivors — the engine must round-trip the real bytes
-    "q_archive_e2e" -> archiveE2eOracleSql,
-    "q_archive_e2e_stream" -> archiveE2eOracleSql,
-    // the revisit plant adds only byte-identical captures of existing
-    // pages and the digest collapse + (digest, url) fan-out returns the
-    // full spine's corpus exactly — same closed form
-    "q_archive_e2e_revisit" -> archiveE2eOracleSql,
-    // the store changes WHERE a text comes from, never what it is
-    // (digests are content addresses); ordered halves + require()'d
-    // zero-FP carry the stream-oracle argument unchanged
-    "q_archive_e2e_revisit_stream" -> archiveE2eOracleSql,
-    // the crawl-plan CTEs thread straight into the spine's: scheduled
-    // page ids (both URL shapes canonicalize via /p<id>) subset the
-    // corpus, then the identical extraction/funnel/shard chain runs
-    // over the fetched pages — one chained-CTE mirror of the full loop
-    // MATERIALIZED on sched/xraw is load-bearing (the q_bpe_tokens
-    // lesson): the spine CTEs reference xraw many times, and DuckDB
-    // would otherwise re-inline the whole crawl-plan derivation into
-    // each reference (measured: 0.3 s materialized vs > 5 min inlined)
-    "q_crawl_archive_e2e" -> archiveSpineOracleSql(
-      """xraw AS MATERIALIZED (
-        |  SELECT d.doc_id, d.lang, d.source, d.text
-        |  FROM documents d JOIN sched USING (doc_id)
-        |  WHERE d.doc_id % 13 <> 7)""".stripMargin,
-      prefixCtes = crawlPlanCtes + """,
-        |sched AS MATERIALIZED (
-        |  SELECT DISTINCT CAST(regexp_extract(url, '/p([0-9]+)$', 1)
-        |    AS BIGINT) AS doc_id
-        |  FROM r2 WHERE slot <= cap),
-        |""".stripMargin),
-    // the manifest is closed-form from documents arithmetic; the engine
-    // must round-trip the WRITE to produce it — any write-path byte slip
-    // moves the bit_xor checksum
-    "q_export_verified" -> exportManifestOracleSql,
-    // the STREAMING export faces the SAME closed form: the two ordered
-    // halves partition the corpus, sums/min/max/bit_xor are associative,
-    // and the serve require()s the written table ≡ the folded log before
-    // returning — so the folded manifest IS the batch manifest exactly
-    "q_export_verified_stream" -> exportManifestOracleSql,
-    // the spine CTEs thread into the manifest arithmetic: survivors'
-    // curated text, sharded + checksummed — any byte lost between the
-    // gate battery and storage moves the bit_xor
-    "q_spine_export_verified" -> spineExportOracleSql,
-    // the streamed halves partition the batch funnel's survivor set
-    // (ordered halves + require()'d zero-FP bloom), every manifest
-    // column folds associatively, and the fixture compacts before
-    // serving — so the served manifest IS the batch manifest exactly
-    "q_spine_export_verified_stream" -> spineExportOracleSql,
-    // the FULL loop live: crawl-plan CTEs -> fetched-subset spine
-    // CTEs -> manifest closed form. Ordered cycles (half schedule,
-    // then the full re-crawl) + the require()'d zero-FP bloom make
-    // the streamed survivor set exactly the batch funnel's over the
-    // fetched corpus; the re-crawl's revisits extract once across
-    // cycles and never re-export, so the served manifest IS this
-    "q_crawl_archive_e2e_stream" -> spineExportOracleSqlOf(
-      """xraw AS MATERIALIZED (
-        |  SELECT d.doc_id, d.lang, d.source, d.text
-        |  FROM documents d JOIN sched USING (doc_id)
-        |  WHERE d.doc_id % 13 <> 7)""".stripMargin,
-      prefixCtes = crawlPlanCtes + """,
-        |sched AS MATERIALIZED (
-        |  SELECT DISTINCT CAST(regexp_extract(url, '/p([0-9]+)$', 1)
-        |    AS BIGINT) AS doc_id
-        |  FROM r2 WHERE slot <= cap),
-        |""".stripMargin),
-    // generational eviction between cycles moves extraction WORK (the
-    // evicted digests re-extract, require()'d exactly-once), never a
-    // byte of output: extractions are pure functions of the payload
-    // behind the digest, so the served manifest faces the SAME closed
-    // form as the un-evicted loop
-    "q_crawl_archive_evict" -> spineExportOracleSqlOf(
-      """xraw AS MATERIALIZED (
-        |  SELECT d.doc_id, d.lang, d.source, d.text
-        |  FROM documents d JOIN sched USING (doc_id)
-        |  WHERE d.doc_id % 13 <> 7)""".stripMargin,
-      prefixCtes = crawlPlanCtes + """,
-        |sched AS MATERIALIZED (
-        |  SELECT DISTINCT CAST(regexp_extract(url, '/p([0-9]+)$', 1)
-        |    AS BIGINT) AS doc_id
-        |  FROM r2 WHERE slot <= cap),
-        |""".stripMargin),
-    // closed-form mirror of the CDX plan: which capture wins is pure
-    // doc_id arithmetic on the oracle side; the engine must SURT, split
-    // and from_json its way to the same row
-    "q_cdx_latest" ->
-      """WITH d AS (
-        |  SELECT doc_id, source, lang, text, n_chars,
-        |         CASE WHEN doc_id % 9 = 0 OR doc_id % 10 = 0
-        |              THEN 1 ELSE 2 END AS chosen
-        |  FROM documents)
-        |SELECT 'example,' || source || ')/' || lang || '/p' ||
-        |         CAST(doc_id AS VARCHAR) AS urlkey,
-        |       'https://' || source || '.example/' || lang || '/p' ||
-        |         CAST(doc_id AS VARCHAR) AS url,
-        |       '202601' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') ||
-        |         lpad(CAST(chosen * 8 AS VARCHAR), 2, '0') || '0000' AS ts,
-        |       md5(text || CASE WHEN doc_id % 4 = 0 THEN '1'
-        |                        ELSE CAST(chosen AS VARCHAR) END) AS digest,
-        |       CAST(n_chars + chosen AS BIGINT) AS length
-        |FROM d
-        |ORDER BY urlkey ASC""".stripMargin,
-    // revisit mirror: good-capture and distinct-digest counts in closed
-    // form (two good captures unless the third was a 404/PDF; one
-    // distinct digest on the % 4 revisit plant)
-    "q_cdx_revisit" ->
-      """WITH d AS (
-        |  SELECT doc_id, source, lang,
-        |         CASE WHEN doc_id % 9 = 0 OR doc_id % 10 = 0
-        |              THEN 1 ELSE 2 END AS n_captures
-        |  FROM documents)
-        |SELECT 'example,' || source || ')/' || lang || '/p' ||
-        |         CAST(doc_id AS VARCHAR) AS urlkey,
-        |       CAST(n_captures AS BIGINT) AS n_captures,
-        |       CAST(CASE WHEN n_captures = 1 OR doc_id % 4 = 0
-        |                 THEN 1 ELSE 2 END AS BIGINT) AS n_unique,
-        |       CAST(CASE WHEN n_captures = 2 AND doc_id % 4 = 0
-        |                 THEN 1 ELSE 0 END AS BIGINT) AS has_revisit
-        |FROM d
-        |ORDER BY urlkey ASC""".stripMargin,
-    // indexer mirror: the q_warc_parse payload rebuild, corrupt rows
-    // excluded, SURT/timestamp/digest in closed form
-    "q_cdx_index" ->
-      """WITH p AS (
-        |  SELECT source, lang, doc_id,
-        |         'https://' || source || '.example/' || lang || '/p' ||
-        |           CAST(doc_id AS VARCHAR) AS url,
-        |         'HTTP/1.1 200 OK' || chr(13) || chr(10) ||
-        |           'Content-Type: text/html' || chr(13) || chr(10) ||
-        |           chr(13) || chr(10) ||
-        |           '<html><head><title>' || source || '/p' ||
-        |           CAST(doc_id AS VARCHAR) || '</title></head><body><p>' ||
-        |           text || '</p></body></html>' AS payload
-        |  FROM documents WHERE doc_id % 13 <> 7)
-        |SELECT 'example,' || source || ')/' || lang || '/p' ||
-        |         CAST(doc_id AS VARCHAR) AS urlkey,
-        |       '202601' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') ||
-        |         lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0') || '0000' AS ts,
-        |       url, '200' AS status, md5(payload) AS digest,
-        |       CAST(length(payload) AS BIGINT) AS length
-        |FROM p
-        |ORDER BY urlkey ASC""".stripMargin,
-    // WAT mirror: the planted page's anchor inventory rebuilt
-    // arithmetically — nav triple, % 3 details link, six % 5
-    // boilerplate links, footer pair, positions computed in closed form
-    "q_wat_links" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS hasd,
-        |         CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END AS hasp
+        |ORDER BY doc_id ASC""".stripMargin)),
+    // next-cycle fetch schedule: staleness priority, per-host politeness cap
+    Entry("q_crawl_frontier", (s, d) => FrontierOps.crawlFrontier(s, d), Oracle(
+      """WITH f AS (
+        |  SELECT source AS host, doc_id,
+        |         CAST((doc_id % 30) * (CASE lang WHEN 'en' THEN 5 WHEN 'fr' THEN 4
+        |                                         WHEN 'es' THEN 3 WHEN 'de' THEN 2 ELSE 1 END)
+        |              + n_chars % 7 AS BIGINT) AS priority
         |  FROM documents),
-        |links AS (
-        |  SELECT doc_id, 0 AS pos, '/' AS href, 'home' AS anchor FROM d
-        |  UNION ALL SELECT doc_id, 1, '/about', 'about' FROM d
-        |  UNION ALL SELECT doc_id, 2, '/products', 'products' FROM d
-        |  UNION ALL SELECT doc_id, 3, '/d', 'details' FROM d WHERE hasd = 1
-        |  UNION ALL SELECT doc_id, 3 + hasd + r.i, '/p', 'more link text here'
-        |    FROM d CROSS JOIN (SELECT unnest(range(6)) AS i) r WHERE hasp = 1
-        |  UNION ALL SELECT doc_id, 3 + hasd + 6 * hasp, '/privacy', 'privacy' FROM d
-        |  UNION ALL SELECT doc_id, 4 + hasd + 6 * hasp, '/terms', 'terms' FROM d)
-        |SELECT doc_id, CAST(pos AS BIGINT) AS pos, href, anchor
-        |FROM links
-        |ORDER BY doc_id ASC, pos ASC""".stripMargin,
-    // the composed plan: sitemap candidates in closed form, the same
-    // handwritten literal robots rules, longest-match + allow-tie, then
-    // the delay-capped per-host rank — one chained-CTE mirror of the
-    // whole planning pass
-    "q_crawl_plan" ->
-      ("WITH " + crawlPlanCtes + """
-        |SELECT host, CAST(slot AS BIGINT) AS slot, url, priority, status
-        |FROM r2 WHERE slot <= cap
-        |ORDER BY host ASC, slot ASC""".stripMargin),
-    // RFC 9309 admission + delay caps, re-derived from a HANDWRITTEN
-    // literal rules table (host class = numeric suffix % 4, mirroring
-    // RobotsOps.fixtureRobots): per (page, rule) LIKE match carrying the
-    // robots pattern's octet length, longest match wins, allow wins the
-    // length tie, no match → allowed; cap = least(8, floor(10/delay)).
-    // A group-selection bug (class 2: the graftbot group, not `*`) or a
-    // wildcard/$-anchor bug (class 1: '/*7$' → LIKE '/%7') diverges here.
-    "q_crawl_robots" ->
+        |r AS (SELECT host, doc_id, priority,
+        |             row_number() OVER (PARTITION BY host ORDER BY priority DESC, doc_id ASC) AS slot
+        |      FROM f)
+        |SELECT host, CAST(slot AS BIGINT) AS slot, doc_id, priority
+        |FROM r WHERE slot <= 8
+        |ORDER BY host ASC, slot ASC""".stripMargin)),
+    // the POLITE frontier: RFC 9309 admission gates the schedule (a
+    // disallowed URL never consumes a slot) and crawl-delay shrinks the
+    // per-host cap — RobotsOps (built r13) wired into the crawl cycle
+    Entry("q_crawl_robots", (s, d) => FrontierOps.crawlFrontierRobots(s, d), Oracle(
+      // RFC 9309 admission + delay caps, re-derived from a HANDWRITTEN
+      // literal rules table (host class = numeric suffix % 4, mirroring
+      // RobotsOps.fixtureRobots): per (page, rule) LIKE match carrying the
+      // robots pattern's octet length, longest match wins, allow wins the
+      // length tie, no match → allowed; cap = least(8, floor(10/delay)).
+      // A group-selection bug (class 2: the graftbot group, not `*`) or a
+      // wildcard/$-anchor bug (class 1: '/*7$' → LIKE '/%7') diverges here.
       """WITH f AS (
         |  SELECT source AS host, doc_id,
         |         '/' || lang || '/p' || CAST(doc_id AS VARCHAR) AS path,
@@ -2964,206 +3553,88 @@ object SparkEntry {
         |  FROM v LEFT JOIN delays d ON v.hc = d.hc)
         |SELECT host, CAST(slot AS BIGINT) AS slot, doc_id, path, priority
         |FROM r2 WHERE slot <= cap
-        |ORDER BY host ASC, slot ASC""".stripMargin,
-    "q_crawl_frontier" ->
-      """WITH f AS (
-        |  SELECT source AS host, doc_id,
-        |         CAST((doc_id % 30) * (CASE lang WHEN 'en' THEN 5 WHEN 'fr' THEN 4
-        |                                         WHEN 'es' THEN 3 WHEN 'de' THEN 2 ELSE 1 END)
-        |              + n_chars % 7 AS BIGINT) AS priority
+        |ORDER BY host ASC, slot ASC""".stripMargin)),
+    // anchor-text aggregation over the same edge graph (document expansion)
+    Entry("q_link_anchors", (s, d) => LinkOps.linkAnchors(s, d), Oracle(
+      s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
+         |e AS (
+         |  SELECT d.doc_id AS src,
+         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
+         |  FROM documents d CROSS JOIN n CROSS JOIN ks
+         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id),
+         |a AS (SELECT e.dst, list(substr(d.text, 1, 24) ORDER BY e.src) AS l
+         |      FROM e JOIN documents d ON e.src = d.doc_id GROUP BY e.dst)
+         |SELECT dst AS doc_id, CAST(len(l) AS BIGINT) AS in_degree,
+         |       array_to_string(l[1:3], ' | ') AS top_anchors
+         |FROM a ORDER BY doc_id ASC""".stripMargin)),
+    // HITS hubs/authorities: the second classic centrality, nano-int exact
+    Entry("q_link_hits", (s, d) => LinkOps.hits(s, d), Oracle(hitsOracleSql)),
+    // degree-ordered triangle count + global clustering coefficient
+    Entry("q_link_triangles", (s, d) => LinkOps.triangleCount(s, d), Oracle(
+      s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
+         |e AS (
+         |  SELECT d.doc_id AS src,
+         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
+         |  FROM documents d CROSS JOIN n CROSS JOIN ks
+         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id),
+         |u AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e),
+         |deg AS (SELECT v, count(*) AS d FROM (
+         |          SELECT a AS v FROM u UNION ALL SELECT b FROM u) GROUP BY v),
+         |tri AS (SELECT count(*) AS t FROM u t1
+         |        JOIN u t2 ON t1.b = t2.a
+         |        JOIN u t3 ON t3.a = t1.a AND t3.b = t2.b),
+         |w AS (SELECT CAST(sum((d * (d - 1)) // 2) AS BIGINT) AS nw FROM deg)
+         |SELECT t AS n_triangles, nw AS n_wedges,
+         |       round(3.0 * t / nw, 6) AS clustering
+         |FROM tri CROSS JOIN w""".stripMargin)),
+    // MATCH_RECOGNIZE-lite: regex over each user's ordered event string
+    Entry("q_events_pattern", (s, d) => EventOps.eventPattern(s, d), Oracle(
+      """WITH s AS (
+        |  SELECT user_id,
+        |         string_agg(substring(event_type, 1, 1), '' ORDER BY ts, event_id) AS seq
+        |  FROM events GROUP BY user_id)
+        |SELECT user_id, CAST(length(seq) AS BIGINT) AS seq_len,
+        |       CAST(len(regexp_extract_all(seq, 'v[ce]*p')) AS BIGINT) AS n_matches
+        |FROM s ORDER BY user_id ASC""".stripMargin)),
+    // Efraimidis-Spirtes weighted reservoir: top-k by deterministic A-ES key
+    Entry("q_sample_weighted", (s, d) => RelOps.sampleWeighted(s, d), Oracle(
+      """WITH s AS (
+        |  SELECT doc_id, source, n_chars,
+        |         ln((CAST((doc_id * 3266489917) % 1000003 AS DOUBLE) + 0.5) / 1000003.0)
+        |           / CAST(n_chars AS DOUBLE) AS aes_key
+        |  FROM documents)
+        |SELECT doc_id, source, n_chars FROM s
+        |ORDER BY aes_key DESC, doc_id ASC
+        |LIMIT 200""".stripMargin)),
+    // per-source weighted reservoirs through the bounded-heap group top-k
+    Entry("q_sample_weighted_grouped", (s, d) => RelOps.sampleWeightedGrouped(s, d), Oracle(
+      """WITH s AS (
+        |  SELECT source, doc_id,
+        |         ln((CAST((doc_id * 3266489917) % 1000003 AS DOUBLE) + 0.5) / 1000003.0)
+        |           / CAST(n_chars AS DOUBLE) AS aes_key
         |  FROM documents),
-        |r AS (SELECT host, doc_id, priority,
-        |             row_number() OVER (PARTITION BY host ORDER BY priority DESC, doc_id ASC) AS slot
-        |      FROM f)
-        |SELECT host, CAST(slot AS BIGINT) AS slot, doc_id, priority
-        |FROM r WHERE slot <= 8
-        |ORDER BY host ASC, slot ASC""".stripMargin,
-    "q_sim_join" ->
-      """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS score
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) > 0.35
-        |ORDER BY a_id ASC, b_id ASC""".stripMargin,
-    "q_sim_join_lsh" ->
-      """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS score
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) > 0.35
-        |ORDER BY a_id ASC, b_id ASC""".stripMargin,
-    "q_sim_join_auto" ->
-      """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS score
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) > 0.35
-        |ORDER BY a_id ASC, b_id ASC""".stripMargin,
-    "q_dedup_exact" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000, text FROM documents WHERE doc_id % 5 = 0)
-        |SELECT doc_id, fp FROM (
-        |  SELECT doc_id, md5(text) AS fp,
-        |         row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id ASC) AS rn
-        |  FROM corpus)
-        |WHERE rn = 1
-        |ORDER BY doc_id ASC""".stripMargin,
-    "q_dedup_jaccard" ->
-      """WITH ws AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS s FROM documents)
-        |SELECT a_id, b_id, round(j, 6) AS jac FROM (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |         CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(list_cat(a.s, b.s))) AS j
-        |  FROM ws a JOIN ws b ON a.doc_id < b.doc_id)
-        |WHERE j >= 0.95
-        |ORDER BY a_id ASC, b_id ASC""".stripMargin,
-    "q_dedup_minhash_pairs" ->
-      """WITH ws AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS s FROM documents)
-        |SELECT a_id, b_id, round(j, 6) AS jac FROM (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |         CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(list_cat(a.s, b.s))) AS j
-        |  FROM ws a JOIN ws b ON a.doc_id < b.doc_id)
-        |WHERE j >= 0.95
-        |ORDER BY a_id ASC, b_id ASC""".stripMargin,
-    "q_dedup_minhash" ->
-      """WITH ws AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS s FROM documents),
-        |dup AS (
-        |  SELECT DISTINCT b.doc_id AS b_id
-        |  FROM ws a JOIN ws b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(list_cat(a.s, b.s))) >= 0.95)
-        |SELECT doc_id FROM documents
-        |WHERE doc_id NOT IN (SELECT b_id FROM dup)
-        |ORDER BY doc_id ASC""".stripMargin,
-    // the simhash signature is closed-form md5-nibble arithmetic (r17);
-    // the oracle brute-forces bit_count(xor) <= 3 over distinct fps —
-    // the engine must pigeonhole-block its way to the same pairs
-    "q_dedup_simhash" -> simhashOracleSql(),
-    // the q_dedup_unicode planting through the FUZZY survivor rule, token
-    // sets nfc_normalize'd (utf8proc) — must equal the engine's NFC-first
-    // minhash chain
-    "q_dedup_minhash_unicode" ->
-      """WITH twins AS (SELECT doc_id, text FROM documents WHERE doc_id % 9 = 0),
-        |corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 20000, text || ' caf' || chr(233) FROM twins
-        |  UNION ALL
-        |  SELECT doc_id + 40000, text || ' cafe' || chr(769) FROM twins),
-        |ws AS (SELECT doc_id, list_distinct(string_split(nfc_normalize(text), ' ')) AS s FROM corpus),
-        |dup AS (
-        |  SELECT DISTINCT b.doc_id AS b_id
-        |  FROM ws a JOIN ws b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(list_cat(a.s, b.s))) >= 0.95)
-        |SELECT doc_id FROM corpus
-        |WHERE doc_id NOT IN (SELECT b_id FROM dup)
-        |ORDER BY doc_id ASC""".stripMargin,
-    // C4 span dedup: first-arrival min over (doc_id, pos) mirrored as
-    // min(doc_id·1e6 + pos); coverage via nested list lambdas
-    "q_dedup_span3" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |         array_to_string(w[1:6], ' ') || ' one.' || chr(10) ||
-        |         array_to_string(w[2:7], ' ') || ' two.' || chr(10) ||
-        |         array_to_string(w[3:8], ' ') || ' three.' || chr(10) ||
-        |         array_to_string(w[1:5], ' ') || ' four.' ||
-        |         CASE WHEN doc_id % 4 = 0 THEN chr(10) || 'we use cookies on this site.' || chr(10) || 'accept all cookies to continue.' || chr(10) || 'see our privacy policy for details.' ELSE '' END ||
-        |         CASE WHEN doc_id % 9 = 0 THEN chr(10) || array_to_string(w[1:6], ' ') || ' one.' || chr(10) || array_to_string(w[2:7], ' ') || ' two.' || chr(10) || array_to_string(w[3:8], ' ') || ' three.' ELSE '' END AS t
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
-        |sa AS (SELECT doc_id, string_split(t, chr(10)) AS sents FROM c),
-        |spans AS (
-        |  SELECT doc_id, j AS pos, md5(array_to_string(sents[j:j+2], chr(10))) AS h
-        |  FROM (SELECT doc_id, sents, unnest(range(1, len(sents) - 1)) AS j FROM sa)),
-        |frst AS (SELECT h, min(doc_id * 1000000 + pos) AS f FROM spans GROUP BY h),
-        |removed AS (
-        |  SELECT doc_id, list(pos) AS rem
-        |  FROM spans JOIN frst USING (h)
-        |  WHERE doc_id * 1000000 + pos <> f
-        |  GROUP BY doc_id),
-        |k AS (
-        |  SELECT sa.doc_id, sents, coalesce(r.rem, CAST([] AS BIGINT[])) AS rem
-        |  FROM sa LEFT JOIN removed r ON sa.doc_id = r.doc_id),
-        |k2 AS (
-        |  SELECT doc_id, CAST(len(sents) AS BIGINT) AS n_sents, sents,
-        |         list_filter(range(1, len(sents) + 1), i ->
-        |           len(list_filter(rem, p -> i >= p AND i <= p + 2)) = 0) AS keptidx
-        |  FROM k)
-        |SELECT doc_id, n_sents,
-        |       CAST(n_sents - len(keptidx) AS BIGINT) AS n_removed_sents,
-        |       coalesce(array_to_string(list_transform(keptidx, i -> sents[i]), chr(10)), '') AS kept_text
-        |FROM k2 ORDER BY doc_id ASC""".stripMargin,
-    // corpus-wide paragraph counts over the planted boilerplate — all
-    // integer char accounting, 20% cross-multiplied gate
-    // the streaming form's first arrival is the deterministic
-    // (half parity, doc_id, pos) rank once the fixture's zero-FP
-    // require holds — the batch twin's planting, first-arrival flags
-    "q_dedup_paragraph_stream" ->
-      """WITH planted AS (
-        |  SELECT doc_id, text ||
-        |    CASE WHEN doc_id % 4 = 0
-        |         THEN chr(10) || chr(10) || 'subscribe to the newsletter today'
-        |         ELSE '' END ||
-        |    CASE WHEN doc_id % 10 = 0
-        |         THEN chr(10) || chr(10) || 'all rights reserved legal notice'
-        |         ELSE '' END AS text
-        |  FROM documents),
-        |paras AS (
-        |  SELECT doc_id, i - 1 AS pos, ps[i] AS para
-        |  FROM (SELECT doc_id, string_split(text, chr(10) || chr(10)) AS ps
-        |        FROM planted),
-        |       unnest(range(1, len(ps) + 1)) AS t(i)),
-        |fl AS (
-        |  SELECT doc_id, para,
-        |         row_number() OVER (PARTITION BY md5(para)
-        |           ORDER BY doc_id % 2, doc_id, pos) > 1 AS seen
-        |  FROM paras)
-        |SELECT doc_id,
-        |       CAST(count(*) AS BIGINT) AS n_paras,
-        |       CAST(sum(CASE WHEN seen THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_paras,
-        |       CAST(sum(CASE WHEN seen THEN length(para) ELSE 0 END) AS BIGINT) AS dup_chars,
-        |       CAST(sum(length(para)) AS BIGINT) AS total_chars,
-        |       CAST(CASE WHEN 5 * sum(CASE WHEN seen THEN length(para) ELSE 0 END)
-        |                  <= sum(length(para)) THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM fl GROUP BY doc_id
-        |ORDER BY doc_id ASC""".stripMargin,
-    "q_dedup_paragraph" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |         text ||
-        |         CASE WHEN doc_id % 4 = 0
-        |              THEN chr(10) || chr(10) || 'subscribe to the newsletter today'
-        |              ELSE '' END ||
-        |         CASE WHEN doc_id % 10 = 0
-        |              THEN chr(10) || chr(10) || 'all rights reserved legal notice'
-        |              ELSE '' END AS t
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, unnest(string_split(t, chr(10) || chr(10))) AS para
-        |  FROM c),
-        |hc AS (SELECT md5(para) AS h, count(*) AS cnt FROM p GROUP BY md5(para)),
-        |j AS (SELECT p.doc_id, p.para, hc.cnt FROM p JOIN hc ON md5(p.para) = hc.h)
-        |SELECT doc_id,
-        |       CAST(count(*) AS BIGINT) AS n_paras,
-        |       CAST(sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_paras,
-        |       CAST(sum(CASE WHEN cnt > 1 THEN length(para) ELSE 0 END) AS BIGINT) AS dup_chars,
-        |       CAST(sum(length(para)) AS BIGINT) AS total_chars,
-        |       CAST(CASE WHEN 5 * sum(CASE WHEN cnt > 1 THEN length(para) ELSE 0 END)
-        |                      <= sum(length(para)) THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM j GROUP BY doc_id
-        |ORDER BY doc_id ASC""".stripMargin,
-    "q_dedup_ngram" ->
-      """WITH bg AS (
-        |  SELECT doc_id,
-        |         list_distinct(list_transform(range(1, len(w)), i -> w[i] || chr(30) || w[i + 1])) AS s
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-        |  WHERE len(w) >= 2)
-        |SELECT a_id, b_id, round(j, 6) AS jac FROM (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |         CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(list_cat(a.s, b.s))) AS j
-        |  FROM bg a JOIN bg b ON a.doc_id < b.doc_id)
-        |WHERE j >= 0.8
-        |ORDER BY a_id ASC, b_id ASC""".stripMargin,
-    // brute-force directed containment over word 3-gram shingle lists;
-    // the engine's prefix-filter candidates + sorted-merge verify must
-    // reproduce it exactly (the filter is exact-recall by pigeonhole)
-    "q_dedup_containment" ->
+        |r AS (SELECT source, doc_id,
+        |             row_number() OVER (PARTITION BY source
+        |                                ORDER BY aes_key DESC, doc_id ASC) AS rank
+        |      FROM s)
+        |SELECT source, CAST(rank AS BIGINT) AS rank, doc_id
+        |FROM r WHERE rank <= 10
+        |ORDER BY source ASC, rank ASC""".stripMargin)),
+    // incremental materialized view: the daily report served from the store
+    Entry("q_report_maintained", (s, d) => EventOps.reportMaintained(s, d), Oracle(
+      """SELECT date_trunc('day', ts) AS day, event_type, count(*) AS n,
+        |       CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_value
+        |FROM events GROUP BY 1, 2
+        |ORDER BY day ASC, event_type ASC""".stripMargin)),
+    // RM3-lite pseudo-relevance feedback: seed pool -> expansion -> re-score
+    Entry("q_text_prf", (s, d) => RetrievalOps.prfTopK(s, d), Oracle(prfOracleSql)),
+    // asymmetric containment: A quoted/cropped inside B (Broder 1997)
+    Entry("q_dedup_containment", (s, d) => DedupOps.containmentPairs(s, d), Oracle(
+      // brute-force directed containment over word 3-gram shingle lists;
+      // the engine's prefix-filter candidates + sorted-merge verify must
+      // reproduce it exactly (the filter is exact-recall by pigeonhole)
       """WITH bg AS (
         |  SELECT doc_id,
         |         list_distinct(list_transform(range(1, len(w) - 1),
@@ -3175,272 +3646,79 @@ object SparkEntry {
         |         CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(a.s) AS c
         |  FROM bg a JOIN bg b ON a.doc_id <> b.doc_id)
         |WHERE c >= 0.6
-        |ORDER BY a_id ASC, b_id ASC""".stripMargin,
-    "q_dedup_substring" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000, text FROM documents WHERE doc_id % 5 = 0),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM corpus),
-        |w AS (
-        |  SELECT doc_id,
-        |         unnest(list_transform(range(1, len(t) - 18),
-        |           i -> list_aggregate(t[i:i+19], 'string_agg', ' '))) AS win
-        |  FROM toks WHERE len(t) >= 20),
-        |dup AS (SELECT win FROM w GROUP BY win HAVING count(*) > 1),
-        |per AS (
-        |  SELECT w.doc_id, CAST(count(*) AS BIGINT) AS n_dup_windows
-        |  FROM w JOIN dup USING (win) GROUP BY w.doc_id)
-        |SELECT t.doc_id,
-        |       CAST(greatest(len(t.t) - 19, 0) AS BIGINT) AS n_windows,
-        |       CAST(coalesce(p.n_dup_windows, 0) AS BIGINT) AS n_dup_windows,
-        |       CASE WHEN len(t.t) >= 20
-        |            THEN CAST(coalesce(p.n_dup_windows, 0) AS DOUBLE) / (len(t.t) - 19)
-        |            ELSE 0.0 END AS dup_ratio
-        |FROM toks t LEFT JOIN per p ON t.doc_id = p.doc_id
-        |ORDER BY t.doc_id ASC""".stripMargin,
-    "q_dedup_substring_trim" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000, text FROM documents WHERE doc_id % 5 = 0),
-        |toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM corpus),
-        |wpos AS (SELECT doc_id, t, unnest(range(1, len(t) - 18)) AS pos
-        |         FROM toks WHERE len(t) >= 20),
-        |w AS (SELECT doc_id, pos,
-        |             list_aggregate(t[pos:pos+19], 'string_agg', ' ') AS win
-        |      FROM wpos),
-        |own AS (SELECT win, doc_id, pos,
-        |               count(*) OVER (PARTITION BY win) AS n,
-        |               row_number() OVER (PARTITION BY win ORDER BY doc_id, pos) AS rn
-        |        FROM w),
-        |rem AS (SELECT doc_id, pos FROM own WHERE n > 1 AND rn > 1),
-        |tokpos AS (SELECT doc_id, t, unnest(range(1, len(t) + 1)) AS k FROM toks),
-        |dropk AS (SELECT DISTINCT tp.doc_id, tp.k
-        |          FROM tokpos tp JOIN rem ON tp.doc_id = rem.doc_id
-        |            AND tp.k BETWEEN rem.pos AND rem.pos + 19),
-        |kept AS (
-        |  SELECT tp.doc_id,
-        |         coalesce(string_agg(tp.t[tp.k], ' ' ORDER BY tp.k)
-        |           FILTER (WHERE d.k IS NULL), '') AS kept_text,
-        |         CAST(count(*) FILTER (WHERE d.k IS NOT NULL) AS BIGINT) AS n_removed
-        |  FROM tokpos tp LEFT JOIN dropk d ON tp.doc_id = d.doc_id AND tp.k = d.k
-        |  GROUP BY tp.doc_id)
-        |SELECT doc_id, kept_text, n_removed FROM kept ORDER BY doc_id ASC""".stripMargin,
-    "q_dedup_cc" -> ConnectedOracle,
-    // the stored twin faces the SAME recursive-CTE oracle: the
-    // incremental merge fold is exact
-    "q_dedup_cc_stored" -> ConnectedOracle,
-    // SoftDeDup weights: the CC closure + component sizes + the same
-    // integer ppm division; the stored twin folds exactly
-    "q_dedup_soft" -> SoftDedupOracle,
-    "q_dedup_soft_stored" -> SoftDedupOracle,
-    // DoReMi loop mirrored round by round in generated CTEs
-    "q_domain_doremi" -> doremiOracle(5),
-    // the DoReMi CTEs + token sums + the 4-pass budget arithmetic
-    "q_epoch_plan" -> epochPlanOracle(5),
-    // span-corruption mirror: same md5-nibble mask, lag/run windows,
-    // ordered FILTER string_aggs — byte-identical pairs by construction
-    "q_span_corrupt" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks,
-        |         unnest(range(len(string_split(text, ' ')))) AS p
+        |ORDER BY a_id ASC, b_id ASC""".stripMargin)),
+    // document-level PMI over the df-pruned vocabulary (Church & Hanks)
+    Entry("q_term_cooccur", (s, d) => TextAnalysisOps.termCooccurrence(s, d), Oracle(
+      // document-level PMI: integer counts throughout; the one double op
+      // (ln of an integer ratio, identical operand order) rounded at 6 —
+      // the BM25 cross-engine convention
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
         |  FROM documents),
-        |tok AS (
-        |  SELECT doc_id, p, toks[p + 1] AS tok,
-        |         CASE WHEN instr('0123456789abcdef',
-        |             substr(md5(CAST(doc_id AS VARCHAR) || ':' ||
-        |               CAST(p AS VARCHAR)), 32, 1)) - 1 < 3
-        |           THEN 1 ELSE 0 END AS m
-        |  FROM t),
-        |w AS (
-        |  SELECT *, CASE WHEN m = 1 AND
-        |        coalesce(lag(m) OVER (PARTITION BY doc_id ORDER BY p), 0) = 0
-        |      THEN 1 ELSE 0 END AS fos
-        |  FROM tok),
-        |k AS (
-        |  SELECT *, sum(fos) OVER (PARTITION BY doc_id ORDER BY p) AS kk
-        |  FROM w),
-        |pieces AS (
-        |  SELECT doc_id, p, m, kk,
-        |         CASE WHEN m = 0 THEN tok
-        |              WHEN fos = 1 THEN '<extra_id_' || CAST(kk - 1 AS VARCHAR) || '>'
-        |         END AS ip,
-        |         CASE WHEN fos = 1 THEN '<extra_id_' || CAST(kk - 1 AS VARCHAR) || '> ' || tok
-        |              WHEN m = 1 THEN tok
-        |         END AS tp
-        |  FROM k)
-        |SELECT doc_id,
-        |       coalesce(string_agg(ip, ' ' ORDER BY p) FILTER (WHERE ip IS NOT NULL), '') AS input_text,
-        |       coalesce(string_agg(tp, ' ' ORDER BY p) FILTER (WHERE tp IS NOT NULL), '') AS target_text,
-        |       CAST(coalesce(max(kk), 0) AS BIGINT) AS n_spans,
-        |       CAST(sum(m) AS BIGINT) AS n_masked
-        |FROM pieces
-        |GROUP BY doc_id
-        |ORDER BY doc_id ASC""".stripMargin,
-    // funnel mirror: each stage flag is the PROVEN oracle fragment of
-    // its own entry (lang-id CTEs, gopher battery, repetition plants,
-    // md5 first-arrival, n-gram hits, mix bucket), cumulative products,
-    // a 7-row union, and the lag-window keep ppm
-    "q_curation_funnel" ->
-      (s"""WITH $langIdCtes,
-          |""".stripMargin + funnelFlagCtes("documents") + ",\n" +
-        s"""|agg AS (
-        |  SELECT count(*) AS n0, sum(n_tok) AS t0,
-        |         sum(k1) AS n1, sum(n_tok * k1) AS t1,
-        |         sum(k2) AS n2, sum(n_tok * k2) AS t2,
-        |         sum(k3) AS n3, sum(n_tok * k3) AS t3,
-        |         sum(k4) AS n4, sum(n_tok * k4) AS t4,
-        |         sum(k5) AS n5, sum(n_tok * k5) AS t5,
-        |         sum(k6) AS n6, sum(n_tok * k6) AS t6
-        |  FROM kk),
-        |st AS (
-        |  SELECT 0 AS stage, 'raw' AS stage_name, n0 AS n_docs, t0 AS n_tokens FROM agg
-        |  UNION ALL SELECT 1, 'lang_id', n1, t1 FROM agg
-        |  UNION ALL SELECT 2, 'gopher_rules', n2, t2 FROM agg
-        |  UNION ALL SELECT 3, 'gopher_repetition', n3, t3 FROM agg
-        |  UNION ALL SELECT 4, 'dedup_exact', n4, t4 FROM agg
-        |  UNION ALL SELECT 5, 'decontaminate', n5, t5 FROM agg
-        |  UNION ALL SELECT 6, 'domain_mix', n6, t6 FROM agg)
-        |SELECT CAST(stage AS BIGINT) AS stage, stage_name,
-        |       CAST(n_docs AS BIGINT) AS n_docs,
-        |       CAST(n_tokens AS BIGINT) AS n_tokens,
-        |       CAST(CASE WHEN lag(n_docs) OVER (ORDER BY stage) IS NULL THEN 1000000
-        |                 WHEN lag(n_docs) OVER (ORDER BY stage) = 0 THEN 0
-        |                 ELSE n_docs * 1000000 // lag(n_docs) OVER (ORDER BY stage)
-        |            END AS BIGINT) AS kept_ppm
-        |FROM st
-        |ORDER BY stage ASC""".stripMargin),
-    // the STREAM twin faces the SAME report oracle as of r17: ordered
-    // halves + zero bloom false positives make the log fold
-    // algebraically the batch fold (no FN by construction; FP = 0 is
-    // require()'d in the fixture build against the exact half-1 hash
-    // set — a deterministic guarantee, not a probability)
-    "q_curation_funnel_stream" ->
-      (s"""WITH $langIdCtes,
-          |""".stripMargin + funnelFlagCtes("documents") + ",\n" +
-        s"""|agg AS (
-        |  SELECT count(*) AS n0, sum(n_tok) AS t0,
-        |         sum(k1) AS n1, sum(n_tok * k1) AS t1,
-        |         sum(k2) AS n2, sum(n_tok * k2) AS t2,
-        |         sum(k3) AS n3, sum(n_tok * k3) AS t3,
-        |         sum(k4) AS n4, sum(n_tok * k4) AS t4,
-        |         sum(k5) AS n5, sum(n_tok * k5) AS t5,
-        |         sum(k6) AS n6, sum(n_tok * k6) AS t6
-        |  FROM kk),
-        |st AS (
-        |  SELECT 0 AS stage, 'raw' AS stage_name, n0 AS n_docs, t0 AS n_tokens FROM agg
-        |  UNION ALL SELECT 1, 'lang_id', n1, t1 FROM agg
-        |  UNION ALL SELECT 2, 'gopher_rules', n2, t2 FROM agg
-        |  UNION ALL SELECT 3, 'gopher_repetition', n3, t3 FROM agg
-        |  UNION ALL SELECT 4, 'dedup_exact', n4, t4 FROM agg
-        |  UNION ALL SELECT 5, 'decontaminate', n5, t5 FROM agg
-        |  UNION ALL SELECT 6, 'domain_mix', n6, t6 FROM agg)
-        |SELECT CAST(stage AS BIGINT) AS stage, stage_name,
-        |       CAST(n_docs AS BIGINT) AS n_docs,
-        |       CAST(n_tokens AS BIGINT) AS n_tokens,
-        |       CAST(CASE WHEN lag(n_docs) OVER (ORDER BY stage) IS NULL THEN 1000000
-        |                 WHEN lag(n_docs) OVER (ORDER BY stage) = 0 THEN 0
-        |                 ELSE n_docs * 1000000 // lag(n_docs) OVER (ORDER BY stage)
-        |            END AS BIGINT) AS kept_ppm
-        |FROM st
-        |ORDER BY stage ASC""".stripMargin),
-    // anneal mirror: the shared rounded quality, the exact order
-    // statistic at rank floor(0.9·(n−1)) (the q_quantile_exact
-    // convention), strict-above routing, and the coprime replay bucket
-    "q_anneal_mix" ->
-      """WITH q AS (
-        |  SELECT doc_id,
-        |         round(CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |             / len(string_split(text, ' ')) * 0.5 +
-        |           least(1.0, CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0) * 0.5, 6)
-        |           AS quality
-        |  FROM documents),
-        |n AS (SELECT count(*) AS c FROM q),
-        |s AS (SELECT quality AS v, row_number() OVER (ORDER BY quality) AS rn FROM q),
-        |f AS (
-        |  SELECT s.v AS fence FROM s CROSS JOIN n
-        |  WHERE s.rn = CAST(floor(0.9 * (n.c - 1)) AS BIGINT) + 1)
-        |SELECT q.doc_id, q.quality,
-        |       CASE WHEN q.quality > f.fence THEN 'anneal' ELSE 'main' END AS phase,
-        |       CAST(CASE WHEN q.quality > f.fence
-        |                  OR (q.doc_id * 1540483477) % 1000 < 100
-        |             THEN 1 ELSE 0 END AS BIGINT) AS anneal_epoch
-        |FROM q CROSS JOIN f
-        |ORDER BY q.doc_id ASC""".stripMargin,
-    // SFT mirror: same halves, template and integer mask accounting
-    "q_sft_format" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS tk,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-        |  FROM documents),
-        |c AS (SELECT doc_id, tk, n, n // 2 AS np FROM t)
-        |SELECT doc_id,
-        |       '<|user|> ' || coalesce(array_to_string(tk[1:np], ' '), '') ||
-        |         ' <|assistant|> ' ||
-        |         coalesce(array_to_string(tk[np+1:n], ' '), '') AS rendered,
-        |       CAST(n + 2 AS BIGINT) AS n_total,
-        |       CAST(np + 2 AS BIGINT) AS n_masked,
-        |       CAST((np + 2) * 1000000 // (n + 2) AS BIGINT) AS mask_ppm
-        |FROM c
-        |ORDER BY doc_id ASC""".stripMargin,
-    // FIM mirror: same md5-nibble gate and cuts, list slicing in PSM
-    // order — double-space seams at empty segments are part of the
-    // contract on both sides
-    "q_fim_transform" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS tk,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-        |         CAST(instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':' || 'c1'), 32, 1)) - 1 AS BIGINT) AS na,
-        |         CAST(instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':' || 'c2'), 32, 1)) - 1 AS BIGINT) AS nb,
-        |         CASE WHEN instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':' || 'fim'), 32, 1)) - 1 < 8
-        |              THEN 1 ELSE 0 END AS fim
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, tk, n_tok, fim,
-        |         least(na * n_tok // 16, nb * n_tok // 16) AS c1,
-        |         greatest(na * n_tok // 16, nb * n_tok // 16) AS c2
-        |  FROM t)
-        |SELECT doc_id, CAST(fim AS BIGINT) AS fim, n_tok,
-        |       CAST(c1 AS BIGINT) AS c1, CAST(c2 AS BIGINT) AS c2,
-        |       CASE WHEN fim = 0 THEN array_to_string(tk, ' ')
-        |            ELSE '<PRE> ' || coalesce(array_to_string(tk[1:c1], ' '), '') ||
-        |                 ' <SUF> ' || coalesce(array_to_string(tk[c2+1:n_tok], ' '), '') ||
-        |                 ' <MID> ' || coalesce(array_to_string(tk[c1+1:c2], ' '), '')
-        |       END AS rendered
-        |FROM c
-        |ORDER BY doc_id ASC""".stripMargin,
-    // the CC closure composed with the q_text_quality composite; both
-    // engines rank on the ROUNDED quality, doc_id breaks ties
-    "q_dedup_keepbest" -> KeepBestOracle,
-    // the stored twin faces the SAME oracle: create(evens) + incremental
-    // refresh(odds) is an exact fold, not an approximation
-    "q_dedup_keepbest_stored" -> KeepBestOracle,
-    "q_events_hopping" ->
-      """SELECT w_start, event_type, count(*) AS n FROM (
-        |  SELECT event_type,
-        |         unnest([epoch_ms(CAST(floor(date_part('epoch', ts) / 43200) * 43200000 AS BIGINT)),
-        |                 epoch_ms(CAST((floor(date_part('epoch', ts) / 43200) - 1) * 43200000 AS BIGINT))]) AS w_start
-        |  FROM events)
-        |GROUP BY w_start, event_type
-        |ORDER BY w_start ASC, event_type ASC""".stripMargin,
-    "q_dedup_embed" ->
-      """SELECT b_id AS dup_id, min(a_id) AS canonical_id FROM (
-        |  SELECT a.vec_id AS a_id, b.vec_id AS b_id
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |  WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) >= 0.45)
-        |GROUP BY b_id
-        |ORDER BY dup_id ASC""".stripMargin,
-    "q_vec_centroids" ->
-      """SELECT label, pos, round(avg(v), 6) AS centroid_v
-        |FROM (SELECT label, unnest(CAST(embedding AS DOUBLE[])) AS v,
-        |             unnest(range(len(embedding))) AS pos
-        |      FROM embeddings)
-        |GROUP BY label, pos
-        |ORDER BY label ASC, pos ASC""".stripMargin,
-    // centroid micro-rounded BEFORE the cosine in both engines — the
-    // unrounded mean is a row-order-dependent double sum
-    "q_vec_outliers" ->
+        |dfreq AS (SELECT t, count(*) AS df FROM tok GROUP BY 1),
+        |keep AS (SELECT t, df FROM dfreq ORDER BY df DESC, t ASC LIMIT 64),
+        |pruned AS (SELECT tok.doc_id, tok.t, keep.df
+        |           FROM tok JOIN keep ON tok.t = keep.t),
+        |n AS (SELECT count(*) AS nd FROM documents),
+        |pairs AS (
+        |  SELECT a.t AS term_a, b.t AS term_b, a.df AS df_a, b.df AS df_b,
+        |         count(*) AS n_ab
+        |  FROM pruned a JOIN pruned b
+        |    ON a.doc_id = b.doc_id AND a.t < b.t
+        |  GROUP BY 1, 2, 3, 4)
+        |SELECT term_a, term_b, n_ab,
+        |       round(ln((CAST(n_ab AS DOUBLE) * CAST(nd AS DOUBLE)) /
+        |                (CAST(df_a AS DOUBLE) * CAST(df_b AS DOUBLE))), 6) AS pmi
+        |FROM pairs CROSS JOIN n
+        |ORDER BY n_ab DESC, term_a ASC, term_b ASC
+        |LIMIT 20""".stripMargin)),
+    // SymSpell deletion-neighborhood fuzzy vocabulary lookup
+    Entry("q_text_fuzzy", (s, d) => RetrievalOps.fuzzyVocabMatch(s, d), Oracle(
+      // brute-force levenshtein over the whole vocabulary — the engine's
+      // deletion-neighborhood join must find exactly the same matches;
+      // the query-term VALUES literal is built from the ONE Scala list
+      s"""WITH v AS (
+         |  SELECT term, count(*) AS n_occur
+         |  FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
+         |  WHERE len(term) > 0
+         |  GROUP BY 1),
+         |q(q_term) AS (VALUES ${graft.operators.RetrievalOps.FuzzyQueryTerms
+              .map(t => s"('$t')").mkString(", ")})
+         |SELECT q_term, term, n_occur
+         |FROM q JOIN v ON levenshtein(q_term, term) <= 1
+         |ORDER BY q_term ASC, term ASC""".stripMargin)),
+    // first-order Markov transition matrix over user timelines
+    Entry("q_events_transitions", (s, d) => EventOps.transitions(s, d), Oracle(TransitionsSql)),
+    // per-type daily z-scores from integer moments; |z| >= 2 flagged
+    Entry("q_events_anomaly", (s, d) => EventOps.dailyAnomalies(s, d), Oracle(
+      // integer moments (D days, S = Σn, Q = Σn²) per type; z is ONE shared
+      // double expression over them — identical operand order both engines
+      """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |m AS (
+        |  SELECT event_type, count(*) AS d, sum(n) AS s, sum(n * n) AS q
+        |  FROM daily GROUP BY 1)
+        |SELECT event_type, day, n,
+        |       round(CAST(d * n - s AS DOUBLE) /
+        |             sqrt(CAST(d AS DOUBLE) * CAST(d * q - s * s AS DOUBLE) /
+        |                  CAST(d - 1 AS DOUBLE)), 6) AS z,
+        |       CAST(abs(round(CAST(d * n - s AS DOUBLE) /
+        |             sqrt(CAST(d AS DOUBLE) * CAST(d * q - s * s AS DOUBLE) /
+        |                  CAST(d - 1 AS DOUBLE)), 6)) >= 2.0 AS BIGINT) AS is_anomaly
+        |FROM daily JOIN m USING (event_type)
+        |WHERE d > 1 AND d * q - s * s > 0
+        |ORDER BY event_type ASC, day ASC""".stripMargin)),
+    // synchronous label propagation communities (rows-only: iterative)
+    Entry("q_link_communities", (s, d) => LinkOps.labelPropagation(s, d), Oracle(
+      // synchronous LPA unrolled 5 rounds — all-integer trajectory, exact;
+      // early-stop ≡ full budget by idempotence (law-pinned), so the
+      // engine's convergence stop faces the full-budget oracle
+      lpaOracleSql())),
+    // least-central-to-own-label vectors: the pre-training outlier sweep
+    Entry("q_vec_outliers", (s, d) => KnnOps.outliers(s, d), Oracle(
+      // centroid micro-rounded BEFORE the cosine in both engines — the
+      // unrounded mean is a row-order-dependent double sum
       """WITH e AS (
         |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |c AS (
@@ -3453,196 +3731,217 @@ object SparkEntry {
         |       round(list_cosine_similarity(e.v, c.centroid), 6) AS centrality
         |FROM e JOIN c ON e.label = c.label
         |ORDER BY centrality ASC, vec_id ASC
-        |LIMIT 20""".stripMargin,
-    "q_vec_quantize" ->
-      """WITH q AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-        |         127.0 / greatest(list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x))), 1e-12) AS s
-        |  FROM embeddings)
-        |SELECT vec_id,
-        |       round(s, 6) AS scale_r,
-        |       CAST(list_min(list_transform(v, x -> round(x * s))) AS BIGINT) AS qmin,
-        |       CAST(list_max(list_transform(v, x -> round(x * s))) AS BIGINT) AS qmax,
-        |       round(sqrt(list_sum(list_transform(v,
-        |         x -> (x - round(x * s) / s) * (x - round(x * s) / s)))), 6) AS recon_err
-        |FROM q ORDER BY vec_id ASC""".stripMargin,
-    "q_cosine_pair" ->
-      """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS score
-        |FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
-        |ORDER BY a_id ASC""".stripMargin,
-    "q_json_tree" -> JsonTreeOracle,
-    // the recursive Generator flattens the SAME payload to the SAME rows —
-    // one oracle serves both formulations
-    "q_json_tree_deep" -> JsonTreeOracle,
-    "q_rag_e2e" ->
-      s"""WITH scored AS (
-         |  SELECT e.vec_id,
-         |         round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-         |               CAST([${knnTextQueryVec().mkString(", ")}] AS DOUBLE[])), 6) AS score
-         |  FROM embeddings e),
-         |hits AS (
-         |  SELECT vec_id, score,
-         |         row_number() OVER (ORDER BY score DESC, vec_id ASC) AS rank
-         |  FROM scored ORDER BY score DESC, vec_id ASC LIMIT 3),
-         |payload AS (
-         |  SELECT h.rank, d.source, d.doc_id, substr(d.text, 1, 40) AS snip
-         |  FROM hits h JOIN documents d ON h.vec_id = d.doc_id)
-         |SELECT '$KnnTextQuery' AS query,
-         |       substr('请按照"总结要点"进行总结,内容是：' || string_agg(snip, '' ORDER BY rank ASC), 1, 200) AS llm_prompt,
-         |       '参考链接：' || string_agg(chr(10) || chr(10) || source || '     ' || doc_id, '' ORDER BY rank ASC) AS citations
-         |FROM payload""".stripMargin,
-    "q_rag_e2e_vec" ->
-      """WITH scored AS (
-        |  SELECT e.vec_id,
-        |         round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])), 6) AS score
-        |  FROM embeddings e
-        |  CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-        |  WHERE e.vec_id <> 0),
-        |hits AS (
-        |  SELECT vec_id, score,
-        |         row_number() OVER (ORDER BY score DESC, vec_id ASC) AS rank
-        |  FROM scored ORDER BY score DESC, vec_id ASC LIMIT 3),
-        |payload AS (
-        |  SELECT h.rank, d.source, d.doc_id, substr(d.text, 1, 40) AS snip
-        |  FROM hits h JOIN documents d ON h.vec_id = d.doc_id)
-        |SELECT CAST(0 AS BIGINT) AS query_id,
-        |       substr('请按照"总结要点"进行总结,内容是：' || string_agg(snip, '' ORDER BY rank ASC), 1, 200) AS llm_prompt,
-        |       '参考链接：' || string_agg(chr(10) || chr(10) || source || '     ' || doc_id, '' ORDER BY rank ASC) AS citations
-        |FROM payload""".stripMargin,
-    "q_pipeline_e2e" ->
-      """WITH q AS (
-        |  SELECT doc_id, text,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |         CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct
-        |  FROM documents),
-        |filtered AS (
-        |  SELECT doc_id, text FROM q
-        |  WHERE n_tokens >= 30 AND CAST(n_distinct AS DOUBLE) / n_tokens >= 0.3),
-        |deduped AS (
-        |  SELECT doc_id, text FROM (
-        |    SELECT doc_id, text,
-        |           row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id ASC) AS rn
-        |    FROM filtered)
-        |  WHERE rn = 1),
-        |chunked AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-        |         substr(text, CAST(i * 150 + 1 AS INT), 200) AS chunk
-        |  FROM (SELECT doc_id, text,
-        |               unnest(range(0, greatest(1, CAST(ceil((length(text) - 200) / 150.0) + 1 AS BIGINT)))) AS i
-        |        FROM deduped)),
-        |assigned AS (
-        |  SELECT doc_id, chunk,
-        |         CASE WHEN (doc_id * 2246822519 + chunk_idx * 40503) % 1000 < 800 THEN 'train'
-        |              WHEN (doc_id * 2246822519 + chunk_idx * 40503) % 1000 < 900 THEN 'valid'
-        |              ELSE 'test' END AS split
-        |  FROM chunked)
-        |SELECT split, count(*) AS n_chunks,
-        |       CAST(sum(len(string_split(chunk, ' '))) AS BIGINT) AS n_tokens,
-        |       count(DISTINCT doc_id) AS n_docs
-        |FROM assigned GROUP BY split ORDER BY split ASC""".stripMargin,
-    "q_chunk_split" ->
-      """WITH c AS (
-        |  SELECT doc_id, text,
-        |         greatest(1, CAST(ceil((length(text) - 200) / 150.0) + 1 AS BIGINT)) AS n
-        |  FROM documents)
-        |SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
-        |       substr(text, CAST(i * 150 + 1 AS INT), 200) AS chunk,
-        |       CAST(length(substr(text, CAST(i * 150 + 1 AS INT), 200)) AS BIGINT) AS chunk_len
-        |FROM (SELECT doc_id, text, unnest(range(0, n)) AS i FROM c)
-        |ORDER BY doc_id ASC, chunk_idx ASC""".stripMargin,
-    "q_ingest_e2e" ->
-      """WITH v AS (
-        |  SELECT 'https://corpus.local/' || source || '/' || doc_id AS url, doc_id, text,
-        |         CAST(1 AS BIGINT) AS version
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'https://corpus.local/' || source || '/' || doc_id, doc_id, text || ' refreshed', 2
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |c AS (
-        |  SELECT url, doc_id, version,
-        |         substr(regexp_replace(text, ' +', ' ', 'g'), 1, 6000) AS body
-        |  FROM v),
-        |u AS (
-        |  SELECT *, row_number() OVER (PARTITION BY url ORDER BY version DESC) AS rn FROM c)
-        |SELECT url, doc_id, version, CAST(length(body) AS BIGINT) AS body_len, md5(body) AS fp
-        |FROM u WHERE rn = 1
-        |ORDER BY url ASC""".stripMargin,
-    "q_html_extract" ->
-      """SELECT doc_id,
-        |       regexp_extract('<html><body><div class="J-markdown-box">' || substr(text, 1, 80) || '</div></body></html>',
-        |                      '(?s)<div class="J-markdown-box">(.*?)</div>', 1) AS body
-        |FROM documents ORDER BY doc_id ASC""".stripMargin,
-    // main-content extraction: the same planted page, the same two
-    // closed-form gates (word floor + 20% link-density cross-mult)
-    "q_html_main" ->
-      (s"""WITH ${htmlMainCtes("documents")}
-          |SELECT doc_id, CAST(len(blocks) AS BIGINT) AS n_blocks,
-          |       CAST(len(kept) AS BIGINT) AS n_kept,
-          |       CAST(length(main_text) AS BIGINT) AS main_chars,
-          |       CAST(len(list_filter(string_split(main_text, ' '),
-          |         t -> t = 'the' OR t = 'a')) AS BIGINT) AS stop_words,
-          |       main_text
-          |FROM mt ORDER BY doc_id ASC""".stripMargin),
-    // the ingest chain with block-scored extraction where the reference
-    // pulls one container: versions -> pages -> main text -> collapse +
-    // truncate -> last-writer-wins -> fingerprint
-    "q_ingest_e2e_main" ->
-      (s"""WITH v AS (
-          |  SELECT 'https://corpus.local/' || source || '/' || doc_id AS url, doc_id, text,
-          |         CAST(1 AS BIGINT) AS version
-          |  FROM documents
-          |  UNION ALL
-          |  SELECT 'https://corpus.local/' || source || '/' || doc_id, doc_id, text || ' refreshed', 2
-          |  FROM documents WHERE doc_id % 5 = 0),
-          |${htmlMainCtes("v")},
-          |c AS (
-          |  SELECT url, doc_id, version, CAST(len(kept) AS BIGINT) AS n_kept,
-          |         substr(regexp_replace(main_text, ' +', ' ', 'g'), 1, 6000) AS body
-          |  FROM mt),
-          |u AS (
-          |  SELECT *, row_number() OVER (PARTITION BY url ORDER BY version DESC) AS rn FROM c)
-          |SELECT url, doc_id, version, n_kept,
-          |       CAST(length(body) AS BIGINT) AS body_len, md5(body) AS fp
-          |FROM u WHERE rn = 1
-          |ORDER BY url ASC""".stripMargin),
-    // ---- text analysis ----
-    "q_text_lang" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_intersect(list_distinct(string_split(text, ' ')), ['table','scan','join','query','index'])) AS BIGINT) AS s_rel,
-        |    CAST(len(list_intersect(list_distinct(string_split(text, ' ')), ['stream','batch','window','watermark'])) AS BIGINT) AS s_stream,
-        |    CAST(len(list_intersect(list_distinct(string_split(text, ' ')), ['vector','embedding','column','row'])) AS BIGINT) AS s_vec
-        |  FROM documents)
-        |SELECT doc_id, s_rel, s_stream, s_vec,
-        |       CASE WHEN s_rel >= s_stream AND s_rel >= s_vec THEN 'relational'
-        |            WHEN s_stream >= s_vec THEN 'streaming'
-        |            ELSE 'vector' END AS predicted
-        |FROM s ORDER BY doc_id ASC""".stripMargin,
-    "q_text_quality" ->
+        |LIMIT 20""".stripMargin)),
+    // window-granularity PMI (w=3): the word2vec counting pass
+    Entry("q_term_cooccur_win", (s, d) => TextAnalysisOps.termCooccurrenceWindow(s, d), Oracle(
+      // nested list comprehension mirrors the engine's bounded per-position
+      // fan-out; DuckDB range(a,b) is [a,b) so the inner bound carries +1
       """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct,
-        |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_alpha
-        |  FROM documents)
-        |SELECT doc_id, n_tokens, n_distinct, n_alpha,
-        |       round(CAST(n_distinct AS DOUBLE) / n_tokens, 6) AS distinct_ratio,
-        |       round(CAST(n_alpha AS DOUBLE) / n_tokens, 6) AS avg_word_len,
-        |       round(CAST(n_distinct AS DOUBLE) / n_tokens * 0.5 + least(1.0, CAST(n_tokens AS DOUBLE) / 100.0) * 0.5, 6) AS quality
-        |FROM t ORDER BY doc_id ASC""".stripMargin,
-    "q_term_heavyhitters" -> heavyHittersOracleSql,
-    "q_term_heavyhitters_stored" -> heavyHittersOracleSql,
-    // the full BPE chain replayed: unrolled training rounds to the
-    // vocabulary-derived merge bound, final forms = the encodes
-    "q_bpe_tokens" -> bpeOracleSql(),
-    "q_token_count" ->
-      """SELECT doc_id,
-        |       CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
-        |       CAST(len(regexp_extract_all(text, '[a-z]+')) AS BIGINT) AS alpha_runs,
-        |       n_chars
-        |FROM documents ORDER BY doc_id ASC""".stripMargin,
-    "q_lm_bigram" ->
+        |  SELECT string_split(text, ' ') AS w FROM documents
+        |  WHERE len(string_split(text, ' ')) >= 2),
+        |pairs AS (
+        |  SELECT unnest(flatten(list_transform(range(1, len(w)), i ->
+        |    list_transform(range(i + 1, least(i + 3, len(w)) + 1), j ->
+        |      [least(w[i], w[j]), greatest(w[i], w[j])])))) AS p
+        |  FROM t),
+        |cnt AS (
+        |  SELECT p[1] AS term_a, p[2] AS term_b, count(*) AS n_ab
+        |  FROM pairs GROUP BY 1, 2),
+        |uni AS (
+        |  SELECT x, count(*) AS c
+        |  FROM (SELECT unnest(string_split(text, ' ')) AS x FROM documents)
+        |  GROUP BY 1),
+        |tot AS (SELECT sum(c) AS tu FROM uni),
+        |tp AS (SELECT sum(n_ab) AS t_p FROM cnt)
+        |SELECT term_a, term_b, n_ab,
+        |       round(ln((CAST(n_ab AS DOUBLE) * CAST(tu AS DOUBLE) * CAST(tu AS DOUBLE)) /
+        |                (CAST(t_p AS DOUBLE) * CAST(ca.c AS DOUBLE) * CAST(cb.c AS DOUBLE))), 6) AS pmi
+        |FROM cnt CROSS JOIN tot CROSS JOIN tp
+        |JOIN uni ca ON cnt.term_a = ca.x
+        |JOIN uni cb ON cnt.term_b = cb.x
+        |ORDER BY n_ab DESC, term_a ASC, term_b ASC
+        |LIMIT 20""".stripMargin)),
+    // fraction of directed edges whose reverse exists (link-farm tell)
+    Entry("q_link_reciprocity", (s, d) => LinkOps.reciprocity(s, d), Oracle(
+      s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
+         |e AS (
+         |  SELECT DISTINCT d.doc_id AS src,
+         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
+         |  FROM documents d CROSS JOIN n CROSS JOIN ks
+         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id)
+         |SELECT CAST(count(*) AS BIGINT) AS n_edges,
+         |       CAST(sum(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_reciprocal,
+         |       round(CAST(sum(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) /
+         |             CAST(count(*) AS DOUBLE), 6) AS reciprocity
+         |FROM e LEFT JOIN (SELECT dst AS src, src AS dst FROM e) r
+         |  ON e.src = r.src AND e.dst = r.dst""".stripMargin)),
+    // the maintained form: boundary-state store, no event scan at ask time
+    Entry("q_events_transitions_stored", (s, d) => EventOps.transitionsStored(s, d), Oracle(
+      // the boundary-bridged fold equals the one-shot matrix exactly
+      TransitionsSql)),
+    // pairwise source-distribution JSD: the mixture-shift alarm
+    Entry("q_source_drift", (s, d) => TextAnalysisOps.sourceDrift(s, d), Oracle(
+      // per-term contribution nano-rounded BEFORE the sum (one shared
+      // double expression over integer counts) — order-free integer Σ
+      """WITH counts AS (
+        |  SELECT source, t, count(*) AS c
+        |  FROM (SELECT source, unnest(string_split(text, ' ')) AS t FROM documents)
+        |  GROUP BY 1, 2),
+        |tot AS (SELECT source, sum(c) AS n FROM counts GROUP BY 1),
+        |vocab AS (SELECT DISTINCT t FROM counts),
+        |dense AS (
+        |  SELECT s.source, v.t, coalesce(c.c, 0) AS c, s.n
+        |  FROM tot s CROSS JOIN vocab v
+        |  LEFT JOIN counts c ON c.source = s.source AND c.t = v.t),
+        |p AS (
+        |  SELECT a.source AS source_a, b.source AS source_b,
+        |         CAST(a.c AS DOUBLE) / CAST(a.n AS DOUBLE) AS pa,
+        |         CAST(b.c AS DOUBLE) / CAST(b.n AS DOUBLE) AS pb
+        |  FROM dense a JOIN dense b ON a.t = b.t AND a.source < b.source),
+        |q AS (SELECT source_a, source_b, pa, pb, (pa + pb) / 2.0 AS m FROM p),
+        |nano AS (
+        |  SELECT source_a, source_b,
+        |         CAST(floor(((CASE WHEN pa > 0 THEN pa * ln(pa / m) ELSE 0 END) * 0.5 +
+        |                     (CASE WHEN pb > 0 THEN pb * ln(pb / m) ELSE 0 END) * 0.5)
+        |                    * 1000000000.0 + 0.5) AS BIGINT) AS nn
+        |  FROM q)
+        |SELECT source_a, source_b,
+        |       round(CAST(sum(nn) AS DOUBLE) / 1000000000.0, 6) AS jsd
+        |FROM nano GROUP BY 1, 2
+        |ORDER BY source_a ASC, source_b ASC""".stripMargin)),
+    // pages cited together (A^T A off-diagonal): related-pages signal
+    Entry("q_link_cocitation", (s, d) => LinkOps.coCitation(s, d), Oracle(
+      s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
+         |e AS (
+         |  SELECT DISTINCT d.doc_id AS src,
+         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
+         |  FROM documents d CROSS JOIN n CROSS JOIN ks
+         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id)
+         |SELECT l.dst AS a, r.dst AS b, count(*) AS n_cocite
+         |FROM e l JOIN e r ON l.src = r.src AND l.dst < r.dst
+         |GROUP BY 1, 2
+         |ORDER BY n_cocite DESC, a ASC, b ASC
+         |LIMIT 20""".stripMargin)),
+    // DSIR importance-weighted selection (Xie et al. 2023): target-vs-raw
+    // n-gram LM log-ratio per doc, nano-unit exact → fully oracled.
+    // The DEFAULT chain targets the DERIVED language label as of r17 —
+    // no default consumes the fixture lang column (ground truth a crawl
+    // never has); the fixture-label originals live on as _goldlang
+    // continuity twins below
+    Entry("q_select_dsir", (s, d) => MlOps.dsirSelectLangId(s, d), Oracle(
+      // the q_select_dsir chain with the DERIVED label marking the target:
+      // lang-id CTEs supply the per-doc prediction, everything downstream
+      // (features, add-1 smoothing, nano-rounded log-ratio dot product,
+      // length-de-biased top-m) is the proven dsir arithmetic verbatim
+      dsirLangIdSql)),
+    // depth-limited multi-source BFS: min-hop crawl depth from the seeds
+    Entry("q_link_depth", (s, d) => LinkOps.bfsDepth(s, d), Oracle(
+      // BFS depth: recursive-CTE min-hop reference over the same edge hash
+      s"""WITH RECURSIVE n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
+         |e AS (
+         |  SELECT DISTINCT d.doc_id AS src,
+         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
+         |  FROM documents d CROSS JOIN n CROSS JOIN ks
+         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id),
+         |bfs(doc_id, depth) AS (
+         |  SELECT doc_id, 0 AS depth FROM documents WHERE doc_id % 100 = 0
+         |  UNION
+         |  SELECT e.dst, b.depth + 1 FROM bfs b JOIN e ON e.src = b.doc_id
+         |  WHERE b.depth < 3)
+         |SELECT CAST(doc_id AS BIGINT) AS doc_id,
+         |       CAST(min(depth) AS INT) AS depth
+         |FROM bfs GROUP BY doc_id ORDER BY doc_id ASC""".stripMargin)),
+    // Pearson matrix from exact integer-cent moments: one pass, 15 numbers
+    Entry("q_corr_matrix", (s, d) => RelOps.corrMatrix(s, d), Oracle(
+      // Pearson from exact integer-cent moments: r is ONE shared double
+      // expression over them with identical operand order in both engines
+      """WITH c AS (
+        |  SELECT CAST(round(l_discount * 100) AS BIGINT) AS d,
+        |         CAST(round(l_extendedprice * 100) AS BIGINT) AS e,
+        |         CAST(round(l_quantity * 100) AS BIGINT) AS q,
+        |         CAST(round(l_tax * 100) AS BIGINT) AS t
+        |  FROM lineitem),
+        |m AS (
+        |  SELECT CAST(count(*) AS DOUBLE) AS n,
+        |         CAST(sum(d) AS DOUBLE) AS sd, CAST(sum(e) AS DOUBLE) AS se,
+        |         CAST(sum(q) AS DOUBLE) AS sq, CAST(sum(t) AS DOUBLE) AS st,
+        |         CAST(sum(d*d) AS DOUBLE) AS qd, CAST(sum(e*e) AS DOUBLE) AS qe,
+        |         CAST(sum(q*q) AS DOUBLE) AS qq, CAST(sum(t*t) AS DOUBLE) AS qt,
+        |         CAST(sum(d*e) AS DOUBLE) AS pde, CAST(sum(d*q) AS DOUBLE) AS pdq,
+        |         CAST(sum(d*t) AS DOUBLE) AS pdt, CAST(sum(e*q) AS DOUBLE) AS peq,
+        |         CAST(sum(e*t) AS DOUBLE) AS pet, CAST(sum(q*t) AS DOUBLE) AS pqt
+        |  FROM c)
+        |SELECT col_a, col_b, corr FROM (
+        |  SELECT 'l_discount' AS col_a, 'l_extendedprice' AS col_b,
+        |         round((n*pde - sd*se) / (sqrt(n*qd - sd*sd) * sqrt(n*qe - se*se)), 6) AS corr FROM m
+        |  UNION ALL
+        |  SELECT 'l_discount', 'l_quantity',
+        |         round((n*pdq - sd*sq) / (sqrt(n*qd - sd*sd) * sqrt(n*qq - sq*sq)), 6) FROM m
+        |  UNION ALL
+        |  SELECT 'l_discount', 'l_tax',
+        |         round((n*pdt - sd*st) / (sqrt(n*qd - sd*sd) * sqrt(n*qt - st*st)), 6) FROM m
+        |  UNION ALL
+        |  SELECT 'l_extendedprice', 'l_quantity',
+        |         round((n*peq - se*sq) / (sqrt(n*qe - se*se) * sqrt(n*qq - sq*sq)), 6) FROM m
+        |  UNION ALL
+        |  SELECT 'l_extendedprice', 'l_tax',
+        |         round((n*pet - se*st) / (sqrt(n*qe - se*se) * sqrt(n*qt - st*st)), 6) FROM m
+        |  UNION ALL
+        |  SELECT 'l_quantity', 'l_tax',
+        |         round((n*pqt - sq*st) / (sqrt(n*qq - sq*sq) * sqrt(n*qt - st*st)), 6) FROM m)
+        |ORDER BY col_a ASC, col_b ASC""".stripMargin)),
+    // the MAINTAINED model, trained AND asked on the derived label:
+    // integer count folds keep it bit-identical to the live selection
+    Entry("q_select_dsir_stored", (s, d) => MlOps.dsirSelectStoredLangId(s, d), Oracle(
+      // maintained derived-label model (r16): integer count folds keep the
+      // served selection bit-identical to the live derived-label chain —
+      // SAME oracle; the LAST ground-truth lang consumer (the stored
+      // model's training marker) is gone
+      dsirLangIdSql)),
+    Entry("q_link_coupling", (s, d) => LinkOps.coupling(s, d), Oracle(
+      s"""WITH n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
+         |ks AS (SELECT unnest([1, 2, 3, 4]) AS k),
+         |e AS (
+         |  SELECT DISTINCT d.doc_id AS src,
+         |         (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n AS dst
+         |  FROM documents d CROSS JOIN n CROSS JOIN ks
+         |  WHERE (d.doc_id * ${graft.operators.LinkOps.EdgeMult} + ks.k * ${graft.operators.LinkOps.EdgeStride}) % n.n <> d.doc_id),
+         |keep AS (SELECT dst FROM e GROUP BY dst HAVING count(*) <= 1000),
+         |p AS (SELECT e.src, e.dst FROM e JOIN keep ON e.dst = keep.dst)
+         |SELECT l.src AS a, r.src AS b, count(*) AS n_couple
+         |FROM p l JOIN p r ON l.dst = r.dst AND l.src < r.src
+         |GROUP BY 1, 2
+         |ORDER BY n_couple DESC, a ASC, b ASC
+         |LIMIT 20""".stripMargin)),
+    // farthest-first k-center coreset (Gonzalez 1985 / Sener & Savarese
+    // 2018): the DIVERSITY selection pass — FULLY oracled as of r16
+    // (micro-rounded distances replay as chained pick/fold CTE rounds,
+    // kcenterOracleSql); driver-reference + planted-cluster pins stay
+    Entry("q_select_kcenter", (s, d) => MlOps.kcenterSelect(s, d), Oracle(kcenterOracleSql())),
+    // SEMANTIC decontamination: max cosine vs a broadcast eval-suite row,
+    // folded map-side — catches paraphrase leakage n-grams can't
+    Entry("q_decontaminate_sem", (s, d) => KnnOps.semanticDecontaminate(s, d), Oracle(
+      """WITH ev AS (
+        |  SELECT CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE label = 0),
+        |c AS (
+        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
+        |  FROM embeddings WHERE label <> 0),
+        |m AS (
+        |  SELECT c.vec_id,
+        |         round(max(list_cosine_similarity(c.e, ev.e)), 6) AS max_eval_cos
+        |  FROM c CROSS JOIN ev GROUP BY c.vec_id)
+        |SELECT vec_id, max_eval_cos,
+        |       CAST(CASE WHEN max_eval_cos >= 0.45 THEN 1 ELSE 0 END AS BIGINT)
+        |         AS contaminated
+        |FROM m ORDER BY vec_id ASC""".stripMargin)),
+    // CCNet head/middle/tail: bigram-LM score split at EXACT tercile
+    // fences from the iterative histogram refinement
+    Entry("q_ppl_buckets", (s, d) => TextAnalysisOps.pplBuckets(s, d), Oracle(
+      // same LM CTEs as q_lm_bigram; fences = exact order statistics at
+      // ranks floor(p*(n-1)) — value-at-rank is tie-permutation invariant
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
         |big AS (
         |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
@@ -3654,53 +3953,34 @@ object SparkEntry {
         |  SELECT b.doc_id, CAST(bc.c2 AS DOUBLE) / lc.c1 AS p
         |  FROM big b JOIN bc USING (w1, w2) JOIN lc USING (w1)),
         |agg AS (
-        |  SELECT doc_id, count(*) AS n_bigrams,
+        |  SELECT doc_id,
         |         floor(CAST(sum(CAST(floor(p * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-        |               / count(*) + 0.5) / 1000000.0 AS avg_cond_p,
-        |         floor(min(p) * 1000000.0 + 0.5) / 1000000.0 AS min_cond_p
-        |  FROM per GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(coalesce(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |       CAST(coalesce(a.avg_cond_p, 0.0) AS DOUBLE) AS avg_cond_p,
-        |       CAST(coalesce(a.min_cond_p, 0.0) AS DOUBLE) AS min_cond_p
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id ASC""".stripMargin,
-    // the bounded maintained LM: counts from the doc_id%2=0 training
-    // sample only, top-512 prune with the (c2 desc, w1, w2) total-order
-    // tie-break, OOV transitions floored to p = 0 — every stage exact SQL
-    "q_lm_bigram_stored" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |big AS (
-        |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE len(t) >= 2)),
-        |strain AS (SELECT * FROM big WHERE doc_id % 2 = 0),
-        |lc AS (SELECT w1, count(*) AS c1 FROM strain GROUP BY w1),
-        |bc AS (SELECT w1, w2, count(*) AS c2 FROM strain GROUP BY w1, w2),
-        |pruned AS (
-        |  SELECT w1, w2, c2 FROM (
-        |    SELECT *, row_number() OVER (ORDER BY c2 DESC, w1 ASC, w2 ASC) AS rn
-        |    FROM bc)
-        |  WHERE rn <= 512),
-        |model AS (
-        |  SELECT p.w1, p.w2, CAST(p.c2 AS DOUBLE) / lc.c1 AS p
-        |  FROM pruned p JOIN lc USING (w1)),
-        |per AS (
-        |  SELECT b.doc_id, coalesce(m.p, 0.0) AS p
-        |  FROM big b LEFT JOIN model m USING (w1, w2)),
-        |agg AS (
-        |  SELECT doc_id, count(*) AS n_bigrams,
-        |         floor(CAST(sum(CAST(floor(p * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-        |               / count(*) + 0.5) / 1000000.0 AS avg_cond_p,
-        |         floor(min(p) * 1000000.0 + 0.5) / 1000000.0 AS min_cond_p
-        |  FROM per GROUP BY doc_id)
-        |SELECT d.doc_id, CAST(coalesce(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |       CAST(coalesce(a.avg_cond_p, 0.0) AS DOUBLE) AS avg_cond_p,
-        |       CAST(coalesce(a.min_cond_p, 0.0) AS DOUBLE) AS min_cond_p
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY d.doc_id ASC""".stripMargin,
-    // every ratio rule is an integer cross-multiplication — no division,
-    // no rounding site, boundary-exact in both engines by construction
-    "q_gopher_rules" ->
+        |               / count(*) + 0.5) / 1000000.0 AS avg_cond_p
+        |  FROM per GROUP BY doc_id),
+        |scored AS (
+        |  SELECT d.doc_id, CAST(coalesce(a.avg_cond_p, 0.0) AS DOUBLE) AS avg_cond_p
+        |  FROM documents d LEFT JOIN agg a USING (doc_id)),
+        |stats AS (SELECT CAST(count(*) AS BIGINT) AS n FROM scored),
+        |ranked AS (
+        |  SELECT avg_cond_p,
+        |         row_number() OVER (ORDER BY avg_cond_p) - 1 AS r FROM scored),
+        |f AS (
+        |  SELECT max(CASE WHEN r = CAST(floor((1.0 / 3.0) * (n - 1)) AS BIGINT)
+        |               THEN avg_cond_p END) AS f1,
+        |         max(CASE WHEN r = CAST(floor((2.0 / 3.0) * (n - 1)) AS BIGINT)
+        |               THEN avg_cond_p END) AS f2
+        |  FROM ranked CROSS JOIN stats)
+        |SELECT s.doc_id, s.avg_cond_p,
+        |       CASE WHEN s.avg_cond_p <= f.f1 THEN 'tail'
+        |            WHEN s.avg_cond_p <= f.f2 THEN 'middle'
+        |            ELSE 'head' END AS bucket
+        |FROM scored s CROSS JOIN f
+        |ORDER BY s.doc_id ASC""".stripMargin)),
+    // the published Gopher rule battery — every ratio threshold an
+    // integer cross-multiplication, boundary-exact in both engines
+    Entry("q_gopher_rules", (s, d) => TextAnalysisOps.gopherRules(s, d), Oracle(
+      // every ratio rule is an integer cross-multiplication — no division,
+      // no rounding site, boundary-exact in both engines by construction
       """WITH base AS (
         |  SELECT doc_id, text, string_split(text, ' ') AS t,
         |         string_split(text, chr(10)) AS ls
@@ -3740,11 +4020,17 @@ object SparkEntry {
         |       r_stopwords,
         |       r_word_count * r_word_len * r_symbol_ratio * r_bullet *
         |         r_ellipsis * r_alpha * r_stopwords AS keep
-        |FROM r ORDER BY doc_id ASC""".stripMargin,
-    // the ±1 matrix cell recomputed from the same integer lattice; the
-    // fold is an explicit left-to-right list_reduce so the double
-    // summation order matches Spark's aggregate exactly
-    "q_vec_project" ->
+        |FROM r ORDER BY doc_id ASC""".stripMargin)),
+    // the CCNet composition: rule gate AND LM head+middle buckets
+    Entry("q_curate_ccnet", (s, d) => TextAnalysisOps.curateCcnet(s, d), Oracle(
+      // the two gates' CTEs composed verbatim (thresholds 20/100000/1)
+      curateCcnetSql("documents"))),
+    // JL Rademacher projection from a shared integer-lattice matrix —
+    // map-side, matrix never materialized, one rounding site
+    Entry("q_vec_project", (s, d) => KnnOps.vecProject(s, d), Oracle(
+      // the ±1 matrix cell recomputed from the same integer lattice; the
+      // fold is an explicit left-to-right list_reduce so the double
+      // summation order matches Spark's aggregate exactly
       """WITH e AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |ks AS (SELECT unnest(range(0, 16)) AS k)
@@ -3756,552 +4042,64 @@ object SparkEntry {
         |             THEN 1.0 ELSE -1.0 END)),
         |         (a, b) -> a + b) / sqrt(16.0), 6) AS v
         |FROM e CROSS JOIN ks
-        |ORDER BY vec_id ASC, k ASC""".stripMargin,
-    // the two gates' CTEs composed verbatim (thresholds 20/100000/1)
-    "q_curate_ccnet" -> curateCcnetSql("documents"),
-    // the maintained-LM serve: same gates + fences, scores from the
-    // doc_id%2=0 sample-trained top-512 model with OOV floored to 0
-    "q_curate_ccnet_stored" ->
-      ("WITH " + curateCcnetStoredCtes("documents", "") + "\n" +
-        curateCcnetSelect("") + "\nORDER BY doc_id ASC"),
-    // char-trigram profile lang-id over the rendered-surface corpus —
-    // same literal model VALUES the Spark expression carries
-    "q_lang_id" ->
-      s"""WITH $langIdCtes
-         |SELECT doc_id, lang, predicted,
-         |  CAST(CASE WHEN predicted = lang THEN 1 ELSE 0 END AS INT) AS correct,
-         |  s_de, s_en, s_es, s_fr, s_zh
-         |FROM lpred
-         |ORDER BY doc_id ASC""".stripMargin,
-    // margin = best - second-best integer score (a CASE over the argmax);
-    // verdict fences it at the fixed integer minimum — boundary-exact
-    "q_lang_id_margin" ->
-      s"""WITH $langIdCtes,
-         |mg AS (
-         |  SELECT doc_id, lang, predicted,
-         |    greatest(s_de, s_en, s_es, s_fr, s_zh) -
-         |    CASE predicted
-         |      WHEN 'de' THEN greatest(s_en, s_es, s_fr, s_zh)
-         |      WHEN 'en' THEN greatest(s_de, s_es, s_fr, s_zh)
-         |      WHEN 'es' THEN greatest(s_de, s_en, s_fr, s_zh)
-         |      WHEN 'fr' THEN greatest(s_de, s_en, s_es, s_zh)
-         |      ELSE greatest(s_de, s_en, s_es, s_fr) END AS margin
-         |  FROM lpred)
-         |SELECT doc_id, lang, predicted, margin,
-         |  CASE WHEN margin >= ${LangIdOps.DefaultMinMargin} THEN predicted
-         |       ELSE 'unknown' END AS verdict
-         |FROM mg ORDER BY doc_id ASC""".stripMargin,
-    // script-block char counts + dominant script + Latin-purity gate;
-    // planted codepoints via chr() (the q_text_normalize convention)
-    "q_script_detect" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |         text ||
-        |         CASE WHEN doc_id % 6 = 0 THEN ' ' || chr(1087) || chr(1088) || chr(1080) || chr(1074) ELSE '' END ||
-        |         CASE WHEN doc_id % 7 = 0 THEN ' ' || chr(945) || chr(946) || chr(947) ELSE '' END ||
-        |         CASE WHEN doc_id % 10 = 0 THEN ' ' || chr(20013) || chr(25991) ELSE '' END ||
-        |         CASE WHEN doc_id % 11 = 0 THEN ' ' || chr(1606) || chr(1589) ELSE '' END ||
-        |         CASE WHEN doc_id % 13 = 0 THEN ' ' || regexp_replace(text, '[a-z]', chr(1103), 'g')
-        |                || ' ' || regexp_replace(text, '[a-z]', chr(1103), 'g') ELSE '' END AS t
-        |  FROM documents),
-        |m AS (
-        |  SELECT doc_id,
-        |         CAST(length(t) AS BIGINT) AS n_chars,
-        |         CAST(length(regexp_replace(t, '[^A-Za-z]', '', 'g')) AS BIGINT) AS n_latin,
-        |         CAST(length(regexp_replace(t, '[^\x{0400}-\x{04FF}]', '', 'g')) AS BIGINT) AS n_cyrillic,
-        |         CAST(length(regexp_replace(t, '[^\x{0370}-\x{03FF}]', '', 'g')) AS BIGINT) AS n_greek,
-        |         CAST(length(regexp_replace(t, '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS BIGINT) AS n_cjk,
-        |         CAST(length(regexp_replace(t, '[^\x{0600}-\x{06FF}]', '', 'g')) AS BIGINT) AS n_arabic
-        |  FROM p)
-        |SELECT doc_id, n_chars, n_latin, n_cyrillic, n_greek, n_cjk, n_arabic,
-        |       CASE WHEN n_latin >= n_cyrillic AND n_latin >= n_greek
-        |              AND n_latin >= n_cjk AND n_latin >= n_arabic THEN 'latin'
-        |            WHEN n_cyrillic >= n_greek AND n_cyrillic >= n_cjk
-        |              AND n_cyrillic >= n_arabic THEN 'cyrillic'
-        |            WHEN n_greek >= n_cjk AND n_greek >= n_arabic THEN 'greek'
-        |            WHEN n_cjk >= n_arabic THEN 'cjk'
-        |            ELSE 'arabic' END AS script,
-        |       CAST(CASE WHEN 20 * (n_cyrillic + n_greek + n_cjk + n_arabic) <= n_chars
-        |             THEN 1 ELSE 0 END AS BIGINT) AS r_latin
-        |FROM m ORDER BY doc_id ASC""".stripMargin,
-    // the confusion matrix of the derived label vs the fixture label
-    "q_lang_confusion" ->
-      s"""WITH $langIdCtes
-         |SELECT lang, predicted, CAST(count(*) AS BIGINT) AS n_docs
-         |FROM lpred GROUP BY lang, predicted
-         |ORDER BY lang ASC, predicted ASC""".stripMargin,
-    // Gopher repetition battery: planted line structure, integer char
-    // counts, 20% cross-multiplied gates — all closed-form
-    "q_gopher_repetition" ->
+        |ORDER BY vec_id ASC, k ASC""".stripMargin)),
+    // two-phase projected knn: coarse scan over the stored JL space,
+    // full-precision rescore; rows-only (approximate by construction)
+    Entry("q_knn_projected", (s, d) => KnnOps.topKProjectedProbe(s, d),
+      RowsOnly("approximate: coarse scan in a JL-projected space")),
+    // keep the BEST copy per near-dup cluster, not the first: one
+    // component-keyed order-free argmax on top of the CC resolution
+    Entry("q_dedup_keepbest", (s, d) => DedupOps.dedupKeepBest(s, d), Oracle(
+      // the CC closure composed with the q_text_quality composite; both
+      // engines rank on the ROUNDED quality, doc_id breaks ties
+      KeepBestOracle)),
+    // the MAINTAINED closure: component store built create(evens) +
+    // incremental refresh(odds), keep-best served as one store read +
+    // argmax — same oracle as the live twin (the fold is exact)
+    Entry("q_dedup_keepbest_stored", (s, d) => DedupOps.keepBestStoredFixture(s, d), Oracle(
+      // the stored twin faces the SAME oracle: create(evens) + incremental
+      // refresh(odds) is an exact fold, not an approximation
+      KeepBestOracle)),
+    // the closure served from the maintained component store (one
+    // bucketed read; same recursive-CTE oracle — the fold is exact)
+    Entry("q_dedup_cc_stored", (s, d) => DedupOps.connectedStoredFixture(s, d), Oracle(
+      // the stored twin faces the SAME recursive-CTE oracle: the
+      // incremental merge fold is exact
+      ConnectedOracle)),
+    // the maintained loop end to end: IVF collection built from the OLD
+    // snapshot, the delta's added/changed re-embedded + upserted and its
+    // removals retired — rows-only (k-means cells + hash embedder are
+    // engine-native); streaming twin ≡ batch apply pinned in tests
+    Entry("q_crawl_maintain", (s, d) => FrontierOps.crawlMaintainFixture(s, d),
+      RowsOnly("k-means cells and hash embedder are engine-native")),
+    // PII redaction: emails/IPv4/phones → typed placeholders + counts,
+    // deterministically PLANTED into the fixture corpus (no organic PII
+    // in word soup); one map-side projection, three codegen'd regexes
+    Entry("q_pii_redact", (s, d) => TextOps.piiRedact(s, d), Oracle(
+      // identical pattern literals and the SAME staged replacement order
+      // (email → ip → phone) on both engines: counts are taken on the text
+      // AFTER the earlier stages so count ≡ what the replace actually hit
       """WITH c AS (
         |  SELECT doc_id,
         |         text ||
-        |         CASE WHEN doc_id % 6 = 0
-        |              THEN chr(10) || substr(text, 1, 40) || chr(10) || substr(text, 1, 40)
-        |              ELSE '' END ||
-        |         CASE WHEN doc_id % 8 = 0 AND doc_id % 6 <> 0
-        |              THEN chr(10) || substr(text, 1, 40) ELSE '' END AS t
+        |         CASE WHEN doc_id % 7 = 0 THEN ' contact u' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END ||
+        |         CASE WHEN doc_id % 11 = 0 THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.' || CAST(doc_id % 100 AS VARCHAR) ELSE '' END ||
+        |         CASE WHEN doc_id % 13 = 0 THEN ' call +1 555 ' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END AS t
         |  FROM documents),
-        |m AS (
-        |  SELECT doc_id, t,
-        |         CAST(len(string_split(t, chr(10))) AS BIGINT) AS n_lines,
-        |         CAST(list_sum(list_transform(string_split(t, chr(10)),
-        |           l -> length(l))) AS BIGINT) AS line_chars,
-        |         CAST(list_sum(list_transform(string_split(t, chr(10)),
-        |           l -> length(l))) AS BIGINT)
-        |           - CAST(list_sum(list_transform(list_distinct(string_split(t, chr(10))),
-        |               l -> length(l))) AS BIGINT) AS dup_line_chars
-        |  FROM c),
-        |bg AS (
-        |  SELECT doc_id, w[i] || ' ' || w[i + 1] AS b
-        |  FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
-        |        FROM (SELECT doc_id, string_split_regex(t, '[ \n]') AS w FROM c)
-        |        WHERE len(w) >= 2)),
-        |t2 AS (
-        |  SELECT doc_id, max(cnt * length(b)) AS top2_chars
-        |  FROM (SELECT doc_id, b, count(*) AS cnt FROM bg GROUP BY doc_id, b)
-        |  GROUP BY doc_id)
-        |SELECT m.doc_id, m.n_lines, m.line_chars, m.dup_line_chars,
-        |       CAST(coalesce(t2.top2_chars, 0) AS BIGINT) AS top2_chars,
-        |       CAST(CASE WHEN 5 * m.dup_line_chars <= m.line_chars THEN 1 ELSE 0 END AS BIGINT) AS r_dup_line,
-        |       CAST(CASE WHEN 5 * coalesce(t2.top2_chars, 0) <= m.line_chars THEN 1 ELSE 0 END AS BIGINT) AS r_top2,
-        |       CAST(CASE WHEN 5 * m.dup_line_chars <= m.line_chars
-        |                  AND 5 * coalesce(t2.top2_chars, 0) <= m.line_chars
-        |             THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM m LEFT JOIN t2 USING (doc_id)
-        |ORDER BY m.doc_id ASC""".stripMargin,
-    // the COMPLETE A1.1 battery — generated per-n fragments, thirteen
-    // integer-ratio gates, planted both-sides structure
-    "q_gopher_repetition_full" -> gopherRepetitionFullSql,
-    // lang-id as the chain's FIRST gate: the CCNet battery (gates AND
-    // perplexity fences) computed over the derived-en subset only
-    "q_curate_e2e_lang" ->
-      (s"""WITH $langIdCtes,
-          |endocs AS (
-          |  SELECT d.doc_id, d.text
-          |  FROM documents d JOIN lpred p USING (doc_id)
-          |  WHERE p.predicted = 'en'),
-          |""".stripMargin + curateCcnetCtes("endocs", "") + "\n" +
-        curateCcnetSelect("") + "\nORDER BY doc_id ASC"),
-    // the confidence-banded gate: en verdict only — with predicted = 'en'
-    // the second-best score is the greatest of the non-en scores
-    "q_curate_e2e_verdict" ->
-      (s"""WITH $langIdCtes,
-          |endocs AS (
-          |  SELECT d.doc_id, d.text
-          |  FROM documents d JOIN lpred p USING (doc_id)
-          |  WHERE p.predicted = 'en'
-          |    AND p.s_en - greatest(p.s_de, p.s_es, p.s_fr, p.s_zh)
-          |        >= ${LangIdOps.DefaultMinMargin}),
-          |""".stripMargin + curateCcnetCtes("endocs", "") + "\n" +
-        curateCcnetSelect("") + "\nORDER BY doc_id ASC"),
-    // same LM CTEs as q_lm_bigram; fences = exact order statistics at
-    // ranks floor(p*(n-1)) — value-at-rank is tie-permutation invariant
-    "q_ppl_buckets" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |big AS (
-        |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE len(t) >= 2)),
-        |lc AS (SELECT w1, count(*) AS c1 FROM big GROUP BY w1),
-        |bc AS (SELECT w1, w2, count(*) AS c2 FROM big GROUP BY w1, w2),
-        |per AS (
-        |  SELECT b.doc_id, CAST(bc.c2 AS DOUBLE) / lc.c1 AS p
-        |  FROM big b JOIN bc USING (w1, w2) JOIN lc USING (w1)),
-        |agg AS (
-        |  SELECT doc_id,
-        |         floor(CAST(sum(CAST(floor(p * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-        |               / count(*) + 0.5) / 1000000.0 AS avg_cond_p
-        |  FROM per GROUP BY doc_id),
-        |scored AS (
-        |  SELECT d.doc_id, CAST(coalesce(a.avg_cond_p, 0.0) AS DOUBLE) AS avg_cond_p
-        |  FROM documents d LEFT JOIN agg a USING (doc_id)),
-        |stats AS (SELECT CAST(count(*) AS BIGINT) AS n FROM scored),
-        |ranked AS (
-        |  SELECT avg_cond_p,
-        |         row_number() OVER (ORDER BY avg_cond_p) - 1 AS r FROM scored),
-        |f AS (
-        |  SELECT max(CASE WHEN r = CAST(floor((1.0 / 3.0) * (n - 1)) AS BIGINT)
-        |               THEN avg_cond_p END) AS f1,
-        |         max(CASE WHEN r = CAST(floor((2.0 / 3.0) * (n - 1)) AS BIGINT)
-        |               THEN avg_cond_p END) AS f2
-        |  FROM ranked CROSS JOIN stats)
-        |SELECT s.doc_id, s.avg_cond_p,
-        |       CASE WHEN s.avg_cond_p <= f.f1 THEN 'tail'
-        |            WHEN s.avg_cond_p <= f.f2 THEN 'middle'
-        |            ELSE 'head' END AS bucket
-        |FROM scored s CROSS JOIN f
-        |ORDER BY s.doc_id ASC""".stripMargin,
-    // DSIR: per-feature ln-ratio nano-rounded BEFORE the per-doc sum —
-    // the same order-independent integer arithmetic as the Spark plan
-    // (the fixture-label continuity twin; the default is derived-label)
-    "q_select_dsir_goldlang" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
-        |occ AS (
-        |  SELECT doc_id, lang, unnest(t) AS f FROM toks
-        |  UNION ALL
-        |  SELECT doc_id, lang, t[i] || ' ' || t[i + 1] AS f
-        |  FROM (SELECT doc_id, lang, t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE len(t) >= 2)),
-        |pair AS (
-        |  SELECT doc_id, lang, f, count(*) AS c FROM occ GROUP BY doc_id, lang, f),
-        |model AS (
-        |  SELECT f, sum(CASE WHEN lang = 'en' THEN c ELSE 0 END) AS ct,
-        |         sum(c) AS cr
-        |  FROM pair GROUP BY f),
-        |s AS (SELECT sum(ct) AS tt, sum(cr) AS tr, count(*) AS v FROM model),
-        |lnr AS (
-        |  SELECT f, CAST(floor(ln(
-        |      ((ct + 1.0) / CAST(tt + v AS DOUBLE)) /
-        |      ((cr + 1.0) / CAST(tr + v AS DOUBLE))) * 1000000000.0 + 0.5)
-        |    AS BIGINT) AS w
-        |  FROM model CROSS JOIN s),
-        |per AS (
-        |  SELECT doc_id, sum(c * w) AS lw_nano, sum(c) AS n_feat
-        |  FROM pair JOIN lnr USING (f) GROUP BY doc_id)
-        |SELECT d.doc_id, d.lang, d.source, CAST(p.n_feat AS BIGINT) AS n_feat,
-        |       CAST(p.lw_nano AS BIGINT) AS lw_nano,
-        |       round(CAST(p.lw_nano AS DOUBLE) / 1000000000.0 / p.n_feat, 6)
-        |         AS lw_avg
-        |FROM per p JOIN documents d USING (doc_id)
-        |ORDER BY CAST(p.lw_nano AS DOUBLE) / p.n_feat DESC, d.doc_id ASC
-        |LIMIT 100""".stripMargin,
-    // the q_select_dsir chain with the DERIVED label marking the target:
-    // lang-id CTEs supply the per-doc prediction, everything downstream
-    // (features, add-1 smoothing, nano-rounded log-ratio dot product,
-    // length-de-biased top-m) is the proven dsir arithmetic verbatim
-    "q_select_dsir" -> dsirLangIdSql,
-    // maintained derived-label model (r16): integer count folds keep the
-    // served selection bit-identical to the live derived-label chain —
-    // SAME oracle; the LAST ground-truth lang consumer (the stored
-    // model's training marker) is gone
-    "q_select_dsir_stored" -> dsirLangIdSql,
-    // the full per-language CCNet: one suffixed copy of the proven chain
-    // per language over its derived-label shard, union'd with the tag
-    "q_curate_multilang" -> {
-      val ctes = LangIdOps.langs.map { l =>
-        s"""end_$l AS (
-           |  SELECT d.doc_id, d.text
-           |  FROM documents d JOIN lpred p USING (doc_id)
-           |  WHERE p.predicted = '$l'),
-           |${curateCcnetCtes(s"end_$l", s"_$l")}""".stripMargin
-      }.mkString(",\n")
-      val branches = LangIdOps.langs.map { l =>
-        s"SELECT '$l' AS lang, q.* FROM (\n${curateCcnetSelect(s"_$l")}) q"
-      }.mkString("\nUNION ALL\n")
-      s"""WITH $langIdCtes,
-         |$ctes
-         |$branches
-         |ORDER BY lang ASC, doc_id ASC""".stripMargin
-    },
-    // the composed en chain on the stored en model: train CTEs scoped to
-    // the predicted-en sample, everything else the proven chain
-    "q_curate_e2e_lang_stored" ->
-      (s"""WITH $langIdCtes,
-          |endocs AS (
-          |  SELECT d.doc_id, d.text
-          |  FROM documents d JOIN lpred p USING (doc_id)
-          |  WHERE p.predicted = 'en'),
-          |""".stripMargin + curateCcnetStoredCtes("endocs", "") + "\n" +
-        curateCcnetSelect("") + "\nORDER BY doc_id ASC"),
-    // the banded gate on the stored en model: the TRAIN rel stays the
-    // predicted-en sample, the scored corpus is the verdict subset
-    "q_curate_e2e_verdict_stored" ->
-      (s"""WITH $langIdCtes,
-          |entrain AS (
-          |  SELECT d.doc_id, d.text
-          |  FROM documents d JOIN lpred p USING (doc_id)
-          |  WHERE p.predicted = 'en'),
-          |vdocs AS (
-          |  SELECT d.doc_id, d.text
-          |  FROM documents d JOIN lpred p USING (doc_id)
-          |  WHERE p.predicted = 'en'
-          |    AND p.s_en - greatest(p.s_de, p.s_es, p.s_fr, p.s_zh)
-          |        >= ${LangIdOps.DefaultMinMargin}),
-          |""".stripMargin + curateCcnetStoredCtes("vdocs", "", "entrain") + "\n" +
-        curateCcnetSelect("") + "\nORDER BY doc_id ASC"),
-    // the per-language maintained-LM serve: each language's branch is
-    // the stored-CCNet chain trained on ITS doc_id%2=0 shard sample
-    "q_curate_multilang_stored" -> {
-      val ctes = LangIdOps.langs.map { l =>
-        s"""end_s$l AS (
-           |  SELECT d.doc_id, d.text
-           |  FROM documents d JOIN lpred p USING (doc_id)
-           |  WHERE p.predicted = '$l'),
-           |${curateCcnetStoredCtes(s"end_s$l", s"_s$l")}""".stripMargin
-      }.mkString(",\n")
-      val branches = LangIdOps.langs.map { l =>
-        s"SELECT '$l' AS lang, q.* FROM (\n${curateCcnetSelect(s"_s$l")}) q"
-      }.mkString("\nUNION ALL\n")
-      s"""WITH $langIdCtes,
-         |$ctes
-         |$branches
-         |ORDER BY lang ASC, doc_id ASC""".stripMargin
-    },
-    // maintained-model form: bit-identical (integer count folds) — SAME oracle
-    "q_select_dsir_stored_goldlang" ->
-      """WITH toks AS (
-        |  SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
-        |occ AS (
-        |  SELECT doc_id, lang, unnest(t) AS f FROM toks
-        |  UNION ALL
-        |  SELECT doc_id, lang, t[i] || ' ' || t[i + 1] AS f
-        |  FROM (SELECT doc_id, lang, t, unnest(range(1, len(t))) AS i
-        |        FROM toks WHERE len(t) >= 2)),
-        |pair AS (
-        |  SELECT doc_id, lang, f, count(*) AS c FROM occ GROUP BY doc_id, lang, f),
-        |model AS (
-        |  SELECT f, sum(CASE WHEN lang = 'en' THEN c ELSE 0 END) AS ct,
-        |         sum(c) AS cr
-        |  FROM pair GROUP BY f),
-        |s AS (SELECT sum(ct) AS tt, sum(cr) AS tr, count(*) AS v FROM model),
-        |lnr AS (
-        |  SELECT f, CAST(floor(ln(
-        |      ((ct + 1.0) / CAST(tt + v AS DOUBLE)) /
-        |      ((cr + 1.0) / CAST(tr + v AS DOUBLE))) * 1000000000.0 + 0.5)
-        |    AS BIGINT) AS w
-        |  FROM model CROSS JOIN s),
-        |per AS (
-        |  SELECT doc_id, sum(c * w) AS lw_nano, sum(c) AS n_feat
-        |  FROM pair JOIN lnr USING (f) GROUP BY doc_id)
-        |SELECT d.doc_id, d.lang, d.source, CAST(p.n_feat AS BIGINT) AS n_feat,
-        |       CAST(p.lw_nano AS BIGINT) AS lw_nano,
-        |       round(CAST(p.lw_nano AS DOUBLE) / 1000000000.0 / p.n_feat, 6)
-        |         AS lw_avg
-        |FROM per p JOIN documents d USING (doc_id)
-        |ORDER BY CAST(p.lw_nano AS DOUBLE) / p.n_feat DESC, d.doc_id ASC
-        |LIMIT 100""".stripMargin,
-    // ---- lexical / hybrid retrieval ----
-    "q_text_prf" -> prfOracleSql,
-    "q_text_bm25" ->
-      s"""WITH $bm25BaseCtes
-         |SELECT doc_id,
-         |       round($bm25ScoreExpr, 6) AS bm25
-         |FROM f CROSS JOIN s
-         |WHERE $bm25AnyHit > 0
-         |ORDER BY bm25 DESC, doc_id ASC
-         |LIMIT 20""".stripMargin,
-    // three literal single-query chains UNION ALL'd — per-query fp
-    // arithmetic identical to q_text_bm25's proven oracle
-    "q_text_bm25_batch" -> bm25BatchOracleSql(),
-    // engine output bit-identical to the stored batched path -> same SQL
-    "q_text_bm25_batch_indexed" -> bm25BatchOracleSql(),
-    // the stored-stats probe is bit-identical to the live two-scan path
-    // (exact-integer partials; see RetrievalOps.bm25TopKStored) — it
-    // faces the SAME oracle, which is the point: the persisted artifact
-    // must never drift from the definition
-    "q_text_bm25_stored" ->
-      s"""WITH $bm25BaseCtes
-         |SELECT doc_id,
-         |       round($bm25ScoreExpr, 6) AS bm25
-         |FROM f CROSS JOIN s
-         |WHERE $bm25AnyHit > 0
-         |ORDER BY bm25 DESC, doc_id ASC
-         |LIMIT 20""".stripMargin,
-    // the postings-index probe (zero corpus scans) is bit-identical to
-    // both paths above — same oracle again, same no-drift point
-    "q_text_bm25_indexed" ->
-      s"""WITH $bm25BaseCtes
-         |SELECT doc_id,
-         |       round($bm25ScoreExpr, 6) AS bm25
-         |FROM f CROSS JOIN s
-         |WHERE $bm25AnyHit > 0
-         |ORDER BY bm25 DESC, doc_id ASC
-         |LIMIT 20""".stripMargin,
-    // conjunctive mode: every term required, scores unchanged
-    "q_text_bm25_conj" ->
-      s"""WITH $bm25BaseCtes
-         |SELECT doc_id,
-         |       round($bm25ScoreExpr, 6) AS bm25
-         |FROM f CROSS JOIN s
-         |WHERE $bm25AllHit
-         |ORDER BY bm25 DESC, doc_id ASC
-         |LIMIT 20""".stripMargin,
-    // filtered lexical search: predicate restricts candidates only —
-    // statistics stay corpus-wide, so the score CTEs are unchanged
-    "q_text_bm25_filtered" ->
-      s"""WITH $bm25BaseCtes
-         |SELECT doc_id,
-         |       round($bm25ScoreExpr, 6) AS bm25
-         |FROM f CROSS JOIN s
-         |WHERE $bm25AnyHit > 0
-         |  AND doc_id IN (SELECT doc_id FROM documents WHERE source = 'src7')
-         |ORDER BY bm25 DESC, doc_id ASC
-         |LIMIT 20""".stripMargin,
-    "q_text_phrase" -> phraseOracleSql,
-    "q_text_phrase_filtered" -> phraseFilteredOracleSql,
-    "q_text_near" -> proximityOracleSql(2),
-    "q_text_near_indexed" -> proximityOracleSql(2),
-    "q_text_phrase_batch" -> phraseBatchOracleSql,
-    // the positional-index probe is bit-identical to the live scan —
-    // same oracle, same no-drift point as the bm25 indexed twins
-    "q_text_phrase_indexed" -> phraseOracleSql,
-    "q_hybrid_rrf" ->
-      s"""WITH $bm25BaseCtes,
-         |b AS (
-         |  SELECT doc_id, round($bm25ScoreExpr, 6) AS bm25
-         |  FROM f CROSS JOIN s
-         |  WHERE $bm25AnyHit > 0
-         |  ORDER BY bm25 DESC, doc_id ASC LIMIT 20),
-         |lex AS (
-         |  SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS lrank FROM b),
-         |vp AS (
-         |  SELECT vec_id,
-         |         round(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-         |               CAST([${knnTextQueryVec().mkString(", ")}] AS DOUBLE[])), 6) AS vscore
-         |  FROM embeddings
-         |  ORDER BY vscore DESC, vec_id ASC LIMIT 20),
-         |vec AS (
-         |  SELECT vec_id, row_number() OVER (ORDER BY vscore DESC, vec_id ASC) AS vrank FROM vp)
-         |SELECT COALESCE(l.doc_id, v.vec_id) AS doc_id,
-         |       CAST(COALESCE(l.lrank, 0) AS BIGINT) AS lex_rank,
-         |       CAST(COALESCE(v.vrank, 0) AS BIGINT) AS vec_rank,
-         |       round(COALESCE(1.0 / (60.0 + l.lrank), 0.0) + COALESCE(1.0 / (60.0 + v.vrank), 0.0), 6) AS rrf
-         |FROM lex l FULL OUTER JOIN vec v ON l.doc_id = v.vec_id
-         |ORDER BY rrf DESC, doc_id ASC
-         |LIMIT 10""".stripMargin,
-    "q_tfidf_topterms" ->
-      """WITH tf AS (
-        |  SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-        |  GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
-        |s AS (
-        |  SELECT doc_id, term, round(tf * ln(n / df), 6) AS tfidf
-        |  FROM tf JOIN df USING (term) CROSS JOIN n),
-        |r AS (
-        |  SELECT doc_id, term, tfidf,
-        |         row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rk
-        |  FROM s)
-        |SELECT doc_id, CAST(rk AS BIGINT) AS rk, term, tfidf
-        |FROM r WHERE rk <= 3
-        |ORDER BY doc_id ASC, rk ASC""".stripMargin,
-    // the postings-served tf-idf is bit-identical to the live path —
-    // same oracle, same no-drift point as the bm25 index family
-    "q_tfidf_indexed" ->
-      """WITH tf AS (
-        |  SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents)
-        |  GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term),
-        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
-        |s AS (
-        |  SELECT doc_id, term, round(tf * ln(n / df), 6) AS tfidf
-        |  FROM tf JOIN df USING (term) CROSS JOIN n),
-        |r AS (
-        |  SELECT doc_id, term, tfidf,
-        |         row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rk
-        |  FROM s)
-        |SELECT doc_id, CAST(rk AS BIGINT) AS rk, term, tfidf
-        |FROM r WHERE rk <= 3
-        |ORDER BY doc_id ASC, rk ASC""".stripMargin,
-    // brute-force levenshtein over the whole vocabulary — the engine's
-    // deletion-neighborhood join must find exactly the same matches;
-    // the query-term VALUES literal is built from the ONE Scala list
-    "q_text_fuzzy" ->
-      s"""WITH v AS (
-         |  SELECT term, count(*) AS n_occur
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
-         |  WHERE len(term) > 0
-         |  GROUP BY 1),
-         |q(q_term) AS (VALUES ${graft.operators.RetrievalOps.FuzzyQueryTerms
-              .map(t => s"('$t')").mkString(", ")})
-         |SELECT q_term, term, n_occur
-         |FROM q JOIN v ON levenshtein(q_term, term) <= 1
-         |ORDER BY q_term ASC, term ASC""".stripMargin,
-    "q_text_bigrams" ->
-      """SELECT bigram, count(*) AS n FROM (
-        |  SELECT unnest(list_transform(range(1, len(w)),
-        |                               i -> w[i] || ' ' || w[i + 1])) AS bigram
-        |  FROM (SELECT string_split(text, ' ') AS w FROM documents)
-        |  WHERE len(w) >= 2)
-        |GROUP BY bigram
-        |ORDER BY n DESC, bigram ASC
-        |LIMIT 20""".stripMargin,
-    // document-level PMI: integer counts throughout; the one double op
-    // (ln of an integer ratio, identical operand order) rounded at 6 —
-    // the BM25 cross-engine convention
-    "q_term_cooccur" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-        |  FROM documents),
-        |dfreq AS (SELECT t, count(*) AS df FROM tok GROUP BY 1),
-        |keep AS (SELECT t, df FROM dfreq ORDER BY df DESC, t ASC LIMIT 64),
-        |pruned AS (SELECT tok.doc_id, tok.t, keep.df
-        |           FROM tok JOIN keep ON tok.t = keep.t),
-        |n AS (SELECT count(*) AS nd FROM documents),
-        |pairs AS (
-        |  SELECT a.t AS term_a, b.t AS term_b, a.df AS df_a, b.df AS df_b,
-        |         count(*) AS n_ab
-        |  FROM pruned a JOIN pruned b
-        |    ON a.doc_id = b.doc_id AND a.t < b.t
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT term_a, term_b, n_ab,
-        |       round(ln((CAST(n_ab AS DOUBLE) * CAST(nd AS DOUBLE)) /
-        |                (CAST(df_a AS DOUBLE) * CAST(df_b AS DOUBLE))), 6) AS pmi
-        |FROM pairs CROSS JOIN n
-        |ORDER BY n_ab DESC, term_a ASC, term_b ASC
-        |LIMIT 20""".stripMargin,
-    // nested list comprehension mirrors the engine's bounded per-position
-    // fan-out; DuckDB range(a,b) is [a,b) so the inner bound carries +1
-    "q_term_cooccur_win" ->
-      """WITH t AS (
-        |  SELECT string_split(text, ' ') AS w FROM documents
-        |  WHERE len(string_split(text, ' ')) >= 2),
-        |pairs AS (
-        |  SELECT unnest(flatten(list_transform(range(1, len(w)), i ->
-        |    list_transform(range(i + 1, least(i + 3, len(w)) + 1), j ->
-        |      [least(w[i], w[j]), greatest(w[i], w[j])])))) AS p
-        |  FROM t),
-        |cnt AS (
-        |  SELECT p[1] AS term_a, p[2] AS term_b, count(*) AS n_ab
-        |  FROM pairs GROUP BY 1, 2),
-        |uni AS (
-        |  SELECT x, count(*) AS c
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS x FROM documents)
-        |  GROUP BY 1),
-        |tot AS (SELECT sum(c) AS tu FROM uni),
-        |tp AS (SELECT sum(n_ab) AS t_p FROM cnt)
-        |SELECT term_a, term_b, n_ab,
-        |       round(ln((CAST(n_ab AS DOUBLE) * CAST(tu AS DOUBLE) * CAST(tu AS DOUBLE)) /
-        |                (CAST(t_p AS DOUBLE) * CAST(ca.c AS DOUBLE) * CAST(cb.c AS DOUBLE))), 6) AS pmi
-        |FROM cnt CROSS JOIN tot CROSS JOIN tp
-        |JOIN uni ca ON cnt.term_a = ca.x
-        |JOIN uni cb ON cnt.term_b = cb.x
-        |ORDER BY n_ab DESC, term_a ASC, term_b ASC
-        |LIMIT 20""".stripMargin,
-    // per-term contribution nano-rounded BEFORE the sum (one shared
-    // double expression over integer counts) — order-free integer Σ
-    "q_source_drift" ->
-      """WITH counts AS (
-        |  SELECT source, t, count(*) AS c
-        |  FROM (SELECT source, unnest(string_split(text, ' ')) AS t FROM documents)
-        |  GROUP BY 1, 2),
-        |tot AS (SELECT source, sum(c) AS n FROM counts GROUP BY 1),
-        |vocab AS (SELECT DISTINCT t FROM counts),
-        |dense AS (
-        |  SELECT s.source, v.t, coalesce(c.c, 0) AS c, s.n
-        |  FROM tot s CROSS JOIN vocab v
-        |  LEFT JOIN counts c ON c.source = s.source AND c.t = v.t),
-        |p AS (
-        |  SELECT a.source AS source_a, b.source AS source_b,
-        |         CAST(a.c AS DOUBLE) / CAST(a.n AS DOUBLE) AS pa,
-        |         CAST(b.c AS DOUBLE) / CAST(b.n AS DOUBLE) AS pb
-        |  FROM dense a JOIN dense b ON a.t = b.t AND a.source < b.source),
-        |q AS (SELECT source_a, source_b, pa, pb, (pa + pb) / 2.0 AS m FROM p),
-        |nano AS (
-        |  SELECT source_a, source_b,
-        |         CAST(floor(((CASE WHEN pa > 0 THEN pa * ln(pa / m) ELSE 0 END) * 0.5 +
-        |                     (CASE WHEN pb > 0 THEN pb * ln(pb / m) ELSE 0 END) * 0.5)
-        |                    * 1000000000.0 + 0.5) AS BIGINT) AS nn
-        |  FROM q)
-        |SELECT source_a, source_b,
-        |       round(CAST(sum(nn) AS DOUBLE) / 1000000000.0, 6) AS jsd
-        |FROM nano GROUP BY 1, 2
-        |ORDER BY source_a ASC, source_b ASC""".stripMargin,
-    "q_text_redact" ->
+        |s1 AS (SELECT doc_id, t,
+        |              regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t1
+        |       FROM c),
+        |s2 AS (SELECT doc_id, t, t1,
+        |              regexp_replace(t1, '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g') AS t2
+        |       FROM s1)
+        |SELECT doc_id,
+        |       regexp_replace(t2, '\+\d{1,3}[ -]\d{3}[ -]\d{4}\b', '<PHONE>', 'g') AS redacted,
+        |       CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
+        |       CAST(len(regexp_extract_all(t1, '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS BIGINT) AS n_ips,
+        |       CAST(len(regexp_extract_all(t2, '\+\d{1,3}[ -]\d{3}[ -]\d{4}\b')) AS BIGINT) AS n_phones
+        |FROM s2
+        |ORDER BY doc_id ASC""".stripMargin)),
+    Entry("q_text_redact", (s, d) => TextAnalysisOps.redactPii(s, d), Oracle(
       """WITH pii AS (
         |  SELECT doc_id,
         |         text || ' contact user' || doc_id || '@example.com via +1-555-' ||
@@ -4322,483 +4120,49 @@ object SparkEntry {
         |SELECT doc_id, n_emails, n_ips,
         |       CAST(len(regexp_extract_all(t2, '\+?[0-9][0-9()\-. ]{6,}[0-9]')) AS BIGINT) AS n_phones,
         |       regexp_replace(t2, '\+?[0-9][0-9()\-. ]{6,}[0-9]', '<PHONE>', 'g') AS redacted
-        |FROM s2 ORDER BY doc_id ASC""".stripMargin,
-    "q_text_repetition" ->
-      """WITH b AS (
-        |  SELECT doc_id, CAST(len(w) - 1 AS BIGINT) AS n_bigrams,
-        |         unnest(list_transform(range(1, len(w)),
-        |                               i -> w[i] || chr(30) || w[i + 1])) AS bg
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-        |  WHERE len(w) >= 2
-        |), c AS (
-        |  SELECT doc_id, n_bigrams, bg, count(*) AS c FROM b GROUP BY 1, 2, 3
-        |)
-        |SELECT doc_id, n_bigrams, max(c) AS top_bigram_n,
-        |       round(CAST(max(c) AS DOUBLE) / n_bigrams, 6) AS top_bigram_frac
-        |FROM c GROUP BY doc_id, n_bigrams
-        |ORDER BY doc_id ASC""".stripMargin,
-    "q_doc_fingerprint" ->
-      """SELECT doc_id, md5(text) AS fp,
-        |       CAST(ascii(substr(md5(text), 1, 1)) % 16 AS BIGINT) AS shard
-        |FROM documents ORDER BY doc_id ASC""".stripMargin,
-    "q_split_leakage" ->
-      """WITH r AS (SELECT md5(text) AS h, min(doc_id) AS rep
-        |           FROM documents GROUP BY md5(text))
-        |SELECT d.doc_id, r.rep, (r.rep * 3266489917) % 1000 AS bucket,
-        |       CASE WHEN (r.rep * 3266489917) % 1000 < 800 THEN 'train'
-        |            WHEN (r.rep * 3266489917) % 1000 < 900 THEN 'valid'
-        |            ELSE 'test' END AS split
-        |FROM documents d JOIN r ON md5(d.text) = r.h
-        |ORDER BY d.doc_id ASC""".stripMargin,
-    "q_sample_split" ->
-      """SELECT doc_id, (doc_id * 3266489917) % 1000 AS bucket,
-        |       CASE WHEN (doc_id * 3266489917) % 1000 < 800 THEN 'train'
-        |            WHEN (doc_id * 3266489917) % 1000 < 900 THEN 'valid'
-        |            ELSE 'test' END AS split
-        |FROM documents ORDER BY doc_id ASC""".stripMargin,
-    "q_decontaminate" ->
-      """WITH tok AS (
-        |  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-        |ng AS (
-        |  SELECT doc_id, source,
-        |         unnest(list_distinct(list_transform(range(1, len(t) - 2),
-        |           i -> list_aggregate(t[i:i+3], 'string_agg', ' ')))) AS g
-        |  FROM tok),
-        |eval AS (SELECT DISTINCT g FROM ng WHERE source = 'src19'),
-        |hits AS (
-        |  SELECT ng.doc_id, CAST(count(*) AS BIGINT) AS shared_ngrams
-        |  FROM ng JOIN eval USING (g) WHERE ng.source <> 'src19'
-        |  GROUP BY ng.doc_id)
-        |SELECT d.doc_id, d.source,
-        |       coalesce(h.shared_ngrams, 0) AS shared_ngrams,
-        |       CAST(coalesce(h.shared_ngrams, 0) > 0 AS BIGINT) AS contaminated
-        |FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-        |WHERE d.source <> 'src19'
-        |ORDER BY d.doc_id ASC""".stripMargin,
-    "q_decontaminate_sem" ->
-      """WITH ev AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE label = 0),
-        |c AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-        |  FROM embeddings WHERE label <> 0),
-        |m AS (
-        |  SELECT c.vec_id,
-        |         round(max(list_cosine_similarity(c.e, ev.e)), 6) AS max_eval_cos
-        |  FROM c CROSS JOIN ev GROUP BY c.vec_id)
-        |SELECT vec_id, max_eval_cos,
-        |       CAST(CASE WHEN max_eval_cos >= 0.45 THEN 1 ELSE 0 END AS BIGINT)
-        |         AS contaminated
-        |FROM m ORDER BY vec_id ASC""".stripMargin,
-    "q_batch_by_length" ->
-      """WITH b AS (
-        |  SELECT doc_id, n_chars, n_chars // 200 AS lbucket,
-        |         (doc_id * 2654435761) % 4 AS sub,
-        |         CAST((row_number() OVER (PARTITION BY n_chars // 200,
-        |                                               (doc_id * 2654435761) % 4
-        |                                  ORDER BY n_chars ASC, doc_id ASC) - 1)
-        |              // 16 AS BIGINT) AS batch
-        |  FROM documents)
-        |SELECT doc_id, lbucket, sub, batch, n_chars,
-        |       max(n_chars) OVER (PARTITION BY lbucket, sub, batch) AS batch_max,
-        |       max(n_chars) OVER (PARTITION BY lbucket, sub, batch) - n_chars AS pad_chars
-        |FROM b ORDER BY doc_id ASC""".stripMargin,
-    "q_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, doc_id // 128 AS shard,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, shard, n_tok,
-        |         CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-        |  FROM t)
-        |SELECT doc_id, shard, n_tok, cum_before,
-        |       CAST(shard * 4294967296 + cum_before // 512 AS BIGINT) AS seq_id
-        |FROM c ORDER BY doc_id ASC""".stripMargin,
-    // hash-shard mirror: the last md5 nibble is the shard in both
-    // engines; balance share is integer ppm against the heaviest shard
-    "q_shard_assign" ->
-      """WITH a AS (
-        |  SELECT doc_id, n_chars,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-        |         CAST(instr('0123456789abcdef',
-        |           substr(md5(CAST(doc_id AS VARCHAR)), 32, 1)) - 1 AS BIGINT)
-        |           AS shard
-        |  FROM documents),
-        |g AS (
-        |  SELECT shard, count(*) AS n_docs, sum(n_tok) AS n_tokens,
-        |         sum(n_chars) AS n_bytes, min(doc_id) AS min_doc
-        |  FROM a GROUP BY shard)
-        |SELECT shard, CAST(n_docs AS BIGINT) AS n_docs,
-        |       CAST(n_tokens AS BIGINT) AS n_tokens,
-        |       CAST(n_bytes AS BIGINT) AS n_bytes,
-        |       CAST(min_doc AS BIGINT) AS min_doc,
-        |       CAST((1000000 * n_tokens) // max(n_tokens) OVER () AS BIGINT)
-        |         AS share_ppm
-        |FROM g ORDER BY shard ASC""".stripMargin,
-    "q_domain_mix_temp" ->
-      """WITH cnt AS (SELECT source, CAST(count(*) AS BIGINT) AS n_s FROM documents GROUP BY source),
-        |tot AS (SELECT sum(sqrt(CAST(n_s AS DOUBLE))) AS z, CAST(sum(n_s) AS BIGINT) AS n FROM cnt),
-        |rate AS (
-        |  SELECT source,
-        |         floor(least(1.0, sqrt(CAST(n_s AS DOUBLE)) / tot.z * 0.5 * tot.n / n_s) * 1000000.0 + 0.5) / 1000000.0 AS keep
-        |  FROM cnt CROSS JOIN tot)
-        |SELECT d.doc_id, d.source, rate.keep
-        |FROM documents d JOIN rate USING (source)
-        |WHERE (d.doc_id * 2246822519) % 1000 < rate.keep * 1000
-        |ORDER BY d.doc_id ASC""".stripMargin,
-    "q_domain_mix" ->
-      """WITH w AS (
-        |  SELECT doc_id, source, (doc_id * 2654435761) % 1000 AS bucket,
-        |         CAST((coalesce(TRY_CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT), length(source)) % 4 + 1) * 0.25 AS DOUBLE) AS weight
-        |  FROM documents)
-        |SELECT doc_id, source, bucket, weight FROM w
-        |WHERE bucket < weight * 1000
-        |ORDER BY doc_id ASC""".stripMargin,
-    "q_curate_e2e" ->
-      """WITH gated AS (
-        |  SELECT doc_id, source, text,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM documents
-        |  WHERE source <> 'src19'
-        |    AND len(string_split(text, ' ')) >= 20
-        |    AND (doc_id * 2654435761) % 1000 <
-        |        (coalesce(TRY_CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT), length(source)) % 4 + 1) * 0.25 * 1000),
-        |ng AS (
-        |  SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(string_split(text, ' ')) - 2),
-        |           i -> list_aggregate(string_split(text, ' ')[i:i+3], 'string_agg', ' ')))) AS g
-        |  FROM gated),
-        |eng AS (
-        |  SELECT DISTINCT unnest(list_distinct(list_transform(range(1, len(string_split(text, ' ')) - 2),
-        |           i -> list_aggregate(string_split(text, ' ')[i:i+3], 'string_agg', ' ')))) AS g
-        |  FROM documents WHERE source = 'src19'),
-        |dirty AS (SELECT DISTINCT ng.doc_id FROM ng JOIN eng USING (g)),
-        |clean AS (
-        |  SELECT g.doc_id, g.source, g.n_tok, g.doc_id // 128 AS shard
-        |  FROM gated g LEFT JOIN dirty d ON g.doc_id = d.doc_id
-        |  WHERE d.doc_id IS NULL),
-        |packed AS (
-        |  SELECT doc_id, source, n_tok, shard,
-        |         CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-        |  FROM clean)
-        |SELECT doc_id, source, n_tok, CAST(shard * 4294967296 + cum_before // 512 AS BIGINT) AS seq_id
-        |FROM packed ORDER BY doc_id ASC""".stripMargin,
-    // C4's cleaning battery: planted pages, line retention, page flags
-    "q_c4_rules" ->
-      (s"""WITH $c4Ctes
-        |SELECT doc_id, n_lines,
-        |       CAST(len(kept) AS BIGINT) AS n_kept,
-        |       array_to_string(kept, chr(10)) AS kept_text,
-        |       CAST(CASE WHEN len(kept) >= 3 THEN 1 ELSE 0 END AS BIGINT) AS r_sentences,
-        |       CAST(CASE WHEN contains(t, 'badword1') OR contains(t, 'badword2')
-        |                   OR contains(t, 'badword3') THEN 0 ELSE 1 END AS BIGINT) AS r_badword,
-        |       CAST(CASE WHEN contains(t, 'lorem ipsum') THEN 0 ELSE 1 END AS BIGINT) AS r_lorem,
-        |       CAST(CASE WHEN contains(t, '{') THEN 0 ELSE 1 END AS BIGINT) AS r_brace,
-        |       CAST(CASE WHEN len(kept) >= 3 AND NOT ($c4PageDropSql)
-        |             THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM k ORDER BY doc_id ASC""".stripMargin),
-    // the curation chain with C4 cleaning first: the q_curate_e2e tail
-    // over the RETAINED text (eval n-grams stay raw — the benchmark
-    // split is the contamination source, never cleaned training data)
-    "q_curate_e2e_c4" ->
-      (s"""WITH $c4Ctes,
-        |cleaned AS (
-        |  SELECT doc_id, source, array_to_string(kept, ' ') AS text
-        |  FROM k
-        |  WHERE len(kept) >= 3 AND NOT ($c4PageDropSql)),
-        |gated AS (
-        |  SELECT doc_id, source, text,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-        |  FROM cleaned
-        |  WHERE source <> 'src19'
-        |    AND len(string_split(text, ' ')) >= 20
-        |    AND (doc_id * 2654435761) % 1000 <
-        |        (coalesce(TRY_CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT), length(source)) % 4 + 1) * 0.25 * 1000),
-        |ng AS (
-        |  SELECT doc_id,
-        |         unnest(list_distinct(list_transform(range(1, len(string_split(text, ' ')) - 2),
-        |           i -> list_aggregate(string_split(text, ' ')[i:i+3], 'string_agg', ' ')))) AS g
-        |  FROM gated),
-        |eng AS (
-        |  SELECT DISTINCT unnest(list_distinct(list_transform(range(1, len(string_split(text, ' ')) - 2),
-        |           i -> list_aggregate(string_split(text, ' ')[i:i+3], 'string_agg', ' ')))) AS g
-        |  FROM documents WHERE source = 'src19'),
-        |dirty AS (SELECT DISTINCT ng.doc_id FROM ng JOIN eng USING (g)),
-        |clean AS (
-        |  SELECT g.doc_id, g.source, g.n_tok, g.doc_id // 128 AS shard
-        |  FROM gated g LEFT JOIN dirty d ON g.doc_id = d.doc_id
-        |  WHERE d.doc_id IS NULL),
-        |packed AS (
-        |  SELECT doc_id, source, n_tok, shard,
-        |         CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-        |  FROM clean)
-        |SELECT doc_id, source, n_tok, CAST(shard * 4294967296 + cum_before // 512 AS BIGINT) AS seq_id
-        |FROM packed ORDER BY doc_id ASC""".stripMargin),
-    "q_doc_winnow" ->
-      """WITH h AS (
-        |  SELECT doc_id,
-        |         list_transform(range(1, length(text) - 4), i ->
-        |           ascii(substr(text, i,     1)) * CAST(1 AS BIGINT) +
-        |           ascii(substr(text, i + 1, 1)) * CAST(31 AS BIGINT) +
-        |           ascii(substr(text, i + 2, 1)) * CAST(961 AS BIGINT) +
-        |           ascii(substr(text, i + 3, 1)) * CAST(29791 AS BIGINT) +
-        |           ascii(substr(text, i + 4, 1)) * CAST(923521 AS BIGINT) +
-        |           ascii(substr(text, i + 5, 1)) * CAST(28629151 AS BIGINT)) AS hs
-        |  FROM documents WHERE length(text) >= 9),
-        |wn AS (
-        |  SELECT doc_id,
-        |         list_distinct(list_transform(range(1, len(hs) - 2), m ->
-        |           list_min(hs[m:m+3]))) AS fps
-        |  FROM h)
-        |SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fp,
-        |       list_min(fps) AS min_fp, list_max(fps) AS max_fp
-        |FROM wn ORDER BY doc_id ASC""".stripMargin,
-    "q_multimodal_meta" ->
-      """SELECT doc_id,
-        |       CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS byte_len,
-        |       sha256(text) AS content_sha,
-        |       substr(hex(CAST(text AS BLOB)), 1, 32) AS head_hex,
-        |       64 + CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) % 512 AS width,
-        |       64 + (CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) * 7) % 512 AS height,
-        |       1 + CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) % 16 AS n_frames
-        |FROM documents ORDER BY doc_id ASC""".stripMargin,
-    // ---- events (batch) ----
-    "q_events_distinct" ->
-      """SELECT date_trunc('day', ts) AS day, event_type,
-        |       count(DISTINCT user_id) AS n_users
-        |FROM events
-        |GROUP BY date_trunc('day', ts), event_type
-        |ORDER BY day ASC, event_type ASC""".stripMargin,
-    "q_quality_checks" ->
-      """WITH checks AS (
-        |SELECT 'accepted_o_orderstatus' AS chk,
-        |       sum(CASE WHEN o_orderstatus NOT IN ('F','O','P') THEN 1 ELSE 0 END) AS v,
-        |       count(*) AS t
-        |FROM orders
+        |FROM s2 ORDER BY doc_id ASC""".stripMargin), bench = false),
+    // sitemap ingestion: per-host XML bodies parsed (from_xml) into
+    // (url, lastmod), classified new/stale/fresh vs the corpus — the
+    // discovery half next to robots' admission half; the oracle computes
+    // the expected answer in closed form, so a mangled parse diverges
+    Entry("q_crawl_sitemap", (s, d) => FrontierOps.crawlSitemap(s, d), Oracle(
+      // closed-form expected answer (no XML on the oracle side): the
+      // engine must round-trip through real XML parsing and land exactly
+      // on this arithmetic
+      """WITH base AS (SELECT source AS host, doc_id, lang FROM documents),
+        |known AS (
+        |  SELECT host,
+        |         'https://' || host || '/' || lang || '/p' || CAST(doc_id AS VARCHAR) AS url,
+        |         '2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') AS lastmod,
+        |         CASE WHEN CAST('2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') AS DATE)
+        |                   > (DATE '2026-02-01' - CAST(doc_id % 30 AS INT))
+        |              THEN 'stale' ELSE 'fresh' END AS status
+        |  FROM base),
+        |disc AS (
+        |  SELECT host, 'https://' || host || '/disc/p' || CAST(doc_id AS VARCHAR) AS url,
+        |         '2026-01-15' AS lastmod, 'new' AS status
+        |  FROM base WHERE doc_id % 5 = 0)
+        |SELECT host, url, lastmod, status FROM known
         |UNION ALL
-        |SELECT 'fk_orders_customer',
-        |       sum(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END), count(*)
-        |FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-        |UNION ALL
-        |SELECT 'notnull_l_shipdate',
-        |       sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END), count(*)
-        |FROM lineitem
-        |UNION ALL
-        |SELECT 'range_l_discount',
-        |       sum(CASE WHEN l_discount < 0 OR l_discount > 1 THEN 1 ELSE 0 END), count(*)
-        |FROM lineitem
-        |UNION ALL
-        |SELECT 'unique_o_orderkey',
-        |       count(*) - count(DISTINCT o_orderkey), count(*)
-        |FROM orders)
-        |SELECT chk AS "check", CAST(v AS BIGINT) AS violations,
-        |       CAST(t AS BIGINT) AS total, CAST(v AS BIGINT) = 0 AS pass
-        |FROM checks ORDER BY chk ASC""".stripMargin,
-    // Pearson from exact integer-cent moments: r is ONE shared double
-    // expression over them with identical operand order in both engines
-    "q_corr_matrix" ->
-      """WITH c AS (
-        |  SELECT CAST(round(l_discount * 100) AS BIGINT) AS d,
-        |         CAST(round(l_extendedprice * 100) AS BIGINT) AS e,
-        |         CAST(round(l_quantity * 100) AS BIGINT) AS q,
-        |         CAST(round(l_tax * 100) AS BIGINT) AS t
-        |  FROM lineitem),
-        |m AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-        |         CAST(sum(d) AS DOUBLE) AS sd, CAST(sum(e) AS DOUBLE) AS se,
-        |         CAST(sum(q) AS DOUBLE) AS sq, CAST(sum(t) AS DOUBLE) AS st,
-        |         CAST(sum(d*d) AS DOUBLE) AS qd, CAST(sum(e*e) AS DOUBLE) AS qe,
-        |         CAST(sum(q*q) AS DOUBLE) AS qq, CAST(sum(t*t) AS DOUBLE) AS qt,
-        |         CAST(sum(d*e) AS DOUBLE) AS pde, CAST(sum(d*q) AS DOUBLE) AS pdq,
-        |         CAST(sum(d*t) AS DOUBLE) AS pdt, CAST(sum(e*q) AS DOUBLE) AS peq,
-        |         CAST(sum(e*t) AS DOUBLE) AS pet, CAST(sum(q*t) AS DOUBLE) AS pqt
-        |  FROM c)
-        |SELECT col_a, col_b, corr FROM (
-        |  SELECT 'l_discount' AS col_a, 'l_extendedprice' AS col_b,
-        |         round((n*pde - sd*se) / (sqrt(n*qd - sd*sd) * sqrt(n*qe - se*se)), 6) AS corr FROM m
-        |  UNION ALL
-        |  SELECT 'l_discount', 'l_quantity',
-        |         round((n*pdq - sd*sq) / (sqrt(n*qd - sd*sd) * sqrt(n*qq - sq*sq)), 6) FROM m
-        |  UNION ALL
-        |  SELECT 'l_discount', 'l_tax',
-        |         round((n*pdt - sd*st) / (sqrt(n*qd - sd*sd) * sqrt(n*qt - st*st)), 6) FROM m
-        |  UNION ALL
-        |  SELECT 'l_extendedprice', 'l_quantity',
-        |         round((n*peq - se*sq) / (sqrt(n*qe - se*se) * sqrt(n*qq - sq*sq)), 6) FROM m
-        |  UNION ALL
-        |  SELECT 'l_extendedprice', 'l_tax',
-        |         round((n*pet - se*st) / (sqrt(n*qe - se*se) * sqrt(n*qt - st*st)), 6) FROM m
-        |  UNION ALL
-        |  SELECT 'l_quantity', 'l_tax',
-        |         round((n*pqt - sq*st) / (sqrt(n*qq - sq*sq) * sqrt(n*qt - st*st)), 6) FROM m)
-        |ORDER BY col_a ASC, col_b ASC""".stripMargin,
-    "q_window_percentrank" ->
-      """SELECT c_custkey, c_mktsegment, c_acctbal,
-        |       percent_rank() OVER (PARTITION BY c_mktsegment
-        |                            ORDER BY c_acctbal ASC, c_custkey ASC) AS pr,
-        |       cume_dist() OVER (PARTITION BY c_mktsegment
-        |                         ORDER BY c_acctbal ASC, c_custkey ASC) AS cd
-        |FROM customer ORDER BY c_custkey ASC""".stripMargin,
-    "q_events_tumbling" ->
-      """SELECT date_trunc('day', ts) AS day, event_type, count(*) AS n,
-        |       CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_value
-        |FROM events
-        |GROUP BY date_trunc('day', ts), event_type
-        |ORDER BY day ASC, event_type ASC""".stripMargin,
-    "q_events_sessionize" ->
-      """WITH g AS (
-        |  SELECT user_id, event_id, ts,
-        |         lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_ts
-        |  FROM events),
-        |f AS (
-        |  SELECT user_id, event_id, ts,
-        |         CASE WHEN prev_ts IS NULL
-        |                OR CAST(floor(date_part('epoch', ts)) AS BIGINT)
-        |                   - CAST(floor(date_part('epoch', prev_ts)) AS BIGINT) > 1800
-        |              THEN 1 ELSE 0 END AS new_session
-        |  FROM g),
-        |s AS (
-        |  SELECT user_id, ts,
-        |         CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-        |                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM f)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |       min(ts) AS session_start, max(ts) AS session_end
-        |FROM s GROUP BY user_id, session_id
-        |ORDER BY user_id ASC, session_id ASC""".stripMargin,
-    "q_events_retention" ->
-      """WITH ev AS (SELECT user_id, date_trunc('day', ts) AS day FROM events),
-        |f AS (SELECT user_id, min(day) AS cohort_day FROM ev GROUP BY user_id)
-        |SELECT cohort_day,
-        |       CAST(date_diff('day', cohort_day, day) AS BIGINT) AS day_offset,
-        |       count(DISTINCT ev.user_id) AS n_users
-        |FROM ev JOIN f USING (user_id)
-        |GROUP BY cohort_day, day_offset
-        |ORDER BY cohort_day ASC, day_offset ASC""".stripMargin,
-    "q_report_maintained" ->
-      """SELECT date_trunc('day', ts) AS day, event_type, count(*) AS n,
-        |       CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_value
-        |FROM events GROUP BY 1, 2
-        |ORDER BY day ASC, event_type ASC""".stripMargin,
-    "q_events_pattern" ->
-      """WITH s AS (
-        |  SELECT user_id,
-        |         string_agg(substring(event_type, 1, 1), '' ORDER BY ts, event_id) AS seq
-        |  FROM events GROUP BY user_id)
-        |SELECT user_id, CAST(length(seq) AS BIGINT) AS seq_len,
-        |       CAST(len(regexp_extract_all(seq, 'v[ce]*p')) AS BIGINT) AS n_matches
-        |FROM s ORDER BY user_id ASC""".stripMargin,
-    // integer moments (D days, S = Σn, Q = Σn²) per type; z is ONE shared
-    // double expression over them — identical operand order both engines
-    "q_events_anomaly" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |m AS (
-        |  SELECT event_type, count(*) AS d, sum(n) AS s, sum(n * n) AS q
-        |  FROM daily GROUP BY 1)
-        |SELECT event_type, day, n,
-        |       round(CAST(d * n - s AS DOUBLE) /
-        |             sqrt(CAST(d AS DOUBLE) * CAST(d * q - s * s AS DOUBLE) /
-        |                  CAST(d - 1 AS DOUBLE)), 6) AS z,
-        |       CAST(abs(round(CAST(d * n - s AS DOUBLE) /
-        |             sqrt(CAST(d AS DOUBLE) * CAST(d * q - s * s AS DOUBLE) /
-        |                  CAST(d - 1 AS DOUBLE)), 6)) >= 2.0 AS BIGINT) AS is_anomaly
-        |FROM daily JOIN m USING (event_type)
-        |WHERE d > 1 AND d * q - s * s > 0
-        |ORDER BY event_type ASC, day ASC""".stripMargin,
-    "q_events_transitions" -> TransitionsSql,
-    // the boundary-bridged fold equals the one-shot matrix exactly
-    "q_events_transitions_stored" -> TransitionsSql,
-    "q_events_funnel" ->
-      """WITH v AS (
-        |  SELECT user_id, min(ts) AS view_ts FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |c AS (
-        |  SELECT e.user_id, min(e.ts) AS click_ts
-        |  FROM events e JOIN v ON e.user_id = v.user_id
-        |  WHERE e.event_type = 'click' AND e.ts > v.view_ts
-        |  GROUP BY e.user_id),
-        |p AS (
-        |  SELECT e.user_id, min(e.ts) AS purchase_ts
-        |  FROM events e JOIN c ON e.user_id = c.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > c.click_ts
-        |  GROUP BY e.user_id)
-        |SELECT v.user_id, v.view_ts, c.click_ts, p.purchase_ts,
-        |       CASE WHEN p.purchase_ts IS NOT NULL THEN 3
-        |            WHEN c.click_ts IS NOT NULL THEN 2
-        |            ELSE 1 END AS funnel_stage
-        |FROM v
-        |LEFT JOIN c ON v.user_id = c.user_id
-        |LEFT JOIN p ON v.user_id = p.user_id
-        |ORDER BY v.user_id ASC""".stripMargin,
-    // ---- scans / RAG dataflow ----
-    "q_scan_documents" ->
-      "SELECT * FROM documents ORDER BY doc_id ASC",
-    "q_tree_flatten" ->
-      """SELECT 'root' AS title, '' AS url, CAST(0 AS BIGINT) AS depth
-        |UNION ALL
-        |SELECT r_name, '/r/' || r_regionkey, 1 FROM region
-        |UNION ALL
-        |SELECT n_name, '/r/' || n_regionkey || '/n/' || n_nationkey, 2 FROM nation
-        |ORDER BY depth ASC, url ASC""".stripMargin,
-    "q_upsert_lastwins" ->
-      """WITH v AS (
-        |  SELECT doc_id, lang, substr(text, 1, 40) AS body, CAST(1 AS BIGINT) AS version FROM documents
-        |  UNION ALL
-        |  SELECT doc_id, lang, 'UPDATED ' || source, 2 FROM documents WHERE doc_id % 7 = 0
-        |)
-        |SELECT doc_id, lang, body, version FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY version DESC) AS rn FROM v)
-        |WHERE rn = 1
-        |ORDER BY doc_id ASC""".stripMargin,
-    // snapshot contents are pure predicates over the fixture (ensure
-    // builds: v0 = even ids, v1 += odd ids, v2 -= ids < 50), so the
-    // resolved reads have closed-form oracles
-    "q_timetravel_changes" ->
-      """WITH ch AS (
-        |  SELECT 'insert' AS change, CAST(1 AS BIGINT) AS v,
-        |         doc_id, text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 2 = 1 AND doc_id >= 50
-        |  UNION ALL
-        |  SELECT 'update', CAST(1 AS BIGINT), doc_id, text, 'xx', source, n_chars
-        |  FROM documents WHERE doc_id % 10 = 0 AND doc_id >= 50
-        |  UNION ALL
-        |  SELECT 'delete', CAST(2 AS BIGINT), doc_id, text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 2 = 0 AND doc_id < 50)
-        |SELECT change, v, doc_id, text, lang, source, n_chars
-        |FROM ch ORDER BY doc_id ASC""".stripMargin,
-    "q_timetravel_latest" ->
-      "SELECT * FROM documents WHERE doc_id >= 50 ORDER BY doc_id ASC",
-    "q_timetravel_asof" ->
-      "SELECT * FROM documents WHERE doc_id % 2 = 0 ORDER BY doc_id ASC",
-    "q_project_fields" ->
-      "SELECT doc_id, lang AS title, substr(text, 1, 60) AS body FROM documents ORDER BY doc_id ASC",
-    "q_filter_nonempty" ->
-      "SELECT doc_id, n_chars FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0 ORDER BY doc_id ASC",
-    "q_filter_metadata" ->
-      "SELECT doc_id, lang, source FROM documents WHERE lang = 'en' ORDER BY doc_id ASC",
-    // the +20000 twin carries the precomposed suffix, the +40000 twin the
-    // decomposed one — same NFC form, different bytes; min-id per
-    // normalized digest keeps the +20000 copy and drops the +40000 one
-    "q_dedup_unicode" ->
-      """WITH twins AS (SELECT doc_id, text FROM documents WHERE doc_id % 9 = 0),
-        |corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 20000, text || ' caf' || chr(233) FROM twins
-        |  UNION ALL
-        |  SELECT doc_id + 40000, text || ' cafe' || chr(769) FROM twins)
-        |SELECT min(doc_id) AS doc_id, md5(nfc_normalize(text)) AS fp
-        |FROM corpus
-        |GROUP BY md5(nfc_normalize(text))
-        |ORDER BY doc_id ASC""".stripMargin,
-    // the decomposed plant is built from the same code points via chr();
-    // the precomposed one is already NFC and must pass through unchanged
-    "q_text_normalize" ->
+        |SELECT host, url, lastmod, status FROM disc
+        |ORDER BY host ASC, url ASC""".stripMargin)),
+    // the WHOLE next-cycle plan composed: sitemap-INDEX candidates (new
+    // ahead of stale) → robots admission → delay-capped politeness schedule
+    Entry("q_crawl_plan", (s, d) => FrontierOps.crawlPlan(s, d), Oracle(
+      // the composed plan: sitemap candidates in closed form, the same
+      // handwritten literal robots rules, longest-match + allow-tie, then
+      // the delay-capped per-host rank — one chained-CTE mirror of the
+      // whole planning pass
+      ("WITH " + crawlPlanCtes + """
+        |SELECT host, CAST(slot AS BIGINT) AS slot, url, priority, status
+        |FROM r2 WHERE slot <= cap
+        |ORDER BY host ASC, slot ASC""".stripMargin))),
+    // Unicode NFC + accent folding via native codegen expressions; the
+    // oracle runs DuckDB's utf8proc twins (nfc_normalize/strip_accents) —
+    // two independent conformant implementations must agree byte-for-byte
+    Entry("q_text_normalize", (s, d) => TextOps.textNormalize(s, d), Oracle(
+      // the decomposed plant is built from the same code points via chr();
+      // the precomposed one is already NFC and must pass through unchanged
       ("""WITH c AS (
         |  SELECT doc_id,
         |         text ||
@@ -4809,34 +4173,52 @@ object SparkEntry {
         |       strip_accents(nfc_normalize(t)) AS folded,
         |       CAST(nfc_normalize(t) <> t AS BIGINT) AS changed
         |FROM c
-        |ORDER BY doc_id ASC""").stripMargin,
-    // identical pattern literals and the SAME staged replacement order
-    // (email → ip → phone) on both engines: counts are taken on the text
-    // AFTER the earlier stages so count ≡ what the replace actually hit
-    "q_pii_redact" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |         text ||
-        |         CASE WHEN doc_id % 7 = 0 THEN ' contact u' || CAST(doc_id AS VARCHAR) || '@example.com' ELSE '' END ||
-        |         CASE WHEN doc_id % 11 = 0 THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.' || CAST(doc_id % 100 AS VARCHAR) ELSE '' END ||
-        |         CASE WHEN doc_id % 13 = 0 THEN ' call +1 555 ' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ELSE '' END AS t
-        |  FROM documents),
-        |s1 AS (SELECT doc_id, t,
-        |              regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t1
-        |       FROM c),
-        |s2 AS (SELECT doc_id, t, t1,
-        |              regexp_replace(t1, '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g') AS t2
-        |       FROM s1)
-        |SELECT doc_id,
-        |       regexp_replace(t2, '\+\d{1,3}[ -]\d{3}[ -]\d{4}\b', '<PHONE>', 'g') AS redacted,
-        |       CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        |       CAST(len(regexp_extract_all(t1, '\b(?:\d{1,3}\.){3}\d{1,3}\b')) AS BIGINT) AS n_ips,
-        |       CAST(len(regexp_extract_all(t2, '\+\d{1,3}[ -]\d{3}[ -]\d{4}\b')) AS BIGINT) AS n_phones
-        |FROM s2
-        |ORDER BY doc_id ASC""".stripMargin,
-    // the q_pii_redact chain + the Luhn-gated card stage; check digit and
-    // validity share ONE closed-form mod-10 sum (integer-exact both sides)
-    "q_pii_redact_cc" ->
+        |ORDER BY doc_id ASC""").stripMargin)),
+    // normalize-then-dedup composition: byte-different/NFC-identical
+    // planted twins collapse to one digest (a raw-byte dedup keeps both)
+    Entry("q_dedup_unicode", (s, d) => TextOps.dedupUnicode(s, d), Oracle(
+      // the +20000 twin carries the precomposed suffix, the +40000 twin the
+      // decomposed one — same NFC form, different bytes; min-id per
+      // normalized digest keeps the +20000 copy and drops the +40000 one
+      """WITH twins AS (SELECT doc_id, text FROM documents WHERE doc_id % 9 = 0),
+        |corpus AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 20000, text || ' caf' || chr(233) FROM twins
+        |  UNION ALL
+        |  SELECT doc_id + 40000, text || ' cafe' || chr(769) FROM twins)
+        |SELECT min(doc_id) AS doc_id, md5(nfc_normalize(text)) AS fp
+        |FROM corpus
+        |GROUP BY md5(nfc_normalize(text))
+        |ORDER BY doc_id ASC""".stripMargin)),
+    // language identification (CCNet's first gate, derived not trusted):
+    // literal char-trigram log-odds profile over the rendered-surface
+    // fixture — one map-side codegen expression, zero corpus exchanges
+    Entry("q_lang_id", (s, d) => LangIdOps.langIdFixture(s, d), Oracle(
+      // char-trigram profile lang-id over the rendered-surface corpus —
+      // same literal model VALUES the Spark expression carries
+      s"""WITH $langIdCtes
+         |SELECT doc_id, lang, predicted,
+         |  CAST(CASE WHEN predicted = lang THEN 1 ELSE 0 END AS INT) AS correct,
+         |  s_de, s_en, s_es, s_fr, s_zh
+         |FROM lpred
+         |ORDER BY doc_id ASC""".stripMargin)),
+    // the composed chain: derived lang gate -> per-language CCNet battery
+    Entry("q_curate_e2e_lang", (s, d) => LangIdOps.curateE2eLang(s, d), Oracle(
+      // lang-id as the chain's FIRST gate: the CCNet battery (gates AND
+      // perplexity fences) computed over the derived-en subset only
+      (s"""WITH $langIdCtes,
+          |endocs AS (
+          |  SELECT d.doc_id, d.text
+          |  FROM documents d JOIN lpred p USING (doc_id)
+          |  WHERE p.predicted = 'en'),
+          |""".stripMargin + curateCcnetCtes("endocs", "") + "\n" +
+        curateCcnetSelect("") + "\nORDER BY doc_id ASC"))),
+    // + Luhn-gated credit-card stage: candidates by regex, redaction
+    // only on mod-10-valid numbers; planted valid AND Luhn-failing
+    Entry("q_pii_redact_cc", (s, d) => TextOps.piiRedactCc(s, d), Oracle(
+      // the q_pii_redact chain + the Luhn-gated card stage; check digit and
+      // validity share ONE closed-form mod-10 sum (integer-exact both sides)
       """WITH p0 AS (
         |  SELECT doc_id, text,
         |         '4' || lpad(CAST((doc_id * 1000003) % 10000000000000 AS VARCHAR), 14, '0') AS body
@@ -4887,756 +4269,1131 @@ object SparkEntry {
         |       CAST(CASE WHEN ok THEN 1 ELSE 0 END AS BIGINT) AS n_cards,
         |       CAST(CASE WHEN cand <> '' AND NOT ok THEN 1 ELSE 0 END AS BIGINT) AS n_card_rejected
         |FROM s5
-        |ORDER BY doc_id ASC""".stripMargin,
-    "q_clean_text" ->
-      """SELECT doc_id, substr(cleaned, 1, 80) AS cleaned, CAST(length(cleaned) AS BIGINT) AS clean_len
-        |FROM (SELECT doc_id,
-        |             regexp_replace(replace(text, ' ', chr(10) || chr(10)), '\n+', chr(10), 'g') AS cleaned
-        |      FROM documents)
-        |ORDER BY doc_id ASC""".stripMargin,
-    "q_truncate" ->
-      "SELECT doc_id, substr(text, 1, 6000) AS body, least(n_chars, 6000) AS body_len FROM documents ORDER BY doc_id ASC",
-    "q_url_concat" ->
-      "SELECT doc_id, 'https://corpus.local/' || source || '/' || doc_id AS url FROM documents ORDER BY doc_id ASC",
-    "q_url_canonical" ->
-      s"""WITH $urlFixtureCte,
-         |$urlCanonCte
-         |SELECT doc_id, url, canonical_url FROM canon ORDER BY doc_id ASC""".stripMargin,
-    "q_dedup_multi" ->
-      s"""WITH RECURSIVE $urlFixtureCte,
-         |$urlCanonCte,
-         |uedge AS (
-         |  SELECT c.doc_id AS a, k.canonical_id AS b
-         |  FROM canon c JOIN (SELECT canonical_url AS cu, min(doc_id) AS canonical_id
-         |                     FROM canon GROUP BY canonical_url) k
-         |    ON c.canonical_url = k.cu
-         |  WHERE c.doc_id <> k.canonical_id),
-         |tedge AS (
-         |  SELECT d.doc_id AS a, k.tid AS b
-         |  FROM documents d JOIN (SELECT md5(text) AS h, min(doc_id) AS tid
-         |                         FROM documents GROUP BY md5(text)) k
-         |    ON md5(d.text) = k.h
-         |  WHERE d.doc_id <> k.tid),
-         |p AS (SELECT a, b FROM uedge UNION SELECT a, b FROM tedge),
-         |edges AS (SELECT a, b FROM p UNION SELECT b, a FROM p),
-         |reach(n, m) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a WHERE e.b <> r.n),
-         |comp AS (SELECT n AS doc_id, least(n, min(m)) AS component FROM reach GROUP BY n)
-         |SELECT d.doc_id, coalesce(k2.component, d.doc_id) AS component
-         |FROM documents d LEFT JOIN comp k2 USING (doc_id)
-         |ORDER BY doc_id ASC""".stripMargin,
-    // UT1-class blocklist + weighted URL-word score, planted hosts
-    "q_url_blocklist" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |         'http://host' || CAST(doc_id % 20 AS VARCHAR) || '.example/page/' || CAST(doc_id AS VARCHAR) ||
-        |         CASE WHEN doc_id % 7 = 0 THEN '/casino/bonus' ELSE '' END ||
-        |         CASE WHEN doc_id % 8 = 0 THEN '/bet-and-win' ELSE '' END AS url
-        |  FROM documents),
-        |b(bhost) AS (VALUES ('host0.example'), ('host6.example'), ('host12.example'), ('host18.example')),
-        |m AS (
-        |  SELECT doc_id, url, regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1) AS host,
-        |         (CASE WHEN contains(url, 'casino') THEN 5 ELSE 0 END
-        |          + CASE WHEN contains(url, 'bet') THEN 1 ELSE 0 END
-        |          + CASE WHEN contains(url, 'win') THEN 1 ELSE 0 END) AS sc
-        |  FROM u)
-        |SELECT m.doc_id, m.url, m.host,
-        |       CAST(CASE WHEN b.bhost IS NULL THEN 1 ELSE 0 END AS BIGINT) AS r_domain,
-        |       CAST(sc AS BIGINT) AS url_score,
-        |       CAST(CASE WHEN sc < 5 THEN 1 ELSE 0 END AS BIGINT) AS r_score,
-        |       CAST(CASE WHEN b.bhost IS NULL AND sc < 5 THEN 1 ELSE 0 END AS BIGINT) AS keep
-        |FROM m LEFT JOIN b ON m.host = b.bhost
-        |ORDER BY m.doc_id ASC""".stripMargin,
-    "q_url_dedup" ->
-      s"""WITH $urlFixtureCte,
-         |$urlCanonCte,
-         |keep AS (SELECT canonical_url AS cu, min(doc_id) AS canonical_id
-         |         FROM canon GROUP BY canonical_url)
-         |SELECT c.doc_id AS dup_id, k.canonical_id
-         |FROM canon c JOIN keep k ON c.canonical_url = k.cu
-         |WHERE c.doc_id <> k.canonical_id
-         |ORDER BY dup_id ASC""".stripMargin,
-    "q_json_extract" ->
-      "SELECT event_id, CAST(props->>'$.k' AS BIGINT) AS k, event_type FROM events ORDER BY event_id ASC",
-    "q_prompt_template" ->
-      """SELECT doc_id, substr('请按照"总结要点"进行总结,内容是：' || text, 1, 120) AS llm_prompt
-        |FROM documents ORDER BY doc_id ASC""".stripMargin,
-    "q_citation_format" ->
-      """WITH ranked AS (
-        |  SELECT lang, source, doc_id,
-        |         row_number() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id ASC) AS rank
-        |  FROM documents)
-        |SELECT lang,
-        |       '参考链接：' || string_agg(chr(10) || chr(10) || source || '     ' || doc_id, '' ORDER BY rank ASC) AS citations
-        |FROM ranked WHERE rank <= 3
-        |GROUP BY lang ORDER BY lang ASC""".stripMargin,
-    // ---- aggregations / result shaping ----
-    "q_flatten_results" ->
-      """SELECT lang, doc_id FROM (
-        |  SELECT lang, doc_id,
-        |         row_number() OVER (PARTITION BY lang, source ORDER BY doc_id ASC) AS rn
-        |  FROM documents)
-        |WHERE rn <= 2
-        |ORDER BY lang ASC, doc_id ASC""".stripMargin,
-    "q_agg_concat" ->
-      """SELECT lang, string_agg(substr(text, 1, 20), ' | ' ORDER BY doc_id ASC) AS context
-        |FROM documents GROUP BY lang ORDER BY lang ASC""".stripMargin,
-    "q_limit" ->
-      "SELECT doc_id, n_chars FROM documents ORDER BY n_chars DESC, doc_id ASC LIMIT 3",
-    "q_agg_hash" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE) AS sum_qty,
-        |       CAST(sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_base_price,
-        |       round(CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE) / count(*), 6) AS avg_qty,
-        |       count(*) AS count_order
-        |FROM lineitem
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag ASC, l_linestatus ASC""".stripMargin,
-    "q_agg_distinct" ->
-      """SELECT o_orderstatus,
-        |       count(DISTINCT o_custkey) AS n_custs,
-        |       count(DISTINCT o_orderpriority) AS n_prios,
-        |       count(*) AS n_orders
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus ASC""".stripMargin,
-    "q_grouping_sets" ->
-      """SELECT CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL'
-        |            ELSE coalesce(l_returnflag, 'NULL') END AS returnflag,
-        |       CASE WHEN GROUPING(l_linestatus) = 1 THEN 'ALL'
-        |            ELSE coalesce(l_linestatus, 'NULL') END AS linestatus,
-        |       CAST(sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_price,
-        |       count(*) AS n
-        |FROM lineitem
-        |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY returnflag ASC, linestatus ASC""".stripMargin,
-    "q_percentile" ->
-      """SELECT o_orderstatus,
-        |       round(quantile_cont(o_totalprice, 0.25), 4) AS p25,
-        |       round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
-        |       round(quantile_cont(o_totalprice, 0.75), 4) AS p75,
-        |       round(quantile_cont(o_totalprice, 0.95), 4) AS p95
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus ASC""".stripMargin,
-    // the oracle mirrors the grid construction bin for bin (same IEEE
-    // bucket arithmetic as q_zorder_value's discipline)
-    "q_score_calibrate" ->
-      """WITH mm AS (SELECT min(CAST(n_chars AS DOUBLE)) AS lo,
-        |                   max(CAST(n_chars AS DOUBLE)) AS hi,
-        |                   count(*) AS n FROM documents),
-        |b AS (
-        |  SELECT doc_id, n_chars, n,
-        |         CASE WHEN hi <= lo THEN 0 ELSE
-        |           CAST(least(greatest(floor((CAST(n_chars AS DOUBLE) - lo) * 1024.0 / (hi - lo)), 0.0), 1023.0) AS BIGINT)
-        |         END AS bin
-        |  FROM documents CROSS JOIN mm),
-        |g AS (
-        |  SELECT bin AS gbin,
-        |         sum(count(*)) OVER (ORDER BY bin
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - count(*) AS below
-        |  FROM b GROUP BY bin)
-        |SELECT doc_id, n_chars,
-        |       round(CAST(below AS DOUBLE) / n, 6) AS pct
-        |FROM b JOIN g ON b.bin = g.gbin
-        |ORDER BY doc_id ASC""".stripMargin,
-    "q_quantile_grouped" ->
-      """WITH s AS (
-        |  SELECT o_orderstatus, o_totalprice AS v,
-        |         row_number() OVER (PARTITION BY o_orderstatus
-        |                            ORDER BY o_totalprice) AS rn,
-        |         count(*) OVER (PARTITION BY o_orderstatus) AS c
-        |  FROM orders),
-        |q(p) AS (VALUES (0.5), (0.95))
-        |SELECT o_orderstatus, CAST(q.p AS DOUBLE) AS p, s.v
-        |FROM q JOIN s ON s.rn = CAST(floor(q.p * (s.c - 1)) AS BIGINT) + 1
-        |ORDER BY o_orderstatus ASC, p ASC""".stripMargin,
-    "q_winsorize" ->
-      """WITH n AS (SELECT count(*) AS c FROM orders),
-        |s AS (SELECT o_totalprice AS v,
-        |             row_number() OVER (ORDER BY o_totalprice) AS rn
-        |      FROM orders),
-        |lo AS (SELECT v FROM s CROSS JOIN n
-        |       WHERE rn = CAST(floor(0.05 * (c - 1)) AS BIGINT) + 1),
-        |hi AS (SELECT v FROM s CROSS JOIN n
-        |       WHERE rn = CAST(floor(0.95 * (c - 1)) AS BIGINT) + 1)
-        |SELECT o_orderkey, o_totalprice,
-        |       least(greatest(o_totalprice, lo.v), hi.v) AS clipped,
-        |       (o_totalprice < lo.v OR o_totalprice > hi.v) AS was_outlier
-        |FROM orders CROSS JOIN lo CROSS JOIN hi
-        |ORDER BY o_orderkey ASC""".stripMargin,
-    // the oracle derives the lower order statistic from first principles
-    // (row_number against ⌊p·(n−1)⌋) rather than trusting quantile_disc's
-    // rank convention to coincide
-    "q_quantile_exact" ->
-      """WITH n AS (SELECT count(*) AS c FROM orders),
-        |s AS (SELECT o_totalprice AS v,
-        |             row_number() OVER (ORDER BY o_totalprice) AS rn
-        |      FROM orders),
-        |q(p) AS (VALUES (0.25), (0.5), (0.75), (0.95))
-        |SELECT CAST(q.p AS DOUBLE) AS p, s.v
-        |FROM q CROSS JOIN n
-        |JOIN s ON s.rn = CAST(floor(q.p * (n.c - 1)) AS BIGINT) + 1
-        |ORDER BY p ASC""".stripMargin,
-    "q_histogram" ->
-      """SELECT CAST(floor(o_totalprice / 50000.0) AS BIGINT) AS bucket, count(*) AS n
-        |FROM orders GROUP BY bucket ORDER BY bucket ASC""".stripMargin,
-    "q_tpch_q1" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       sum(l_quantity) AS sum_qty,
-        |       CAST(sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_base_price,
-        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_disc_price,
-        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_charge,
-        |       round(sum(l_quantity) / count(*), 6) AS avg_qty,
-        |       round(CAST(sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 / count(*), 6) AS avg_price,
-        |       round(CAST(sum(CAST(round(l_discount * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 / count(*), 6) AS avg_disc,
-        |       count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag ASC, l_linestatus ASC""".stripMargin,
-    "q_tpch_q6" ->
-      """SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "q_tpch_q3" ->
-      """SELECT l_orderkey, o_orderdate,
-        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey ASC
-        |LIMIT 10""".stripMargin,
-    "q_tpch_q4" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate < TIMESTAMP '1998-06-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority ASC""".stripMargin,
-    "q_tpch_q5" ->
-      """SELECT n_name,
-        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name ASC""".stripMargin,
-    "q_tpch_q7" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |       CAST(year(l_shipdate) AS INT) AS l_year,
-        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        |    OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation ASC, cust_nation ASC, l_year ASC""".stripMargin,
-    "q_tpch_q8" ->
-      """WITH t AS (
-        |  SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-        |         CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT) AS volu,
-        |         n2.n_name AS supp_nation
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |  WHERE p_type = 'STANDARD' AND r_name = 'AMERICA'
-        |    AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |    AND o_orderdate < TIMESTAMP '1998-01-01')
-        |SELECT o_year,
-        |       round((CAST(sum(CASE WHEN supp_nation = 'NATION_1' THEN volu ELSE 0 END) AS DOUBLE) / 1000000.0)
-        |             / (CAST(sum(volu) AS DOUBLE) / 1000000.0), 6) AS mkt_share,
-        |       CAST(sum(CASE WHEN supp_nation = 'NATION_1' THEN volu ELSE 0 END) AS DOUBLE) / 1000000.0 AS nation_vol,
-        |       CAST(sum(volu) AS DOUBLE) / 1000000.0 AS total_vol
-        |FROM t GROUP BY o_year ORDER BY o_year ASC""".stripMargin,
-    "q_tpch_q10" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-04-01'
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey ASC
-        |LIMIT 20""".stripMargin,
-    "q_tpch_q15" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |         CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l_suppkey),
-        |m AS (SELECT max(total_revenue) AS max_rev FROM rev)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM rev CROSS JOIN m
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue = max_rev
-        |ORDER BY s_suppkey ASC""".stripMargin,
-    "q_tpch_q17" ->
-      """WITH t AS (
-        |  SELECT l_partkey,
-        |         (sum(CAST(l_quantity AS BIGINT)) * 200000) // count(*) AS thresh_micros
-        |  FROM lineitem GROUP BY l_partkey)
-        |SELECT
-        |  CAST(sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS small_qty_revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem JOIN t USING (l_partkey)
-        |WHERE CAST(l_quantity AS BIGINT) * 1000000 < thresh_micros""".stripMargin,
-    "q_tpch_q14" ->
-      """WITH s AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN p_type = 'PROMO'
-        |      THEN CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)
-        |      ELSE 0 END) AS DOUBLE) / 1000000.0 AS promo,
-        |    CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS total
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-07-01')
-        |SELECT round(100.0 * promo / total, 6) AS promo_pct, promo, total FROM s""".stripMargin,
-    "q_tpch_q18" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey HAVING total_qty > 300)
-        |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
-        |FROM big
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_qty DESC, o_orderkey ASC
-        |LIMIT 20""".stripMargin,
-    // ---- joins ----
-    "q_part_brands" ->
-      """SELECT p_brand, count(*) AS n_items,
-        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue,
-        |       count(DISTINCT p_partkey) AS n_parts
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand
-        |ORDER BY p_brand ASC""".stripMargin,
-    "q_tpch_q2" ->
-      """WITH eu AS (
-        |  SELECT s_suppkey, s_name, s_acctbal, n_name
-        |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  WHERE r_name = 'EUROPE'),
-        |cand AS (
-        |  SELECT p_partkey, s_acctbal, s_name, n_name,
-        |         CAST(round(l_extendedprice * 1000000.0 / l_quantity) AS BIGINT) AS unit_micros
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN eu ON l_suppkey = s_suppkey
-        |  WHERE p_type = 'LARGE' AND p_size BETWEEN 10 AND 20),
-        |mn AS (SELECT p_partkey, min(unit_micros) AS min_micros FROM cand GROUP BY p_partkey)
-        |SELECT DISTINCT s_acctbal, s_name, n_name, p_partkey,
-        |       CAST(unit_micros AS DOUBLE) / 1000000.0 AS unit_price
-        |FROM cand JOIN mn USING (p_partkey)
-        |WHERE unit_micros = min_micros
-        |ORDER BY s_acctbal DESC, n_name ASC, s_name ASC, p_partkey ASC
-        |LIMIT 100""".stripMargin,
-    "q_tpch_q9" ->
-      """SELECT n_name AS nation, CAST(year(o_orderdate) AS INT) AS o_year,
-        |       CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)
-        |                - CAST(round(p_retailprice * 500000.0) AS BIGINT) * CAST(l_quantity AS BIGINT)) AS DOUBLE) / 1000000.0 AS sum_profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE '%bolt%'
-        |GROUP BY n_name, year(o_orderdate)
-        |ORDER BY nation ASC, o_year DESC""".stripMargin,
-    "q_tpch_q11" ->
-      """WITH v AS (
-        |  SELECT l_partkey, sum(CAST(round(l_extendedprice * 1000000.0) AS BIGINT)) AS val_micros
-        |  FROM lineitem
-        |  WHERE l_suppkey IN (
-        |    SELECT s_suppkey FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |    WHERE n_name = 'NATION_7')
-        |  GROUP BY l_partkey),
-        |t AS (SELECT sum(val_micros) AS tot_micros FROM v)
-        |SELECT l_partkey AS p_partkey, CAST(val_micros AS DOUBLE) / 1000000.0 AS value
-        |FROM v CROSS JOIN t
-        |WHERE val_micros * 1000 > tot_micros
-        |ORDER BY value DESC, p_partkey ASC""".stripMargin,
-    "q_tpch_q12" ->
-      """SELECT l_linestatus,
-        |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_shipdate > o_orderdate + INTERVAL 30 DAY
-        |GROUP BY l_linestatus
-        |ORDER BY l_linestatus ASC""".stripMargin,
-    "q_tpch_q13" ->
+        |ORDER BY doc_id ASC""".stripMargin)),
+    // the two-level <sitemapindex> -> <urlset> protocol (how a 50k+-URL
+    // host publishes): parse index, walk child locs through the fetch
+    // boundary, parse each urlset; closed-form oracle
+    Entry("q_crawl_sitemap_index", (s, d) => FrontierOps.crawlSitemapIndex(s, d), Oracle(
+      // closed-form mirror of the two-level protocol: rank -> 10-entry
+      // chunk -> child loc -> same classification; a parse that drops an
+      // entry or misroutes it to the wrong child diverges
+      """WITH base AS (SELECT source AS host, doc_id, lang FROM documents),
+        |known AS (
+        |  SELECT host,
+        |         'https://' || host || '/' || lang || '/p' || CAST(doc_id AS VARCHAR) AS url,
+        |         '2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') AS lastmod,
+        |         CASE WHEN CAST('2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') AS DATE)
+        |                   > (DATE '2026-02-01' - CAST(doc_id % 30 AS INT))
+        |              THEN 'stale' ELSE 'fresh' END AS status
+        |  FROM base),
+        |disc AS (
+        |  SELECT host, 'https://' || host || '/disc/p' || CAST(doc_id AS VARCHAR) AS url,
+        |         '2026-01-15' AS lastmod, 'new' AS status
+        |  FROM base WHERE doc_id % 5 = 0),
+        |e AS (
+        |  SELECT host, url, lastmod, status FROM known
+        |  UNION ALL
+        |  SELECT host, url, lastmod, status FROM disc),
+        |ch AS (
+        |  SELECT host, url, lastmod, status,
+        |         (row_number() OVER (PARTITION BY host ORDER BY url ASC) - 1) // 10 AS child
+        |  FROM e)
+        |SELECT host,
+        |       'https://' || host || '/sitemap-' || CAST(child AS VARCHAR) || '.xml' AS sitemap,
+        |       url, lastmod, status
+        |FROM ch
+        |ORDER BY host ASC, url ASC""".stripMargin)),
+    // NFC-first shingles faced against planted byte-different/
+    // NFC-identical twins: the fuzzy path now collapses what the exact
+    // digest (q_dedup_unicode) collapses
+    Entry("q_dedup_minhash_unicode", (s, d) => DedupOps.minHashLshUnicode(s, d), Oracle(
+      // the q_dedup_unicode planting through the FUZZY survivor rule, token
+      // sets nfc_normalize'd (utf8proc) — must equal the engine's NFC-first
+      // minhash chain
+      """WITH twins AS (SELECT doc_id, text FROM documents WHERE doc_id % 9 = 0),
+        |corpus AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 20000, text || ' caf' || chr(233) FROM twins
+        |  UNION ALL
+        |  SELECT doc_id + 40000, text || ' cafe' || chr(769) FROM twins),
+        |ws AS (SELECT doc_id, list_distinct(string_split(nfc_normalize(text), ' ')) AS s FROM corpus),
+        |dup AS (
+        |  SELECT DISTINCT b.doc_id AS b_id
+        |  FROM ws a JOIN ws b ON a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(list_cat(a.s, b.s))) >= 0.95)
+        |SELECT doc_id FROM corpus
+        |WHERE doc_id NOT IN (SELECT b_id FROM dup)
+        |ORDER BY doc_id ASC""".stripMargin)),
+    // continuity twins: the fixture-label forms (accuracy-pin surface —
+    // the derived default is judged against these)
+    Entry("q_select_dsir_goldlang", (s, d) => MlOps.dsirSelect(s, d), Oracle(
+      // DSIR: per-feature ln-ratio nano-rounded BEFORE the per-doc sum —
+      // the same order-independent integer arithmetic as the Spark plan
+      // (the fixture-label continuity twin; the default is derived-label)
+      """WITH toks AS (
+        |  SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
+        |occ AS (
+        |  SELECT doc_id, lang, unnest(t) AS f FROM toks
+        |  UNION ALL
+        |  SELECT doc_id, lang, t[i] || ' ' || t[i + 1] AS f
+        |  FROM (SELECT doc_id, lang, t, unnest(range(1, len(t))) AS i
+        |        FROM toks WHERE len(t) >= 2)),
+        |pair AS (
+        |  SELECT doc_id, lang, f, count(*) AS c FROM occ GROUP BY doc_id, lang, f),
+        |model AS (
+        |  SELECT f, sum(CASE WHEN lang = 'en' THEN c ELSE 0 END) AS ct,
+        |         sum(c) AS cr
+        |  FROM pair GROUP BY f),
+        |s AS (SELECT sum(ct) AS tt, sum(cr) AS tr, count(*) AS v FROM model),
+        |lnr AS (
+        |  SELECT f, CAST(floor(ln(
+        |      ((ct + 1.0) / CAST(tt + v AS DOUBLE)) /
+        |      ((cr + 1.0) / CAST(tr + v AS DOUBLE))) * 1000000000.0 + 0.5)
+        |    AS BIGINT) AS w
+        |  FROM model CROSS JOIN s),
+        |per AS (
+        |  SELECT doc_id, sum(c * w) AS lw_nano, sum(c) AS n_feat
+        |  FROM pair JOIN lnr USING (f) GROUP BY doc_id)
+        |SELECT d.doc_id, d.lang, d.source, CAST(p.n_feat AS BIGINT) AS n_feat,
+        |       CAST(p.lw_nano AS BIGINT) AS lw_nano,
+        |       round(CAST(p.lw_nano AS DOUBLE) / 1000000000.0 / p.n_feat, 6)
+        |         AS lw_avg
+        |FROM per p JOIN documents d USING (doc_id)
+        |ORDER BY CAST(p.lw_nano AS DOUBLE) / p.n_feat DESC, d.doc_id ASC
+        |LIMIT 100""".stripMargin)),
+    // the per-language accuracy surface (lang x predicted counts)
+    Entry("q_lang_confusion", (s, d) => LangIdOps.langConfusion(s, d), Oracle(
+      // the confusion matrix of the derived label vs the fixture label
+      s"""WITH $langIdCtes
+         |SELECT lang, predicted, CAST(count(*) AS BIGINT) AS n_docs
+         |FROM lpred GROUP BY lang, predicted
+         |ORDER BY lang ASC, predicted ASC""".stripMargin)),
+    // Gopher's repetition GATES (Rae et al. A1.1): duplicated-line
+    // chars + char-weighted top-2-gram, 20% integer-ratio thresholds
+    // (q_text_repetition is the count-based top-bigram SIGNAL)
+    Entry("q_gopher_repetition", (s, d) => TextAnalysisOps.gopherRepetition(s, d), Oracle(
+      // Gopher repetition battery: planted line structure, integer char
+      // counts, 20% cross-multiplied gates — all closed-form
       """WITH c AS (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '4-NOT SPECIFIED'
-        |  GROUP BY c_custkey)
-        |SELECT c_count, count(*) AS custdist FROM c
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q_tpch_q16" ->
-      """SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_brand <> 'Brand#5' AND p_type <> 'PROMO'
-        |  AND p_size IN (1,5,10,15,20,25,30,35)
-        |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC""".stripMargin,
-    "q_tpch_q19" ->
-      """SELECT CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0 AS revenue,
-        |       count(*) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "q_tpch_q20" ->
-      """WITH shipped AS (
-        |  SELECT l_partkey, l_suppkey, sum(CAST(l_quantity AS BIGINT)) AS q
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE p_name LIKE 'small%'
-        |    AND l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  GROUP BY l_partkey, l_suppkey),
-        |tot AS (SELECT l_partkey, sum(q) AS total_q FROM shipped GROUP BY l_partkey),
-        |dom AS (SELECT DISTINCT l_suppkey FROM shipped JOIN tot USING (l_partkey)
-        |        WHERE q * 2 > total_q)
-        |SELECT s_suppkey, s_name FROM supplier
-        |WHERE s_suppkey IN (SELECT l_suppkey FROM dom)
-        |ORDER BY s_suppkey ASC""".stripMargin,
-    "q_tpch_q21" ->
-      """WITH pos AS (
-        |  SELECT l_orderkey, l_suppkey,
-        |         max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 30 DAY THEN 1 ELSE 0 END) AS late
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F'
-        |  GROUP BY l_orderkey, l_suppkey),
-        |w AS (
-        |  SELECT p1.l_suppkey, count(*) AS numwait
-        |  FROM pos p1
-        |  WHERE p1.late = 1
-        |    AND EXISTS (SELECT 1 FROM pos p2
-        |                WHERE p2.l_orderkey = p1.l_orderkey AND p2.l_suppkey <> p1.l_suppkey)
-        |    AND NOT EXISTS (SELECT 1 FROM pos p3
-        |                    WHERE p3.l_orderkey = p1.l_orderkey AND p3.l_suppkey <> p1.l_suppkey
-        |                      AND p3.late = 1)
-        |  GROUP BY p1.l_suppkey)
-        |SELECT s_suppkey, s_name, numwait
-        |FROM w JOIN supplier ON l_suppkey = s_suppkey
-        |ORDER BY numwait DESC, s_suppkey ASC
-        |LIMIT 100""".stripMargin,
-    "q_tpch_q22" ->
-      """WITH sel AS (
-        |  SELECT c_custkey, c_nationkey, c_acctbal,
-        |         CAST(round(c_acctbal * 1000000.0) AS BIGINT) AS bal_micros
-        |  FROM customer
-        |  WHERE c_nationkey IN (1,3,5,7,9,11,13) AND c_acctbal > 0),
-        |st AS (SELECT sum(bal_micros) AS sum_micros, count(*) AS n_sel FROM sel)
-        |SELECT c_nationkey AS cntrycode, count(*) AS numcust,
-        |       CAST(sum(bal_micros) AS DOUBLE) / 1000000.0 AS totacctbal
-        |FROM sel CROSS JOIN st
-        |WHERE bal_micros * n_sel > sum_micros
-        |  AND c_custkey NOT IN (SELECT o_custkey FROM orders
-        |                        WHERE o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY c_nationkey
-        |ORDER BY cntrycode ASC""".stripMargin,
-    "q_join_hash" ->
-      """SELECT o_orderkey, c_name, c_mktsegment, o_totalprice
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey ASC""".stripMargin,
-    "q_join_salted" ->
-      """SELECT o_orderkey, c_name, c_mktsegment, o_totalprice
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey ASC""".stripMargin,
-    "q_group_topk" ->
-      """WITH r AS (
-        |  SELECT source, doc_id, n_chars,
-        |         row_number() OVER (PARTITION BY source
-        |                            ORDER BY n_chars DESC, doc_id ASC) AS rank
-        |  FROM documents)
-        |SELECT source, CAST(rank AS BIGINT) AS rank, doc_id, n_chars
-        |FROM r WHERE rank <= 5 ORDER BY source ASC, rank ASC""".stripMargin,
-    "q_sample_stratified" ->
-      """WITH s AS (SELECT source, doc_id,
-        |                  (doc_id * 3266489917) % 1000003 AS h FROM documents),
-        |r AS (SELECT source, doc_id,
-        |             row_number() OVER (PARTITION BY source
-        |                                ORDER BY h ASC, doc_id ASC) AS rank
-        |      FROM s)
-        |SELECT source, CAST(rank AS BIGINT) AS rank, doc_id
-        |FROM r WHERE rank <= 10
-        |ORDER BY source ASC, rank ASC""".stripMargin,
-    "q_quantile_sketch" ->
-      """WITH g AS (SELECT source, n_chars, count(*) AS c
-        |           FROM documents GROUP BY source, n_chars),
-        |w AS (SELECT source, n_chars,
-        |             sum(c) OVER (PARTITION BY source ORDER BY n_chars) AS cum,
-        |             sum(c) OVER (PARTITION BY source) AS n
-        |      FROM g)
-        |SELECT source,
-        |       min(CASE WHEN cum >= ceiling(0.25 * n) THEN n_chars END) AS p25,
-        |       min(CASE WHEN cum >= ceiling(0.5 * n) THEN n_chars END) AS p50,
-        |       min(CASE WHEN cum >= ceiling(0.9 * n) THEN n_chars END) AS p90,
-        |       min(CASE WHEN cum >= ceiling(0.99 * n) THEN n_chars END) AS p99,
-        |       CAST(max(n) AS BIGINT) AS n_docs
-        |FROM w GROUP BY source
-        |ORDER BY source ASC""".stripMargin,
-    "q_quantile_sketch_stored" ->
-      """WITH g AS (SELECT source, n_chars, count(*) AS c
-        |           FROM documents GROUP BY source, n_chars),
-        |w AS (SELECT source, n_chars,
-        |             sum(c) OVER (PARTITION BY source ORDER BY n_chars) AS cum,
-        |             sum(c) OVER (PARTITION BY source) AS n
-        |      FROM g)
-        |SELECT source,
-        |       min(CASE WHEN cum >= ceiling(0.25 * n) THEN n_chars END) AS p25,
-        |       min(CASE WHEN cum >= ceiling(0.5 * n) THEN n_chars END) AS p50,
-        |       min(CASE WHEN cum >= ceiling(0.9 * n) THEN n_chars END) AS p90,
-        |       min(CASE WHEN cum >= ceiling(0.99 * n) THEN n_chars END) AS p99,
-        |       CAST(max(n) AS BIGINT) AS n_docs
-        |FROM w GROUP BY source
-        |ORDER BY source ASC""".stripMargin,
-    "q_sample_weighted_grouped" ->
-      """WITH s AS (
-        |  SELECT source, doc_id,
-        |         ln((CAST((doc_id * 3266489917) % 1000003 AS DOUBLE) + 0.5) / 1000003.0)
-        |           / CAST(n_chars AS DOUBLE) AS aes_key
+        |  SELECT doc_id,
+        |         text ||
+        |         CASE WHEN doc_id % 6 = 0
+        |              THEN chr(10) || substr(text, 1, 40) || chr(10) || substr(text, 1, 40)
+        |              ELSE '' END ||
+        |         CASE WHEN doc_id % 8 = 0 AND doc_id % 6 <> 0
+        |              THEN chr(10) || substr(text, 1, 40) ELSE '' END AS t
         |  FROM documents),
-        |r AS (SELECT source, doc_id,
-        |             row_number() OVER (PARTITION BY source
-        |                                ORDER BY aes_key DESC, doc_id ASC) AS rank
-        |      FROM s)
-        |SELECT source, CAST(rank AS BIGINT) AS rank, doc_id
-        |FROM r WHERE rank <= 10
-        |ORDER BY source ASC, rank ASC""".stripMargin,
-    "q_sample_weighted" ->
-      """WITH s AS (
-        |  SELECT doc_id, source, n_chars,
-        |         ln((CAST((doc_id * 3266489917) % 1000003 AS DOUBLE) + 0.5) / 1000003.0)
-        |           / CAST(n_chars AS DOUBLE) AS aes_key
+        |m AS (
+        |  SELECT doc_id, t,
+        |         CAST(len(string_split(t, chr(10))) AS BIGINT) AS n_lines,
+        |         CAST(list_sum(list_transform(string_split(t, chr(10)),
+        |           l -> length(l))) AS BIGINT) AS line_chars,
+        |         CAST(list_sum(list_transform(string_split(t, chr(10)),
+        |           l -> length(l))) AS BIGINT)
+        |           - CAST(list_sum(list_transform(list_distinct(string_split(t, chr(10))),
+        |               l -> length(l))) AS BIGINT) AS dup_line_chars
+        |  FROM c),
+        |bg AS (
+        |  SELECT doc_id, w[i] || ' ' || w[i + 1] AS b
+        |  FROM (SELECT doc_id, w, unnest(range(1, len(w))) AS i
+        |        FROM (SELECT doc_id, string_split_regex(t, '[ \n]') AS w FROM c)
+        |        WHERE len(w) >= 2)),
+        |t2 AS (
+        |  SELECT doc_id, max(cnt * length(b)) AS top2_chars
+        |  FROM (SELECT doc_id, b, count(*) AS cnt FROM bg GROUP BY doc_id, b)
+        |  GROUP BY doc_id)
+        |SELECT m.doc_id, m.n_lines, m.line_chars, m.dup_line_chars,
+        |       CAST(coalesce(t2.top2_chars, 0) AS BIGINT) AS top2_chars,
+        |       CAST(CASE WHEN 5 * m.dup_line_chars <= m.line_chars THEN 1 ELSE 0 END AS BIGINT) AS r_dup_line,
+        |       CAST(CASE WHEN 5 * coalesce(t2.top2_chars, 0) <= m.line_chars THEN 1 ELSE 0 END AS BIGINT) AS r_top2,
+        |       CAST(CASE WHEN 5 * m.dup_line_chars <= m.line_chars
+        |                  AND 5 * coalesce(t2.top2_chars, 0) <= m.line_chars
+        |             THEN 1 ELSE 0 END AS BIGINT) AS keep
+        |FROM m LEFT JOIN t2 USING (doc_id)
+        |ORDER BY m.doc_id ASC""".stripMargin)),
+    Entry("q_text_repetition", (s, d) => TextAnalysisOps.repetitionSignals(s, d), Oracle(
+      """WITH b AS (
+        |  SELECT doc_id, CAST(len(w) - 1 AS BIGINT) AS n_bigrams,
+        |         unnest(list_transform(range(1, len(w)),
+        |                               i -> w[i] || chr(30) || w[i + 1])) AS bg
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
+        |  WHERE len(w) >= 2
+        |), c AS (
+        |  SELECT doc_id, n_bigrams, bg, count(*) AS c FROM b GROUP BY 1, 2, 3
+        |)
+        |SELECT doc_id, n_bigrams, max(c) AS top_bigram_n,
+        |       round(CAST(max(c) AS DOUBLE) / n_bigrams, 6) AS top_bigram_frac
+        |FROM c GROUP BY doc_id, n_bigrams
+        |ORDER BY doc_id ASC""".stripMargin), bench = false),
+    // the FULL CCNet: every language through its own LM + fences, union'd
+    Entry("q_curate_multilang", (s, d) => LangIdOps.curateMultilang(s, d), Oracle(
+      // the full per-language CCNet: one suffixed copy of the proven chain
+      // per language over its derived-label shard, union'd with the tag
+      {
+        val ctes = LangIdOps.langs.map { l =>
+          s"""end_$l AS (
+             |  SELECT d.doc_id, d.text
+             |  FROM documents d JOIN lpred p USING (doc_id)
+             |  WHERE p.predicted = '$l'),
+             |${curateCcnetCtes(s"end_$l", s"_$l")}""".stripMargin
+        }.mkString(",\n")
+        val branches = LangIdOps.langs.map { l =>
+          s"SELECT '$l' AS lang, q.* FROM (\n${curateCcnetSelect(s"_$l")}) q"
+        }.mkString("\nUNION ALL\n")
+        s"""WITH $langIdCtes,
+           |$ctes
+           |$branches
+           |ORDER BY lang ASC, doc_id ASC""".stripMargin
+      })),
+    // Dolma-style paragraph dedup: corpus-wide duplicated paragraphs
+    // (boilerplate) flagged per doc with char accounting + 20% keep gate
+    Entry("q_dedup_paragraph", (s, d) => DedupOps.dedupParagraph(s, d), Oracle(
+      """WITH c AS (
+        |  SELECT doc_id,
+        |         text ||
+        |         CASE WHEN doc_id % 4 = 0
+        |              THEN chr(10) || chr(10) || 'subscribe to the newsletter today'
+        |              ELSE '' END ||
+        |         CASE WHEN doc_id % 10 = 0
+        |              THEN chr(10) || chr(10) || 'all rights reserved legal notice'
+        |              ELSE '' END AS t
+        |  FROM documents),
+        |p AS (
+        |  SELECT doc_id, unnest(string_split(t, chr(10) || chr(10))) AS para
+        |  FROM c),
+        |hc AS (SELECT md5(para) AS h, count(*) AS cnt FROM p GROUP BY md5(para)),
+        |j AS (SELECT p.doc_id, p.para, hc.cnt FROM p JOIN hc ON md5(p.para) = hc.h)
+        |SELECT doc_id,
+        |       CAST(count(*) AS BIGINT) AS n_paras,
+        |       CAST(sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_paras,
+        |       CAST(sum(CASE WHEN cnt > 1 THEN length(para) ELSE 0 END) AS BIGINT) AS dup_chars,
+        |       CAST(sum(length(para)) AS BIGINT) AS total_chars,
+        |       CAST(CASE WHEN 5 * sum(CASE WHEN cnt > 1 THEN length(para) ELSE 0 END)
+        |                      <= sum(length(para)) THEN 1 ELSE 0 END AS BIGINT) AS keep
+        |FROM j GROUP BY doc_id
+        |ORDER BY doc_id ASC""".stripMargin)),
+    // the BOUNDED maintained LM (CCNet's published shape): sample-trained
+    // count logs folded + top-V pruned at serve, OOV floored to p = 0 —
+    // broadcast-safe by construction at any corpus scale; fully oracled
+    Entry("q_lm_bigram_stored", (s, d) => TextAnalysisOps.lmBigramScoreStored(s, d), Oracle(
+      // the bounded maintained LM: counts from the doc_id%2=0 training
+      // sample only, top-512 prune with the (c2 desc, w1, w2) total-order
+      // tie-break, OOV transitions floored to p = 0 — every stage exact SQL
+      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |big AS (
+        |  SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
+        |  FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i
+        |        FROM toks WHERE len(t) >= 2)),
+        |strain AS (SELECT * FROM big WHERE doc_id % 2 = 0),
+        |lc AS (SELECT w1, count(*) AS c1 FROM strain GROUP BY w1),
+        |bc AS (SELECT w1, w2, count(*) AS c2 FROM strain GROUP BY w1, w2),
+        |pruned AS (
+        |  SELECT w1, w2, c2 FROM (
+        |    SELECT *, row_number() OVER (ORDER BY c2 DESC, w1 ASC, w2 ASC) AS rn
+        |    FROM bc)
+        |  WHERE rn <= 512),
+        |model AS (
+        |  SELECT p.w1, p.w2, CAST(p.c2 AS DOUBLE) / lc.c1 AS p
+        |  FROM pruned p JOIN lc USING (w1)),
+        |per AS (
+        |  SELECT b.doc_id, coalesce(m.p, 0.0) AS p
+        |  FROM big b LEFT JOIN model m USING (w1, w2)),
+        |agg AS (
+        |  SELECT doc_id, count(*) AS n_bigrams,
+        |         floor(CAST(sum(CAST(floor(p * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
+        |               / count(*) + 0.5) / 1000000.0 AS avg_cond_p,
+        |         floor(min(p) * 1000000.0 + 0.5) / 1000000.0 AS min_cond_p
+        |  FROM per GROUP BY doc_id)
+        |SELECT d.doc_id, CAST(coalesce(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
+        |       CAST(coalesce(a.avg_cond_p, 0.0) AS DOUBLE) AS avg_cond_p,
+        |       CAST(coalesce(a.min_cond_p, 0.0) AS DOUBLE) AS min_cond_p
+        |FROM documents d LEFT JOIN agg a USING (doc_id)
+        |ORDER BY d.doc_id ASC""".stripMargin)),
+    // the COMPLETE A1.1 battery: all 13 published gates — line/paragraph
+    // dup fractions + char fractions, top-2/3/4-gram shares, duplicated
+    // n-gram char coverage n=5..10 (no-double-count position rule)
+    Entry("q_gopher_repetition_full", (s, d) => TextAnalysisOps.gopherRepetitionFull(s, d), Oracle(
+      // the COMPLETE A1.1 battery — generated per-n fragments, thirteen
+      // integer-ratio gates, planted both-sides structure
+      gopherRepetitionFullSql)),
+    Entry("q_select_dsir_stored_goldlang", (s, d) => MlOps.dsirSelectStored(s, d), Oracle(
+      // maintained-model form: bit-identical (integer count folds) — SAME oracle
+      """WITH toks AS (
+        |  SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
+        |occ AS (
+        |  SELECT doc_id, lang, unnest(t) AS f FROM toks
+        |  UNION ALL
+        |  SELECT doc_id, lang, t[i] || ' ' || t[i + 1] AS f
+        |  FROM (SELECT doc_id, lang, t, unnest(range(1, len(t))) AS i
+        |        FROM toks WHERE len(t) >= 2)),
+        |pair AS (
+        |  SELECT doc_id, lang, f, count(*) AS c FROM occ GROUP BY doc_id, lang, f),
+        |model AS (
+        |  SELECT f, sum(CASE WHEN lang = 'en' THEN c ELSE 0 END) AS ct,
+        |         sum(c) AS cr
+        |  FROM pair GROUP BY f),
+        |s AS (SELECT sum(ct) AS tt, sum(cr) AS tr, count(*) AS v FROM model),
+        |lnr AS (
+        |  SELECT f, CAST(floor(ln(
+        |      ((ct + 1.0) / CAST(tt + v AS DOUBLE)) /
+        |      ((cr + 1.0) / CAST(tr + v AS DOUBLE))) * 1000000000.0 + 0.5)
+        |    AS BIGINT) AS w
+        |  FROM model CROSS JOIN s),
+        |per AS (
+        |  SELECT doc_id, sum(c * w) AS lw_nano, sum(c) AS n_feat
+        |  FROM pair JOIN lnr USING (f) GROUP BY doc_id)
+        |SELECT d.doc_id, d.lang, d.source, CAST(p.n_feat AS BIGINT) AS n_feat,
+        |       CAST(p.lw_nano AS BIGINT) AS lw_nano,
+        |       round(CAST(p.lw_nano AS DOUBLE) / 1000000000.0 / p.n_feat, 6)
+        |         AS lw_avg
+        |FROM per p JOIN documents d USING (doc_id)
+        |ORDER BY CAST(p.lw_nano AS DOUBLE) / p.n_feat DESC, d.doc_id ASC
+        |LIMIT 100""".stripMargin)),
+    // block-scored MAIN-CONTENT extraction (jusText/trafilatura class):
+    // word floor + link-density fence per block, boilerplate dropped
+    Entry("q_html_main", (s, d) => TextOps.htmlMain(s, d), Oracle(
+      // main-content extraction: the same planted page, the same two
+      // closed-form gates (word floor + 20% link-density cross-mult)
+      (s"""WITH ${htmlMainCtes("documents")}
+          |SELECT doc_id, CAST(len(blocks) AS BIGINT) AS n_blocks,
+          |       CAST(len(kept) AS BIGINT) AS n_kept,
+          |       CAST(length(main_text) AS BIGINT) AS main_chars,
+          |       CAST(len(list_filter(string_split(main_text, ' '),
+          |         t -> t = 'the' OR t = 'a')) AS BIGINT) AS stop_words,
+          |       main_text
+          |FROM mt ORDER BY doc_id ASC""".stripMargin))),
+    Entry("q_html_extract", (s, d) => TextOps.htmlExtract(s, d), Oracle(
+      """SELECT doc_id,
+        |       regexp_extract('<html><body><div class="J-markdown-box">' || substr(text, 1, 80) || '</div></body></html>',
+        |                      '(?s)<div class="J-markdown-box">(.*?)</div>', 1) AS body
+        |FROM documents ORDER BY doc_id ASC""".stripMargin), bench = false),
+    // the ingest chain with the block scorer where the ref pulls one
+    // container — extraction feeds collapse/truncate/upsert/fingerprint
+    Entry("q_ingest_e2e_main", (s, d) => TextOps.ingestEndToEndMain(s, d), Oracle(
+      // the ingest chain with block-scored extraction where the reference
+      // pulls one container: versions -> pages -> main text -> collapse +
+      // truncate -> last-writer-wins -> fingerprint
+      (s"""WITH v AS (
+          |  SELECT 'https://corpus.local/' || source || '/' || doc_id AS url, doc_id, text,
+          |         CAST(1 AS BIGINT) AS version
+          |  FROM documents
+          |  UNION ALL
+          |  SELECT 'https://corpus.local/' || source || '/' || doc_id, doc_id, text || ' refreshed', 2
+          |  FROM documents WHERE doc_id % 5 = 0),
+          |${htmlMainCtes("v")},
+          |c AS (
+          |  SELECT url, doc_id, version, CAST(len(kept) AS BIGINT) AS n_kept,
+          |         substr(regexp_replace(main_text, ' +', ' ', 'g'), 1, 6000) AS body
+          |  FROM mt),
+          |u AS (
+          |  SELECT *, row_number() OVER (PARTITION BY url ORDER BY version DESC) AS rn FROM c)
+          |SELECT url, doc_id, version, n_kept,
+          |       CAST(length(body) AS BIGINT) AS body_len, md5(body) AS fp
+          |FROM u WHERE rn = 1
+          |ORDER BY url ASC""".stripMargin))),
+    Entry("q_ingest_e2e", (s, d) => TextOps.ingestEndToEnd(s, d), Oracle(
+      """WITH v AS (
+        |  SELECT 'https://corpus.local/' || source || '/' || doc_id AS url, doc_id, text,
+        |         CAST(1 AS BIGINT) AS version
+        |  FROM documents
+        |  UNION ALL
+        |  SELECT 'https://corpus.local/' || source || '/' || doc_id, doc_id, text || ' refreshed', 2
+        |  FROM documents WHERE doc_id % 5 = 0),
+        |c AS (
+        |  SELECT url, doc_id, version,
+        |         substr(regexp_replace(text, ' +', ' ', 'g'), 1, 6000) AS body
+        |  FROM v),
+        |u AS (
+        |  SELECT *, row_number() OVER (PARTITION BY url ORDER BY version DESC) AS rn FROM c)
+        |SELECT url, doc_id, version, CAST(length(body) AS BIGINT) AS body_len, md5(body) AS fp
+        |FROM u WHERE rn = 1
+        |ORDER BY url ASC""".stripMargin), bench = false),
+    // the Dolma-style STREAMING form over the maintained bloom store
+    // (r16): first-arrival flags, capacity-planned membership — fully
+    // oracled as of r17: the even-then-odd half order makes first
+    // arrival the deterministic (doc_id % 2, doc_id, pos) rank, and the
+    // fixture build require()s zero measured bloom false positives
+    Entry("q_dedup_paragraph_stream", (s, d) => DedupOps.paragraphStreamFixture(s, d), Oracle(
+      // corpus-wide paragraph counts over the planted boilerplate — all
+      // integer char accounting, 20% cross-multiplied gate
+      // the streaming form's first arrival is the deterministic
+      // (half parity, doc_id, pos) rank once the fixture's zero-FP
+      // require holds — the batch twin's planting, first-arrival flags
+      """WITH planted AS (
+        |  SELECT doc_id, text ||
+        |    CASE WHEN doc_id % 4 = 0
+        |         THEN chr(10) || chr(10) || 'subscribe to the newsletter today'
+        |         ELSE '' END ||
+        |    CASE WHEN doc_id % 10 = 0
+        |         THEN chr(10) || chr(10) || 'all rights reserved legal notice'
+        |         ELSE '' END AS text
+        |  FROM documents),
+        |paras AS (
+        |  SELECT doc_id, i - 1 AS pos, ps[i] AS para
+        |  FROM (SELECT doc_id, string_split(text, chr(10) || chr(10)) AS ps
+        |        FROM planted),
+        |       unnest(range(1, len(ps) + 1)) AS t(i)),
+        |fl AS (
+        |  SELECT doc_id, para,
+        |         row_number() OVER (PARTITION BY md5(para)
+        |           ORDER BY doc_id % 2, doc_id, pos) > 1 AS seen
+        |  FROM paras)
+        |SELECT doc_id,
+        |       CAST(count(*) AS BIGINT) AS n_paras,
+        |       CAST(sum(CASE WHEN seen THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_paras,
+        |       CAST(sum(CASE WHEN seen THEN length(para) ELSE 0 END) AS BIGINT) AS dup_chars,
+        |       CAST(sum(length(para)) AS BIGINT) AS total_chars,
+        |       CAST(CASE WHEN 5 * sum(CASE WHEN seen THEN length(para) ELSE 0 END)
+        |                  <= sum(length(para)) THEN 1 ELSE 0 END AS BIGINT) AS keep
+        |FROM fl GROUP BY doc_id
+        |ORDER BY doc_id ASC""".stripMargin)),
+    // the CONFIDENCE band (r16): integer score margin + unknown verdict
+    // below the fixed fence — CCNet's low-confidence routing
+    Entry("q_lang_id_margin", (s, d) => LangIdOps.langIdMargin(s, d), Oracle(
+      // margin = best - second-best integer score (a CASE over the argmax);
+      // verdict fences it at the fixed integer minimum — boundary-exact
+      s"""WITH $langIdCtes,
+         |mg AS (
+         |  SELECT doc_id, lang, predicted,
+         |    greatest(s_de, s_en, s_es, s_fr, s_zh) -
+         |    CASE predicted
+         |      WHEN 'de' THEN greatest(s_en, s_es, s_fr, s_zh)
+         |      WHEN 'en' THEN greatest(s_de, s_es, s_fr, s_zh)
+         |      WHEN 'es' THEN greatest(s_de, s_en, s_fr, s_zh)
+         |      WHEN 'fr' THEN greatest(s_de, s_en, s_es, s_zh)
+         |      ELSE greatest(s_de, s_en, s_es, s_fr) END AS margin
+         |  FROM lpred)
+         |SELECT doc_id, lang, predicted, margin,
+         |  CASE WHEN margin >= ${LangIdOps.DefaultMinMargin} THEN predicted
+         |       ELSE 'unknown' END AS verdict
+         |FROM mg ORDER BY doc_id ASC""".stripMargin)),
+    // the lang gate routed through the CONFIDENCE band (r16): en-verdict
+    // only — low-margin docs go to unknown and out, CCNet's §3.1 routing
+    Entry("q_curate_e2e_verdict", (s, d) => LangIdOps.curateE2eLangVerdict(s, d), Oracle(
+      // the confidence-banded gate: en verdict only — with predicted = 'en'
+      // the second-best score is the greatest of the non-en scores
+      (s"""WITH $langIdCtes,
+          |endocs AS (
+          |  SELECT d.doc_id, d.text
+          |  FROM documents d JOIN lpred p USING (doc_id)
+          |  WHERE p.predicted = 'en'
+          |    AND p.s_en - greatest(p.s_de, p.s_es, p.s_fr, p.s_zh)
+          |        >= ${LangIdOps.DefaultMinMargin}),
+          |""".stripMargin + curateCcnetCtes("endocs", "") + "\n" +
+        curateCcnetSelect("") + "\nORDER BY doc_id ASC"))),
+    // C4's published cleaning battery (Raffel et al. 2020 §2.2): line
+    // retention + page drops, planted both-sides like the Gopher gates
+    Entry("q_c4_rules", (s, d) => TextAnalysisOps.c4Rules(s, d), Oracle(
+      // C4's cleaning battery: planted pages, line retention, page flags
+      (s"""WITH $c4Ctes
+        |SELECT doc_id, n_lines,
+        |       CAST(len(kept) AS BIGINT) AS n_kept,
+        |       array_to_string(kept, chr(10)) AS kept_text,
+        |       CAST(CASE WHEN len(kept) >= 3 THEN 1 ELSE 0 END AS BIGINT) AS r_sentences,
+        |       CAST(CASE WHEN contains(t, 'badword1') OR contains(t, 'badword2')
+        |                   OR contains(t, 'badword3') THEN 0 ELSE 1 END AS BIGINT) AS r_badword,
+        |       CAST(CASE WHEN contains(t, 'lorem ipsum') THEN 0 ELSE 1 END AS BIGINT) AS r_lorem,
+        |       CAST(CASE WHEN contains(t, '{') THEN 0 ELSE 1 END AS BIGINT) AS r_brace,
+        |       CAST(CASE WHEN len(kept) >= 3 AND NOT ($c4PageDropSql)
+        |             THEN 1 ELSE 0 END AS BIGINT) AS keep
+        |FROM k ORDER BY doc_id ASC""".stripMargin))),
+    // the curation chain with C4 line cleaning as its FIRST stage
+    Entry("q_curate_e2e_c4", (s, d) => TextAnalysisOps.curateEndToEndC4(s, d), Oracle(
+      // the curation chain with C4 cleaning first: the q_curate_e2e tail
+      // over the RETAINED text (eval n-grams stay raw — the benchmark
+      // split is the contamination source, never cleaned training data)
+      (s"""WITH $c4Ctes,
+        |cleaned AS (
+        |  SELECT doc_id, source, array_to_string(kept, ' ') AS text
+        |  FROM k
+        |  WHERE len(kept) >= 3 AND NOT ($c4PageDropSql)),
+        |gated AS (
+        |  SELECT doc_id, source, text,
+        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+        |  FROM cleaned
+        |  WHERE source <> 'src19'
+        |    AND len(string_split(text, ' ')) >= 20
+        |    AND (doc_id * 2654435761) % 1000 <
+        |        (coalesce(TRY_CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT), length(source)) % 4 + 1) * 0.25 * 1000),
+        |ng AS (
+        |  SELECT doc_id,
+        |         unnest(list_distinct(list_transform(range(1, len(string_split(text, ' ')) - 2),
+        |           i -> list_aggregate(string_split(text, ' ')[i:i+3], 'string_agg', ' ')))) AS g
+        |  FROM gated),
+        |eng AS (
+        |  SELECT DISTINCT unnest(list_distinct(list_transform(range(1, len(string_split(text, ' ')) - 2),
+        |           i -> list_aggregate(string_split(text, ' ')[i:i+3], 'string_agg', ' ')))) AS g
+        |  FROM documents WHERE source = 'src19'),
+        |dirty AS (SELECT DISTINCT ng.doc_id FROM ng JOIN eng USING (g)),
+        |clean AS (
+        |  SELECT g.doc_id, g.source, g.n_tok, g.doc_id // 128 AS shard
+        |  FROM gated g LEFT JOIN dirty d ON g.doc_id = d.doc_id
+        |  WHERE d.doc_id IS NULL),
+        |packed AS (
+        |  SELECT doc_id, source, n_tok, shard,
+        |         CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
+        |  FROM clean)
+        |SELECT doc_id, source, n_tok, CAST(shard * 4294967296 + cum_before // 512 AS BIGINT) AS seq_id
+        |FROM packed ORDER BY doc_id ASC""".stripMargin))),
+    // Unicode-script mix + purity gate — the check that runs before
+    // (or alongside) statistical lang-id; planted non-Latin runs
+    Entry("q_script_detect", (s, d) => LangIdOps.scriptDetect(s, d), Oracle(
+      // script-block char counts + dominant script + Latin-purity gate;
+      // planted codepoints via chr() (the q_text_normalize convention)
+      """WITH p AS (
+        |  SELECT doc_id,
+        |         text ||
+        |         CASE WHEN doc_id % 6 = 0 THEN ' ' || chr(1087) || chr(1088) || chr(1080) || chr(1074) ELSE '' END ||
+        |         CASE WHEN doc_id % 7 = 0 THEN ' ' || chr(945) || chr(946) || chr(947) ELSE '' END ||
+        |         CASE WHEN doc_id % 10 = 0 THEN ' ' || chr(20013) || chr(25991) ELSE '' END ||
+        |         CASE WHEN doc_id % 11 = 0 THEN ' ' || chr(1606) || chr(1589) ELSE '' END ||
+        |         CASE WHEN doc_id % 13 = 0 THEN ' ' || regexp_replace(text, '[a-z]', chr(1103), 'g')
+        |                || ' ' || regexp_replace(text, '[a-z]', chr(1103), 'g') ELSE '' END AS t
+        |  FROM documents),
+        |m AS (
+        |  SELECT doc_id,
+        |         CAST(length(t) AS BIGINT) AS n_chars,
+        |         CAST(length(regexp_replace(t, '[^A-Za-z]', '', 'g')) AS BIGINT) AS n_latin,
+        |         CAST(length(regexp_replace(t, '[^\x{0400}-\x{04FF}]', '', 'g')) AS BIGINT) AS n_cyrillic,
+        |         CAST(length(regexp_replace(t, '[^\x{0370}-\x{03FF}]', '', 'g')) AS BIGINT) AS n_greek,
+        |         CAST(length(regexp_replace(t, '[^\x{4E00}-\x{9FFF}]', '', 'g')) AS BIGINT) AS n_cjk,
+        |         CAST(length(regexp_replace(t, '[^\x{0600}-\x{06FF}]', '', 'g')) AS BIGINT) AS n_arabic
+        |  FROM p)
+        |SELECT doc_id, n_chars, n_latin, n_cyrillic, n_greek, n_cjk, n_arabic,
+        |       CASE WHEN n_latin >= n_cyrillic AND n_latin >= n_greek
+        |              AND n_latin >= n_cjk AND n_latin >= n_arabic THEN 'latin'
+        |            WHEN n_cyrillic >= n_greek AND n_cyrillic >= n_cjk
+        |              AND n_cyrillic >= n_arabic THEN 'cyrillic'
+        |            WHEN n_greek >= n_cjk AND n_greek >= n_arabic THEN 'greek'
+        |            WHEN n_cjk >= n_arabic THEN 'cjk'
+        |            ELSE 'arabic' END AS script,
+        |       CAST(CASE WHEN 20 * (n_cyrillic + n_greek + n_cjk + n_arabic) <= n_chars
+        |             THEN 1 ELSE 0 END AS BIGINT) AS r_latin
+        |FROM m ORDER BY doc_id ASC""".stripMargin)),
+    // C4's three-sentence-span dedup: first arrival stays, later
+    // occurrences removed, retained text reassembled per doc
+    Entry("q_dedup_span3", (s, d) => DedupOps.dedupSpan3(s, d), Oracle(
+      // C4 span dedup: first-arrival min over (doc_id, pos) mirrored as
+      // min(doc_id·1e6 + pos); coverage via nested list lambdas
+      """WITH c AS (
+        |  SELECT doc_id,
+        |         array_to_string(w[1:6], ' ') || ' one.' || chr(10) ||
+        |         array_to_string(w[2:7], ' ') || ' two.' || chr(10) ||
+        |         array_to_string(w[3:8], ' ') || ' three.' || chr(10) ||
+        |         array_to_string(w[1:5], ' ') || ' four.' ||
+        |         CASE WHEN doc_id % 4 = 0 THEN chr(10) || 'we use cookies on this site.' || chr(10) || 'accept all cookies to continue.' || chr(10) || 'see our privacy policy for details.' ELSE '' END ||
+        |         CASE WHEN doc_id % 9 = 0 THEN chr(10) || array_to_string(w[1:6], ' ') || ' one.' || chr(10) || array_to_string(w[2:7], ' ') || ' two.' || chr(10) || array_to_string(w[3:8], ' ') || ' three.' ELSE '' END AS t
+        |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)),
+        |sa AS (SELECT doc_id, string_split(t, chr(10)) AS sents FROM c),
+        |spans AS (
+        |  SELECT doc_id, j AS pos, md5(array_to_string(sents[j:j+2], chr(10))) AS h
+        |  FROM (SELECT doc_id, sents, unnest(range(1, len(sents) - 1)) AS j FROM sa)),
+        |frst AS (SELECT h, min(doc_id * 1000000 + pos) AS f FROM spans GROUP BY h),
+        |removed AS (
+        |  SELECT doc_id, list(pos) AS rem
+        |  FROM spans JOIN frst USING (h)
+        |  WHERE doc_id * 1000000 + pos <> f
+        |  GROUP BY doc_id),
+        |k AS (
+        |  SELECT sa.doc_id, sents, coalesce(r.rem, CAST([] AS BIGINT[])) AS rem
+        |  FROM sa LEFT JOIN removed r ON sa.doc_id = r.doc_id),
+        |k2 AS (
+        |  SELECT doc_id, CAST(len(sents) AS BIGINT) AS n_sents, sents,
+        |         list_filter(range(1, len(sents) + 1), i ->
+        |           len(list_filter(rem, p -> i >= p AND i <= p + 2)) = 0) AS keptidx
+        |  FROM k)
+        |SELECT doc_id, n_sents,
+        |       CAST(n_sents - len(keptidx) AS BIGINT) AS n_removed_sents,
+        |       coalesce(array_to_string(list_transform(keptidx, i -> sents[i]), chr(10)), '') AS kept_text
+        |FROM k2 ORDER BY doc_id ASC""".stripMargin)),
+    // WARC member round-trip (ISO 28500, the Common Crawl delivery
+    // format): planted per-host members re-split, headers parsed,
+    // Content-Length validated — the archive-ingestion stage a 100 TB
+    // pipeline runs where the reference fetches one URL at a time
+    Entry("q_warc_parse", (s, d) => WarcOps.warcParse(s, d), Oracle(
+      // closed-form mirror of the WARC round-trip: the oracle rebuilds the
+      // payload string directly and measures it; the engine must re-split
+      // the member, parse headers, and validate lengths to land on the
+      // same numbers (the q_crawl_sitemap convention — no WARC parsing on
+      // the oracle side)
+      """WITH p AS (
+        |  SELECT source AS host,
+        |         'https://' || source || '.example/' || lang || '/p' ||
+        |           CAST(doc_id AS VARCHAR) AS url,
+        |         doc_id,
+        |         'HTTP/1.1 200 OK' || chr(13) || chr(10) ||
+        |           'Content-Type: text/html' || chr(13) || chr(10) ||
+        |           chr(13) || chr(10) ||
+        |           '<html><head><title>' || source || '/p' ||
+        |           CAST(doc_id AS VARCHAR) || '</title></head><body><p>' ||
+        |           text || '</p></body></html>' AS payload
         |  FROM documents)
-        |SELECT doc_id, source, n_chars FROM s
-        |ORDER BY aes_key DESC, doc_id ASC
-        |LIMIT 200""".stripMargin,
-    "q_key_skew" ->
-      """WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY user_id),
-        |t AS (SELECT count(*) AS total FROM events)
-        |SELECT user_id, cnt, cnt * 1000000 // total AS share_ppm,
-        |       (cnt * 32 + total - 1) // total AS rec_salt
-        |FROM c CROSS JOIN t
-        |ORDER BY cnt DESC, user_id ASC LIMIT 10""".stripMargin,
-    // the stored twin is exact below sketch saturation ⇒ identical SQL
-    "q_key_skew_stored" ->
-      """WITH c AS (SELECT user_id, count(*) AS cnt FROM events GROUP BY user_id),
-        |t AS (SELECT count(*) AS total FROM events)
-        |SELECT user_id, cnt, cnt * 1000000 // total AS share_ppm,
-        |       (cnt * 32 + total - 1) // total AS rec_salt
-        |FROM c CROSS JOIN t
-        |ORDER BY cnt DESC, user_id ASC LIMIT 10""".stripMargin,
-    "q_join_skew" ->
-      """WITH u AS (SELECT user_id AS u_id, count(*) AS u_events
-        |           FROM events GROUP BY user_id)
-        |SELECT e.event_id, e.user_id, e.value, u.u_events
-        |FROM events e JOIN u ON e.user_id = u.u_id
-        |ORDER BY event_id ASC""".stripMargin,
-    // the spread LUT is generated from the same code the Spark plan uses;
-    // every arithmetic step mirrors ZorderFunctions.widthBucket exactly
-    // (same IEEE op order), so the comparison is bit-for-bit
-    "q_zorder_value" -> {
-      val lut = (0 until graft.functions.ZorderFunctions.Buckets)
-        .map(graft.functions.ZorderFunctions.spread).mkString("[", ", ", "]")
-      s"""WITH mm AS (SELECT min(value) AS vlo, max(value) AS vhi,
-         |                   min(CAST(user_id AS DOUBLE)) AS ulo,
-         |                   max(CAST(user_id AS DOUBLE)) AS uhi FROM events),
-         |b AS (SELECT event_id,
-         |  CASE WHEN vhi <= vlo THEN 0 ELSE
-         |    CAST(least(greatest(floor((value - vlo) * 256.0 / (vhi - vlo)), 0.0), 255.0) AS BIGINT)
-         |  END AS vb,
-         |  CASE WHEN uhi <= ulo THEN 0 ELSE
-         |    CAST(least(greatest(floor((CAST(user_id AS DOUBLE) - ulo) * 256.0 / (uhi - ulo)), 0.0), 255.0) AS BIGINT)
-         |  END AS ub
-         |  FROM events CROSS JOIN mm)
-         |SELECT event_id, vb, ub,
-         |       list_extract($lut, CAST(vb AS INT) + 1) * 2 +
-         |       list_extract($lut, CAST(ub AS INT) + 1) AS z
-         |FROM b ORDER BY event_id ASC""".stripMargin
-    },
-    "q_join_semi_bloom" ->
-      """SELECT r.range AS probe_id FROM range(1000) r
-        |WHERE r.range IN (SELECT doc_id FROM documents)
-        |ORDER BY probe_id ASC""".stripMargin,
-    "q_join_interval" ->
-      """WITH p AS (SELECT event_id AS p_id, ts AS pts FROM events
-        |           WHERE event_type = 'purchase'),
-        |     c AS (SELECT event_id AS c_id, ts AS cts FROM events
-        |           WHERE event_type = 'click')
-        |SELECT p_id, c_id, date_diff('second', cts, pts) AS gap_s
-        |FROM p JOIN c ON abs(date_diff('second', cts, pts)) <= 60
-        |ORDER BY p_id ASC, c_id ASC""".stripMargin,
-    "q_join_bloom" ->
-      """SELECT l.l_orderkey, CAST(l.l_linenumber AS BIGINT) AS l_linenumber,
-        |       round(l.l_extendedprice * (1 - l.l_discount), 4) AS rev, o.o_orderdate
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderpriority = '1-URGENT' AND o.o_orderstatus = 'F'
-        |ORDER BY l_orderkey ASC, l_linenumber ASC""".stripMargin,
-    "q_join_broadcast" ->
-      """SELECT n_nationkey, n_name, r_name
-        |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |ORDER BY n_nationkey ASC""".stripMargin,
-    "q_join_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey ASC""".stripMargin,
-    "q_join_anti" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey ASC""".stripMargin,
-    "q_join_outer" ->
-      """SELECT o_orderkey, count(l_orderkey) AS n_items,
-        |       coalesce(CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE), 0.0) AS sum_qty
-        |FROM orders LEFT JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderkey ORDER BY o_orderkey ASC""".stripMargin,
-    "q_join_range" ->
-      """SELECT l_orderkey, l_linenumber, l_shipdate, o_orderdate
-        |FROM lineitem JOIN orders
-        |  ON l_orderkey = o_orderkey
-        | AND l_shipdate >= o_orderdate
-        | AND l_shipdate <= o_orderdate + INTERVAL 60 DAY
-        |ORDER BY l_orderkey ASC, l_linenumber ASC""".stripMargin,
-    "q_join_asof" ->
-      """WITH p AS (SELECT event_id AS p_id, user_id, ts AS p_ts FROM events WHERE event_type = 'purchase'),
-        |     c AS (SELECT event_id AS c_id, user_id AS c_user, ts AS c_ts FROM events WHERE event_type = 'click'),
-        |     j AS (SELECT p.p_id, p.user_id, p.p_ts, c.c_id, c.c_ts,
-        |                  row_number() OVER (PARTITION BY p.p_id ORDER BY c.c_ts DESC NULLS LAST, c.c_id DESC NULLS LAST) AS rn
-        |           FROM p LEFT JOIN c ON p.user_id = c.c_user AND c.c_ts <= p.p_ts)
-        |SELECT p_id, user_id, p_ts, c_id, c_ts FROM j WHERE rn = 1
-        |ORDER BY p_id ASC""".stripMargin,
-    // ---- windows ----
-    "q_window_rank" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn, rnk, drnk FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |         row_number() OVER w AS rn, rank() OVER w AS rnk, dense_rank() OVER w AS drnk
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC))
-        |WHERE rn <= 3
-        |ORDER BY o_custkey ASC, rn ASC""".stripMargin,
-    "q_window_running" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-        |       CAST(sum(CAST(round(o_totalprice * 1000000.0) AS BIGINT))
-        |              OVER (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
-        |                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / 1000000.0 AS running_total
-        |FROM orders ORDER BY o_custkey ASC, o_orderkey ASC""".stripMargin,
-    "q_window_lag" ->
-      """SELECT user_id, event_id, ts,
-        |       lag(event_id, 1) OVER w AS prev_event,
-        |       lead(event_id, 1) OVER w AS next_event,
-        |       CAST(floor(date_part('epoch', ts)) AS BIGINT)
-        |         - CAST(floor(date_part('epoch', lag(ts, 1) OVER w)) AS BIGINT) AS gap_sec
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-        |ORDER BY user_id ASC, event_id ASC""".stripMargin,
-    "q_window_range" ->
-      """SELECT user_id, event_id, ts,
-        |       count(*) OVER w AS n_last_hour,
-        |       CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) OVER w AS DOUBLE) / 1000000.0 AS sum_last_hour
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id
-        |             ORDER BY CAST(floor(date_part('epoch', ts)) AS BIGINT)
-        |             RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id ASC, event_id ASC""".stripMargin,
-    "q_window_firstlast" ->
-      """SELECT user_id, event_id, event_type,
-        |       first_value(event_type) OVER w AS first_type,
-        |       last_value(event_type) OVER w AS last_type
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY user_id ASC, event_id ASC""".stripMargin,
-    "q_window_ntile" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice,
-        |       ntile(4) OVER (PARTITION BY o_orderstatus
-        |                      ORDER BY o_totalprice ASC, o_orderkey ASC) AS quartile
-        |FROM orders ORDER BY o_orderkey ASC""".stripMargin,
-    "q_pivot" ->
-      """SELECT date_trunc('day', ts) AS day,
-        |       count(*) FILTER (WHERE event_type = 'click') AS click,
-        |       count(*) FILTER (WHERE event_type = 'error') AS error,
-        |       count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-        |       count(*) FILTER (WHERE event_type = 'signup') AS signup,
-        |       count(*) FILTER (WHERE event_type = 'view') AS view
-        |FROM events GROUP BY date_trunc('day', ts) ORDER BY day ASC""".stripMargin,
-    "q_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, metric, val FROM (
-        |  SELECT l_orderkey, l_linenumber, 'discount' AS metric, l_discount AS val FROM lineitem
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, 'price', l_extendedprice FROM lineitem
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, 'quantity', l_quantity FROM lineitem)
-        |ORDER BY l_orderkey ASC, l_linenumber ASC, metric ASC""".stripMargin,
-    "q_agg_stats" ->
-      """SELECT o_orderstatus,
-        |       round(stddev_samp(o_totalprice), 2) AS sd_price,
-        |       round(corr(o_totalprice, o_custkey), 6) AS corr_price_cust,
-        |       count(*) AS n
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus ASC""".stripMargin,
-    // ---- sorts / set ops / scalars ----
-    "q_sort_limit" ->
-      "SELECT o_orderkey, o_totalprice FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10",
-    "q_set_union" ->
-      """SELECT nationkey, kind, count(*) AS n FROM (
-        |  SELECT CAST(c_nationkey AS BIGINT) AS nationkey, 'customer' AS kind FROM customer
-        |  UNION ALL
-        |  SELECT CAST(s_nationkey AS BIGINT), 'supplier' FROM supplier)
-        |GROUP BY nationkey, kind
-        |ORDER BY nationkey ASC, kind ASC""".stripMargin,
-    "q_set_intersect" ->
-      """SELECT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer
-        |INTERSECT
-        |SELECT CAST(s_nationkey AS BIGINT) FROM supplier
-        |ORDER BY nationkey ASC""".stripMargin,
-    "q_set_except" ->
-      """SELECT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer
-        |EXCEPT
-        |SELECT CAST(s_nationkey AS BIGINT) FROM supplier
-        |ORDER BY nationkey ASC""".stripMargin,
-    "q_scalar_bundle" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       CAST(year(l_shipdate) AS BIGINT) AS ship_year,
-        |       CAST(month(l_shipdate) AS BIGINT) AS ship_month,
-        |       date_trunc('month', l_shipdate) AS ship_month_start,
-        |       CAST(CAST(round(l_extendedprice * (1.0 - l_discount) * 100.0) AS BIGINT) AS DOUBLE) / 100.0 AS discounted,
-        |       lower(l_returnflag) AS flag_lower,
-        |       l_returnflag || '/' || l_linestatus AS flag_status,
-        |       CAST(length(l_returnflag) AS BIGINT) AS flag_len,
-        |       abs(l_quantity) AS abs_qty
-        |FROM lineitem ORDER BY l_orderkey ASC, l_linenumber ASC""".stripMargin,
-  )
+        |SELECT host, url,
+        |       '<urn:md5:' || md5(url) || '>' AS rec_id,
+        |       '2026-01-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') ||
+        |         'T' || lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0') ||
+        |         ':00:00Z' AS warc_date,
+        |       'response' AS warc_type,
+        |       CAST(length(payload) +
+        |            CASE WHEN doc_id % 13 = 7 THEN 1 ELSE 0 END AS BIGINT)
+        |         AS content_length,
+        |       CAST(length(payload) AS BIGINT) AS payload_len,
+        |       '200' AS http_status,
+        |       CAST(CASE WHEN doc_id % 13 = 7 THEN 0 ELSE 1 END AS BIGINT)
+        |         AS len_ok
+        |FROM p
+        |ORDER BY url ASC""".stripMargin)),
+    // WET-style text conversion of the length-valid 200 responses —
+    // envelope dropped, markup stripped, whitespace collapsed
+    Entry("q_warc_wet", (s, d) => WarcOps.warcWet(s, d), Oracle(
+      // WET mirror: title + body text with markup gone — only the
+      // length-valid records survive, so the planted corrupt rows are out
+      """WITH w AS (
+        |  SELECT 'https://' || source || '.example/' || lang || '/p' ||
+        |           CAST(doc_id AS VARCHAR) AS url,
+        |         trim(regexp_replace(
+        |           source || '/p' || CAST(doc_id AS VARCHAR) || ' ' || text,
+        |           ' +', ' ', 'g')) AS wet_text
+        |  FROM documents WHERE doc_id % 13 <> 7)
+        |SELECT url, wet_text,
+        |       CAST(len(str_split(wet_text, ' ')) AS BIGINT) AS n_words
+        |FROM w
+        |ORDER BY url ASC""".stripMargin)),
+    // CDX capture-index planning (CDXJ lines, real SURT + from_json
+    // round-trip): latest good capture per urlkey — what to fetch
+    Entry("q_cdx_latest", (s, d) => CdxOps.cdxLatest(s, d), Oracle(
+      // closed-form mirror of the CDX plan: which capture wins is pure
+      // doc_id arithmetic on the oracle side; the engine must SURT, split
+      // and from_json its way to the same row
+      """WITH d AS (
+        |  SELECT doc_id, source, lang, text, n_chars,
+        |         CASE WHEN doc_id % 9 = 0 OR doc_id % 10 = 0
+        |              THEN 1 ELSE 2 END AS chosen
+        |  FROM documents)
+        |SELECT 'example,' || source || ')/' || lang || '/p' ||
+        |         CAST(doc_id AS VARCHAR) AS urlkey,
+        |       'https://' || source || '.example/' || lang || '/p' ||
+        |         CAST(doc_id AS VARCHAR) AS url,
+        |       '202601' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') ||
+        |         lpad(CAST(chosen * 8 AS VARCHAR), 2, '0') || '0000' AS ts,
+        |       md5(text || CASE WHEN doc_id % 4 = 0 THEN '1'
+        |                        ELSE CAST(chosen AS VARCHAR) END) AS digest,
+        |       CAST(n_chars + chosen AS BIGINT) AS length
+        |FROM d
+        |ORDER BY urlkey ASC""".stripMargin)),
+    // revisit collapse: captures vs distinct digests per urlkey — the
+    // storage-dedup ratio an archive reader plans against
+    Entry("q_cdx_revisit", (s, d) => CdxOps.cdxRevisit(s, d), Oracle(
+      // revisit mirror: good-capture and distinct-digest counts in closed
+      // form (two good captures unless the third was a 404/PDF; one
+      // distinct digest on the % 4 revisit plant)
+      """WITH d AS (
+        |  SELECT doc_id, source, lang,
+        |         CASE WHEN doc_id % 9 = 0 OR doc_id % 10 = 0
+        |              THEN 1 ELSE 2 END AS n_captures
+        |  FROM documents)
+        |SELECT 'example,' || source || ')/' || lang || '/p' ||
+        |         CAST(doc_id AS VARCHAR) AS urlkey,
+        |       CAST(n_captures AS BIGINT) AS n_captures,
+        |       CAST(CASE WHEN n_captures = 1 OR doc_id % 4 = 0
+        |                 THEN 1 ELSE 2 END AS BIGINT) AS n_unique,
+        |       CAST(CASE WHEN n_captures = 2 AND doc_id % 4 = 0
+        |                 THEN 1 ELSE 0 END AS BIGINT) AS has_revisit
+        |FROM d
+        |ORDER BY urlkey ASC""".stripMargin)),
+    // export shard planning: content-addressed hash sharding + balance
+    // report — the layout stage between curation and the trainer
+    Entry("q_shard_assign", (s, d) => TextAnalysisOps.shardAssign(s, d), Oracle(
+      // hash-shard mirror: the last md5 nibble is the shard in both
+      // engines; balance share is integer ppm against the heaviest shard
+      """WITH a AS (
+        |  SELECT doc_id, n_chars,
+        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+        |         CAST(instr('0123456789abcdef',
+        |           substr(md5(CAST(doc_id AS VARCHAR)), 32, 1)) - 1 AS BIGINT)
+        |           AS shard
+        |  FROM documents),
+        |g AS (
+        |  SELECT shard, count(*) AS n_docs, sum(n_tok) AS n_tokens,
+        |         sum(n_chars) AS n_bytes, min(doc_id) AS min_doc
+        |  FROM a GROUP BY shard)
+        |SELECT shard, CAST(n_docs AS BIGINT) AS n_docs,
+        |       CAST(n_tokens AS BIGINT) AS n_tokens,
+        |       CAST(n_bytes AS BIGINT) AS n_bytes,
+        |       CAST(min_doc AS BIGINT) AS min_doc,
+        |       CAST((1000000 * n_tokens) // max(n_tokens) OVER () AS BIGINT)
+        |         AS share_ppm
+        |FROM g ORDER BY shard ASC""".stripMargin)),
+    // SoftDeDup-style reweighting: 1/|cluster| sampling weight (ppm,
+    // integer division) over the CC clusters instead of hard removal
+    Entry("q_dedup_soft", (s, d) => DedupOps.dedupSoft(s, d), Oracle(
+      // SoftDeDup weights: the CC closure + component sizes + the same
+      // integer ppm division; the stored twin folds exactly
+      SoftDedupOracle)),
+    // the weights served from the maintained component store — the
+    // reweighting a pipeline actually runs (live closure = backfill)
+    Entry("q_dedup_soft_stored", (s, d) => DedupOps.dedupSoftStoredFixture(s, d),
+      Oracle(SoftDedupOracle)),
+    // WAT-style anchor extraction from the planted full pages — the
+    // parse stage between archive and the link-graph family
+    Entry("q_wat_links", (s, d) => WarcOps.watLinks(s, d), Oracle(
+      // WAT mirror: the planted page's anchor inventory rebuilt
+      // arithmetically — nav triple, % 3 details link, six % 5
+      // boilerplate links, footer pair, positions computed in closed form
+      """WITH d AS (
+        |  SELECT doc_id,
+        |         CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS hasd,
+        |         CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END AS hasp
+        |  FROM documents),
+        |links AS (
+        |  SELECT doc_id, 0 AS pos, '/' AS href, 'home' AS anchor FROM d
+        |  UNION ALL SELECT doc_id, 1, '/about', 'about' FROM d
+        |  UNION ALL SELECT doc_id, 2, '/products', 'products' FROM d
+        |  UNION ALL SELECT doc_id, 3, '/d', 'details' FROM d WHERE hasd = 1
+        |  UNION ALL SELECT doc_id, 3 + hasd + r.i, '/p', 'more link text here'
+        |    FROM d CROSS JOIN (SELECT unnest(range(6)) AS i) r WHERE hasp = 1
+        |  UNION ALL SELECT doc_id, 3 + hasd + 6 * hasp, '/privacy', 'privacy' FROM d
+        |  UNION ALL SELECT doc_id, 4 + hasd + 6 * hasp, '/terms', 'terms' FROM d)
+        |SELECT doc_id, CAST(pos AS BIGINT) AS pos, href, anchor
+        |FROM links
+        |ORDER BY doc_id ASC, pos ASC""".stripMargin)),
+    // DoReMi-class learned mixture: multiplicative weights on integer
+    // excess quality, uniform smoothing, trajectory-average output
+    Entry("q_domain_doremi", (s, d) => TextAnalysisOps.domainDoremi(s, d), Oracle(
+      // DoReMi loop mirrored round by round in generated CTEs
+      doremiOracle(5))),
+    // T5 span corruption: content-addressed masking, maximal-run spans,
+    // sentinel input/target pairs — the denoising-objective data prep
+    Entry("q_span_corrupt", (s, d) => TextAnalysisOps.spanCorrupt(s, d), Oracle(
+      // span-corruption mirror: same md5-nibble mask, lag/run windows,
+      // ordered FILTER string_aggs — byte-identical pairs by construction
+      """WITH t AS (
+        |  SELECT doc_id, string_split(text, ' ') AS toks,
+        |         unnest(range(len(string_split(text, ' ')))) AS p
+        |  FROM documents),
+        |tok AS (
+        |  SELECT doc_id, p, toks[p + 1] AS tok,
+        |         CASE WHEN instr('0123456789abcdef',
+        |             substr(md5(CAST(doc_id AS VARCHAR) || ':' ||
+        |               CAST(p AS VARCHAR)), 32, 1)) - 1 < 3
+        |           THEN 1 ELSE 0 END AS m
+        |  FROM t),
+        |w AS (
+        |  SELECT *, CASE WHEN m = 1 AND
+        |        coalesce(lag(m) OVER (PARTITION BY doc_id ORDER BY p), 0) = 0
+        |      THEN 1 ELSE 0 END AS fos
+        |  FROM tok),
+        |k AS (
+        |  SELECT *, sum(fos) OVER (PARTITION BY doc_id ORDER BY p) AS kk
+        |  FROM w),
+        |pieces AS (
+        |  SELECT doc_id, p, m, kk,
+        |         CASE WHEN m = 0 THEN tok
+        |              WHEN fos = 1 THEN '<extra_id_' || CAST(kk - 1 AS VARCHAR) || '>'
+        |         END AS ip,
+        |         CASE WHEN fos = 1 THEN '<extra_id_' || CAST(kk - 1 AS VARCHAR) || '> ' || tok
+        |              WHEN m = 1 THEN tok
+        |         END AS tp
+        |  FROM k)
+        |SELECT doc_id,
+        |       coalesce(string_agg(ip, ' ' ORDER BY p) FILTER (WHERE ip IS NOT NULL), '') AS input_text,
+        |       coalesce(string_agg(tp, ' ' ORDER BY p) FILTER (WHERE tp IS NOT NULL), '') AS target_text,
+        |       CAST(coalesce(max(kk), 0) AS BIGINT) AS n_spans,
+        |       CAST(sum(m) AS BIGINT) AS n_masked
+        |FROM pieces
+        |GROUP BY doc_id
+        |ORDER BY doc_id ASC""".stripMargin)),
+    // FIM infilling prep: content-addressed 50% gate + ordered cuts,
+    // PSM rendering — pure map-side projection
+    Entry("q_fim_transform", (s, d) => TextAnalysisOps.fimTransform(s, d), Oracle(
+      // FIM mirror: same md5-nibble gate and cuts, list slicing in PSM
+      // order — double-space seams at empty segments are part of the
+      // contract on both sides
+      """WITH t AS (
+        |  SELECT doc_id, string_split(text, ' ') AS tk,
+        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
+        |         CAST(instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':' || 'c1'), 32, 1)) - 1 AS BIGINT) AS na,
+        |         CAST(instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':' || 'c2'), 32, 1)) - 1 AS BIGINT) AS nb,
+        |         CASE WHEN instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':' || 'fim'), 32, 1)) - 1 < 8
+        |              THEN 1 ELSE 0 END AS fim
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, tk, n_tok, fim,
+        |         least(na * n_tok // 16, nb * n_tok // 16) AS c1,
+        |         greatest(na * n_tok // 16, nb * n_tok // 16) AS c2
+        |  FROM t)
+        |SELECT doc_id, CAST(fim AS BIGINT) AS fim, n_tok,
+        |       CAST(c1 AS BIGINT) AS c1, CAST(c2 AS BIGINT) AS c2,
+        |       CASE WHEN fim = 0 THEN array_to_string(tk, ' ')
+        |            ELSE '<PRE> ' || coalesce(array_to_string(tk[1:c1], ' '), '') ||
+        |                 ' <SUF> ' || coalesce(array_to_string(tk[c2+1:n_tok], ' '), '') ||
+        |                 ' <MID> ' || coalesce(array_to_string(tk[c1+1:c2], ' '), '')
+        |       END AS rendered
+        |FROM c
+        |ORDER BY doc_id ASC""".stripMargin)),
+    // the published stage-wise removal table: docs/tokens surviving each
+    // curation stage + per-stage keep ppm — same gates as the entries
+    Entry("q_curation_funnel", (s, d) => TextAnalysisOps.curationFunnel(s, d), Oracle(
+      // funnel mirror: each stage flag is the PROVEN oracle fragment of
+      // its own entry (lang-id CTEs, gopher battery, repetition plants,
+      // md5 first-arrival, n-gram hits, mix bucket), cumulative products,
+      // a 7-row union, and the lag-window keep ppm
+      (s"""WITH $langIdCtes,
+          |""".stripMargin + funnelFlagCtes("documents") + ",\n" +
+        s"""|agg AS (
+        |  SELECT count(*) AS n0, sum(n_tok) AS t0,
+        |         sum(k1) AS n1, sum(n_tok * k1) AS t1,
+        |         sum(k2) AS n2, sum(n_tok * k2) AS t2,
+        |         sum(k3) AS n3, sum(n_tok * k3) AS t3,
+        |         sum(k4) AS n4, sum(n_tok * k4) AS t4,
+        |         sum(k5) AS n5, sum(n_tok * k5) AS t5,
+        |         sum(k6) AS n6, sum(n_tok * k6) AS t6
+        |  FROM kk),
+        |st AS (
+        |  SELECT 0 AS stage, 'raw' AS stage_name, n0 AS n_docs, t0 AS n_tokens FROM agg
+        |  UNION ALL SELECT 1, 'lang_id', n1, t1 FROM agg
+        |  UNION ALL SELECT 2, 'gopher_rules', n2, t2 FROM agg
+        |  UNION ALL SELECT 3, 'gopher_repetition', n3, t3 FROM agg
+        |  UNION ALL SELECT 4, 'dedup_exact', n4, t4 FROM agg
+        |  UNION ALL SELECT 5, 'decontaminate', n5, t5 FROM agg
+        |  UNION ALL SELECT 6, 'domain_mix', n6, t6 FROM agg)
+        |SELECT CAST(stage AS BIGINT) AS stage, stage_name,
+        |       CAST(n_docs AS BIGINT) AS n_docs,
+        |       CAST(n_tokens AS BIGINT) AS n_tokens,
+        |       CAST(CASE WHEN lag(n_docs) OVER (ORDER BY stage) IS NULL THEN 1000000
+        |                 WHEN lag(n_docs) OVER (ORDER BY stage) = 0 THEN 0
+        |                 ELSE n_docs * 1000000 // lag(n_docs) OVER (ORDER BY stage)
+        |            END AS BIGINT) AS kept_ppm
+        |FROM st
+        |ORDER BY stage ASC""".stripMargin))),
+    // annealing-phase plan: exact 90th-percentile quality fence routes
+    // the top slice to the final training stretch + a 10% replay slice
+    Entry("q_anneal_mix", (s, d) => TextAnalysisOps.annealMix(s, d), Oracle(
+      // anneal mirror: the shared rounded quality, the exact order
+      // statistic at rank floor(0.9·(n−1)) (the q_quantile_exact
+      // convention), strict-above routing, and the coprime replay bucket
+      """WITH q AS (
+        |  SELECT doc_id,
+        |         round(CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
+        |             / len(string_split(text, ' ')) * 0.5 +
+        |           least(1.0, CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0) * 0.5, 6)
+        |           AS quality
+        |  FROM documents),
+        |n AS (SELECT count(*) AS c FROM q),
+        |s AS (SELECT quality AS v, row_number() OVER (ORDER BY quality) AS rn FROM q),
+        |f AS (
+        |  SELECT s.v AS fence FROM s CROSS JOIN n
+        |  WHERE s.rn = CAST(floor(0.9 * (n.c - 1)) AS BIGINT) + 1)
+        |SELECT q.doc_id, q.quality,
+        |       CASE WHEN q.quality > f.fence THEN 'anneal' ELSE 'main' END AS phase,
+        |       CAST(CASE WHEN q.quality > f.fence
+        |                  OR (q.doc_id * 1540483477) % 1000 < 100
+        |             THEN 1 ELSE 0 END AS BIGINT) AS anneal_epoch
+        |FROM q CROSS JOIN f
+        |ORDER BY q.doc_id ASC""".stripMargin)),
+    // data-constrained scaling check: epochs per domain under the
+    // learned mixture and a 4-pass budget; ~4-epoch value-cliff flag
+    Entry("q_epoch_plan", (s, d) => TextAnalysisOps.epochPlan(s, d), Oracle(
+      // the DoReMi CTEs + token sums + the 4-pass budget arithmetic
+      epochPlanOracle(5))),
+    // the funnel maintained as a STREAM over the bloom store: per-batch
+    // stage totals appended, served by summing the log — fully oracled
+    // as of r17 against the batch report SQL (ordered halves + the
+    // build's require()'d zero-FP measurement make the log fold
+    // algebraically the batch fold)
+    Entry("q_curation_funnel_stream", (s, d) => TextAnalysisOps.funnelStreamFixture(s, d), Oracle(
+      // the STREAM twin faces the SAME report oracle as of r17: ordered
+      // halves + zero bloom false positives make the log fold
+      // algebraically the batch fold (no FN by construction; FP = 0 is
+      // require()'d in the fixture build against the exact half-1 hash
+      // set — a deterministic guarantee, not a probability)
+      (s"""WITH $langIdCtes,
+          |""".stripMargin + funnelFlagCtes("documents") + ",\n" +
+        s"""|agg AS (
+        |  SELECT count(*) AS n0, sum(n_tok) AS t0,
+        |         sum(k1) AS n1, sum(n_tok * k1) AS t1,
+        |         sum(k2) AS n2, sum(n_tok * k2) AS t2,
+        |         sum(k3) AS n3, sum(n_tok * k3) AS t3,
+        |         sum(k4) AS n4, sum(n_tok * k4) AS t4,
+        |         sum(k5) AS n5, sum(n_tok * k5) AS t5,
+        |         sum(k6) AS n6, sum(n_tok * k6) AS t6
+        |  FROM kk),
+        |st AS (
+        |  SELECT 0 AS stage, 'raw' AS stage_name, n0 AS n_docs, t0 AS n_tokens FROM agg
+        |  UNION ALL SELECT 1, 'lang_id', n1, t1 FROM agg
+        |  UNION ALL SELECT 2, 'gopher_rules', n2, t2 FROM agg
+        |  UNION ALL SELECT 3, 'gopher_repetition', n3, t3 FROM agg
+        |  UNION ALL SELECT 4, 'dedup_exact', n4, t4 FROM agg
+        |  UNION ALL SELECT 5, 'decontaminate', n5, t5 FROM agg
+        |  UNION ALL SELECT 6, 'domain_mix', n6, t6 FROM agg)
+        |SELECT CAST(stage AS BIGINT) AS stage, stage_name,
+        |       CAST(n_docs AS BIGINT) AS n_docs,
+        |       CAST(n_tokens AS BIGINT) AS n_tokens,
+        |       CAST(CASE WHEN lag(n_docs) OVER (ORDER BY stage) IS NULL THEN 1000000
+        |                 WHEN lag(n_docs) OVER (ORDER BY stage) = 0 THEN 0
+        |                 ELSE n_docs * 1000000 // lag(n_docs) OVER (ORDER BY stage)
+        |            END AS BIGINT) AS kept_ppm
+        |FROM st
+        |ORDER BY stage ASC""".stripMargin))),
+    // SFT pair formatting with loss-mask accounting: planted
+    // prompt/response halves, chat template, masked-token counts
+    Entry("q_sft_format", (s, d) => TextAnalysisOps.sftFormat(s, d), Oracle(
+      // SFT mirror: same halves, template and integer mask accounting
+      """WITH t AS (
+        |  SELECT doc_id, string_split(text, ' ') AS tk,
+        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n
+        |  FROM documents),
+        |c AS (SELECT doc_id, tk, n, n // 2 AS np FROM t)
+        |SELECT doc_id,
+        |       '<|user|> ' || coalesce(array_to_string(tk[1:np], ' '), '') ||
+        |         ' <|assistant|> ' ||
+        |         coalesce(array_to_string(tk[np+1:n], ' '), '') AS rendered,
+        |       CAST(n + 2 AS BIGINT) AS n_total,
+        |       CAST(np + 2 AS BIGINT) AS n_masked,
+        |       CAST((np + 2) * 1000000 // (n + 2) AS BIGINT) AS mask_ppm
+        |FROM c
+        |ORDER BY doc_id ASC""".stripMargin)),
+    // the INDEXER: CDXJ capture records built FROM the parsed WARC
+    // members (fetch -> archive -> index -> plan; q_cdx_latest consumes
+    // what this step produces); only length-valid records index
+    Entry("q_cdx_index", (s, d) => CdxOps.cdxIndexFromWarc(s, d), Oracle(
+      // indexer mirror: the q_warc_parse payload rebuild, corrupt rows
+      // excluded, SURT/timestamp/digest in closed form
+      """WITH p AS (
+        |  SELECT source, lang, doc_id,
+        |         'https://' || source || '.example/' || lang || '/p' ||
+        |           CAST(doc_id AS VARCHAR) AS url,
+        |         'HTTP/1.1 200 OK' || chr(13) || chr(10) ||
+        |           'Content-Type: text/html' || chr(13) || chr(10) ||
+        |           chr(13) || chr(10) ||
+        |           '<html><head><title>' || source || '/p' ||
+        |           CAST(doc_id AS VARCHAR) || '</title></head><body><p>' ||
+        |           text || '</p></body></html>' AS payload
+        |  FROM documents WHERE doc_id % 13 <> 7)
+        |SELECT 'example,' || source || ')/' || lang || '/p' ||
+        |         CAST(doc_id AS VARCHAR) AS urlkey,
+        |       '202601' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') ||
+        |         lpad(CAST(doc_id % 24 AS VARCHAR), 2, '0') || '0000' AS ts,
+        |       url, '200' AS status, md5(payload) AS digest,
+        |       CAST(length(payload) AS BIGINT) AS length
+        |FROM p
+        |ORDER BY urlkey ASC""".stripMargin)),
+    // the published serve shape (r17): the SAME chain scored against the
+    // sample-trained maintained LM — no corpus-derived count table, no
+    // dispatch decision job anywhere in the serve plan
+    Entry("q_curate_ccnet_stored", (s, d) => TextAnalysisOps.curateCcnetStored(s, d), Oracle(
+      // the maintained-LM serve: same gates + fences, scores from the
+      // doc_id%2=0 sample-trained top-512 model with OOV floored to 0
+      ("WITH " + curateCcnetStoredCtes("documents", "") + "\n" +
+        curateCcnetSelect("") + "\nORDER BY doc_id ASC"))),
+    // the per-language maintained-LM serve (r17): each shard scored
+    // against ITS stored sample-trained model, |langs|*512-row broadcast
+    Entry("q_curate_multilang_stored", (s, d) => LangIdOps.curateMultilangStored(s, d), Oracle(
+      // the per-language maintained-LM serve: each language's branch is
+      // the stored-CCNet chain trained on ITS doc_id%2=0 shard sample
+      {
+        val ctes = LangIdOps.langs.map { l =>
+          s"""end_s$l AS (
+             |  SELECT d.doc_id, d.text
+             |  FROM documents d JOIN lpred p USING (doc_id)
+             |  WHERE p.predicted = '$l'),
+             |${curateCcnetStoredCtes(s"end_s$l", s"_s$l")}""".stripMargin
+        }.mkString(",\n")
+        val branches = LangIdOps.langs.map { l =>
+          s"SELECT '$l' AS lang, q.* FROM (\n${curateCcnetSelect(s"_s$l")}) q"
+        }.mkString("\nUNION ALL\n")
+        s"""WITH $langIdCtes,
+           |$ctes
+           |$branches
+           |ORDER BY lang ASC, doc_id ASC""".stripMargin
+      })),
+    // the COMPLETE archive->training spine (r17): WARC members -> parse
+    // + length gate -> envelope strip -> main-content extraction (keys
+    // recovered from the record URL) -> six-gate funnel -> export shard
+    // plan of the survivors — CC dump in, training shards out
+    Entry("q_archive_e2e", (s, d) => WarcOps.archiveE2e(s, d), Oracle(
+      // the archive->training spine: valid records are closed-form
+      // (doc_id % 13 <> 7), main_text from the proven html-main CTEs,
+      // lang-id + six-gate funnel over the EXTRACTED corpus, shard plan
+      // of the k6 survivors — the engine must round-trip the real bytes
+      archiveE2eOracleSql)),
+    // the spine as a STREAM (r17): per-batch extract + bloom
+    // first-arrival + gate battery appending shard partials, served by
+    // folding the log — ordered halves + require()'d zero-FP make it
+    // face the SAME oracle as the batch spine
+    Entry("q_archive_e2e_stream", (s, d) => WarcOps.archiveStreamFixture(s, d),
+      Oracle(archiveE2eOracleSql)),
+    // the composed en chain served from the stored en model (r17)
+    Entry("q_curate_e2e_lang_stored", (s, d) => LangIdOps.curateE2eLangStored(s, d), Oracle(
+      // the composed en chain on the stored en model: train CTEs scoped to
+      // the predicted-en sample, everything else the proven chain
+      (s"""WITH $langIdCtes,
+          |endocs AS (
+          |  SELECT d.doc_id, d.text
+          |  FROM documents d JOIN lpred p USING (doc_id)
+          |  WHERE p.predicted = 'en'),
+          |""".stripMargin + curateCcnetStoredCtes("endocs", "") + "\n" +
+        curateCcnetSelect("") + "\nORDER BY doc_id ASC"))),
+    // the confidence-banded gate on the stored en model (r17): the model
+    // stays prediction-routed; gates/scoring/fences run over the verdict
+    Entry("q_curate_e2e_verdict_stored", (s, d) => LangIdOps.curateE2eVerdictStored(s, d), Oracle(
+      // the banded gate on the stored en model: the TRAIN rel stays the
+      // predicted-en sample, the scored corpus is the verdict subset
+      (s"""WITH $langIdCtes,
+          |entrain AS (
+          |  SELECT d.doc_id, d.text
+          |  FROM documents d JOIN lpred p USING (doc_id)
+          |  WHERE p.predicted = 'en'),
+          |vdocs AS (
+          |  SELECT d.doc_id, d.text
+          |  FROM documents d JOIN lpred p USING (doc_id)
+          |  WHERE p.predicted = 'en'
+          |    AND p.s_en - greatest(p.s_de, p.s_es, p.s_fr, p.s_zh)
+          |        >= ${LangIdOps.DefaultMinMargin}),
+          |""".stripMargin + curateCcnetStoredCtes("vdocs", "", "entrain") + "\n" +
+        curateCcnetSelect("") + "\nORDER BY doc_id ASC"))),
+    // write-then-verify sharded export (r17): documents land in a
+    // shard-partitioned collection, the manifest computes FROM THE
+    // WRITTEN table — per-shard totals + id range + bit_xor content
+    // checksum, so a lost/doubled/corrupted row fails the oracle
+    Entry("q_export_verified",
+      (s, d) => CatalogOps.exportShardedVerified(s, "graft_export", "docs", Tables.documents(s, d)),
+      Oracle(
+        // the manifest is closed-form from documents arithmetic; the engine
+        // must round-trip the WRITE to produce it — any write-path byte slip
+        // moves the bit_xor checksum
+        exportManifestOracleSql)),
+    // the export as a STREAM (r18): per-micro-batch idempotent
+    // (shard, batch_id) partition writes + a manifest-partials log in
+    // docs-then-log commit order, served by recomputing the manifest
+    // FROM the written table and require()-reconciling it against the
+    // folded log — stream-in -> verified-shards-out, same closed-form
+    // oracle as the batch export
+    Entry("q_export_verified_stream", (s, d) => CatalogOps.exportStreamFixture(s, d), Oracle(
+      // the STREAMING export faces the SAME closed form: the two ordered
+      // halves partition the corpus, sums/min/max/bit_xor are associative,
+      // and the serve require()s the written table ≡ the folded log before
+      // returning — so the folded manifest IS the batch manifest exactly
+      exportManifestOracleSql)),
+    // revisit-aware spine (r18): members planted with % 4 byte-identical
+    // re-crawl captures; extraction runs ONCE per distinct payload
+    // digest (min-struct winner, combinable) and fans out to captures —
+    // same shard plan, measurably fewer extraction rows (WarcSpec pins
+    // both), same closed-form oracle
+    Entry("q_archive_e2e_revisit", (s, d) => WarcOps.archiveE2eRevisit(s, d), Oracle(
+      // the revisit plant adds only byte-identical captures of existing
+      // pages and the digest collapse + (digest, url) fan-out returns the
+      // full spine's corpus exactly — same closed form
+      archiveE2eOracleSql)),
+    // the FULL loop (r18): discover -> admit -> schedule -> fetch ->
+    // archive -> extract -> curate -> shard in ONE composed plan — the
+    // crawl plan's politeness-capped schedule crosses the injected
+    // fetch surface into WARC members and feeds the unchanged spine;
+    // the schedule side broadcasts (hosts x cap), the corpus never
+    // shuffles for the fetch join
+    Entry("q_crawl_archive_e2e", (s, d) => WarcOps.crawlArchiveE2e(s, d), Oracle(
+      // the crawl-plan CTEs thread straight into the spine's: scheduled
+      // page ids (both URL shapes canonicalize via /p<id>) subset the
+      // corpus, then the identical extraction/funnel/shard chain runs
+      // over the fetched pages — one chained-CTE mirror of the full loop
+      // MATERIALIZED on sched/xraw is load-bearing (the q_bpe_tokens
+      // lesson): the spine CTEs reference xraw many times, and DuckDB
+      // would otherwise re-inline the whole crawl-plan derivation into
+      // each reference (measured: 0.3 s materialized vs > 5 min inlined)
+      archiveSpineOracleSql(
+        """xraw AS MATERIALIZED (
+          |  SELECT d.doc_id, d.lang, d.source, d.text
+          |  FROM documents d JOIN sched USING (doc_id)
+          |  WHERE d.doc_id % 13 <> 7)""".stripMargin,
+        prefixCtes = crawlPlanCtes + """,
+          |sched AS MATERIALIZED (
+          |  SELECT DISTINCT CAST(regexp_extract(url, '/p([0-9]+)$', 1)
+          |    AS BIGINT) AS doc_id
+          |  FROM r2 WHERE slot <= cap),
+          |""".stripMargin))),
+    // the revisit spine as a STREAM (r18): extraction is STORE-BACKED
+    // across micro-batches — digest the batch, anti-join the maintained
+    // xtexts store, extract only never-seen digests, fold the capture
+    // corpus from store + new; an unchanged page re-fetched in every
+    // crawl extracts exactly once, ever. Same oracle as the batch spine
+    Entry("q_archive_e2e_revisit_stream", (s, d) => WarcOps.archiveRevisitStreamFixture(s, d),
+      Oracle(
+        // the store changes WHERE a text comes from, never what it is
+        // (digests are content addresses); ordered halves + require()'d
+        // zero-FP carry the stream-oracle argument unchanged
+        archiveE2eOracleSql)),
+    // the spine's survivors land as verified bytes (r19): WARC members
+    // -> parse -> extract -> six-gate funnel -> the CURATED text
+    // written sharded + manifest recomputed from the written table —
+    // the curate -> verified-write seam a production pipeline ships
+    Entry("q_spine_export_verified", (s, d) => WarcOps.spineExportVerified(s, d), Oracle(
+      // the spine CTEs thread into the manifest arithmetic: survivors'
+      // curated text, sharded + checksummed — any byte lost between the
+      // gate battery and storage moves the bit_xor
+      spineExportOracleSql)),
+    // the spine-survivor export as a STREAM (r19): per-batch gate
+    // battery over the maintained bloom store, survivors landed via
+    // idempotent (shard, batch_id) writes in docs -> log -> bloom
+    // commit order, compacted to one file set per shard, served by the
+    // written-table-vs-folded-log reconciliation — same closed form
+    Entry("q_spine_export_verified_stream", (s, d) => WarcOps.spineExportStreamFixture(s, d),
+      Oracle(
+        // the streamed halves partition the batch funnel's survivor set
+        // (ordered halves + require()'d zero-FP bloom), every manifest
+        // column folds associatively, and the fixture compacts before
+        // serving — so the served manifest IS the batch manifest exactly
+        spineExportOracleSql)),
+    // the full loop LIVE (r19): repeated crawl cycles — half schedule,
+    // then the steady-state full re-crawl — through store-backed
+    // revisit extraction, the incremental gate battery, and the
+    // verified export; revisits extract once ACROSS cycles and
+    // re-fetched texts never re-export
+    Entry("q_crawl_archive_e2e_stream", (s, d) => WarcOps.crawlArchiveStreamFixture(s, d), Oracle(
+      // the FULL loop live: crawl-plan CTEs -> fetched-subset spine
+      // CTEs -> manifest closed form. Ordered cycles (half schedule,
+      // then the full re-crawl) + the require()'d zero-FP bloom make
+      // the streamed survivor set exactly the batch funnel's over the
+      // fetched corpus; the re-crawl's revisits extract once across
+      // cycles and never re-export, so the served manifest IS this
+      spineExportOracleSqlOf(
+        """xraw AS MATERIALIZED (
+          |  SELECT d.doc_id, d.lang, d.source, d.text
+          |  FROM documents d JOIN sched USING (doc_id)
+          |  WHERE d.doc_id % 13 <> 7)""".stripMargin,
+        prefixCtes = crawlPlanCtes + """,
+          |sched AS MATERIALIZED (
+          |  SELECT DISTINCT CAST(regexp_extract(url, '/p([0-9]+)$', 1)
+          |    AS BIGINT) AS doc_id
+          |  FROM r2 WHERE slot <= cap),
+          |""".stripMargin))),
+    // the extraction store's RETENTION story live (r19): generational
+    // eviction between crawl cycles — evicted digests re-extract
+    // exactly once (self-healing miss), retained ones never, and the
+    // served manifest is byte-identical to the un-evicted loop's
+    Entry("q_crawl_archive_evict", (s, d) => WarcOps.crawlArchiveEvictFixture(s, d), Oracle(
+      // generational eviction between cycles moves extraction WORK (the
+      // evicted digests re-extract, require()'d exactly-once), never a
+      // byte of output: extractions are pure functions of the payload
+      // behind the digest, so the served manifest faces the SAME closed
+      // form as the un-evicted loop
+      spineExportOracleSqlOf(
+        """xraw AS MATERIALIZED (
+          |  SELECT d.doc_id, d.lang, d.source, d.text
+          |  FROM documents d JOIN sched USING (doc_id)
+          |  WHERE d.doc_id % 13 <> 7)""".stripMargin,
+        prefixCtes = crawlPlanCtes + """,
+          |sched AS MATERIALIZED (
+          |  SELECT DISTINCT CAST(regexp_extract(url, '/p([0-9]+)$', 1)
+          |    AS BIGINT) AS doc_id
+          |  FROM r2 WHERE slot <= cap),
+          |""".stripMargin))),
+  ))
+
+  private[graft] def distinctNames(es: Seq[Entry]): Seq[Entry] = {
+    val dups = es.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"duplicate entry names: ${dups.toSeq.sorted.mkString(", ")}")
+    es
+  }
 }
