@@ -139,10 +139,7 @@ object GraphAnnOps {
     * `partitionBy`), and each group builds its graph with `part` as the
     * graph id. Where [[buildGraphs]] lets the physical partition id name
     * the graph (hash sharding), here the caller chooses the part — the
-    * coarse-quantizer cell for a routed collection, or the decoded
-    * original part for maintenance rebuilds (which is why the incremental
-    * upsert/delete paths build through THIS entry for both layouts: rows
-    * go back to exactly the graph they came from).
+    * coarse-quantizer cell for a routed collection.
     */
   def buildGraphsByPart(rows: DataFrame, m: Int = 16,
       efConstruction: Int = 200): Dataset[NswGraph] = {

@@ -1423,32 +1423,36 @@ object CatalogOps {
       derived.select(col("cell")).union(oldCells).distinct())
   }
 
-  /** Incremental NSW maintenance — the graph twin of [[upsertIvf]]: the
-    * batch's target graphs are found by replaying the ingest hash
+  /** Incremental NSW maintenance — the graph twin of [[upsertIvf]]: each
+    * batch row's target graph is the ingest hash
     * (`pmod(hash(vec_id), shards)` — `functions.hash` IS the Murmur3 used
-    * by `repartition(n, col)`, seed 42), and only the touched graphs
-    * rewrite via dynamic partition overwrite; untouched graph partitions
-    * keep their files byte-for-byte (pinned in tests). Batch schema:
-    * (vec_id, embedding).
+    * by `repartition(n, col)`, seed 42) or, for routed collections, the
+    * nearest cell of the PERSISTED coarse model (no retrain), and only the
+    * touched graphs rewrite via dynamic partition overwrite; untouched
+    * graph partitions keep their files byte-for-byte (pinned in tests).
+    * Batch schema: (vec_id, embedding).
     *
-    * Two maintenance paths per touched graph:
+    * The batch is deduplicated, cell-assigned and checkpointed ONCE; only
+    * its (part, vec_id) pairs come to the driver (what a broadcast of the
+    * batch ids would hold), and [[rewriteNsw]] plans the whole
+    * maintenance there. Two paths per touched graph:
     *  - TRUE INSERT ([[graft.operators.GraphAnnOps.insertLocal]]) when the
     *    graph's batch rows are all NEW ids and number at most
     *    `insertFrac` of its stored nodes: the stored CSR seeds the
     *    adjacency and only the batch runs Malkov's insert step —
     *    O(batch) per graph, the path a hot cell on a steady small-batch
     *    stream needs (a rebuild pays O(cell) per batch forever).
-    *  - REBUILD (same insertion order, same constants from `name__meta`)
-    *    when any batch id updates a stored row — a stale node's links
-    *    must not survive — or when the batch is a large fraction of the
-    *    graph, where a from-scratch build costs the same and restores the
-    *    canonical id-interleaved insertion order.
+    *  - REBUILD (same ascending-id insertion order, same constants from
+    *    `name__meta`) when the graph holds any batch id — a stale node's
+    *    links must not survive, and a routed update that MOVES a cell
+    *    leaves its old graph holding the id — or when the batch is a
+    *    large fraction of the graph, where a from-scratch build costs the
+    *    same and restores the canonical id-interleaved insertion order.
     */
   def upsertNsw(spark: SparkSession, db: String, name: String,
       rawBatch: DataFrame, insertFrac: Double = 0.2): Unit = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column => toCol, expression => toExpr}
-    import spark.implicits._
     val (shards, m, efC, routed) = readNswMeta(spark, db, name)
     // a batch carrying the same id twice resolves deterministically (the
     // winner is a function of row values — same rule as the merge core's
@@ -1457,120 +1461,103 @@ object CatalogOps {
       .agg(max(struct(col("embedding"))).as("__w"))
       .select(col("vec_id").cast("long").as("vec_id"), // hash replay: see createNswCollection
         col("__w.embedding").as("embedding").cast("array<double>"))
-    // each batch row's target graph: the id hash for sharded collections,
-    // the nearest coarse cell (from the PERSISTED model — no retrain) for
-    // routed ones
-    val batchP =
-      if (!routed)
-        batch.withColumn("part", pmod(hash(col("vec_id")), lit(shards)))
+    val part =
+      if (!routed) pmod(hash(col("vec_id")), lit(shards))
       else {
         val (cents, kCells) = graft.operators.KnnOps.readCoarseModel(spark, db, name)
-        batch.withColumn("part", toCol(graft.plans.NearestCentroid(
-          toExpr(col("embedding")), cents.toSeq, kCells)))
+        toCol(graft.plans.NearestCentroid(toExpr(col("embedding")), cents.toSeq, kCells))
       }
-    val graphs = spark.table(s"`$db`.`$name`")
-    // a routed update can MOVE cells (the new vector routes elsewhere), so
-    // the old graphs of updated ids are touched too — found by scanning
-    // the stored id lists (part + ids columns only, one row per graph).
-    // Sharded collections skip the scan entirely: part is a function of
-    // the id, so old part == new part by construction.
-    val touched =
-      if (!routed) batchP.select(col("part")).distinct()
-      else batchP.select(col("part")).union(
-          graphs.select(col("part"), explode(col("ids")).as("vec_id"))
-            .join(broadcast(batch.select(col("vec_id"))), "vec_id")
-            .select(col("part")))
-        .distinct()
-    // per-part dispatch stats (driver-side: the touched set is micro-batch
-    // bounded by contract, one row per graph): stored node count, and how
-    // many batch ids each touched graph ALREADY holds (ids column only —
-    // no vector decode for the stats)
-    val touchedGraphs = graphs.join(broadcast(touched), "part")
-    val storedN: Map[Int, Long] = touchedGraphs
-      .select(col("part"), col("n"))
-      .collect().map(r => r.getInt(0) -> r.getInt(1).toLong).toMap
-    val overlapN: Map[Int, Long] = touchedGraphs
-      .select(col("part"), explode(col("ids")).as("vec_id"))
-      .join(broadcast(batch.select(col("vec_id"))), "vec_id")
-      .groupBy(col("part")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val batchN: Map[Int, Long] = batchP
-      .groupBy(col("part").cast("int").as("part")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val insertParts: Set[Int] = batchN.keySet.filter { p =>
-      overlapN.getOrElse(p, 0L) == 0L &&
-        storedN.get(p).exists(ns => batchN(p) <= insertFrac * ns)
-    }
-    val rebuildParts = touched.filter(!col("part").isin(insertParts.toSeq.map(Int.box): _*))
-    // REBUILD path: decode the rebuild graphs back to rows, last-writer-
-    // wins merge with their batch rows, from-scratch build
-    val stored = graphs.join(broadcast(rebuildParts), "part")
-      .select(col("part"), col("dim"),
-        posexplode(col("ids")).as(Seq("i", "vec_id")), col("vecs"))
-      .select(col("part"), col("vec_id"),
-        slice(col("vecs"), col("i") * col("dim") + 1, col("dim")).as("embedding"))
-    val merged = stored.join(batch.select(col("vec_id")), Seq("vec_id"), "left_anti")
-      .unionByName(batchP.select(col("part"), col("vec_id"), col("embedding"))
-        .filter(!col("part").isin(insertParts.toSeq.map(Int.box): _*)))
-    val rebuilt = graft.operators.GraphAnnOps.buildGraphsByPart(merged, m, efC)
-    // INSERT path: cogroup each insert graph with its (new-id) batch rows
-    // and run the incremental insert — the stored graph is read once, the
-    // work is O(batch rows) per graph
-    val written =
-      if (insertParts.isEmpty) rebuilt
-      else {
-        val ip = insertParts.toSeq.map(Int.box)
-        val gks = graphs.filter(col("part").isin(ip: _*))
-          .as[graft.operators.NswGraph].groupByKey(_.part)
-        val rks = batchP.filter(col("part").isin(ip: _*))
-          .select(col("part").cast("int"), col("vec_id"),
-            col("embedding").cast("array<double>"))
-          .as[(Int, Long, Seq[Double])].groupByKey(_._1)
-        val inserted = gks.cogroup(rks) { (_, gs, rows) =>
-          if (!gs.hasNext) Iterator.empty
-          else {
-            val g = gs.next()
-            val rs = rows.toArray.sortBy(_._2) // ascending-id insert order
-            val addVecs = new Array[Double](rs.length * g.dim)
-            var r = 0
-            while (r < rs.length) {
-              val v = rs(r)._3; var i = 0
-              while (i < g.dim) { addVecs(r * g.dim + i) = v(i); i += 1 }
-              r += 1
-            }
-            Iterator.single(graft.operators.GraphAnnOps.insertLocal(
-              g, rs.map(_._2), addVecs, m, efC))
-          }
-        }
-        rebuilt.unionByName(inserted)
-      }
-    rewriteTouchedGraphs(spark, db, name, touched, written)
+    val batchP = batch.select(part.cast("int").as("part"), col("vec_id"), col("embedding"))
+      .localCheckpoint()
+    val keys = batchP.select(col("part"), col("vec_id")).collect()
+      .map(r => (r.getInt(0), r.getLong(1)))
+    // sharded: an id's stored graph IS its batch graph, so only those are
+    // scanned; routed: a moved id's old cell can be any graph
+    rewriteNsw(spark, db, name, m, efC, keys.map(_._2),
+      if (routed) None else Some(keys.map(_._1).distinct.toSeq),
+      keys.groupBy(_._1).map { case (p, ks) => p -> ks.length }, Some(batchP), insertFrac)
   }
 
-  /** Shared rewrite tail of [[upsertNsw]] and [[deleteNsw]]: stage the
-    * rebuilt/incrementally-inserted graphs (the plan reads the table it
-    * rewrites), dynamic-overwrite exactly the staged graph partitions,
-    * and drop any touched partition that emptied (every node deleted, or
-    * a routed update moved a cell's last row away).
+  /** The shared core of [[upsertNsw]] and [[deleteNsw]], planned on the
+    * driver. `ids` are every id the call writes or removes; `batchN`
+    * counts the batch rows routed to each part and `batch` holds them as
+    * (part, vec_id, embedding) — both empty for a delete.
+    *  1. STATS: one projection over the graph table's (part, n, ids)
+    *     columns counts each graph's overlap with `ids` — no explode, no
+    *     join, no shuffle, no vector decode; `cand` partition-prunes it
+    *     when the candidate graphs are known (sharded collections).
+    *  2. PLAN: the touched graphs are those holding an id or receiving a
+    *     batch row; none touched → return before any write. A graph is
+    *     EMPTIED when n − overlap + batch rows = 0; otherwise it inserts
+    *     in place (see [[upsertNsw]]) or rebuilds.
+    *  3. ONE COGROUP: the live touched graphs (read through a
+    *     `part IN (…)` partition filter) meet their batch rows; an insert
+    *     graph runs `insertLocal` on its rows in ascending-id order, a
+    *     rebuild graph decodes its surviving nodes, adds its batch rows and
+    *     runs `buildLocal` over all of them in ascending-id order.
+    *  4. REWRITE: [[rewriteTouchedGraphs]] with the emptied parts.
+    */
+  private def rewriteNsw(spark: SparkSession, db: String, name: String,
+      m: Int, efC: Int, ids: Array[Long], cand: Option[Seq[Int]],
+      batchN: Map[Int, Int], batch: Option[DataFrame], insertFrac: Double): Unit = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.operators.{GraphAnnOps, NswGraph}
+    if (ids.isEmpty) return
+    val graphs = spark.table(s"`$db`.`$name`")
+    val stats: Map[Int, (Int, Int)] = cand
+      .fold(graphs)(ps => graphs.filter(col("part").isin(ps.map(Int.box): _*)))
+      .select(col("part"), col("n"), size(array_intersect(col("ids"), typedLit(ids))))
+      .collect().map(r => r.getInt(0) -> (r.getInt(1), r.getInt(2))).toMap
+    val touched = stats.collect { case (p, (_, o)) if o > 0 => p }.toSet ++ batchN.keySet
+    if (touched.isEmpty) return
+    def rows(p: Int): Int = stats.get(p).fold(0) { case (n, o) => n - o } + batchN.getOrElse(p, 0)
+    val (emptied, live) = touched.toSeq.sorted.partition(rows(_) == 0)
+    val inserts = batchN.keySet.filter(p => stats.get(p).exists { case (n, o) =>
+      o == 0 && batchN(p) <= insertFrac * n })
+    val liveParts = live.map(Int.box)
+    val doomed = ids.toSet
+    val gks = graphs.filter(col("part").isin(liveParts: _*))
+      .as[NswGraph].groupByKey(_.part)
+    val rks = batch.fold(spark.emptyDataset[(Int, Long, Seq[Double])])(
+        _.filter(col("part").isin(liveParts: _*)).as[(Int, Long, Seq[Double])])
+      .groupByKey(_._1)
+    val written = gks.cogroup(rks) { (p, gs, batchRows) =>
+      val add = batchRows.map(r => (r._2, r._3.toArray)).toArray.sortBy(_._1)
+      if (inserts(p)) gs.map(g => GraphAnnOps.insertLocal(
+        g, add.map(_._1), add.flatMap(_._2), m, efC))
+      else {
+        val kept = gs.flatMap(g => (0 until g.n).iterator.filterNot(i => doomed(g.ids(i)))
+          .map(i => (g.ids(i), g.vecs.slice(i * g.dim, (i + 1) * g.dim))))
+        val all = (kept ++ add).toArray.sortBy(_._1)
+        Iterator.single(GraphAnnOps.buildLocal(p, all.map(_._1), all.flatMap(_._2),
+          all(0)._2.length, m, efC))
+      }
+    }
+    rewriteTouchedGraphs(spark, db, name, emptied, written)
+  }
+
+  /** Rewrite tail of [[rewriteNsw]]: stage the rebuilt/inserted graphs
+    * (the plan reads the table it rewrites), dynamic-overwrite exactly the
+    * staged graph partitions, then drop the `emptied` partitions (every
+    * node deleted, or a routed update moved a cell's last row away). The
+    * emptied list is the driver's plan, so nothing reads the table after
+    * `insertInto` has rewritten it.
     */
   private def rewriteTouchedGraphs(spark: SparkSession, db: String,
-      name: String, touched: DataFrame,
-      rebuilt: Dataset[graft.operators.NswGraph]): Unit = {
+      name: String, emptied: Seq[Int],
+      written: Dataset[graft.operators.NswGraph]): Unit = {
     import org.apache.spark.sql.functions._
     val table = s"`$db`.`$name`"
     val staging = s"`$db`.`__${name}_graph_staging`"
-    rebuilt.toDF().write.mode("overwrite").saveAsTable(staging)
+    written.toDF().write.mode("overwrite").saveAsTable(staging)
     val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
       val targetCols = spark.table(table).columns.toIndexedSeq.map(col)
       spark.table(staging).select(targetCols: _*)
         .write.mode("overwrite").insertInto(s"$db.$name")
-      touched.join(spark.table(staging).select(col("part")).distinct(),
-          Seq("part"), "left_anti")
-        .collect().foreach { r =>
-          spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (part=${r.get(0)})")
-        }
+      emptied.foreach(p => spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (part=$p)"))
     } finally {
       prior match {
         case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
@@ -1581,16 +1568,17 @@ object CatalogOps {
   }
 
   /** Graph-aware row deletion for an NSW collection — the index-consistent
-    * twin of [[deleteByIds]] (which routes here automatically): candidate
-    * graphs come from replaying the ingest hash over the doomed ids, a
-    * graph counts as TOUCHED only if it actually holds one (absent ids
-    * cost nothing), survivors of the touched graphs decode back to rows
-    * ([[upsertNsw]]'s decode), and ONLY those graphs rebuild with the
-    * stored constants and rewrite via dynamic partition overwrite.
-    * Untouched graph partitions keep their files byte-for-byte; a graph
-    * whose every node was doomed emits no row and its partition drops.
-    * After this, [[graft.operators.GraphAnnOps.searchStored]] can never
-    * serve a deleted id (pinned in tests).
+    * twin of [[deleteByIds]] (which routes here automatically): the
+    * doomed ids come to the driver (with their ingest-hash candidate
+    * graphs for sharded collections; a routed part depends on the VECTOR,
+    * so every graph is a candidate) and [[rewriteNsw]] runs with no batch
+    * rows. A graph is touched only if its id list actually holds a doomed
+    * id (one stats scan, ids column only); absent ids write nothing. ONLY
+    * the touched graphs rebuild from their survivors with the stored
+    * constants; untouched graph partitions keep their files byte-for-byte,
+    * and a graph whose every node was doomed drops its partition. After
+    * this, [[graft.operators.GraphAnnOps.searchStored]] can never serve a
+    * deleted id (pinned in tests).
     */
   def deleteNsw(spark: SparkSession, db: String, name: String,
       ids: DataFrame): Unit = {
@@ -1601,29 +1589,11 @@ object CatalogOps {
     // and the delete would silently no-op
     val doomed = ids.toDF("vec_id")
       .select(col("vec_id").cast("long").as("vec_id")).distinct()
-    val graphs = spark.table(s"`$db`.`$name`")
-    // candidate graphs: the id hash narrows the scan for sharded
-    // collections (same Murmur3 as repartition(n, col) — see upsertNsw);
-    // a routed part depends on the VECTOR, so every graph's id list is
-    // scanned — still one row per graph, ids column only
-    val cand =
-      if (!routed) doomed
-        .select(pmod(hash(col("vec_id")), lit(shards)).as("part")).distinct()
-      else graphs.select(col("part")).distinct()
-    // touched = candidates that actually hold a doomed id (absent ids
-    // cost nothing)
-    val touched = graphs.join(broadcast(cand), "part")
-      .select(col("part"), explode(col("ids")).as("vec_id"))
-      .join(broadcast(doomed), "vec_id")
-      .select(col("part")).distinct()
-    val kept = graphs.join(broadcast(touched), "part")
-      .select(col("part"), col("dim"),
-        posexplode(col("ids")).as(Seq("i", "vec_id")), col("vecs"))
-      .select(col("part"), col("vec_id"),
-        slice(col("vecs"), col("i") * col("dim") + 1, col("dim")).as("embedding"))
-      .join(broadcast(doomed), Seq("vec_id"), "left_anti")
-    rewriteTouchedGraphs(spark, db, name, touched,
-      graft.operators.GraphAnnOps.buildGraphsByPart(kept, m, efC))
+      .select(col("vec_id"), pmod(hash(col("vec_id")), lit(shards)))
+      .collect().map(r => (r.getLong(0), r.getInt(1)))
+    rewriteNsw(spark, db, name, m, efC, doomed.map(_._1),
+      if (routed) None else Some(doomed.map(_._2).distinct.toSeq),
+      Map.empty, None, insertFrac = 0.0)
   }
 
   /** Row deletion by id — the write the dedup pipeline ends with (drop the
