@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{CatalogOps, Tables}
 import BoundedCollect.{LocalMaxEdges, collectAtMost}
 
 /** Deduplication for LLM training-data pipelines, over the `documents`
@@ -2025,15 +2025,7 @@ object DedupOps {
       .select(col("doc_id"),
         coalesce(col("newcomp"), col("component")).as("component"), col("bucket"))
       .unionByName(newRows)
-      .localCheckpoint() // materialize BEFORE overwriting the table it reads
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try staged.select(col("doc_id"), col("component"), col("bucket"))
-      .write.mode("overwrite").insertInto(s"$db.${name}__components")
-    finally prior match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    CatalogOps.overwritePartitions(compTable(db, name), staged)
     // probe artifacts append; epoch bumps
     bandRows(sig)
       .withColumn("bucket", pmod(hash(col("doc_id")), lit(CompStoreBuckets)))
@@ -2109,52 +2101,30 @@ object DedupOps {
         coalesce(col("component"), col("doc_id")).as("component"),
         pmod(hash(col("doc_id")), lit(CompStoreBuckets)).as("bucket"))
     val touchedBuckets = members.select(col("bucket")).distinct()
+      .collect().map(_.getInt(0)).toSeq
     val staged = comps
-      .join(broadcast(touchedBuckets), Seq("bucket"), "left_semi")
+      .where(col("bucket").isin(touchedBuckets: _*))
       .join(broadcast(members.select(col("doc_id"))), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("component"), col("bucket"))
       .unionByName(newRows)
-      .localCheckpoint() // materialize BEFORE overwriting the table it reads
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      staged.write.mode("overwrite").insertInto(s"$db.${name}__components")
-      // a bucket whose every row was a doomed member is absent from the
-      // staged frame — drop its partition rather than leave it stale
-      touchedBuckets.join(staged.select(col("bucket")).distinct(),
-          Seq("bucket"), "left_anti")
-        .collect().foreach(rw => spark.sql(
-          s"ALTER TABLE ${compTable(db, name)} DROP IF EXISTS PARTITION (bucket=${rw.get(0)})"))
-    } finally prior match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
     // purge the probe artifacts: both stores are doc-id bucketed, so the
     // rewrite reads and overwrites ONLY the doomed ids' buckets (the
     // deleteByIds shape — untouched buckets byte-stable, emptied drop)
     val doomedBuckets = doomed
       .select(pmod(hash(col("doc_id")), lit(CompStoreBuckets)).as("bucket"))
-      .distinct()
+      .distinct().collect().map(_.getInt(0)).toSeq
+    // each rewrite drops the buckets its rows no longer reach; the frame
+    // is checkpointed because it is read twice (bucket set + rewrite)
+    def rewrite(t: String, rows: DataFrame, buckets: Seq[Int]): Unit = {
+      val kept = rows.localCheckpoint()
+      val live = kept.select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
+      CatalogOps.overwritePartitions(t, kept, buckets.filterNot(live).map(Seq(_)))
+    }
+    rewrite(compTable(db, name), staged, touchedBuckets)
     Seq("csigs", "cdata").foreach { sfx =>
       val t = s"`$db`.`${name}__$sfx`"
-      val kept = spark.table(t)
-        .join(broadcast(doomedBuckets), Seq("bucket"), "left_semi")
-        .join(broadcast(doomed), Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      val prior2 = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        val targetCols = spark.table(t).columns.toIndexedSeq.map(col)
-        kept.select(targetCols: _*)
-          .write.mode("overwrite").insertInto(s"$db.${name}__$sfx")
-        doomedBuckets.join(kept.select(col("bucket")).distinct(),
-            Seq("bucket"), "left_anti")
-          .collect().foreach(rw => spark.sql(
-            s"ALTER TABLE $t DROP IF EXISTS PARTITION (bucket=${rw.get(0)})"))
-      } finally prior2 match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      rewrite(t, spark.table(t).where(col("bucket").isin(doomedBuckets: _*))
+        .join(broadcast(doomed), Seq("doc_id"), "left_anti"), doomedBuckets)
     }
     spark.createDataFrame(Seq((epoch0 + 1, tau, hits0, maxBucket.toLong)))
       .toDF("epoch", "tau", "guard_hits", "max_bucket")

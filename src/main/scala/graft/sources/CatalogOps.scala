@@ -114,10 +114,11 @@ object CatalogOps {
 
   /** Shared merge core of [[upsertPartitioned]] and [[upsertIvf]]:
     * last-writer-wins the batch over the stored rows of exactly the
-    * `touched` partitions, rewrite those via dynamic partition overwrite,
-    * and drop any touched partition the merge emptied (a row that MOVED
-    * partition leaves its old one behind; dynamic overwrite cannot express
-    * an empty rewrite, so the stale directory is dropped explicitly).
+    * `touched` partitions and rewrite those through
+    * [[overwritePartitions]], dropping any touched partition the merge
+    * emptied (a row that MOVED partition leaves its old one behind).
+    * Partitions match null-safely: a null partition value is a partition
+    * like any other.
     */
   private def mergeTouchedPartitions(spark: SparkSession, db: String, name: String,
       batch: DataFrame, idCol: String, partCol: String,
@@ -125,61 +126,27 @@ object CatalogOps {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     val table = s"`$db`.`$name`"
-    // Materialize the (small by contract) touched set ONCE, up front: its
-    // plan may read the target table (upsertIvf's oldCells does), and the
-    // drop-empty-partition step below runs AFTER insertInto has mutated
-    // that table — a lazy re-evaluation there could see post-overwrite
-    // state and miss a partition a cell move emptied.
-    val touched = {
-      val rows = touchedFrame.distinct().collect().toSeq
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), touchedFrame.schema)
-    }
-    val current = spark.table(table)
-      .join(broadcast(touched), partCol) // only affected partitions read
-    val tieBreak = struct(current.columns.filterNot(_ == idCol).map(col).toIndexedSeq: _*)
+    // the (small by contract) touched set comes to the driver before
+    // anything is written: its plan may read the target table
+    // (upsertIvf's oldCells)
+    val touchedVals = touchedFrame.distinct().collect().map(_.get(0)).toSeq
+    val touched = spark.createDataFrame(spark.sparkContext.parallelize(
+      touchedVals.map(org.apache.spark.sql.Row(_)), 1), touchedFrame.schema)
+    val stored = spark.table(table)
+    val current = stored.join(broadcast(touched), stored(partCol) <=> touched(partCol),
+      "left_semi") // only affected partitions read
+    // ties rank the partition value first, then the rest in table order
+    val tieBreak = struct((partCol +: current.columns.filterNot(c => c == idCol || c == partCol))
+      .map(col).toIndexedSeq: _*)
     val w = Window.partitionBy(col(idCol)).orderBy(col("__v").desc, tieBreak.desc)
     val merged = current.withColumn("__v", lit(1))
       .unionByName(batch.withColumn("__v", lit(2)))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__v", "__rn")
-    // Stage the merge (the plan reads the target table), then rewrite ONLY
-    // the touched partitions: dynamic mode makes INSERT OVERWRITE replace
-    // exactly the partition directories present in the staged frame.
-    val staging = s"`$db`.`__${name}_upsert_staging`"
-    merged.write.mode("overwrite").saveAsTable(staging)
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // insertInto is POSITIONAL and a partitioned table's schema lists the
-      // partition column last (while the using-join above moved it first) —
-      // re-project to the target's column order.
-      val targetCols = spark.table(table).columns.toIndexedSeq.map(col)
-      spark.table(staging).select(targetCols: _*)
-        .write.mode("overwrite").insertInto(s"$db.$name")
-      // touched partitions absent from the staged frame lost their last row
-      // to a partition move — drop them, or the stale copy survives
-      val numeric = spark.table(table).schema(partCol).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]
-      touched.join(spark.table(staging).select(col(partCol)).distinct(),
-          Seq(partCol), "left_anti")
-        .collect().foreach { r =>
-          // numeric values go bare; everything else (string, date, ...) is
-          // quoted with embedded quotes doubled — the literal must parse
-          // even for values like "it's"
-          val v =
-            if (numeric) r.get(0).toString
-            else s"'${r.get(0).toString.replace("'", "''")}'"
-          spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($partCol=$v)")
-        }
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $staging")
-    }
+      .localCheckpoint() // read twice: its partition set and the rewrite
+    val live = merged.select(col(partCol)).distinct().collect().map(_.get(0)).toSet
+    overwritePartitions(table, merged, touchedVals.filterNot(live).map(Seq(_)))
   }
 
   /** Incremental index maintenance for an IVF collection — the per-upsert
@@ -600,23 +567,8 @@ object CatalogOps {
       vacuumVersioned(spark, db, name)
       appendVlog(spark, db, name,
         batch.withColumn("__op", lit(1)).withColumn("__v", lit(v)))
-    } else {
-      val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        // insertInto is positional: project to the table's column order
-        val targetCols = spark.table(s"`$db`.`${name}__vlog`").columns
-          .toIndexedSeq.map(org.apache.spark.sql.functions.col)
-        batch.withColumn("__op", lit(1)).withColumn("__v", lit(v))
-          .select(targetCols: _*)
-          .write.mode("overwrite").insertInto(s"$db.${name}__vlog")
-      } finally {
-        prior match {
-          case Some(p) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", p)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      }
-    }
+    } else overwritePartitions(s"`$db`.`${name}__vlog`",
+      batch.withColumn("__op", lit(1)).withColumn("__v", lit(v)))
     writeVmeta(spark, db, name, v, floorV, batchId)
     v
   }
@@ -688,28 +640,15 @@ object CatalogOps {
     val snapshot = readVersioned(spark, db, name, asOf = floorV, idCol)
       .withColumn("__op", lit(1)).withColumn("__v", lit(floorV))
     val table = s"`$db`.`${name}__vlog`"
-    val staging = s"`$db`.`__${name}_vlog_compact`"
-    snapshot.write.mode("overwrite").saveAsTable(staging)
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // drop the folded per-version partitions, then land the snapshot
-      (oldFloor to floorV).foreach { v =>
-        spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (__v = $v)")
-      }
-      val targetCols = spark.table(table).columns.toIndexedSeq.map(col)
-      if (vlogBuckets(spark, db, name).isDefined)
-        appendVlog(spark, db, name, spark.table(staging).select(targetCols: _*))
-      else
-        spark.table(staging).select(targetCols: _*)
-          .write.mode("overwrite").insertInto(s"$db.${name}__vlog")
-    } finally {
-      prior match {
-        case Some(p) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", p)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $staging")
-    }
+    val folded = (oldFloor until floorV).map(Seq(_))
+    if (vlogBuckets(spark, db, name).isDefined) {
+      // the bucket-aware append cannot replace partition floorV, so it
+      // drops with the folded ones first — after the snapshot that reads
+      // them is materialized
+      val landed = snapshot.localCheckpoint()
+      dropPartitions(spark, table, folded :+ Seq(floorV))
+      appendVlog(spark, db, name, landed)
+    } else overwritePartitions(table, snapshot, folded)
     writeVmeta(spark, db, name, maxV, floorV, batchWm)
   }
 
@@ -788,9 +727,7 @@ object CatalogOps {
     val orphans = spark.table(s"`$db`.`${name}__vlog`")
       .select(col("__v")).distinct()
       .collect().map(_.getLong(0)).filter(_ > maxV)
-    orphans.foreach { v =>
-      spark.sql(s"ALTER TABLE `$db`.`${name}__vlog` DROP IF EXISTS PARTITION (__v = $v)")
-    }
+    dropPartitions(spark, s"`$db`.`${name}__vlog`", orphans.map(Seq(_)).toSeq)
   }
 
   /** Z-ordered collection — multi-column min/max pruning from layout
@@ -1495,7 +1432,11 @@ object CatalogOps {
     *     graph runs `insertLocal` on its rows in ascending-id order, a
     *     rebuild graph decodes its surviving nodes, adds its batch rows and
     *     runs `buildLocal` over all of them in ascending-id order.
-    *  4. REWRITE: [[rewriteTouchedGraphs]] with the emptied parts.
+    *  4. REWRITE: [[overwritePartitions]] replaces exactly the written
+    *     graphs' partitions and drops the emptied ones (every node
+    *     deleted, or a routed update moved a cell's last row away). The
+    *     emptied list is the driver's plan, so nothing reads the table
+    *     after it is rewritten.
     */
   private def rewriteNsw(spark: SparkSession, db: String, name: String,
       m: Int, efC: Int, ids: Array[Long], cand: Option[Seq[Int]],
@@ -1534,37 +1475,7 @@ object CatalogOps {
           all(0)._2.length, m, efC))
       }
     }
-    rewriteTouchedGraphs(spark, db, name, emptied, written)
-  }
-
-  /** Rewrite tail of [[rewriteNsw]]: stage the rebuilt/inserted graphs
-    * (the plan reads the table it rewrites), dynamic-overwrite exactly the
-    * staged graph partitions, then drop the `emptied` partitions (every
-    * node deleted, or a routed update moved a cell's last row away). The
-    * emptied list is the driver's plan, so nothing reads the table after
-    * `insertInto` has rewritten it.
-    */
-  private def rewriteTouchedGraphs(spark: SparkSession, db: String,
-      name: String, emptied: Seq[Int],
-      written: Dataset[graft.operators.NswGraph]): Unit = {
-    import org.apache.spark.sql.functions._
-    val table = s"`$db`.`$name`"
-    val staging = s"`$db`.`__${name}_graph_staging`"
-    written.toDF().write.mode("overwrite").saveAsTable(staging)
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val targetCols = spark.table(table).columns.toIndexedSeq.map(col)
-      spark.table(staging).select(targetCols: _*)
-        .write.mode("overwrite").insertInto(s"$db.$name")
-      emptied.foreach(p => spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION (part=$p)"))
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $staging")
-    }
+    overwritePartitions(s"`$db`.`$name`", written.toDF(), emptied.map(Seq(_)))
   }
 
   /** Graph-aware row deletion for an NSW collection — the index-consistent
@@ -1600,33 +1511,34 @@ object CatalogOps {
     * losers from the collection; the reference only deletes whole
     * collections, `TencentVDB.py:87-98`, but a training-data store needs
     * the row form). Partitioned collections rewrite ONLY the partitions
-    * that hold doomed ids (dynamic overwrite, untouched files intact,
-    * emptied partitions dropped — the [[upsertIvf]] machinery pointed at
-    * removal). Multi-column-partitioned tables (date×source catalogs)
-    * are handled at the FULL-TUPLE level — touched, staged, and swept by
-    * the complete partition spec — so a fully-doomed subpartition under
-    * a surviving sibling drops while the sibling stays byte-identical.
-    * Unpartitioned collections rewrite whole through the same
-    * staging dance; NSW graph collections route to [[deleteNsw]] (the ids
+    * that hold doomed ids ([[overwritePartitions]]: untouched files
+    * intact, emptied partitions dropped — the [[upsertIvf]] machinery
+    * pointed at removal). Multi-column-partitioned tables (date×source
+    * catalogs) are handled at the FULL-TUPLE level — touched, rewritten,
+    * and swept by the complete partition spec — so a fully-doomed
+    * subpartition under a surviving sibling drops while the sibling stays
+    * byte-identical. Unpartitioned collections rewrite whole through a
+    * staging table; NSW graph collections route to [[deleteNsw]] (the ids
     * live inside CSR arrays — only a graph rebuild can remove them).
     * `ids` is a 1-column frame (any name) and broadcasts — delete cost
     * scales with the touched partitions, not the table.
     *
-    * CRASH CONTRACT (single-writer; pinned in tests): the stage →
-    * insertInto → drop-staging dance has three failure windows, each
-    * recoverable by RE-RUNNING THE SAME CALL —
-    *  - crash after the stage write, before insertInto: the target is
-    *    untouched (pre-delete state, row-consistent); the orphaned
-    *    staging table is reclaimed by the next call's `overwrite` stage
-    *    write, whatever stale schema or rows it holds;
-    *  - crash DURING insertInto's commit: each partition lands at either
-    *    its pre- or post-delete version (the committer moves files per
-    *    partition), so every partition is row-consistent and the re-run
-    *    anti-joins the doomed ids out of whichever mix survived —
-    *    deletion is idempotent on row content, the re-run converges;
-    *  - crash after insertInto, before the staging drop: the target is
-    *    fully post-delete; the orphan is reclaimed as above and the
-    *    re-run is a content no-op.
+    * CRASH CONTRACT (single-writer; pinned in tests): every failure
+    * window is recoverable by RE-RUNNING THE SAME CALL —
+    *  - crash before the target's commit: the target is untouched
+    *    (pre-delete state, row-consistent); on an unpartitioned
+    *    collection the orphaned staging table is reclaimed by the next
+    *    call's `overwrite` stage write, whatever stale schema or rows it
+    *    holds;
+    *  - crash DURING the commit: each partition lands at either its pre-
+    *    or post-delete version (the committer moves files per partition),
+    *    so every partition is row-consistent and the re-run anti-joins
+    *    the doomed ids out of whichever mix survived — deletion is
+    *    idempotent on row content, the re-run converges;
+    *  - crash after the commit, before the emptied partitions drop (or
+    *    the staging table does): those partitions still hold only doomed
+    *    rows, which the re-run finds and drops; the re-run is otherwise a
+    *    content no-op.
     * Readers concurrent with the commit window can observe the mixed
     * state — the documented single-writer trade of plain-parquet tables
     * (the versioned-collection family is the MVCC alternative: appended
@@ -1674,56 +1586,25 @@ object CatalogOps {
     }
     // Multi-column partitioning works at the FULL-TUPLE level throughout:
     // touched partitions are distinct (p1, …, pn) tuples holding doomed
-    // ids, the staged rewrite is keyed on the whole tuple, and the
-    // fully-doomed sweep drops complete leaf specs — so a doomed
-    // (date=x, source=y) under a surviving sibling (date=x, source=z) is
-    // removed while the sibling's files stay byte-identical. (Until r13
-    // the 2+-column form was refused loudly because a first-level sweep
-    // would have silently kept exactly that subpartition.)
-    // collected once: the sweep below re-uses this AFTER insertInto has
-    // mutated the table a lazy plan would re-read (see mergeTouchedPartitions)
-    val touched = {
-      val frame = spark.table(table)
-        .join(broadcast(doomed), idCol)
-        .select(partCols.map(col): _*).distinct()
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(frame.collect().toSeq, 1), frame.schema)
-    }
-    val staging = s"`$db`.`__${name}_delete_staging`"
-    spark.table(table)
-      .join(broadcast(touched), partCols) // only affected partitions read
+    // ids, the rewrite is keyed on the whole tuple, and the fully-doomed
+    // sweep drops complete leaf specs — so a doomed (date=x, source=y)
+    // under a surviving sibling (date=x, source=z) is removed while the
+    // sibling's files stay byte-identical. Tuples match null-safely.
+    val touched = spark.table(table).join(broadcast(doomed), idCol)
+      .select(partCols.map(col): _*).distinct().collect().toSeq
+    if (touched.isEmpty) return
+    val touchedDf = spark.createDataFrame(
+      spark.sparkContext.parallelize(touched, 1), touched.head.schema)
+    val stored = spark.table(table)
+    val kept = stored
+      .join(broadcast(touchedDf), partCols.map(c => stored(c) <=> touchedDf(c)).reduce(_ && _),
+        "left_semi") // only affected partitions read
       .join(broadcast(doomed), Seq(idCol), "left_anti")
-      .write.mode("overwrite").saveAsTable(staging)
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val targetCols = spark.table(table).columns.toIndexedSeq.map(col)
-      spark.table(staging).select(targetCols: _*)
-        .write.mode("overwrite").insertInto(s"$db.$name")
-      // a partition whose every row was doomed is absent from the staged
-      // frame — dynamic overwrite leaves it untouched, so drop it by its
-      // complete (leaf-level) partition spec
-      val numeric = partCols.map(c => spark.table(table).schema(c).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType])
-      touched.join(
-          spark.table(staging).select(partCols.map(col): _*).distinct(),
-          partCols, "left_anti")
-        .collect().foreach { r =>
-          val spec = partCols.indices.map { i =>
-            val v =
-              if (numeric(i)) r.get(i).toString
-              else s"'${r.get(i).toString.replace("'", "''")}'"
-            s"${partCols(i)}=$v"
-          }.mkString(", ")
-          spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($spec)")
-        }
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $staging")
-    }
+      .localCheckpoint() // read twice: its partition set and the rewrite
+    // a partition whose every row was doomed is absent from `kept` —
+    // dynamic overwrite leaves it untouched, so it drops by its full spec
+    val live = kept.select(partCols.map(col): _*).distinct().collect().map(_.toSeq).toSet
+    overwritePartitions(table, kept, touched.map(_.toSeq).filterNot(live))
   }
 
   /** Small-file compaction — the maintenance pass every incrementally
@@ -1732,10 +1613,9 @@ object CatalogOps {
     * by streaming upserts decays into millions of footer-read-dominated
     * small files. Rewrites every partition to `filesPerPartition` files
     * (hash-clustered on the partition column, so each partition value
-    * lands in exactly that many write tasks), row-preserving, through the
-    * same staging-then-overwrite dance as the partition-scoped upsert
-    * (the plan reads the table it rewrites). Unpartitioned tables
-    * rewrite to exactly `filesPerPartition` files.
+    * lands in exactly that many write tasks), row-preserving, through
+    * [[overwritePartitions]] like the partition-scoped upsert.
+    * Unpartitioned tables rewrite to exactly `filesPerPartition` files.
     */
   def compactCollection(spark: SparkSession, db: String, name: String,
       filesPerPartition: Int = 1): Unit = {
@@ -1750,21 +1630,7 @@ object CatalogOps {
       else if (filesPerPartition == 1) df.repartition(partCols.map(col): _*)
       else df.repartition((partCols.map(col) :+
         pmod(hash(col(df.columns.head)), lit(filesPerPartition))): _*)
-    val staging = s"`$db`.`__${name}_compact_staging`"
-    clustered.write.mode("overwrite").saveAsTable(staging)
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val targetCols = spark.table(table).columns.toIndexedSeq.map(col)
-      spark.table(staging).select(targetCols: _*)
-        .write.mode("overwrite").insertInto(s"$db.$name")
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $staging")
-    }
+    overwritePartitions(table, clustered)
   }
 
   /** BM25 corpus-statistics store — the "index-time" artifact that turns
@@ -1901,9 +1767,10 @@ object CatalogOps {
       overwrite = false, negated = true)
 
   /** Fold the append-only BM25 partial logs down to one stats row and one
-    * row per term (staging-table swap, same pattern as
-    * [[compactCollection]]). Probe results are unchanged — the partials
-    * are exact counts, so the fold is a pure merge; terms whose df
+    * row per term (a whole-table swap through a staging table: the fold
+    * reads the table it replaces, and a static overwrite may not). Probe
+    * results are unchanged — the partials are exact counts, so the fold
+    * is a pure merge; terms whose df
     * cancelled to zero are dropped.
     */
   def compactBm25Stats(spark: SparkSession, db: String, name: String): Unit = {
@@ -2333,18 +2200,7 @@ object CatalogOps {
       .agg(sum(col("cnt")).as("cnt"), sum(col("sum_micros")).as("sum_micros"))
       .withColumn("__bucket", pmod(hash(keys.map(col): _*), lit(buckets)))
       .withColumn("__batch_id", lit(batchId))
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val targetCols = spark.table(store).columns.toIndexedSeq.map(col)
-      folded.select(targetCols: _*)
-        .write.mode("overwrite").insertInto(s"$db.${name}__aggstore")
-    } finally {
-      prior match {
-        case Some(p) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", p)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    overwritePartitions(store, folded)
   }
 
   /** The report, served from the store: keys + (n, sum_value) — no
@@ -2908,12 +2764,7 @@ object CatalogOps {
       createDatabase(spark, db)
       batch.write.partitionBy("shard", "batch_id")
         .saveAsTable(s"`$db`.`$name`")
-    } else {
-      // insertInto is positional: data columns first, partition columns
-      // (shard, batch_id) last — matching the create above
-      insertDynamicOverwrite(batch.select(col("doc_id"), col("text"),
-        col("shard"), col("batch_id")), s"`$db`.`$name`")
-    }
+    } else overwritePartitions(s"`$db`.`$name`", batch)
     // the manifest partials THIS batch believes it wrote — n/min/max/xor
     // are all associative, so the serve folds the log exactly; computed
     // from the pre-repartition checkpoint (the ≤16-row aggregate needs
@@ -2921,24 +2772,71 @@ object CatalogOps {
     manifestAggOf(keyed).localCheckpoint()
   }
 
-  /** Partition-scoped overwrite insertInto on a CLONED session: dynamic
-    * partitionOverwriteMode must ride the session conf (the writer
-    * option is not honored by insertInto on a catalog table — measured
-    * as static semantics silently wiping every other batch's
-    * partitions), but mutating the SHARED session conf leaks dynamic
-    * semantics to any concurrent writer in the window and two
-    * concurrent set/restores can strand a stale value (ADVICE r18).
-    * `newSession()` shares the SparkContext and catalog but owns an
-    * isolated conf, so the dynamic mode is scoped to exactly this
-    * write; the frame re-binds to the clone via its RDD (callers pass
-    * checkpointed/shuffled plans, so the re-bind adds no recompute).
+  /** The one partition-scoped rewrite: replace exactly the partitions of
+    * `table` that `rows` holds, leave every other partition's files
+    * untouched, then drop the `drop` partitions (full partition tuples in
+    * the table's partition-column order, raw values, null allowed) —
+    * dynamic overwrite cannot express an emptied partition. Insert, then
+    * drop, then refresh `table` in the caller's session.
+    *
+    * `rows` may read `table` itself: a dynamic overwrite commits each
+    * partition after its write job has read everything. Only an
+    * unpartitioned table is overwritten whole, and that overwrite deletes
+    * the files before the job runs, so those rows are checkpointed first.
+    *
+    * Dynamic mode must ride the session conf (insertInto ignores the
+    * writer option on a catalog table — measured as static semantics
+    * wiping every other partition), but setting it on the SHARED conf
+    * leaks it to any concurrent writer and two overlapping set/restores
+    * can strand a stale value (ADVICE r18). A cloned session shares the
+    * SparkContext and catalog and copies the caller's conf and listeners,
+    * but owns that copy, so the mode is scoped to this one write; the
+    * rows re-bind to the clone through their RDD.
+    * Drops go through the catalog API with the values' own string form
+    * and no SQL literal, so a `\`, a `'` or a null in a value still names
+    * its partition.
     */
-  private def insertDynamicOverwrite(df: DataFrame, table: String): Unit = {
-    val s2 = df.sparkSession.newSession()
+  private[graft] def overwritePartitions(table: String, rows: DataFrame,
+      drop: Seq[Seq[Any]] = Nil): Unit = {
+    import org.apache.spark.sql.functions.col
+    val spark = rows.sparkSession
+    // insertInto is positional: project to the table's column order
+    val projected = rows.select(spark.table(table).columns.toIndexedSeq.map(col): _*)
+    val src =
+      if (partitionColumns(spark, table).isEmpty) projected.localCheckpoint()
+      else projected
+    val s2 = org.apache.spark.sql.graftbridge.SessionBridge.cloneSession(spark)
     s2.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    s2.createDataFrame(df.rdd, df.schema)
+    // written nullable, as the catalog declares every column: a file's
+    // layout then never depends on which plan produced its rows
+    s2.createDataFrame(src.rdd, src.schema.toNullable)
       .write.mode("overwrite").insertInto(table)
+    if (drop.nonEmpty) dropPartitions(spark, table, drop) // refreshes
+    else spark.catalog.refreshTable(table)
   }
+
+  /** Drop partitions of `table` given as full tuples of raw values (see
+    * [[overwritePartitions]]), absent ones ignored, then refresh it; no
+    * specs, no catalog call. */
+  private[graft] def dropPartitions(spark: SparkSession, table: String,
+      specs: Seq[Seq[Any]]): Unit = if (specs.nonEmpty) {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    import org.apache.spark.sql.types.StringType
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    // the catalog keys a partition by the string the writer cast its value to
+    def str(v: Any): String =
+      if (v == null) null else Cast(Literal(v), StringType, tz).eval().toString
+    val cols = partitionColumns(spark, table)
+    spark.sessionState.catalog.dropPartitions(
+      spark.sessionState.sqlParser.parseTableIdentifier(table),
+      specs.map(vs => cols.zip(vs.map(str)).toMap),
+      ignoreIfNotExists = true, purge = false, retainData = false)
+    spark.catalog.refreshTable(table)
+  }
+
+  private def partitionColumns(spark: SparkSession, table: String): Seq[String] =
+    spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table)).partitionColumnNames
 
   /** Fold the streaming export's per-batch partitions (r18): a live
     * ingest accretes one `(shard, batch_id)` partition set per
@@ -3062,16 +2960,11 @@ object CatalogOps {
       staged.write.partitionBy("shard", "batch_id")
         .saveAsTable(s"`$db`.`$name`")
     } else {
-      insertDynamicOverwrite(staged, s"`$db`.`$name`")
-      foldedIds.filter(_ != watermark).foreach { id =>
-        spark.sql(s"ALTER TABLE `$db`.`$name` DROP IF EXISTS " +
-          (0 until 16).map(s => s"PARTITION (shard=$s, batch_id=$id)")
-            .mkString(", "))
-      }
+      overwritePartitions(s"`$db`.`$name`", staged,
+        for (id <- foldedIds.filter(_ != watermark); s <- 0 until 16) yield Seq(s, id))
     }
     spark.sql(s"DROP TABLE IF EXISTS $ready")
     spark.sql(s"DROP TABLE IF EXISTS $staging")
-    spark.catalog.refreshTable(s"`$db`.`$name`")
   }
 
   /** Append one batch's per-shard partial rows to the append-only
@@ -3233,15 +3126,11 @@ object CatalogOps {
       // committed fold from the write-ahead copy
       staged.write.partitionBy("batch_id").saveAsTable(s"`$db`.`$logName`")
     } else {
-      insertDynamicOverwrite(staged, s"`$db`.`$logName`")
-      foldedIds.filter(_ != wm).foreach { id =>
-        spark.sql(s"ALTER TABLE `$db`.`$logName` DROP IF EXISTS " +
-          s"PARTITION (batch_id=$id)")
-      }
+      overwritePartitions(s"`$db`.`$logName`", staged,
+        foldedIds.filter(_ != wm).map(Seq(_)))
     }
     spark.sql(s"DROP TABLE IF EXISTS $ready")
     spark.sql(s"DROP TABLE IF EXISTS $staging")
-    spark.catalog.refreshTable(s"`$db`.`$logName`")
   }
 
   /** Crash-atomic FILE fold of an append-accreting content-addressed

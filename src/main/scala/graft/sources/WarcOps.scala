@@ -701,11 +701,7 @@ object WarcOps {
       .collect().map(_.getString(0))
       .map(_.stripPrefix("__gen=").toLong)
       .filter(_ < keepFromGen)
-    doomed.foreach { g =>
-      spark.sql(s"ALTER TABLE `$db`.`${name}__xtexts` DROP IF EXISTS " +
-        s"PARTITION (__gen=$g)")
-    }
-    spark.catalog.refreshTable(s"`$db`.`${name}__xtexts`")
+    CatalogOps.dropPartitions(spark, s"`$db`.`${name}__xtexts`", doomed.map(Seq(_)).toSeq)
   }
 
   /** `q_archive_e2e_revisit_stream` (r18): the revisit-planted members

@@ -2360,25 +2360,19 @@ class OperatorSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet === Set(1L, 3L))
     assert(!spark.catalog.tableExists("crashdb.__flat_delete_staging"),
       "staging must be dropped after a successful swap")
-    // same window on a PARTITIONED table
+    // a PARTITIONED table rewrites in place (no staging table at all)
     Seq((1L, "a", 0), (2L, "b", 0), (3L, "c", 1), (4L, "d", 2))
       .toDF("vec_id", "text", "cell")
       .write.partitionBy("cell").saveAsTable("`crashdb`.`part`")
-    Seq((77L, "stale")).toDF("vec_id", "junk")
-      .write.saveAsTable("`crashdb`.`__part_delete_staging`")
     CatalogOps.deleteByIds(spark, "crashdb", "part", Seq(3L).toDF("vec_id"))
     assert(spark.table("`crashdb`.`part`").select($"vec_id")
       .collect().map(_.getLong(0)).toSet === Set(1L, 2L, 4L))
     assert(!spark.catalog.tableExists("crashdb.__part_delete_staging"))
-    // window 3 — crash AFTER insertInto, BEFORE the staging drop: the
-    // target is already post-delete; re-running the SAME call must be a
-    // content no-op that reclaims the orphan (idempotent recovery)
-    spark.table("`crashdb`.`part`")
-      .write.saveAsTable("`crashdb`.`__part_delete_staging`") // plausible orphan
+    // crash AFTER the commit: the target is already post-delete;
+    // re-running the SAME call must be a content no-op (idempotent recovery)
     CatalogOps.deleteByIds(spark, "crashdb", "part", Seq(3L).toDF("vec_id"))
     assert(spark.table("`crashdb`.`part`").select($"vec_id")
       .collect().map(_.getLong(0)).toSet === Set(1L, 2L, 4L))
-    assert(!spark.catalog.tableExists("crashdb.__part_delete_staging"))
     // window 2 proxy — a partition left at its PRE-delete version while
     // others committed (the mid-commit mix): re-run converges. Simulate
     // by re-inserting a doomed row into its original partition.
